@@ -80,13 +80,14 @@ def _wait_idle(threshold: float = 1.0, deadline_s: float = 240.0) -> None:
         time.sleep(5)
 
 
-def _converged_min(fn, min_reps: int = 3, max_reps: int = 7) -> float:
+def _converged_min(fn, min_reps: int = 3,
+                   max_reps: int = 7) -> tuple[float, float]:
     """Back-to-back reps of one query until the latest rep CONFIRMS the
-    best time (within ±15%), min/max bounded; returns the min.  A rep
-    still improving >15% keeps going (tiered-JIT warmup tail), and a
-    GC/JIT/noise spike far above the best doesn't end the loop early —
-    the same rule the sf0.1 block has always used, shared by the scale
-    rungs because a single interleaved run is hostage to noise bursts."""
+    best time (within ±15%), min/max bounded; returns (min, first rep).
+    A rep still improving >15% keeps going (tiered-JIT warmup tail), and a
+    GC/JIT/noise spike far above the best doesn't end the loop early.
+    Shared by the sf0.1 block and the scale rungs, because a single
+    interleaved run is hostage to noise bursts."""
     runs = []
     for i in range(max_reps):
         t0 = time.perf_counter()
@@ -95,7 +96,7 @@ def _converged_min(fn, min_reps: int = 3, max_reps: int = 7) -> float:
         if i >= min_reps - 1 and (0.85 * min(runs[:-1]) <= runs[-1]
                                   <= 1.15 * min(runs[:-1])):
             break
-    return round(min(runs), 3)
+    return round(min(runs), 3), round(runs[0], 3)
 
 
 def main():
@@ -131,20 +132,9 @@ def main():
     for pass_no in range(2):
         pass_times = {}
         for name, fn in benches.items():
-            runs = []
-            for i in range(7):
-                t0 = time.perf_counter()
-                fn()
-                runs.append(time.perf_counter() - t0)
-                # converged = the latest pass CONFIRMS the best time (within
-                # ±15%); a pass still improving >15% keeps going, and a
-                # GC/JIT spike far above the best doesn't end the loop early
-                if i >= 2 and (0.85 * min(runs[:-1]) <= runs[-1]
-                               <= 1.15 * min(runs[:-1])):
-                    break
+            pass_times[name], first = _converged_min(fn)
             if pass_no == 0:
-                cold[name] = round(runs[0], 3)
-            pass_times[name] = round(min(runs), 3)
+                cold[name] = first
             times[name] = round(min(times.get(name, float("inf")),
                                     pass_times[name]), 3)
         pass_totals.append(round(sum(pass_times.values()), 3))
@@ -188,7 +178,7 @@ def main():
         for _ in range(2):
             pass_times = {}
             for name, fn in b1.items():
-                pass_times[name] = _converged_min(fn)
+                pass_times[name] = _converged_min(fn)[0]
                 t1[name] = round(min(t1.get(name, float("inf")),
                                      pass_times[name]), 3)
             sf1_pass_totals.append(round(sum(pass_times.values()), 3))
@@ -262,7 +252,7 @@ def main():
                 # probes converged to 3.0-3.6x — the extra reps are what
                 # it takes for this rung's numbers to agree with probes
                 # within ~20% (r11 verdict item #5)
-                pass_times[name] = _converged_min(fn, min_reps=4)
+                pass_times[name] = _converged_min(fn, min_reps=4)[0]
                 t10[name] = round(min(t10.get(name, float("inf")),
                                       pass_times[name]), 3)
             sf10_pass_totals.append(round(sum(pass_times.values()), 3))

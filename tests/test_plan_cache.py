@@ -60,14 +60,6 @@ def test_plan_cache_annotation_isolation(spark):
     assert b.all_annotations() == ann_a
 
 
-def test_plan_cache_env_disable(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_PLAN_CACHE", "1")
-    eng = _eng(spark, ROWS)
-    a = eng.query_instant("sum(m)", 30 * S)
-    b = eng.query_instant("sum(m)", 30 * S)
-    assert a.df is not b.df
-
-
 def test_plan_cache_bounded(spark):
     eng = _eng(spark, ROWS)
     eng._plan_cache_cap = 4

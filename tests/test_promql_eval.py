@@ -11,6 +11,7 @@ import pytest
 from tests.conftest import make_samples
 
 S = 1000  # one second in ms
+NAN, INF = float("nan"), float("inf")
 
 
 def eng_for(spark, rows, lookback_ms=300_000, **kw):
@@ -703,65 +704,192 @@ def _plan_str(df) -> str:
     return buf.getvalue()
 
 
+# Exact range functions over the corpus of the test below, at steps
+# t = 0s, 10s, ..., 80s; None = no output sample at that step.  Computed by
+# hand from the window (t - range, t] (subquery points: the latest sample
+# at each 10s inner step); one native aggregation path serves both modes.
+_ = None
+_EXACT = {
+    "count_over_time(g[30s])": {
+        "a": [1, 2, 3, 3, 3, 3, 2, 1, _],
+        "inf": [1, 1, 2, 1, 2, 1, 2, 1, 1],
+        "nanlead": [1, 2, 3, 2, 1, _, _, _, _],
+        "one": [_, _, _, _, 1, 1, 1, _, _],
+    },
+    # NaN samples are skipped; an all-NaN window is NaN
+    "min_over_time(g[30s])": {
+        "a": [1.5, 1.5, 1.5, 2, 2, -3.5, -3.5, -3.5, _],
+        "inf": [-INF, -INF, -INF, 3, 3, INF, 3, 3, 3],
+        "nanlead": [NAN, NAN, 3, 3, 3, _, _, _, _],
+        "one": [_, _, _, _, 42, 42, 42, _, _],
+    },
+    "max_over_time(g[30s])": {
+        "a": [1.5, 1.5, 1.5, 2, 2, 2, 2, -3.5, _],
+        "inf": [-INF, -INF, 3, 3, INF, INF, INF, 3, 3],
+        "nanlead": [NAN, NAN, 3, 3, 3, _, _, _, _],
+        "one": [_, _, _, _, 42, 42, 42, _, _],
+    },
+    "first_over_time(g[30s])": {
+        "a": [1.5, 1.5, 1.5, NAN, NAN, 2, 2, -3.5, _],
+        "inf": [-INF, -INF, -INF, 3, 3, INF, INF, 3, 3],
+        "nanlead": [NAN, NAN, NAN, NAN, 3, _, _, _, _],
+        "one": [_, _, _, _, 42, 42, 42, _, _],
+    },
+    "last_over_time(g[30s])": {
+        "a": [1.5, NAN, NAN, 2, 2, -3.5, -3.5, -3.5, _],
+        "inf": [-INF, -INF, 3, 3, INF, INF, 3, 3, 3],
+        "nanlead": [NAN, NAN, 3, 3, 3, _, _, _, _],
+        "one": [_, _, _, _, 42, 42, 42, _, _],
+    },
+    "present_over_time(g[30s])": {
+        "a": [1, 1, 1, 1, 1, 1, 1, 1, _],
+        "inf": [1, 1, 1, 1, 1, 1, 1, 1, 1],
+        "nanlead": [1, 1, 1, 1, 1, _, _, _, _],
+        "one": [_, _, _, _, 1, 1, 1, _, _],
+    },
+    "ts_of_first_over_time(g[30s])": {
+        "a": [0, 0, 0, 10, 20, 30, 40, 50, _],
+        "inf": [0, 0, 0, 20, 20, 40, 40, 60, 60],
+        "nanlead": [0, 0, 0, 10, 20, _, _, _, _],
+        "one": [_, _, _, _, 37, 37, 37, _, _],
+    },
+    "ts_of_last_over_time(g[30s])": {
+        "a": [0, 10, 20, 30, 40, 50, 50, 50, _],
+        "inf": [0, 0, 20, 20, 40, 40, 60, 60, 60],
+        "nanlead": [0, 10, 20, 20, 20, _, _, _, _],
+        "one": [_, _, _, _, 37, 37, 37, _, _],
+    },
+    # a drop (counter reset) rates the post-reset value alone
+    "irate(c[30s])": {
+        "a": [_, 5 / 10, 2 / 10, 7 / 10, 3 / 10, 7 / 10, 0, 2 / 10, 2 / 10],
+        "b": [_, _, 0, 0, 3 / 15, 2 / 15, 2 / 15, 6 / 15, _],
+    },
+    "idelta(c[30s])": {
+        "a": [_, 5, -3, 7, -6, 7, 0, 2, 2],
+        "b": [_, _, 0, 0, 3, -2, -2, 6, _],
+    },
+    "resets(c[30s])": {
+        "a": [0, 0, 1, 1, 1, 1, 0, 0, 0],
+        "b": [_, 0, 0, 0, 0, 1, 1, 0, 0],
+    },
+    # NaN masks: x < NaN and NaN < x never count as resets (Spark alone
+    # would order NaN above every double)
+    "resets(g[30s])": {
+        "a": [0, 0, 0, 0, 0, 1, 1, 0, _],
+        "inf": [0, 0, 0, 0, 0, 0, 1, 0, 0],
+        "nanlead": [0, 0, 0, 0, 0, _, _, _, _],
+        "one": [_, _, _, _, 0, 0, 0, _, _],
+    },
+    "changes(c[30s])": {
+        "a": [0, 1, 2, 2, 2, 2, 1, 1, 1],
+        "b": [_, 0, 0, 0, 1, 1, 1, 1, 0],
+    },
+    # NaN -> number is a change, NaN -> NaN is not; a window's first sample
+    # never counts, so a leading NaN scores no phantom change (nanlead at
+    # 0s/10s, and at 40s where the in-window 3 follows an out-of-window NaN)
+    "changes(g[25s])": {
+        "a": [0, 1, 1, 1, 1, 1, 1, 0, _],
+        "inf": [0, 0, 1, 0, 1, 0, 1, 0, 0],
+        "nanlead": [0, 0, 1, 1, 0, _, _, _, _],
+        "one": [_, _, _, _, 0, 0, 0, _, _],
+    },
+    "irate(c[40s:10s])": {
+        "a": [_, 5 / 10, 2 / 10, 7 / 10, 3 / 10, 7 / 10, 0, 2 / 10, 0],
+        "b": [_, _, 0, 0, 3 / 10, 2 / 10, 0, 6 / 10, 0],
+    },
+    "idelta(c[40s:10s])": {
+        "a": [_, 5, -3, 7, -6, 7, 0, 2, 0],
+        "b": [_, _, 0, 0, 3, -2, 0, 6, 0],
+    },
+    "resets(c[40s:10s])": {
+        "a": [0, 0, 1, 1, 2, 1, 1, 0, 0],
+        "b": [_, 0, 0, 0, 0, 1, 1, 1, 0],
+    },
+    "changes(c[40s:10s])": {
+        "a": [0, 1, 2, 3, 3, 3, 2, 2, 1],
+        "b": [_, 0, 0, 0, 1, 2, 2, 2, 1],
+    },
+    # @-anchored windows repeat the (30s, 60s] / (20s, 60s] window at every
+    # step; ts_of_* exposes the original timestamps
+    "irate(c[30s] @ 60)": {"a": [0] * 9, "b": [2 / 15] * 9},
+    "resets(c[40s:10s] @ 60)": {"a": [1] * 9, "b": [1] * 9},
+    "ts_of_last_over_time(g[30s] @ 60)": {
+        "a": [50] * 9, "inf": [60] * 9, "one": [37] * 9},
+}
+
+
+def _by_job(result):
+    """range result df → {job: [value at t = 0s, 10s, ..., 80s]}"""
+    out = {}
+    for r in result.df.collect():
+        vals = out.setdefault(dict(r["labels"])["job"], [None] * 9)
+        vals[r["t"] // (10 * S)] = r["value"]
+    return out
+
+
+def _same(a, b) -> bool:
+    """exact equality, NaN equal to NaN, None only to None"""
+    if a is None or b is None:
+        return a is b
+    return a == b or (math.isnan(a) and math.isnan(b))
+
+
 def test_production_native_range_functions_agree(spark):
-    """r12: in production mode (deterministic=False) the order-insensitive
-    *_over_time folds, the rate family (via pre-explode lag) and
-    resets/changes compile to native aggregations.  Differential pin: the
-    native twins must agree with the deterministic folds on a corpus with
-    counter resets, NaN runs, ±Inf, off-grid/sparse series and
-    single-sample windows — and the production plans must actually BE
-    native (no collect_list fold, no SortAggregate)."""
+    """Range functions over a corpus with counter resets, NaN runs, ±Inf,
+    off-grid/sparse series and single-sample windows.  The exact families
+    (counts, first/last/min/max selections, irate/idelta, resets/changes)
+    run one native aggregation path in both modes: both engines must give
+    the hand-computed values exactly.  The families whose native form
+    reassociates float sums (sum/avg/stddev/stdvar_over_time, the rate
+    family's reset correction, deriv/predict_linear) keep an order-stable
+    fold in deterministic mode: production must agree with it to 1e-9.
+    Production plans must actually BE native (no collect_list fold, no
+    SortAggregate), @-anchored windows included."""
     from thanos_parquet_gateway_spark.promql import PromQLEngine
-    inf, nan = float("inf"), float("nan")
     rows = (
         counter("c", {"job": "a"}, 0, 10 * S, [0, 5, 2, 9, 3, 10, 10, 12]) +
         counter("c", {"job": "b"}, 5 * S, 15 * S, [1, 1, 4, 2, 8]) +
-        counter("g", {"job": "a"}, 0, 10 * S, [1.5, nan, nan, 2.0, 2.0, -3.5]) +
-        counter("g", {"job": "nanlead"}, 0, 10 * S, [nan, nan, 3.0]) +
-        counter("g", {"job": "inf"}, 0, 20 * S, [-inf, 3.0, inf, 3.0]) +
+        counter("g", {"job": "a"}, 0, 10 * S, [1.5, NAN, NAN, 2.0, 2.0, -3.5]) +
+        counter("g", {"job": "nanlead"}, 0, 10 * S, [NAN, NAN, 3.0]) +
+        counter("g", {"job": "inf"}, 0, 20 * S, [-INF, 3.0, INF, 3.0]) +
         [({"__name__": "g", "job": "one"}, 37 * S, 42.0)]
     )
     det = eng_for(spark, rows)
     prod = PromQLEngine(make_samples(spark, rows), lookback_ms=300_000,
                         deterministic=False)
 
-    exact = {"count_over_time", "min_over_time", "max_over_time",
-             "first_over_time", "last_over_time", "present_over_time",
-             "ts_of_first_over_time", "ts_of_last_over_time",
-             "resets", "changes"}
-    over_time = ["count_over_time", "sum_over_time", "avg_over_time",
-                 "min_over_time", "max_over_time", "first_over_time",
-                 "last_over_time", "present_over_time", "stddev_over_time",
-                 "stdvar_over_time", "ts_of_first_over_time",
-                 "ts_of_last_over_time"]
-    queries = ([f"{fn}(g[30s])" for fn in over_time] +
+    for q, want in _EXACT.items():
+        for eng in (det, prod):
+            got = _by_job(eng.query_range(q, 0, 80 * S, 10 * S))
+            assert set(got) == set(want), (q, eng.deterministic)
+            for job, vals in want.items():
+                vals = [None if v is None else float(v) for v in vals]
+                assert all(map(_same, got[job], vals)), \
+                    (q, eng.deterministic, job, got[job], vals)
+
+    queries = ([f"{fn}(g[30s])" for fn in (
+                    "sum_over_time", "avg_over_time", "stddev_over_time",
+                    "stdvar_over_time")] +
                ["rate(c[30s])", "increase(c[30s])", "delta(c[30s])",
-                "irate(c[30s])", "idelta(c[30s])",
-                "resets(c[30s])", "changes(c[30s])", "changes(g[25s])",
                 "rate(c[30s] offset 10s)",
-                # r12 resumed session: native covar_pop/var_pop regression
+                # native covar_pop/var_pop regression
                 "deriv(c[30s])", "deriv(g[30s])",
                 "predict_linear(c[30s], 120)", "predict_linear(g[25s], 60)",
-                "deriv(c[40s:10s])",  # subqueries take the native path too
-                # r13: subquery range vectors carry prev too, so the whole
-                # rate family is native over subqueries as well
+                "deriv(c[40s:10s])",
+                # subquery range vectors carry prev too, so the whole rate
+                # family is native over subqueries as well
                 "rate(c[40s:10s])", "increase(c[40s:10s])",
-                "delta(g[40s:10s])", "irate(c[40s:10s])",
-                "idelta(c[40s:10s])", "resets(c[40s:10s])",
-                "changes(c[40s:10s])", "rate(c[35s:10s] offset 10s)",
-                # fold fallback in production mode (prev unavailable):
-                # @-anchored windows
-                "sum_over_time(g[30s] @ 60)", "rate(c[40s:10s] @ 60)"])
+                "delta(g[40s:10s])", "rate(c[35s:10s] offset 10s)",
+                # @-anchored windows carry prev too: native in production
+                "sum_over_time(g[30s] @ 60)", "rate(c[30s] @ 60)",
+                "rate(c[40s:10s] @ 60)"])
     for q in queries:
-        fn = q.split("(")[0]
         a = _mat(det.query_range(q, 0, 80 * S, 10 * S))
         b = _mat(prod.query_range(q, 0, 80 * S, 10 * S))
         assert set(a) == set(b), q
         for k in a:
             if math.isnan(a[k]):
                 assert math.isnan(b[k]), (q, k)
-            elif fn in exact:
-                assert a[k] == b[k], (q, k, a[k], b[k])
             else:
                 assert a[k] == pytest.approx(b[k], rel=1e-9, abs=1e-300), \
                     (q, k, a[k], b[k])
@@ -770,13 +898,20 @@ def test_production_native_range_functions_agree(spark):
     # buffer, no SortAggregate demotion (the optimization this pins)
     for q in ("rate(c[30s])", "count_over_time(g[30s])", "resets(c[30s])",
               "irate(c[30s])", "deriv(c[30s])", "predict_linear(c[30s], 60)",
-              # r13: rate over a subquery is native too (prev through the
-              # inner grid); the inner selector itself is aggregation-free
-              "rate(c[40s:10s])", "irate(c[40s:10s])"):
+              # rate over a subquery is native too (prev through the inner
+              # grid); the inner selector itself is aggregation-free
+              "rate(c[40s:10s])", "irate(c[40s:10s])",
+              # @-anchored windows lag before the grid cross join
+              "rate(c[30s] @ 60)", "irate(c[30s] @ 60)",
+              "resets(c[40s:10s] @ 60)"):
         p = _plan_str(prod.query_range(q, 0, 80 * S, 10 * S).df)
         assert "collect_list" not in p, q
         assert "SortAggregate" not in p, q
-    # ...and the deterministic engine keeps the order-stable fold
+    # the deterministic engine runs the exact families natively too, and
+    # keeps the order-stable fold where float sums reassociate
+    for q in ("irate(c[30s])", "resets(c[30s])", "count_over_time(g[30s])"):
+        p = _plan_str(det.query_range(q, 0, 80 * S, 10 * S).df)
+        assert "collect_list" not in p, q
     p = _plan_str(det.query_range("rate(c[30s])", 0, 80 * S, 10 * S).df)
     assert "collect_list" in p
 

@@ -60,8 +60,9 @@ samples AS (
 
 _GRID = f"grid AS (SELECT unnest(generate_series({R_START}, {R_END}, {STEP})) AS t)"
 
-# last sample per series within lookback at T (ties: ts desc, value desc —
-# mirrors the engine's max(struct(ts, value)))
+# last sample per series within lookback at T (ties: ts desc, value desc;
+# the events corpora have no duplicate (series, ts), which the engine's
+# max_by(value, ts) pick relies on)
 _LAST = f"""
 last AS (
     SELECT shard, "user", ts, value,

@@ -481,23 +481,16 @@ class Compiler:
         # sample" selection (shadowing older real samples) and then drops the
         # series at steps where it is latest (Prometheus staleness semantics)
         has_hist = "hist" in base.columns
-        pair_cols = ["ts", "value"] + (["hist"] if has_hist else [])
-        if self.p.deterministic:
-            # order-stable: struct max breaks (sig-hash-collision) ties by
-            # (ts, value[, hist]) tuple order — SortAggregate, oracle mode
-            sel_aggs = [F.max(F.struct(*pair_cols)).alias("sv")]
-            raw_ts, raw_val = F.col("sv.ts"), F.col("sv.value")
-            raw_hist = F.col("sv.hist") if has_hist else None
-        else:
-            # production: (sig, ts) is unique, so "latest sample" is
-            # max(ts) + max_by(value, ts) — primitive/small buffers keep the
-            # aggregation on the hash-based path (ObjectHashAggregate)
-            # instead of the full-sort SortAggregate that max(struct) forces
-            sel_aggs = [F.max("ts").alias("__mts"),
-                        F.max_by("value", "ts").alias("__mval")] + \
-                ([F.max_by("hist", "ts").alias("__mhist")] if has_hist else [])
-            raw_ts, raw_val = F.col("__mts"), F.col("__mval")
-            raw_hist = F.col("__mhist") if has_hist else None
+        # (sig, ts) is unique, so "latest sample" is max(ts) +
+        # max_by(value, ts) in both modes — an exact selection, and the
+        # primitive/small buffers keep the aggregation on the hash-based
+        # path (ObjectHashAggregate) instead of the full-sort SortAggregate
+        # that max(struct) forces
+        sel_aggs = [F.max("ts").alias("__mts"),
+                    F.max_by("value", "ts").alias("__mval")] + \
+            ([F.max_by("hist", "ts").alias("__mhist")] if has_hist else [])
+        raw_ts, raw_val = F.col("__mts"), F.col("__mval")
+        raw_hist = F.col("__mhist") if has_hist else None
         # filter + ONE final projection straight off the aggregate outputs
         # (labels rebuilt from sig exactly once) — fewer JVM plan steps per
         # compile than the select→filter→select chain it replaces
@@ -536,60 +529,80 @@ class Compiler:
         # rate family can do bucket-wise extrapolation (reference
         # float-histogram path, db/db_test.go:344-351)
         base = self._selector_base(vs, ms.range_ms)
-        hist_cols = ["hist"] if "hist" in base.columns else []
         alive = F.col("value").isNotNull()
-        if hist_cols:
+        if "hist" in base.columns:
             alive = alive | F.col("hist").isNotNull()
         base = base.filter(alive)
-        rng = ms.range_ms
-        if vs.at_ms is not None:
-            at = self._resolve_at(vs.at_ms)
-            win = (base.filter((F.col("ts") > at - rng) & (F.col("ts") <= at)))
-            # @ is a per-step offset of (t - at) (upstream
-            # setOffsetForAtModifier converts @ to exactly that): shift the
-            # window samples into the step frame so every (t - range, t]
-            # boundary computation downstream — the rate family's
-            # extrapolation anchors above all — sees the anchored window
-            # as if it ended at t.  ts_of_*/timestamp subtract the shift
-            # back when exposing timestamps (functions.py).
-            out = (win.crossJoin(F.broadcast(self.grid_df()))
-                   .select("t", "sig", "labels",
-                           (F.col("ts") + (F.col("t") - _lit(at)))
-                           .alias("ts"), "value", *hist_cols))
-            return RangeVector(out, rng)
-        steps = F.explode(self._serve_steps(F.col("ts"), rng)).alias("t")
-        prev = None
-        if not self.p.deterministic:
-            # production: attach each sample's predecessor (lag per series,
-            # BEFORE the grid explode — one un-replicated shuffle of the
-            # samples) so the rate family can aggregate natively
-            def prev():
-                from pyspark.sql import Window as _W
-                w = _W.partitionBy("sig").orderBy("ts")
-                # histogram-carrying selectors additionally lag the hist and
-                # lead the ts (same WindowExec, no extra exchange/sort): the
-                # native histogram rate needs the predecessor histogram for
-                # reset pairs and the successor ts to decide first/last-in-
-                # window membership per ROW (__nts > t ≡ last in (t-r, t])
-                hist_lag = ([F.lag("hist").over(w).alias("__ph"),
-                             F.lead("ts").over(w).alias("__nts")]
-                            if hist_cols else [])
-                based = base.select("*",
-                                    F.lag("value").over(w).alias("__pv"),
-                                    F.lag("ts").over(w).alias("__pts"),
-                                    *hist_lag)
-                return based.select(steps, "sig", "labels", "ts", "value",
-                                    "__pv", "__pts", *hist_cols,
-                                    *(["__ph", "__nts"] if hist_cols
-                                      else []))
-        # Both variants are THUNKS: each consumer reads exactly one of
-        # df/prev, and building the other is a wasted JVM plan op with a
-        # full eager re-analysis of the selector subtree — measured at
-        # ~50 ms per op on the bench plans, pure per-query compile latency.
+        at = self._resolve_at(vs.at_ms) if vs.at_ms is not None else None
+        return self._range_window(base, ms.range_ms, at)
+
+    def _range_window(self, pts: DataFrame, range_ms: int,
+                      at: int | None = None) -> RangeVector:
+        """The range vector over a points frame ``(sig, labels, ts, value
+        [, hist])``: each point serves every grid step t with
+        t - range < ts <= t.  Shared by matrix selectors and subqueries.
+
+        Without ``@`` every point computes the steps it serves
+        (``_serve_steps`` + explode, map-side).  With ``@`` the window is
+        fixed at (at - range, at] and repeats at every step as a per-step
+        offset of (t - at) (upstream setOffsetForAtModifier converts @ to
+        exactly that): the window points cross-join the grid and shift into
+        the step frame, so every (t - range, t] boundary computation
+        downstream — the rate family's extrapolation anchors above all —
+        sees the anchored window as if it ended at t.  ts_of_*/timestamp
+        subtract the shift back when exposing timestamps (functions.py).
+
+        ``prev`` attaches each point's predecessor (lag per series over
+        the points, BEFORE the explode/cross join — one un-replicated
+        shuffle) and moves ``__pts``/``__nts`` by the same shift as ``ts``.
+        Sound because (sig, ts) is unique in the points frame, and a
+        predecessor outside the frame is outside every window: consumers
+        gate on __pts > t - range.
+
+        Both variants are THUNKS: each consumer reads exactly one of
+        df/prev, and building the other is a wasted JVM plan op with a full
+        eager re-analysis of the selector subtree — measured at ~50 ms per
+        op on the bench plans, pure per-query compile latency."""
+        hist_cols = ["hist"] if "hist" in pts.columns else []
+        if at is None:
+            steps = F.explode(self._serve_steps(F.col("ts"), range_ms)) \
+                .alias("t")
+
+            def window(frame: DataFrame, cols: list[str]) -> DataFrame:
+                return frame.select(steps, "sig", "labels", *cols)
+        else:
+            pts = pts.filter((F.col("ts") > at - range_ms)
+                             & (F.col("ts") <= at))
+            shift = F.col("t") - _lit(at)
+
+            def window(frame: DataFrame, cols: list[str]) -> DataFrame:
+                return (frame.crossJoin(F.broadcast(self.grid_df()))
+                        .select("t", "sig", "labels",
+                                *[(F.col(c) + shift).alias(c)
+                                  if c in ("ts", "__pts", "__nts") else c
+                                  for c in cols]))
+
+        def prev() -> DataFrame:
+            from pyspark.sql import Window as _W
+            w = _W.partitionBy("sig").orderBy("ts")
+            # histogram-carrying points additionally lag the hist and lead
+            # the ts (same WindowExec, no extra exchange/sort): the native
+            # histogram rate needs the predecessor histogram for reset
+            # pairs and the successor ts to decide first/last-in-window
+            # membership per ROW (__nts > t ≡ last in (t-r, t])
+            hist_lag = ([F.lag("hist").over(w).alias("__ph"),
+                         F.lead("ts").over(w).alias("__nts")]
+                        if hist_cols else [])
+            based = pts.select("*",
+                               F.lag("value").over(w).alias("__pv"),
+                               F.lag("ts").over(w).alias("__pts"),
+                               *hist_lag)
+            return window(based, ["ts", "value", "__pv", "__pts", *hist_cols,
+                                  *(["__ph", "__nts"] if hist_cols else [])])
+
         return RangeVector(
-            lambda: base.select(steps, "sig", "labels", "ts", "value",
-                                *hist_cols),
-            rng, prev=prev,
+            lambda: window(pts, ["ts", "value", *hist_cols]), range_ms,
+            prev=prev,
             columns=["t", "sig", "labels", "ts", "value", *hist_cols])
 
     def _subquery(self, sq: A.Subquery) -> RangeVector:
@@ -628,49 +641,11 @@ class Compiler:
         pts = iv.df.select("sig", "labels",
                            (F.col("t") + _lit(sq.offset_ms)).alias("ts"),
                            "value", *hist_cols)
-        if sq.at_ms is not None:
-            at = self._resolve_at(sq.at_ms)
-            win = pts.filter((F.col("ts") > at - sq.range_ms) & (F.col("ts") <= at))
-            # same per-step re-anchor as the @ matrix selector: window
-            # points move into the step frame so (t - range, t] boundary
-            # math (rate extrapolation) is anchored at the @ time
-            out = (win.crossJoin(F.broadcast(self.grid_df()))
-                   .select("t", "sig", "labels",
-                           (F.col("ts") + (F.col("t") - _lit(at)))
-                           .alias("ts"), "value", *hist_cols))
-            return RangeVector(out, sq.range_ms)
-        steps = F.explode(self._serve_steps(F.col("ts"), sq.range_ms)).alias("t")
-        prev = None
-        if not self.p.deterministic:
-            # production: attach each inner-grid point's predecessor (lag
-            # per series BEFORE the window explode), exactly like the
-            # matrix-selector path — the rate family then aggregates
-            # natively over subquery windows too.  Sound because the inner
-            # result has one row per (sig, inner step): (sig, ts) is unique,
-            # and every grid point that can fall inside ANY outer window is
-            # ≥ inner_start by construction, so a window's true predecessor
-            # chain is fully contained in ``pts`` (a predecessor before
-            # inner_start is outside every window and consumers gate on
-            # __pts > t - range).
-            def prev():
-                from pyspark.sql import Window as _W
-                w = _W.partitionBy("sig").orderBy("ts")
-                hist_lag = ([F.lag("hist").over(w).alias("__ph"),
-                             F.lead("ts").over(w).alias("__nts")]
-                            if hist_cols else [])
-                based = pts.select("*",
-                                   F.lag("value").over(w).alias("__pv"),
-                                   F.lag("ts").over(w).alias("__pts"),
-                                   *hist_lag)
-                return based.select(steps, "sig", "labels", "ts", "value",
-                                    "__pv", "__pts", *hist_cols,
-                                    *(["__ph", "__nts"] if hist_cols
-                                      else []))
-        return RangeVector(
-            lambda: pts.select(steps, "sig", "labels", "ts", "value",
-                                *hist_cols),
-            sq.range_ms, prev=prev,
-            columns=["t", "sig", "labels", "ts", "value", *hist_cols])
+        # the inner result has one row per (sig, inner step), so (sig, ts)
+        # is unique; every grid point that can fall inside ANY outer window
+        # is ≥ inner_start by construction
+        at = self._resolve_at(sq.at_ms) if sq.at_ms is not None else None
+        return self._range_window(pts, sq.range_ms, at)
 
     def compile_vector(self, node: A.Node) -> InstantVector:
         v = self.compile(node)

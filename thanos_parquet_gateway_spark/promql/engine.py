@@ -182,13 +182,11 @@ class PromQLEngine:
         # (LRU, 256 entries), engine-scoped (dies with the engine; engine
         # config is fixed per instance), and each hit returns a fresh
         # QueryResult wrapper so all_annotations' fold-in never mutates the
-        # cached entry.  SPARK_GRAFT_NO_PLAN_CACHE=1 disables it.
-        import os as _os
+        # cached entry.
         import threading as _th
         from collections import OrderedDict as _OD
         self._plan_cache: "dict" = _OD()
-        self._plan_cache_cap = (0 if _os.environ.get("SPARK_GRAFT_NO_PLAN_CACHE")
-                                else 256)
+        self._plan_cache_cap = 256
         # the API server serves concurrent requests on ONE engine
         # (api/server.py engine LRU + max_concurrent): guard the LRU's
         # read-move/insert/evict sequences; plan BUILDS stay outside the
@@ -214,8 +212,6 @@ class PromQLEngine:
         """LRU-memoized QueryResult plans (see __init__).  Hits hand back a
         fresh QueryResult over the same immutable DataFrame plan with
         copied annotation/probe lists."""
-        if not self._plan_cache_cap:
-            return build()
         with self._plan_lock:
             hit = self._plan_cache.get(key)
             if hit is not None:

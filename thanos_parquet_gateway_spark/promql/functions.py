@@ -4,9 +4,22 @@ label manipulation, time functions (SURVEY.md §2.C).
 The rate family implements Prometheus' published extrapolation algorithm
 (counter-reset correction + boundary extrapolation) — the reference proves
 these semantics via differential tests (reference db/db_test.go:616-659).
-All window math folds *sorted* per-(series, step) arrays with Spark
-higher-order functions: JVM-side, deterministic, bounded by samples-per-window
-— the scalable shape at 100TB (no driver collects, no UDFs).
+
+Window math takes one of two shapes, both JVM-side with no driver collects
+and no UDFs:
+
+- native aggregation over the window's rows, with each sample's series
+  predecessor attached (``RangeVector.prev``): counts, first/last/min/max
+  selections, irate/idelta's last pair and resets/changes' transition
+  counts are exact this way and run so in both modes; the float sums
+  (sum/avg/stddev/stdvar_over_time, rate's reset correction,
+  deriv/predict_linear) reassociate, so they run natively only in
+  production mode;
+- a fold over the *sorted* per-(series, step) array with Spark
+  higher-order functions, bounded by samples-per-window: the deterministic
+  (oracle) mode's order-stable float sums, the rank statistics
+  (quantile/mad_over_time), ts_of_max/min's last-tie rule, smoothing, and
+  windows that carry native histograms (production-mode rate aside).
 """
 
 from __future__ import annotations
@@ -196,12 +209,11 @@ _OVER_TIME = {
 }
 
 
-# Production-mode (deterministic=False) native-aggregation twins of the
-# order-insensitive _OVER_TIME folds: each entry yields the .agg(...) list,
-# with the result aliased "__v".  Range vectors exclude stale markers
-# (value is never NULL) and the native path is only taken when the range
-# vector carries no histogram column, so plain value aggregates see exactly
-# the fold's float samples.  min/max skip NaN like the folds (NaN→NULL
+# Native-aggregation forms of the order-insensitive _OVER_TIME folds: each
+# entry yields the .agg(...) list, with the result aliased "__v".  Range
+# vectors exclude stale markers (value is never NULL) and the native path
+# is only taken when the range vector carries no histogram column, so
+# plain value aggregates see exactly the fold's float samples.  min/max skip NaN like the folds (NaN→NULL
 # before min/max; all-NaN windows coalesce back to NaN); every window has
 # ≥1 sample by construction (explode emits a (t, sig) group only for
 # samples inside it).
@@ -230,6 +242,13 @@ _OVER_TIME_NATIVE = {
     "ts_of_first_over_time": lambda: [
         (F.min("ts").cast(D) / 1000.0).alias("__v")],
 }
+
+
+# the entries above whose native form reassociates float addition: det mode
+# keeps their order-stable folds; every other entry is an exact selection
+# or count and runs natively in both modes
+_OVER_TIME_REASSOC = frozenset(("sum_over_time", "avg_over_time",
+                                "stddev_over_time", "stdvar_over_time"))
 
 
 def _fold_ts_of(arr: Column, mode: str) -> Column:
@@ -346,17 +365,18 @@ def _over_time(c: Compiler, call: A.Call) -> InstantVector:
         rv = _range_arg(c, call, 0)
         if fn in _OVER_TIME_HIST and "hist" in rv.columns:
             return _over_time_hist(c, rv, fn)
-        if (not c.p.deterministic and fn in _OVER_TIME_NATIVE
-                and "hist" not in rv.columns):
-            # production mode: the window fold is a plain aggregation —
-            # compile it as native (mostly codegen HashAggregate) aggregate
-            # functions with map-side partial aggregation, instead of
-            # shipping every sample through a collect_list buffer to the
-            # reducer and folding the sorted array there.  Exact for
-            # count/min/max/first/last/ts_of_*/present; sum/avg/stddev/
-            # stdvar trade the order-stable Kahan fold for float-addition
-            # reassociation (run-to-run low-bit nondeterminism — the same
-            # trade the cross-series production aggregations already make).
+        if (fn in _OVER_TIME_NATIVE and "hist" not in rv.columns
+                and not (c.p.deterministic and fn in _OVER_TIME_REASSOC)):
+            # the window fold is a plain aggregation — compile it as native
+            # (mostly codegen HashAggregate) aggregate functions with
+            # map-side partial aggregation, instead of shipping every
+            # sample through a collect_list buffer to the reducer and
+            # folding the sorted array there.  Exact selections/counts run
+            # this path in both modes; sum/avg/stddev/stdvar trade the
+            # order-stable Kahan fold for float-addition reassociation
+            # (run-to-run low-bit nondeterminism — the same trade the
+            # cross-series production aggregations make), so det mode
+            # keeps their folds.
             from thanos_parquet_gateway_spark.promql.compiler import hgroup
             # labels are NOT rebuilt here: the fused projection below
             # (and _drop_name's successor) builds them once from sig —
@@ -424,10 +444,10 @@ def _extrapolated(c: Compiler, rv: RangeVector, counter: bool,
     float/histogram windows are dropped (Prometheus skips them with a
     warning)."""
     if "hist" in rv.columns:
-        if not c.p.deterministic and rv.prev is not None:
+        if not c.p.deterministic:
             return _extrapolated_hist_native(c, rv, counter, is_rate)
         return _extrapolated_hist(c, rv, counter, is_rate)
-    if not c.p.deterministic and rv.prev is not None:
+    if not c.p.deterministic:
         return _extrapolated_native(c, rv, counter, is_rate)
     g = _collect_window(rv).filter(F.size("arr") >= 2)
     arr = F.col("arr")
@@ -764,39 +784,27 @@ def _instant_pair(c: Compiler, rv: RangeVector, kind: str) -> InstantVector:
     stands alone, mirroring the float counter rule)."""
     if "hist" in rv.columns:
         return _instant_pair_hist(c, rv, kind)
-    if not c.p.deterministic and rv.prev is not None:
-        # production: the window's last TWO samples are the max_by(ts) row
-        # plus the predecessor it carries (attached pre-explode) — one
-        # native aggregation, no collect_list fold.  ≥2-samples filter ≡
-        # "the last sample's predecessor is itself inside the window".
-        from thanos_parquet_gateway_spark.promql.compiler import hgroup
-        # three primitive max_by's, not one max_by(struct): a struct
-        # aggregation BUFFER is not UnsafeRow-mutable and demotes the whole
-        # aggregation to SortAggregate (caught by the r12 plan pin); the
-        # primitive buffers stay on codegen HashAggregate.  All three are
-        # keyed on the same ts, so they read the same sample row whenever
-        # (sig, ts) is unique — tied timestamps pick per-column, the same
-        # production-mode tie trade the latest-sample selection makes.
-        g = (hgroup(rv.prev, "sig",
-                    F.max("ts").alias("__lt"),
-                    F.max_by("value", "ts").alias("__lv"),
-                    F.max_by("__pv", "ts").alias("__lpv"),
-                    F.max_by("__pts", "ts").alias("__lpt"))
-             .filter(F.col("__lpt").isNotNull()
-                     & (F.col("__lpt") > F.col("t") - _lit(rv.range_ms))))
-        last_t, prev_t = F.col("__lt"), F.col("__lpt")
-        last_v, prev_v = F.col("__lv"), F.col("__lpv")
-        dt_s = (last_t - prev_t).cast(D) / 1000.0
-        if kind == "irate":
-            dv = F.when(last_v >= prev_v, last_v - prev_v).otherwise(last_v)
-            val = dv / dt_s
-        else:
-            val = last_v - prev_v
-        return _finalize(g, val)
-    g = _collect_window(rv).filter(F.size("arr") >= 2)
-    arr = F.col("arr")
-    last_t, prev_t = F.element_at(arr, -1)["o"], F.element_at(arr, -2)["o"]
-    last_v, prev_v = F.element_at(arr, -1)["v"], F.element_at(arr, -2)["v"]
+    # the window's last TWO samples are the max_by(ts) row plus the
+    # predecessor it carries (attached pre-explode) — one native
+    # aggregation, no collect_list fold, and an exact selection (det mode
+    # runs it too).  ≥2-samples filter ≡ "the last sample's predecessor is
+    # itself inside the window".
+    from thanos_parquet_gateway_spark.promql.compiler import hgroup
+    # three primitive max_by's, not one max_by(struct): a struct
+    # aggregation BUFFER is not UnsafeRow-mutable and demotes the whole
+    # aggregation to SortAggregate (the plan pin in test_promql_eval
+    # rejects it); the primitive buffers stay on codegen HashAggregate.  All three are keyed
+    # on the same ts, so they read the same sample row ((sig, ts) is
+    # unique).
+    g = (hgroup(rv.prev, "sig",
+                F.max("ts").alias("__lt"),
+                F.max_by("value", "ts").alias("__lv"),
+                F.max_by("__pv", "ts").alias("__lpv"),
+                F.max_by("__pts", "ts").alias("__lpt"))
+         .filter(F.col("__lpt").isNotNull()
+                 & (F.col("__lpt") > F.col("t") - _lit(rv.range_ms))))
+    last_t, prev_t = F.col("__lt"), F.col("__lpt")
+    last_v, prev_v = F.col("__lv"), F.col("__lpv")
     dt_s = (last_t - prev_t).cast(D) / 1000.0
     if kind == "irate":
         dv = F.when(last_v >= prev_v, last_v - prev_v).otherwise(last_v)
@@ -876,35 +884,6 @@ def _double_exp_smoothing(c: Compiler, call: A.Call) -> InstantVector:
     res = F.aggregate(F.slice(arr, 2, F.greatest(F.size(arr) - 1, _lit(0))),
                       acc0, step)
     return _finalize(g, res["s"])
-
-
-def _counts_fold(arr: Column, mode: str) -> Column:
-    """resets: count v[i] < v[i-1]; changes: count v[i] != v[i-1] (NaN→NaN is
-    not a change).  The explicit ``init`` flag (same as _counts_hist) keeps
-    the window's FIRST sample from ever counting — upstream funcChanges/
-    funcResets iterate from the second sample, and without the flag a
-    leading-NaN sample scored a phantom change (isnan(x) forced the hit
-    while both_nan stayed NULL against the NULL accumulator; caught by the
-    r12 det-vs-prod differential)."""
-    acc0 = F.struct(_lit(False).alias("init"),
-                    _lit(None).cast(D).alias("prev"), _lit(0.0).alias("n"))
-
-    def merge(a, x):
-        if mode == "resets":
-            # Spark orders NaN above every double (so 5 < NaN is TRUE here),
-            # but Go/IEEE comparisons with NaN are always false — mask NaN on
-            # either side so NaN transitions never count as resets.
-            hit = ~F.isnan(x["v"]) & ~F.isnan(a["prev"]) & (x["v"] < a["prev"])
-        else:
-            both_nan = F.isnan(x["v"]) & F.isnan(a["prev"])
-            hit = (((x["v"] != a["prev"]) | F.isnan(x["v"])
-                    | F.isnan(a["prev"])) & ~both_nan)
-        inc = F.when(a["init"] & F.coalesce(hit, _lit(False)), 1.0) \
-               .otherwise(0.0)
-        return F.struct(_lit(True).alias("init"), x["v"].alias("prev"),
-                        (a["n"] + inc).alias("n"))
-
-    return F.aggregate(arr, acc0, merge)["n"]
 
 
 def _counts_hist(c: Compiler, rv: RangeVector, mode: str) -> InstantVector:
@@ -1349,32 +1328,33 @@ def dispatch(c: Compiler, call: A.Call):
         rv = _range_arg(c, call)
         if "hist" in rv.columns:
             return _counts_hist(c, rv, fn)
-        if not c.p.deterministic and rv.prev is not None:
-            # production: a transition count is a plain aggregation over
-            # (sample, predecessor) pairs — a pair counts iff the
-            # predecessor is itself inside the window (__pts > t - range),
-            # which is exactly the set of consecutive pairs _counts_fold
-            # walks.  Native HashAggregate with map-side partials, and
-            # integer-exact (sums of 0.0/1.0 — no float-reassociation
-            # trade, unlike sum_over_time).  NaN rules mirror the fold
-            # verbatim; a NULL predecessor (first sample of a series)
-            # falls out via coalesce(hit, false).
-            from thanos_parquet_gateway_spark.promql.compiler import hgroup
-            v, pv = F.col("value"), F.col("__pv")
-            in_win = F.col("__pts") > (F.col("t") - _lit(rv.range_ms))
-            if fn == "resets":
-                hit = ~F.isnan(v) & ~F.isnan(pv) & (v < pv)
-            else:
-                both_nan = F.isnan(v) & F.isnan(pv)
-                hit = ((v != pv) | F.isnan(v) | F.isnan(pv)) & ~both_nan
-            g = hgroup(
-                rv.prev, "sig",
-                F.sum(F.when(F.coalesce(in_win & hit, _lit(False)),
-                             _lit(1.0)).otherwise(_lit(0.0))).alias("__v"))
-            return _finalize(g, F.col("__v"))
-        g = _collect_window(rv)
-        val = _counts_fold(F.col("arr"), fn)
-        return _finalize(g, val)
+        # a transition count is a plain aggregation over (sample,
+        # predecessor) pairs — a pair counts iff the predecessor is itself
+        # inside the window (__pts > t - range), which is exactly the set
+        # of consecutive pairs upstream funcResets/funcChanges walk: the
+        # window's FIRST sample never counts (its predecessor is outside
+        # the window or absent), so a leading NaN scores no phantom
+        # change.  Native HashAggregate with map-side partials, and
+        # integer-exact (sums of 0.0/1.0 — no float-reassociation trade),
+        # so det mode runs it too.  Spark orders NaN above every double
+        # (5 < NaN is TRUE) and treats NaN == NaN as equal, but Go/IEEE
+        # comparisons with NaN are always false: resets masks NaN on
+        # either side, changes counts any NaN↔number transition but not
+        # NaN→NaN.  A NULL predecessor (first sample of a series) falls out
+        # via coalesce(hit, false).
+        from thanos_parquet_gateway_spark.promql.compiler import hgroup
+        v, pv = F.col("value"), F.col("__pv")
+        in_win = F.col("__pts") > (F.col("t") - _lit(rv.range_ms))
+        if fn == "resets":
+            hit = ~F.isnan(v) & ~F.isnan(pv) & (v < pv)
+        else:
+            both_nan = F.isnan(v) & F.isnan(pv)
+            hit = ((v != pv) | F.isnan(v) | F.isnan(pv)) & ~both_nan
+        g = hgroup(
+            rv.prev, "sig",
+            F.sum(F.when(F.coalesce(in_win & hit, _lit(False)),
+                         _lit(1.0)).otherwise(_lit(0.0))).alias("__v"))
+        return _finalize(g, F.col("__v"))
     if fn == "deriv":
         return _deriv(c, call)
     if fn == "predict_linear":

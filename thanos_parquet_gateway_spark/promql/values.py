@@ -8,6 +8,8 @@ plays the role of the reference's lazy series sets (db/seriesset.go:58-111).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -49,50 +51,38 @@ class RangeVector:
     """df: (t long, sig string, labels map<string,string>, ts long, value double)
     — all samples in (t - range, t] per step t.
 
-    ``prev``: production-mode (deterministic=False) twin of ``df`` carrying
-    two extra columns per sample — ``__pv`` / ``__pts``, the value/ts of the
-    series' PREVIOUS sample (lag over (sig, ts), computed BEFORE the step
-    grid explode so the samples are shuffled once, un-replicated).  With the
-    predecessor attached, the rate family's window math (counter resets,
-    first/last sample) becomes plain native aggregation instead of a
-    collect_list fold.  Provided by matrix selectors AND subqueries (the
-    inner result has one row per (sig, inner step), so the lag is
-    well-defined there too).  None on paths that don't provide it
-    (@-anchored windows, deterministic mode) — consumers must fall back to
-    the fold.
+    ``prev``: twin of ``df`` carrying two extra columns per sample —
+    ``__pv`` / ``__pts``, the value/ts of the series' PREVIOUS sample (lag
+    over (sig, ts), computed BEFORE the step grid explode so the samples
+    are shuffled once, un-replicated); histogram-carrying windows add
+    ``__ph`` (previous hist) and ``__nts`` (next ts).  With the predecessor
+    attached, window math over consecutive pairs (counter resets,
+    transitions, the last two samples) and first/last selection become
+    plain native aggregations instead of a collect_list fold.  Every range
+    vector has one: ``Compiler._range_window`` builds both variants for
+    matrix selectors and subqueries, with and without ``@``.
 
-    ``df`` and ``prev`` may be passed as zero-arg thunks: each consumer uses
+    ``df`` and ``prev`` are passed as zero-arg thunks: each consumer uses
     exactly one of the two variants, and building the unused one is pure
     driver latency (every classic-mode DataFrame op eagerly re-analyzes the
     whole accumulated plan on the JVM).  The thunk is forced and cached on
-    first attribute access; ``columns`` lets hist-dispatch checks run
-    without forcing anything when the constructor declared the layout."""
+    first attribute access; the declared ``columns`` let hist-dispatch
+    checks run without forcing anything."""
 
-    def __init__(self, df: DataFrame, range_ms: int = 0,
-                 prev: DataFrame | None = None,
-                 columns: list[str] | None = None):
-        self._df = df
+    def __init__(self, df: Callable[[], DataFrame], range_ms: int,
+                 prev: Callable[[], DataFrame], columns: list[str]):
+        self._make_df = df
+        self._make_prev = prev
         self.range_ms = range_ms
-        self._prev = prev
-        self._columns = columns
+        self.columns = columns
 
-    @property
+    @cached_property
     def df(self) -> DataFrame:
-        if callable(self._df):
-            self._df = self._df()
-        return self._df
+        return self._make_df()
 
-    @property
-    def prev(self) -> DataFrame | None:
-        if self._prev is not None and callable(self._prev):
-            self._prev = self._prev()
-        return self._prev
-
-    @property
-    def columns(self) -> list[str]:
-        if self._columns is None:
-            self._columns = self.df.columns
-        return self._columns
+    @cached_property
+    def prev(self) -> DataFrame:
+        return self._make_prev()
 
 
 @dataclass

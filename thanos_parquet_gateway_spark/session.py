@@ -32,10 +32,7 @@ def _install_jvm_function_cache() -> None:
     a new view onto a dead gateway's handles.
     Query COMPILE latency is serving-path latency for this engine, and this
     touches no plan, no data and no result.  Guarded: any pyspark-internal
-    signature drift skips the patch (pinned by tests/test_session.py), and
-    SPARK_GRAFT_NO_FN_CACHE=1 disables it for debugging."""
-    if os.environ.get("SPARK_GRAFT_NO_FN_CACHE"):
-        return
+    signature drift skips the patch (pinned by tests/test_session.py)."""
     try:
         import weakref
 

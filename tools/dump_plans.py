@@ -1,9 +1,12 @@
-"""Dump .explain('formatted') for every bench query to plans/r12/<name>_<tag>.txt.
+"""Dump .explain('formatted') for every bench query — plus the tracked
+non-bench production paths (subquery rate, native-histogram rate,
+@-anchored rate) — to <out_dir>/<name>_<tag>.txt.
 
-Usage: python tools/dump_plans.py <tag> [query ...]
-Tag is e.g. 'before' or 'after'.  With no query names, dumps all bench
-queries.  Uses the same make_benches() DataFrames as bench.py so the plans
-are exactly what the bench times.
+Usage: python tools/dump_plans.py <out_dir> <tag> [query ...]
+Tag is e.g. 'before' or 'after'.  With no query names, dumps everything.
+Bench entries build the same DataFrames as bench.py's make_benches(), so
+the plans are exactly what the bench times.  The corpus is
+$SPARK_GRAFT_SF_DIR (by default the sf0.1 testdata).
 """
 from __future__ import annotations
 
@@ -13,12 +16,57 @@ import sys
 from contextlib import redirect_stdout
 
 
+def _hist_rate_df(spark, sf_dir):
+    """rate() over native-histogram samples in PRODUCTION mode — the same
+    per-user daily cumulative histograms the promql_native_rate registry
+    entry builds, evaluated with deterministic=False so the dumped plan is
+    the production histogram-window path."""
+    from pyspark.sql import functions as F
+
+    from thanos_parquet_gateway_spark.plans import entry_queries as EQ
+    from thanos_parquet_gateway_spark.promql import PromQLEngine
+    from thanos_parquet_gateway_spark.promql import histograms as H
+    from thanos_parquet_gateway_spark.sources.tables import load_table
+
+    e = load_table(spark, sf_dir, "events")
+    ev = (e.filter((F.col("event_type") == "click") & (F.col("value") > 0) &
+                   (F.col("ts_ms") <= EQ._NR_T))
+          .select(F.col("user_id"), F.col("value"), F.col("ts_ms")))
+    days = spark.createDataFrame([(t,) for t in EQ._NR_DAYS], "sts long")
+    grid = ev.select("user_id").distinct().crossJoin(F.broadcast(days))
+    j = grid.join(ev.withColumnRenamed("user_id", "uid"),
+                  (F.col("uid") == F.col("user_id")) &
+                  (F.col("ts_ms") <= F.col("sts")), "left")
+    cnt_if = lambda c: F.count(F.when(c, 1)).cast("double")  # noqa: E731
+    stats = j.groupBy("user_id", "sts").agg(
+        F.count("value").cast("double").alias("cnt"),
+        F.coalesce(F.sum(F.col("value").cast(EQ._DEC)),
+                   F.lit(0).cast(EQ._DEC)).cast("double").alias("total"),
+        cnt_if(F.col("value") <= 5).alias("b5"),
+        cnt_if((F.col("value") > 5) & (F.col("value") <= 10)).alias("b10"),
+        cnt_if(F.col("value") > 10).alias("binf"))
+    buckets = F.array(*[
+        F.struct(F.lit(le).alias("le"), F.col(c).alias("count"))
+        for le, c in [(5.0, "b5"), (10.0, "b10"), (float("inf"), "binf")]])
+    samples = stats.select(
+        F.lit("lat_hist").alias("__name__"),
+        F.map_from_arrays(
+            F.array(F.lit("__name__"), F.lit("user")),
+            F.array(F.lit("lat_hist"),
+                    F.col("user_id").cast("string"))).alias("labels"),
+        F.col("sts").alias("ts"),
+        F.lit(float("nan")).alias("value"),
+        H.make_hist(F.col("cnt"), F.col("total"), buckets).alias("hist"))
+    eng = PromQLEngine(samples, lookback_ms=60_000, deterministic=False)
+    return eng.query_instant("rate(lat_hist[4d])", EQ._NR_T).df
+
+
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, tag, only = sys.argv[1], sys.argv[2], set(sys.argv[3:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.path.join(here, "plans", "r12")
     os.makedirs(out_dir, exist_ok=True)
 
     sys.path.insert(0, here)
@@ -60,6 +108,13 @@ def main():
         "sim_lsh_topk": lambda: EQ.QUERIES["sim_lsh_topk"](spark, sf_dir),
         "events_sessionize": lambda: EQ.QUERIES["events_sessionize"](spark, sf_dir),
         "events_hopping": lambda: EQ.QUERIES["events_hopping_window"](spark, sf_dir),
+        # tracked non-bench paths (production mode, like the bench engine)
+        "promql_subquery_rate": lambda: eng.query_range(
+            "rate(click[2d:2h])", EQ.R_START, EQ.R_END, EQ.STEP).df,
+        "promql_hist_rate": lambda: _hist_rate_df(spark, sf_dir),
+        "promql_at_rate": lambda: eng.query_range(
+            f"rate(click[2d] @ {EQ.R_END // 1000})",
+            EQ.R_START, EQ.R_END, EQ.STEP).df,
     }
 
     for name, mk in dfs.items():

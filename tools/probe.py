@@ -35,7 +35,7 @@ def main():
         if only and name not in only:
             continue
         spark.sparkContext.setJobDescription(f"probe:{name}")
-        out[name] = _converged_min(fn, min_reps=4)
+        out[name] = _converged_min(fn, min_reps=4)[0]
     print(json.dumps({"queries": out, "loadavg": load0, "sf_dir": sf_dir}))
 
 
