@@ -116,8 +116,9 @@ def _win_sql(metric: str, pred: str, t: int, w_s: int) -> str:
 
 def _rate_sql(metric: str, pred: str, t: int, w_s: int, kind: str) -> str:
     """extrapolatedRate in SQL: reset-corrected delta + Prometheus boundary
-    extrapolation (functions.py _extrapolated; reference semantics from
-    Prometheus extrapolatedRate)."""
+    extrapolation (the engine's boundary math is functions.py
+    _extrap_factor; reference semantics from Prometheus
+    extrapolatedRate)."""
     counter = kind in ("rate", "increase")
     corr = ("sum(CASE WHEN value < pv THEN pv ELSE 0 END)" if counter
             else "0")

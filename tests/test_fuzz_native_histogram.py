@@ -308,7 +308,8 @@ def test_native_histogram_rate_differential(spark):
     delta scaled by the extrapolated-window factor; the zero-clamp
     branch is guarded by len(samples.Floats) > 0 so it does NOT apply
     to histogram samples).  Randomized layouts/spacings — the corpus
-    pins fixed reset/boundary cases, this pins the factor arithmetic."""
+    pins fixed reset/boundary cases, this pins the factor arithmetic.
+    Both engines answer against the same oracle."""
     from thanos_parquet_gateway_spark.promql import PromQLEngine
     rng = random.Random(515099)
     series = {}
@@ -328,8 +329,7 @@ def test_native_histogram_rate_differential(spark):
         series[f"j{i}"] = pts
         rows += [({"__name__": "hm", "job": f"j{i}"}, ts, {"hist": h})
                  for ts, h in pts]
-    eng = PromQLEngine(make_samples(spark, rows), lookback_ms=300_000,
-                       deterministic=True)
+    samples = make_samples(spark, rows)
 
     def oracle(pts, t, w_ms, is_rate):
         lo, hi = t - w_ms, t
@@ -353,25 +353,29 @@ def test_native_histogram_rate_differential(spark):
 
     failures = []
     T = 310_000
-    for w_s in (150, 240, 310):
-        for fn, is_rate in (("rate", True), ("increase", False)):
-            for probe, extract in (
-                    ("histogram_count(%s)", lambda h: h[0]),
-                    ("histogram_sum(%s)", lambda h: h[1]),
-                    ("histogram_quantile(0.7, %s)",
-                     lambda h: o_quantile(0.7, h[0], h[2]))):
-                q = probe % f"{fn}(hm[{w_s}s])"
-                res = eng.query_instant(q, T)
-                got = {dict(r["labels"])["job"]: r["value"]
-                       for r in res.df.collect()}
-                for j, pts in series.items():
-                    want_h = oracle(pts, T, w_s * 1000, is_rate)
-                    want = None if want_h is None else extract(want_h)
-                    g = got.get(j)
-                    if want is None:
-                        if g is not None:
-                            failures.append(f"{q} {j}: got {g}, want absent")
-                    elif g is None or not _close(g, want):
-                        failures.append(f"{q} {j}: got {g}, want {want}")
+    for det in (True, False):
+        eng = PromQLEngine(samples, lookback_ms=300_000, deterministic=det)
+        for w_s in (150, 240, 310):
+            for fn, is_rate in (("rate", True), ("increase", False)):
+                for probe, extract in (
+                        ("histogram_count(%s)", lambda h: h[0]),
+                        ("histogram_sum(%s)", lambda h: h[1]),
+                        ("histogram_quantile(0.7, %s)",
+                         lambda h: o_quantile(0.7, h[0], h[2]))):
+                    q = probe % f"{fn}(hm[{w_s}s])"
+                    res = eng.query_instant(q, T)
+                    got = {dict(r["labels"])["job"]: r["value"]
+                           for r in res.df.collect()}
+                    for j, pts in series.items():
+                        want_h = oracle(pts, T, w_s * 1000, is_rate)
+                        want = None if want_h is None else extract(want_h)
+                        g = got.get(j)
+                        tag = f"det={det} {q} {j}"
+                        if want is None:
+                            if g is not None:
+                                failures.append(
+                                    f"{tag}: got {g}, want absent")
+                        elif g is None or not _close(g, want):
+                            failures.append(f"{tag}: got {g}, want {want}")
     assert not failures, (f"{len(failures)} divergences:\n"
                           + "\n".join(failures[:15]))

@@ -5,6 +5,7 @@ promqltest corpus semantics (db/db_test.go:53-71)."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 
@@ -505,33 +506,50 @@ def test_native_histograms(spark):
 
 
 def test_native_histogram_rate(spark):
-    """rate/increase/delta over native-histogram samples: bucket-wise delta
-    + boundary extrapolation (reference float-histogram rate served through
-    promql-engine, db/db_test.go:344-351).  No counter-to-zero clamp for
-    histograms (Prometheus gates that on float samples)."""
+    """rate/increase/delta, irate/idelta and resets/changes over
+    native-histogram samples: bucket-wise delta + boundary extrapolation
+    (reference float-histogram rate served through promql-engine,
+    db/db_test.go:344-351).  No counter-to-zero clamp for histograms
+    (Prometheus gates that on float samples).  Every literal holds in
+    both engines: the histogram windows run one body in both modes."""
     from thanos_parquet_gateway_spark.promql import PromQLEngine
     inf = float("inf")
+
+    def engines(df):
+        return [PromQLEngine(df, lookback_ms=300_000, deterministic=d)
+                for d in (True, False)]
+
+    def one_hist(eng, q, t):
+        r = [x for x in eng.query_instant(q, t).df.collect()
+             if x["hist"] is not None]
+        assert len(r) == 1, (q, eng.deterministic)
+        return r[0]["hist"]
+
+    def scalars(eng, q, t):
+        return {frozenset(dict(x["labels"]).items()): x["value"]
+                for x in eng.query_instant(q, t).df.collect()}
+
     # cumulative counter histogram every 10s: count 2,4,6,8; sum 2x;
     # buckets grow monotonically
     rows = [({"__name__": "h", "job": "a"}, i * 10 * S, 2 * (i + 1),
              4.0 * (i + 1), [(1, i + 1), (inf, i + 1)])
             for i in range(4)]
-    eng = PromQLEngine(_hist_samples(spark, rows), lookback_ms=300_000,
-                       deterministic=True)
-    # window (0, 40] at t=40: samples at ts 10,20,30 (ts=0 excluded) with
-    # counts 4,6,8.  delta: count 8-4=4, sum 16-8=8, bucket le=1: 4-2=2.
-    # extrapolation: sampled=20s n=3 avg=10 thresh=11; durStart=10<11 keep;
-    # durEnd=10<11 keep; extrap=40 → factor=2; rate = delta*2/40
-    r = eng.query_instant("rate(h[40s])", 40 * S).df.collect()
-    assert len(r) == 1
-    h = r[0]["hist"]
-    assert h["count"] == pytest.approx(4 * 2 / 40)
-    assert h["sum"] == pytest.approx(8 * 2 / 40)
-    assert dict((b["le"], b["count"]) for b in h["buckets"])[1.0] == \
-        pytest.approx(2 * 2 / 40)
-    # increase = rate * range_s
-    r = eng.query_instant("increase(h[40s])", 40 * S).df.collect()
-    assert r[0]["hist"]["count"] == pytest.approx(4 * 2)
+    for eng in engines(_hist_samples(spark, rows)):
+        # window (0, 40] at t=40: samples at ts 10,20,30 (ts=0 excluded)
+        # with counts 4,6,8.  delta: count 8-4=4, sum 16-8=8, bucket le=1:
+        # 4-2=2.  extrapolation: sampled=20s n=3 avg=10 thresh=11;
+        # durStart=10<11 keep; durEnd=10<11 keep; extrap=40 → factor=2;
+        # rate = delta*2/40
+        r = eng.query_instant("rate(h[40s])", 40 * S).df.collect()
+        assert len(r) == 1
+        h = r[0]["hist"]
+        assert h["count"] == pytest.approx(4 * 2 / 40)
+        assert h["sum"] == pytest.approx(8 * 2 / 40)
+        assert dict((b["le"], b["count"]) for b in h["buckets"])[1.0] == \
+            pytest.approx(2 * 2 / 40)
+        # increase = rate * range_s
+        r = eng.query_instant("increase(h[40s])", 40 * S).df.collect()
+        assert r[0]["hist"]["count"] == pytest.approx(4 * 2)
     # counter reset mid-window: sample 3 drops below sample 2 → correction
     # adds the pre-reset histogram (count 6, le1 bucket 3)
     rows_reset = [
@@ -540,43 +558,77 @@ def test_native_histogram_rate(spark):
         ({"__name__": "h", "job": "a"}, 30 * S, 1, 2.0, [(1, 1), (inf, 0)]),
         ({"__name__": "h", "job": "a"}, 40 * S, 3, 6.0, [(1, 2), (inf, 1)]),
     ]
-    eng = PromQLEngine(_hist_samples(spark, rows_reset), lookback_ms=300_000,
-                       deterministic=True)
-    r = eng.query_instant("increase(h[40s])", 40 * S).df.collect()
-    # samples at 10..40, counts 2,6,1,3: delta = (3-2) + 6 (pre-reset) = 7;
-    # sampled=30 n=4 avg=10 thresh=11; durStart=10<11; durEnd=0;
-    # extrap=40 → factor=4/3
-    assert r[0]["hist"]["count"] == pytest.approx(7 * 4 / 3)
-    # gauge delta: no reset correction → (3-2)*4/3
-    r = eng.query_instant("delta(h[40s])", 40 * S).df.collect()
-    assert r[0]["hist"]["count"] == pytest.approx(1 * 4 / 3)
+    for eng in engines(_hist_samples(spark, rows_reset)):
+        h = one_hist(eng, "increase(h[40s])", 40 * S)
+        # samples at 10..40, counts 2,6,1,3: delta = (3-2) + 6 (pre-reset)
+        # = 7; sampled=30 n=4 avg=10 thresh=11; durStart=10<11; durEnd=0;
+        # extrap=40 → factor=4/3.  Buckets: le=1 (2-1)+3 = 4, le=+Inf
+        # (1-1)+3 = 3
+        assert h["count"] == pytest.approx(7 * 4 / 3)
+        assert h["sum"] == pytest.approx((6 - 4 + 12) * 4 / 3)
+        assert [(b["le"], b["count"]) for b in h["buckets"]] == \
+            [(1.0, pytest.approx(4 * 4 / 3)), (inf, pytest.approx(3 * 4 / 3))]
+        # gauge delta: no reset correction → (3-2)*4/3
+        h = one_hist(eng, "delta(h[40s])", 40 * S)
+        assert h["count"] == pytest.approx(1 * 4 / 3)
+        # resets: only the 6 → 1 pair drops (1 → 3 grows in every bucket);
+        # changes: every one of the three pairs differs
+        assert scalars(eng, "resets(h[40s])", 40 * S) == \
+            {frozenset({("job", "a")}): 1.0}
+        assert scalars(eng, "changes(h[40s])", 40 * S) == \
+            {frozenset({("job", "a")}): 3.0}
+        # irate across the reset: the last pair 6 → 1 resets, so the last
+        # histogram stands alone over the 10s pair interval
+        h = one_hist(eng, "irate(h[20s])", 30 * S)
+        assert h["count"] == pytest.approx(1 / 10)
+        assert h["sum"] == pytest.approx(2 / 10)
+        assert [(b["le"], b["count"]) for b in h["buckets"]] == \
+            [(1.0, pytest.approx(1 / 10)), (inf, 0.0)]
+        # ... and with no reset in the last pair (1 → 3) it is the
+        # bucket-wise difference: (3-1)/10
+        h = one_hist(eng, "irate(h[20s])", 40 * S)
+        assert h["count"] == pytest.approx(2 / 10)
+        assert [(b["le"], b["count"]) for b in h["buckets"]] == \
+            [(1.0, pytest.approx(1 / 10)), (inf, pytest.approx(1 / 10))]
+
+    # float → histogram → float (values as in gen_hist_overtime.test): both
+    # type switches count for resets AND changes
+    flip = make_samples(spark, [
+        ({"__name__": "mixed"}, 0, 5.0),
+        ({"__name__": "mixed"}, 60 * S,
+         {"hist": (12.0, 12.0, [(1.0, 4.0), (2.0, 8.0), (inf, 0.0)], 0)}),
+        ({"__name__": "mixed"}, 120 * S, 9.0)])
+    for eng in engines(flip):
+        assert scalars(eng, "resets(mixed[3m])", 120 * S) == \
+            {frozenset(): 2.0}
+        assert scalars(eng, "changes(mixed[3m])", 120 * S) == \
+            {frozenset(): 2.0}
+
     # float series through the same plan shape: hist column NULL everywhere
     both = _hist_samples(spark, rows).unionByName(
         spark.createDataFrame(
             [({"__name__": "f", "job": "a"}, i * 10 * S, float(i * 4), None)
              for i in range(4)],
             _hist_samples(spark, rows).schema))
-    eng = PromQLEngine(both, lookback_ms=300_000, deterministic=True)
-    out = eng.query_instant("rate({__name__=~'h|f'}[40s])", 40 * S).df.collect()
-    assert len(out) == 2  # one float row, one hist row
-    floats = [r for r in out if r["hist"] is None]
-    hists = [r for r in out if r["hist"] is not None]
-    assert len(floats) == 1 and len(hists) == 1
-    # irate over histograms: last two samples, bucket-wise; dt=10s,
-    # counts 6->8 -> (8-6)/10 = 0.2
-    r = eng.query_instant("irate(h[40s])", 40 * S).df.collect()
-    hr = [x for x in r if x["hist"] is not None]
-    assert len(hr) == 1 and hr[0]["hist"]["count"] == pytest.approx(0.2)
-    # idelta: plain last-prev
-    r = eng.query_instant("idelta(h[40s])", 40 * S).df.collect()
-    hr = [x for x in r if x["hist"] is not None]
-    assert hr[0]["hist"]["count"] == pytest.approx(2.0)
-    # float series: samples 4,8,12 at 10..30? no — values 0,4,8,12 at
-    # 0,10,20,30; window (0,40] → 4,8,12 at 10,20,30: delta=8, n=3,
-    # sampled=20, avg=10, durStart=10<11, durEnd=10<11 → extrap=40?
-    # durEnd = 40-30 = 10 < 11 → keep → extrap = 20+10+10 = 40, factor 2
-    # → rate = 8*2/40 = 0.4
-    assert floats[0]["value"] == pytest.approx(0.4)
+    for eng in engines(both):
+        out = eng.query_instant("rate({__name__=~'h|f'}[40s])",
+                                40 * S).df.collect()
+        assert len(out) == 2  # one float row, one hist row
+        floats = [r for r in out if r["hist"] is None]
+        hists = [r for r in out if r["hist"] is not None]
+        assert len(floats) == 1 and len(hists) == 1
+        # float series: values 0,4,8,12 at 0,10,20,30; window (0,40] →
+        # 4,8,12 at 10,20,30: delta=8, n=3, sampled=20, avg=10,
+        # durStart=10<11, durEnd=40-30=10<11 → extrap = 20+10+10 = 40,
+        # factor 2 → rate = 8*2/40 = 0.4
+        assert floats[0]["value"] == pytest.approx(0.4)
+        # irate over histograms: last two samples, bucket-wise; dt=10s,
+        # counts 6->8 -> (8-6)/10 = 0.2
+        h = one_hist(eng, "irate(h[40s])", 40 * S)
+        assert h["count"] == pytest.approx(0.2)
+        # idelta: plain last-prev
+        h = one_hist(eng, "idelta(h[40s])", 40 * S)
+        assert h["count"] == pytest.approx(2.0)
 
 
 def test_nan_inf_aggregation_corpus(spark):
@@ -702,6 +754,16 @@ def _plan_str(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _assert_collects_guarded(plan: str, q: str) -> None:
+    """Every collect_list in ``plan`` buffers only rows that pass a CASE
+    WHEN guard (a window's boundary rows or its reset pairs) — never one
+    entry per window sample."""
+    args = [m.end() for m in re.finditer(r"collect_list\(", plan)]
+    assert args, q
+    for i in args:
+        assert plan.startswith("CASE WHEN ", i), (q, plan[i:i + 120])
 
 
 # Exact range functions over the corpus of the test below, at steps
@@ -912,8 +974,10 @@ def test_production_native_range_functions_agree(spark):
     for q in ("irate(c[30s])", "resets(c[30s])", "count_over_time(g[30s])"):
         p = _plan_str(det.query_range(q, 0, 80 * S, 10 * S).df)
         assert "collect_list" not in p, q
+    # det rate folds only its reset-correction sum: the collect holds the
+    # window's reset pairs, never every sample
     p = _plan_str(det.query_range("rate(c[30s])", 0, 80 * S, 10 * S).df)
-    assert "collect_list" in p
+    _assert_collects_guarded(p, "rate(c[30s])")
 
 
 def _hmat(result):
@@ -932,9 +996,10 @@ def _hmat(result):
 
 
 def test_production_native_histogram_rate_agrees(spark):
-    """r13: the histogram-window rate family compiles to native
-    aggregations in production mode (no per-sample ObjectHashAggregate
-    collect).  Differential pin against the deterministic fold over a
+    """The histogram-window rate family runs one body in both modes: a
+    native aggregation whose buffers hold only each window's first/last
+    rows and reset pairs (no per-sample collect).  Differential pin
+    between the engines (they differ only in the float reset sum) over a
     corpus with histogram counter resets, bucket-set changes mid-window,
     NULL (custom) and exponential schemas, float series alongside,
     mixed float/histogram windows (dropped) and single-sample windows —
@@ -1008,14 +1073,15 @@ def test_production_native_histogram_rate_agrees(spark):
                     assert ca == pytest.approx(cb, rel=1e-9, abs=1e-12), \
                         (q, k, le)
 
-    # plan pins: the per-sample collect fold is gone — the only collect
-    # left is the k-bounded bucket-array rebuild; no SortAggregate
-    p = _plan_str(prod.query_range("rate(lh[30s])", 0, 80 * S, 10 * S).df)
-    # the remaining collects hold only the boundary/reset BUCKET ARRAYS
-    # (≤ 2 + resets elements per window); the per-sample (ts, hist)-struct
-    # collect — an O(samples-per-window) object buffer — is gone
-    assert "struct(o," not in p
-    assert "SortAggregate" not in p
-    pd = _plan_str(det.query_range("rate(lh[30s])", 0, 80 * S, 10 * S).df)
-    # the fold collects every sample into (o, v)/(o, h) struct arrays
-    assert "struct(o," in pd
+    # plan pins: histogram windows buffer only their first/last rows and
+    # reset pairs (≤ 2 + resets entries per window) in both engines;
+    # resets/changes collect nothing; no SortAggregate demotion
+    for eng in (det, prod):
+        for q in ("rate(lh[30s])", "irate(lh[30s])"):
+            p = _plan_str(eng.query_range(q, 0, 80 * S, 10 * S).df)
+            _assert_collects_guarded(p, q)
+            assert "SortAggregate" not in p, q
+        p = _plan_str(eng.query_range("resets(lh[30s])", 0, 80 * S,
+                                      10 * S).df)
+        assert "collect_list" not in p
+        assert "SortAggregate" not in p

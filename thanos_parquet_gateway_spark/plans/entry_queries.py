@@ -4110,7 +4110,7 @@ def promql_native_rate(spark, sf_dir):
     histograms sampled daily Jan 2-5, rate(lat_hist[4d]) at Jan 5 —
     bucket-wise delta + window-boundary extrapolation (reference serves
     rate over float histograms through promql-engine, db/db_test.go:344-351;
-    functions._extrapolated_hist).  Every user carries samples at all four
+    functions._extrapolated).  Every user carries samples at all four
     days, so the extrapolation factor is the constant (4d/3d); the oracle
     restates the same bucket arithmetic in SQL."""
     from thanos_parquet_gateway_spark.promql import histograms as H

@@ -11,15 +11,16 @@ and no UDFs:
 - native aggregation over the window's rows, with each sample's series
   predecessor attached (``RangeVector.prev``): counts, first/last/min/max
   selections, irate/idelta's last pair and resets/changes' transition
-  counts are exact this way and run so in both modes; the float sums
+  counts are exact this way and run so in both modes, for float and
+  native-histogram windows alike; the float sums
   (sum/avg/stddev/stdvar_over_time, rate's reset correction,
   deriv/predict_linear) reassociate, so they run natively only in
-  production mode;
+  production mode (rate's det reset sum folds only the reset pairs);
 - a fold over the *sorted* per-(series, step) array with Spark
   higher-order functions, bounded by samples-per-window: the deterministic
   (oracle) mode's order-stable float sums, the rank statistics
   (quantile/mad_over_time), ts_of_max/min's last-tie rule, smoothing, and
-  windows that carry native histograms (production-mode rate aside).
+  the histogram-aware over_time functions.
 """
 
 from __future__ import annotations
@@ -419,113 +420,59 @@ def _over_time(c: Compiler, call: A.Call) -> InstantVector:
 
 
 # -------------------------------------------------------------- rate family
-def _reset_correction(arr: Column) -> Column:
-    """Sum of counter-reset corrections: whenever v[i] < v[i-1], add v[i-1]."""
-    acc0 = F.struct(_lit(None).cast(D).alias("prev"), _lit(0.0).alias("corr"))
-    acc = F.aggregate(
-        arr, acc0,
-        lambda a, x: F.struct(
-            x["v"].alias("prev"),
-            (a["corr"] + F.coalesce(
-                # NaN mask: Spark orders NaN above all doubles, so
-                # x < NaN would fire; Go's comparison is always false
-                F.when(~F.isnan(x["v"]) & ~F.isnan(a["prev"])
-                       & (x["v"] < a["prev"]), a["prev"]),
-                _lit(0.0))).alias("corr")))
-    return acc["corr"]
+# The rate family runs over RangeVector.prev, one native aggregation per
+# (t, series): each sample carries its series predecessor (value, ts and,
+# on histogram-carrying vectors, hist) and successor ts, so consecutive
+# pairs and the window's first/last rows are per-row predicates —
+#   in-window pair:   __pts > t - range (the predecessor is itself inside);
+#   first-in-window:  no in-window predecessor;
+#   last-in-window:   __nts absent or past t.
+# Selections keyed on ts are exact because (sig, ts) is unique after
+# replica dedup.
+def _in_pair(rng: int) -> Column:
+    return F.col("__pts") > (F.col("t") - _lit(rng))
 
 
-def _extrapolated(c: Compiler, rv: RangeVector, counter: bool,
-                  is_rate: bool) -> InstantVector:
-    """Prometheus extrapolatedRate: reset-corrected delta extrapolated to the
-    window boundaries (threshold 1.1× avg sample spacing, half-interval credit
-    beyond; counters also clamp extrapolation-to-zero).  Windows of native-
-    histogram samples take the bucket-wise path (_extrapolated_hist); mixed
-    float/histogram windows are dropped (Prometheus skips them with a
-    warning)."""
-    if "hist" in rv.columns:
-        if not c.p.deterministic:
-            return _extrapolated_hist_native(c, rv, counter, is_rate)
-        return _extrapolated_hist(c, rv, counter, is_rate)
+def _last_row() -> Column:
+    return F.col("__nts").isNull() | (F.col("__nts") > F.col("t"))
+
+
+def _float_reset_sum(c: Compiler, rng: int) -> Column:
+    """Aggregate: the float counter-reset correction — every in-window pair
+    with v < prev adds prev (NaN masked on both sides: Spark orders NaN
+    above all doubles, Go's comparison is always false).  The one place
+    the rate family's two modes differ: production sums natively (float
+    reassociation, the same trade the cross-series aggregations make);
+    deterministic mode collects only the reset pairs and folds them in ts
+    order from 0.0 — bit-identical to a fold over every pair, since a
+    non-reset pair adds 0.0 to a sum that starts at +0.0."""
+    v, pv = F.col("value"), F.col("__pv")
+    reset = _in_pair(rng) & ~F.isnan(v) & ~F.isnan(pv) & (v < pv)
     if not c.p.deterministic:
-        return _extrapolated_native(c, rv, counter, is_rate)
-    g = _collect_window(rv).filter(F.size("arr") >= 2)
-    arr = F.col("arr")
-    n = F.size(arr).cast(D)
-    first_t, last_t = F.element_at(arr, 1)["o"], F.element_at(arr, -1)["o"]
-    first_v, last_v = F.element_at(arr, 1)["v"], F.element_at(arr, -1)["v"]
-    delta = (last_v - first_v + _reset_correction(arr)) if counter else (last_v - first_v)
-    g = g.withColumn("__delta", delta)
-    delta = F.col("__delta")
-
-    rng_s = _lit(rv.range_ms / 1000.0)
-    dur_start = (first_t - (F.col("t") - _lit(rv.range_ms))).cast(D) / 1000.0
-    dur_end = (F.col("t") - last_t).cast(D) / 1000.0
-    sampled = (last_t - first_t).cast(D) / 1000.0
-    avg_dur = sampled / (n - 1)
-    threshold = avg_dur * 1.1
-    # Prometheus extrapolatedRate order: clamp durationToStart to avgDur/2
-    # FIRST, then compare durationToZero against the clamped value — the two
-    # diverge when durationToZero lies between avgDur/2 and the raw
-    # durationToStart.
-    dur_start = F.when(dur_start >= threshold, avg_dur / 2).otherwise(dur_start)
-    if counter:
-        dur_to_zero = F.when(delta > 0, sampled * (first_v / delta)).otherwise(dur_start)
-        dur_start = F.when((delta > 0) & (first_v >= 0) & (dur_to_zero < dur_start),
-                           dur_to_zero).otherwise(dur_start)
-    extrap = (sampled
-              + dur_start
-              + F.when(dur_end >= threshold, avg_dur / 2).otherwise(dur_end))
-    factor = extrap / sampled
-    val = delta * factor / rng_s if is_rate else delta * factor
-    return _finalize(g, val)
+        return F.sum(F.when(reset, pv).otherwise(_lit(0.0)))
+    pairs = F.array_sort(F.collect_list(F.when(
+        reset, F.struct(F.col("ts").alias("o"), pv.alias("v")))))
+    return F.aggregate(pairs, _lit(0.0), lambda acc, x: acc + x["v"])
 
 
-def _extrapolated_native(c: Compiler, rv: RangeVector, counter: bool,
-                         is_rate: bool) -> InstantVector:
-    """Production-mode twin of _extrapolated's float path: with each
-    sample's predecessor attached pre-explode (RangeVector.prev), the
-    window statistics the extrapolation needs — n, first/last ts+value and
-    the counter-reset correction — are plain aggregates, so the whole rate
-    family runs as a native aggregation with map-side partials instead of
-    shipping every (replicated) sample through a collect_list buffer.  The
-    reset correction counts a (prev, cur) pair iff the predecessor is
-    itself inside the window (__pts > t - range; every in-window adjacent
-    pair's right element is in the window by construction).  Boundary math
-    below mirrors _extrapolated line for line; the only semantic delta is
-    float-sum reassociation in the reset correction (production trade,
-    same as the cross-series aggregations)."""
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
-    rng = rv.range_ms
-    in_win_pair = F.col("__pts") > (F.col("t") - _lit(rng))
-    corr = F.when(in_win_pair
-                  & ~F.isnan(F.col("value")) & ~F.isnan(F.col("__pv"))
-                  & (F.col("value") < F.col("__pv")),
-                  F.col("__pv")).otherwise(_lit(0.0))
-    g = (hgroup(rv.prev, "sig",
-                F.count(_lit(1)).alias("__wn"),
-                F.min("ts").alias("__ft"),
-                F.max("ts").alias("__lt"),
-                F.min_by("value", "ts").alias("__fv"),
-                F.max_by("value", "ts").alias("__lv"),
-                F.sum(corr).alias("__rc"))
-         .filter(F.col("__wn") >= 2))
-    n = F.col("__wn").cast(D)
-    first_t, last_t = F.col("__ft"), F.col("__lt")
-    first_v, last_v = F.col("__fv"), F.col("__lv")
-    delta = (last_v - first_v + F.col("__rc")) if counter \
-        else (last_v - first_v)
-    g = g.withColumn("__delta", delta)
-    delta = F.col("__delta")
-
-    rng_s = _lit(rng / 1000.0)
+def _extrap_factor(rng: int, n: Column, first_t: Column, last_t: Column,
+                   delta: Column | None = None,
+                   first_v: Column | None = None) -> Column:
+    """Prometheus extrapolatedRate's window-boundary factor: extrapolate to
+    the window edges unless a gap exceeds 1.1× the average sample spacing
+    (then credit half an interval).  With ``delta``/``first_v`` (float
+    counters) the start side also clamps at the extrapolated zero point;
+    histograms skip that clamp (Prometheus gates it on float samples)."""
     dur_start = (first_t - (F.col("t") - _lit(rng))).cast(D) / 1000.0
     dur_end = (F.col("t") - last_t).cast(D) / 1000.0
     sampled = (last_t - first_t).cast(D) / 1000.0
     avg_dur = sampled / (n - 1)
     threshold = avg_dur * 1.1
+    # Prometheus order: clamp durationToStart to avgDur/2 FIRST, then
+    # compare durationToZero against the clamped value — the two diverge
+    # when durationToZero lies between avgDur/2 and the raw durationToStart
     dur_start = F.when(dur_start >= threshold, avg_dur / 2).otherwise(dur_start)
-    if counter:
+    if delta is not None:
         dur_to_zero = F.when(delta > 0, sampled * (first_v / delta)) \
                        .otherwise(dur_start)
         dur_start = F.when((delta > 0) & (first_v >= 0)
@@ -534,275 +481,111 @@ def _extrapolated_native(c: Compiler, rv: RangeVector, counter: bool,
     extrap = (sampled
               + dur_start
               + F.when(dur_end >= threshold, avg_dur / 2).otherwise(dur_end))
-    factor = extrap / sampled
-    val = delta * factor / rng_s if is_rate else delta * factor
-    return _finalize(g, val)
+    return extrap / sampled
 
 
-def _extrapolated_hist(c: Compiler, rv: RangeVector, counter: bool,
-                       is_rate: bool) -> InstantVector:
-    """Rate family over a range vector that carries native-histogram samples
-    (reference serves rate(native_histogram[..]) through promql-engine —
-    float-histogram test db/db_test.go:344-351).
+def _extrapolated(c: Compiler, rv: RangeVector, counter: bool,
+                  is_rate: bool) -> InstantVector:
+    """Prometheus extrapolatedRate: reset-corrected delta extrapolated to the
+    window boundaries.  Windows need ≥2 samples of ONE kind: float windows
+    take the scalar delta, native-histogram windows the bucket-wise one
+    (last - first, plus the pre-reset histograms for counters); mixed
+    windows drop (Prometheus skips them with a warning).
 
-    One window aggregation collects the float samples and the histogram
-    samples into separate sorted arrays; per (t, series) the window is then
-    all-float (existing scalar math), all-histogram (bucket-wise delta +
-    reset merge + the SAME boundary extrapolation, no counter-to-zero clamp
-    — Prometheus gates that clamp on float samples), or mixed (dropped, as
-    Prometheus does with a warning)."""
-    from thanos_parquet_gateway_spark.promql import histograms as H
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
-
-    g = hgroup(
-        rv.df, "sig",
-        F.array_sort(F.collect_list(
-            F.when(F.col("hist").isNull(),
-                   F.struct(F.col("ts").alias("o"),
-                            F.col("value").alias("v"))))).alias("arr"),
-        F.array_sort(F.collect_list(
-            F.when(F.col("hist").isNotNull(),
-                   F.struct(F.col("ts").alias("o"),
-                            F.col("hist").alias("h"))))).alias("harr"),
-        labels="labels")
-    is_float = (F.size("arr") >= 2) & (F.size("harr") == 0)
-    is_hist = (F.size("harr") >= 2) & (F.size("arr") == 0)
-    g = g.filter(is_float | is_hist)
-    rng_s = _lit(rv.range_ms / 1000.0)
-
-    def extrap_factor(parr, with_zero_clamp, delta, first_v):
-        first_t, last_t = F.element_at(parr, 1)["o"], F.element_at(parr, -1)["o"]
-        n = F.size(parr).cast(D)
-        dur_start = (first_t - (F.col("t") - _lit(rv.range_ms))).cast(D) / 1000.0
-        dur_end = (F.col("t") - last_t).cast(D) / 1000.0
-        sampled = (last_t - first_t).cast(D) / 1000.0
-        avg_dur = sampled / (n - 1)
-        threshold = avg_dur * 1.1
-        dur_start = F.when(dur_start >= threshold, avg_dur / 2).otherwise(dur_start)
-        if with_zero_clamp:
-            dur_to_zero = F.when(delta > 0, sampled * (first_v / delta)) \
-                           .otherwise(dur_start)
-            dur_start = F.when((delta > 0) & (first_v >= 0)
-                               & (dur_to_zero < dur_start),
-                               dur_to_zero).otherwise(dur_start)
-        extrap = (sampled + dur_start
-                  + F.when(dur_end >= threshold, avg_dur / 2).otherwise(dur_end))
-        return extrap / sampled
-
-    # float path (identical math to _extrapolated)
-    arr = F.col("arr")
-    fdelta_raw = (F.element_at(arr, -1)["v"] - F.element_at(arr, 1)["v"])
-    fdelta = (fdelta_raw + _reset_correction(arr)) if counter else fdelta_raw
-    g = g.withColumn("__delta", F.when(is_float, fdelta))
-    ffactor = extrap_factor(arr, counter, F.col("__delta"),
-                            F.element_at(arr, 1)["v"])
-    fval = (F.col("__delta") * ffactor / rng_s if is_rate
-            else F.col("__delta") * ffactor)
-
-    # histogram path: delta = last - first (+ pre-reset histograms merged
-    # back in for counters), then the same window-boundary factor
-    harr = F.col("harr")
-    first_h, last_h = F.element_at(harr, 1)["h"], F.element_at(harr, -1)["h"]
-    hdelta = H.sub_two(last_h, first_h)
-    if counter:
-        hdelta = H.merge_two(hdelta, H.hist_reset_correction(harr))
-    g = g.withColumn("__hdelta", F.when(is_hist, hdelta))
-    hfactor = extrap_factor(harr, False, None, None)
-    hscale = hfactor / rng_s if is_rate else hfactor
-    hval = H.scale_hist(F.col("__hdelta"), hscale)
-
-    return _finalize(g, F.when(is_float, fval).otherwise(NAN()),
-                     hist=F.when(is_hist, hval).otherwise(H.null_hist()))
-
-
-def _extrapolated_hist_native(c: Compiler, rv: RangeVector, counter: bool,
-                              is_rate: bool) -> InstantVector:
-    """Production-mode twin of _extrapolated_hist: with the predecessor
-    (value, ts AND hist) attached pre-explode, the histogram rate's window
-    statistics become native aggregations instead of one ObjectHashAggregate
-    collecting every (ts, hist) struct of every (grid-replicated) window.
-
-    Exactness model (mirrors the float production path):
-    - first/last count/sum/ts and the float stats are EXACT selections
-      (min_by/max_by on primitive buffers);
-    - the reset corrections are native sums over lag pairs (a pair counts
-      iff the predecessor is inside the window) — float reassociation
-      across multiple resets, the documented production trade;
-    - bucket deltas come from the first/last histograms' bucket arrays and
-      the pre-reset predecessors', collected under per-row boundary flags —
-      the buffers hold ≤ (2 + resets) small arrays, and the OUTPUT bucket
-      set replicates the fold's union(last.les, first.les[, pre-reset
-      prevs' les]) exactly (a zero-count le present only mid-window must
-      NOT appear: it would shift histogram_quantile's interpolation
-      anchors)."""
-    from thanos_parquet_gateway_spark.promql import histograms as H
+    Histogram buffers hold the first and last rows' hist and the pre-reset
+    predecessors — ≤ 2 + resets structs per window, never every sample —
+    and the delta is the fold's own algebra over them, so both modes give
+    the same histogram."""
     from thanos_parquet_gateway_spark.promql.compiler import hgroup
     rng = rv.range_ms
-    rows = rv.prev
-    hist, ph = F.col("hist"), F.col("__ph")
-    in_pair = F.col("__pts") > (F.col("t") - _lit(rng))
-    hpair = in_pair & hist.isNotNull() & ph.isNotNull()
-    hreset = (hpair & H.detect_reset(ph, hist)) if counter else _lit(False)
-    fcorr = F.when(in_pair
-                   & ~F.isnan(F.col("value")) & ~F.isnan(F.col("__pv"))
-                   & (F.col("value") < F.col("__pv")),
-                   F.col("__pv")).otherwise(_lit(0.0))
-    # schema survives like the fold's coalesce chain: last sample's, else
-    # first sample's, else (counter) the earliest pre-reset prev's non-null
-    # schema.  NULL schema (custom bounds) is legitimate, and max_by skips
-    # NULL values — encode it as a sentinel so "last row's schema IS null"
-    # wins over an earlier non-null one, exactly like the fold.
-    _SENT = -(2 ** 31)
-    sch_enc = F.coalesce(hist["schema"], _lit(_SENT))
-
-    def _dec(col: Column) -> Column:
-        return F.when(col == _SENT, _lit(None).cast("int")).otherwise(col)
-
-    # first/last-in-window membership per ROW off the series lag/lead —
-    # collect_list skips the NULLed non-matching rows, so these buffers
-    # hold exactly one bucket array each (plus one per reset for __rbk)
-    at_first_row = F.col("__pts").isNull() \
-        | (F.col("__pts") <= F.col("t") - _lit(rng))
-    at_last_row = F.col("__nts").isNull() | (F.col("__nts") > F.col("t"))
-    bk_aggs = [
-        F.collect_list(F.when(at_first_row & hist.isNotNull(),
-                              hist["buckets"])).alias("__fbk"),
-        F.collect_list(F.when(at_last_row & hist.isNotNull(),
-                              hist["buckets"])).alias("__lbk"),
-    ] + ([F.collect_list(F.when(hreset, ph["buckets"])).alias("__rbk")]
-         if counter else [])
-
-    g = hgroup(
-        rows, "sig",
-        F.count(F.when(hist.isNull(), _lit(1))).alias("__nf"),
-        F.count(hist).alias("__nh"),
-        F.min("ts").alias("__ft"),
-        F.max("ts").alias("__lt"),
-        F.min_by("value", "ts").alias("__fv"),
-        F.max_by("value", "ts").alias("__lv"),
-        F.sum(fcorr).alias("__frc"),
-        F.min_by(hist["count"], F.col("ts")).alias("__hfc"),
-        F.max_by(hist["count"], F.col("ts")).alias("__hlc"),
-        F.min_by(hist["sum"], F.col("ts")).alias("__hfs"),
-        F.max_by(hist["sum"], F.col("ts")).alias("__hls"),
-        F.sum(F.when(hreset, ph["count"]).otherwise(_lit(0.0))).alias("__hrc"),
-        F.sum(F.when(hreset, ph["sum"]).otherwise(_lit(0.0))).alias("__hrs"),
-        F.max_by(sch_enc, F.col("ts")).alias("__lsch"),
-        F.min_by(sch_enc, F.col("ts")).alias("__fsch"),
-        F.min_by(F.when(hreset, ph["schema"]),
-                 F.when(hreset & ph["schema"].isNotNull(), F.col("ts")))
-         .alias("__rsch"),
-        *bk_aggs)
-    is_float = (F.col("__nf") >= 2) & (F.col("__nh") == 0)
-    is_hist = (F.col("__nh") >= 2) & (F.col("__nf") == 0)
-    g = g.filter(is_float | is_hist)
+    aggs = [F.count(_lit(1)).alias("__wn"),
+            F.min("ts").alias("__ft"),
+            F.max("ts").alias("__lt"),
+            F.min_by("value", "ts").alias("__fv"),
+            F.max_by("value", "ts").alias("__lv"),
+            _float_reset_sum(c, rng).alias("__rc")]
+    hist = "hist" in rv.columns
+    if hist:
+        from thanos_parquet_gateway_spark.promql import histograms as H
+        h, ph = F.col("hist"), F.col("__ph")
+        first_row = F.col("__pts").isNull() | ~_in_pair(rng)
+        aggs += [F.count(h).alias("__nh"),
+                 F.collect_list(F.when(first_row, h)).alias("__fh"),
+                 F.collect_list(F.when(_last_row(), h)).alias("__lh")]
+        if counter:
+            reset = (_in_pair(rng) & h.isNotNull() & ph.isNotNull()
+                     & H.detect_reset(ph, h))
+            aggs.append(F.array_sort(F.collect_list(F.when(
+                reset, F.struct(F.col("ts").alias("o"), ph.alias("h")))))
+                .alias("__rh"))
+    first_t, last_t = F.col("__ft"), F.col("__lt")
+    first_v, last_v = F.col("__fv"), F.col("__lv")
+    keep = F.col("__wn") >= 2
+    cols = {"__delta": (last_v - first_v + F.col("__rc")) if counter
+            else (last_v - first_v)}
+    if hist:
+        is_float = F.col("__nh") == 0
+        is_hist = F.col("__nh") == F.col("__wn")
+        keep = keep & (is_float | is_hist)
+        # try_element_at: float windows leave both buffers empty
+        cols["__hdelta"] = F.when(is_hist, H.sub_two(
+            F.try_element_at(F.col("__lh"), _lit(1)),
+            F.try_element_at(F.col("__fh"), _lit(1))))
+        if counter:
+            cols["__hcorr"] = F.aggregate(
+                F.col("__rh"), H.zero_hist(),
+                lambda acc, x: H.merge_two(acc, x["h"]))
+    # one filter and one projection: each DataFrame op is a JVM plan step
+    # with an eager re-analysis of the whole plan (compile latency)
+    g = hgroup(rv.prev, "sig", *aggs).filter(keep).withColumns(cols)
+    n = F.col("__wn").cast(D)
+    delta = F.col("__delta")
     rng_s = _lit(rng / 1000.0)
-
-    def factor(n, with_zero_clamp, delta, first_v):
-        # mirrors _extrapolated_hist.extrap_factor line for line, off the
-        # aggregated scalar columns (first/last ts are per-kind on kept
-        # windows — single-kind by the filter above)
-        dur_start = (F.col("__ft") - (F.col("t") - _lit(rng))).cast(D) / 1000.0
-        dur_end = (F.col("t") - F.col("__lt")).cast(D) / 1000.0
-        sampled = (F.col("__lt") - F.col("__ft")).cast(D) / 1000.0
-        avg_dur = sampled / (n - 1)
-        threshold = avg_dur * 1.1
-        dur_start = F.when(dur_start >= threshold, avg_dur / 2) \
-                     .otherwise(dur_start)
-        if with_zero_clamp:
-            dur_to_zero = F.when(delta > 0, sampled * (first_v / delta)) \
-                           .otherwise(dur_start)
-            dur_start = F.when((delta > 0) & (first_v >= 0)
-                               & (dur_to_zero < dur_start),
-                               dur_to_zero).otherwise(dur_start)
-        extrap = (sampled + dur_start
-                  + F.when(dur_end >= threshold, avg_dur / 2)
-                     .otherwise(dur_end))
-        return extrap / sampled
-
-    # float path (identical math to _extrapolated_native)
-    fdelta_raw = F.col("__lv") - F.col("__fv")
-    fdelta = (fdelta_raw + F.col("__frc")) if counter else fdelta_raw
-    g = g.withColumn("__delta", F.when(is_float, fdelta))
-    ffactor = factor(F.col("__nf").cast(D), counter, F.col("__delta"),
-                     F.col("__fv"))
-    fval = (F.col("__delta") * ffactor / rng_s if is_rate
-            else F.col("__delta") * ffactor)
-
-    # histogram scalars: delta = last - first (+ pre-reset correction)
-    hfactor = factor(F.col("__nh").cast(D), False, None, None)
+    factor = _extrap_factor(rng, n, first_t, last_t,
+                            *((delta, first_v) if counter else ()))
+    val = delta * factor / rng_s if is_rate else delta * factor
+    if not hist:
+        return _finalize(g, val)
+    hfactor = _extrap_factor(rng, n, first_t, last_t)
     hscale = hfactor / rng_s if is_rate else hfactor
-    hc = F.col("__hlc") - F.col("__hfc")
-    hs = F.col("__hls") - F.col("__hfs")
+    hdelta = F.col("__hdelta")
     if counter:
-        hc = hc + F.col("__hrc")
-        hs = hs + F.col("__hrs")
-    sch = F.coalesce(_dec(F.col("__lsch")), _dec(F.col("__fsch")),
-                     *([F.col("__rsch")] if counter else []))
-
-    # bucket deltas: the delta needs only the FIRST and LAST histograms'
-    # bucket arrays plus the pre-reset predecessors' — ≤ (2 + resets) small
-    # arrays per window, collected under flags decided PER ROW from the
-    # series lag/lead (the first in-window sample's predecessor is outside
-    # the window; the last one's successor is past t).  The math then runs
-    # as per-row array expressions post-agg — exactly the fold's
-    # sub_two/merge shape.  An exploded per-(t, series, le) aggregation was
-    # built first and MEASURED SLOWER than the fold (2k series × 120
-    # samples, 30× window replication: 21 s vs 11.6 s — the ×les explode
-    # and the second pass over the base cost more than the object buffers
-    # save), so the aggregation keeps the fold's single-pass shape and only
-    # shrinks what the buffers hold: O(1 + resets) bucket arrays instead of
-    # every (grid-replicated) window sample.
-    bk_first = F.try_element_at(F.col("__fbk"), _lit(1))
-    bk_last = F.try_element_at(F.col("__lbk"), _lit(1))
-    _BK = "array<struct<le:double,count:double>>"
-    neg_first = F.transform(
-        F.coalesce(bk_first, F.array().cast(_BK)),
-        lambda b: F.struct(b["le"].alias("le"), (-b["count"]).alias("count")))
-    parts = [F.coalesce(bk_last, F.array().cast(_BK)), neg_first]
-    if counter:
-        parts.append(F.coalesce(F.flatten(F.col("__rbk")),
-                                F.array().cast(_BK)))
-    allb = F.concat(*parts)
-    les = F.array_sort(F.array_distinct(
-        F.transform(allb, lambda e: e["le"])))
-    hval = H.make_hist(
-        hc * hscale, hs * hscale,
-        F.transform(les, lambda le: F.struct(
-            le.alias("le"),
-            (F.aggregate(F.filter(allb, lambda e: e["le"] == le), _lit(0.0),
-                         lambda acc, e: acc + e["count"])
-             * hscale).alias("count"))),
-        sch)
-    return _finalize(g, F.when(is_float, fval).otherwise(NAN()),
+        hdelta = H.merge_two(hdelta, F.col("__hcorr"))
+    hval = H.scale_hist(hdelta, hscale)
+    return _finalize(g, F.when(is_float, val).otherwise(NAN()),
                      hist=F.when(is_hist, hval).otherwise(H.null_hist()))
 
 
 def _instant_pair(c: Compiler, rv: RangeVector, kind: str) -> InstantVector:
-    """irate/idelta from the last two samples of the window.  Histogram
-    windows take the bucket-wise analogue (reset -> the last histogram
-    stands alone, mirroring the float counter rule)."""
-    if "hist" in rv.columns:
-        return _instant_pair_hist(c, rv, kind)
-    # the window's last TWO samples are the max_by(ts) row plus the
-    # predecessor it carries (attached pre-explode) — one native
-    # aggregation, no collect_list fold, and an exact selection (det mode
-    # runs it too).  ≥2-samples filter ≡ "the last sample's predecessor is
-    # itself inside the window".
+    """irate/idelta from the window's last TWO samples: the max_by(ts) row
+    plus the predecessor it carries.  ≥2 samples ≡ "the last sample's
+    predecessor is itself inside the window".  Histogram windows (every
+    sample a histogram) take the bucket-wise analogue off the last row's
+    hist and __ph — a reset leaves the last histogram standing alone,
+    mirroring the float counter rule; mixed windows drop."""
     from thanos_parquet_gateway_spark.promql.compiler import hgroup
-    # three primitive max_by's, not one max_by(struct): a struct
-    # aggregation BUFFER is not UnsafeRow-mutable and demotes the whole
-    # aggregation to SortAggregate (the plan pin in test_promql_eval
-    # rejects it); the primitive buffers stay on codegen HashAggregate.  All three are keyed
-    # on the same ts, so they read the same sample row ((sig, ts) is
-    # unique).
-    g = (hgroup(rv.prev, "sig",
-                F.max("ts").alias("__lt"),
-                F.max_by("value", "ts").alias("__lv"),
-                F.max_by("__pv", "ts").alias("__lpv"),
-                F.max_by("__pts", "ts").alias("__lpt"))
-         .filter(F.col("__lpt").isNotNull()
-                 & (F.col("__lpt") > F.col("t") - _lit(rv.range_ms))))
+    # primitive max_by's, not one max_by(struct): a struct aggregation
+    # BUFFER is not UnsafeRow-mutable and demotes the whole aggregation to
+    # SortAggregate (the plan pin in test_promql_eval rejects it).  All
+    # are keyed on the same ts, so they read the same sample row.
+    aggs = [F.max("ts").alias("__lt"),
+            F.max_by("value", "ts").alias("__lv"),
+            F.max_by("__pv", "ts").alias("__lpv"),
+            F.max_by("__pts", "ts").alias("__lpt")]
+    keep = (F.col("__lpt").isNotNull()
+            & (F.col("__lpt") > F.col("t") - _lit(rv.range_ms)))
+    hist = "hist" in rv.columns
+    if hist:
+        from thanos_parquet_gateway_spark.promql import histograms as H
+        h = F.col("hist")
+        aggs += [F.count(F.when(h.isNull(), _lit(1))).alias("__nf"),
+                 F.count(h).alias("__nh"),
+                 F.collect_list(F.when(_last_row(), F.struct(
+                     h.alias("h"), F.col("__ph").alias("p")))).alias("__lh")]
+        is_float = F.col("__nh") == 0
+        is_hist = F.col("__nf") == 0
+        keep = keep & (is_float | is_hist)
+    g = hgroup(rv.prev, "sig", *aggs).filter(keep)
     last_t, prev_t = F.col("__lt"), F.col("__lpt")
     last_v, prev_v = F.col("__lv"), F.col("__lpv")
     dt_s = (last_t - prev_t).cast(D) / 1000.0
@@ -811,47 +594,17 @@ def _instant_pair(c: Compiler, rv: RangeVector, kind: str) -> InstantVector:
         val = dv / dt_s
     else:
         val = last_v - prev_v
-    return _finalize(g, val)
+    if not hist:
+        return _finalize(g, val)
 
-
-def _instant_pair_hist(c: Compiler, rv: RangeVector, kind: str) -> InstantVector:
-    from thanos_parquet_gateway_spark.promql import histograms as H
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
-
-    g = hgroup(
-        rv.df, "sig",
-        F.array_sort(F.collect_list(
-            F.when(F.col("hist").isNull(),
-                   F.struct(F.col("ts").alias("o"),
-                            F.col("value").alias("v"))))).alias("arr"),
-        F.array_sort(F.collect_list(
-            F.when(F.col("hist").isNotNull(),
-                   F.struct(F.col("ts").alias("o"),
-                            F.col("hist").alias("h"))))).alias("harr"),
-        labels="labels")
-    is_float = (F.size("arr") >= 2) & (F.size("harr") == 0)
-    is_hist = (F.size("harr") >= 2) & (F.size("arr") == 0)
-    g = g.filter(is_float | is_hist)
-
-    arr = F.col("arr")
-    last_t, prev_t = F.element_at(arr, -1)["o"], F.element_at(arr, -2)["o"]
-    last_v, prev_v = F.element_at(arr, -1)["v"], F.element_at(arr, -2)["v"]
-    fdt = (last_t - prev_t).cast(D) / 1000.0
-    if kind == "irate":
-        fval = F.when(last_v >= prev_v, last_v - prev_v).otherwise(last_v) / fdt
-    else:
-        fval = last_v - prev_v
-
-    harr = F.col("harr")
-    lh, ph = F.element_at(harr, -1)["h"], F.element_at(harr, -2)["h"]
-    hdt = (F.element_at(harr, -1)["o"] - F.element_at(harr, -2)["o"]) \
-        .cast(D) / 1000.0
+    last = F.try_element_at(F.col("__lh"), _lit(1))
+    lh, ph = last["h"], last["p"]
     if kind == "irate":
         dh = F.when(H.detect_reset(ph, lh), lh).otherwise(H.sub_two(lh, ph))
-        hval = H.scale_hist(dh, _lit(1.0) / hdt)
+        hval = H.scale_hist(dh, _lit(1.0) / dt_s)
     else:
         hval = H.sub_two(lh, ph)
-    return _finalize(g, F.when(is_float, fval).otherwise(NAN()),
+    return _finalize(g, F.when(is_float, val).otherwise(NAN()),
                      hist=F.when(is_hist, hval).otherwise(H.null_hist()))
 
 
@@ -884,51 +637,6 @@ def _double_exp_smoothing(c: Compiler, call: A.Call) -> InstantVector:
     res = F.aggregate(F.slice(arr, 2, F.greatest(F.size(arr) - 1, _lit(0))),
                       acc0, step)
     return _finalize(g, res["s"])
-
-
-def _counts_hist(c: Compiler, rv: RangeVector, mode: str) -> InstantVector:
-    """resets/changes over windows that may carry native histograms
-    (upstream funcResets/funcChanges): samples of both kinds iterate in
-    one time-ordered sequence; a float→histogram or histogram→float type
-    switch counts for BOTH functions; histogram pairs use DetectReset
-    (resets) / Equals (changes); float pairs keep the scalar rules."""
-    from thanos_parquet_gateway_spark.promql import histograms as H
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
-
-    g = hgroup(
-        rv.df, "sig",
-        F.array_sort(F.collect_list(F.struct(
-            F.col("ts").alias("o"), F.col("value").alias("v"),
-            F.col("hist").alias("h")))).alias("marr"),
-        labels="labels")
-    marr = F.col("marr")
-    acc0 = F.struct(_lit(False).alias("init"),
-                    _lit(None).cast(D).alias("pv"),
-                    H.null_hist().alias("ph"),
-                    _lit(0.0).alias("n"))
-
-    def merge(a, x):
-        bothf = a["ph"].isNull() & x["h"].isNull()
-        bothh = a["ph"].isNotNull() & x["h"].isNotNull()
-        flip = ~bothf & ~bothh
-        if mode == "resets":
-            hit_f = (~F.isnan(x["v"]) & ~F.isnan(a["pv"])
-                     & (x["v"] < a["pv"]))
-            hit_h = H.detect_reset(a["ph"], x["h"])
-        else:
-            both_nan = F.isnan(x["v"]) & F.isnan(a["pv"])
-            hit_f = (((x["v"] != a["pv"]) | F.isnan(x["v"])
-                      | F.isnan(a["pv"])) & ~both_nan)
-            hit_h = ~a["ph"].eqNullSafe(x["h"])
-        hit = a["init"] & (flip
-                           | (bothf & F.coalesce(hit_f, _lit(False)))
-                           | (bothh & F.coalesce(hit_h, _lit(False))))
-        return F.struct(_lit(True).alias("init"),
-                        x["v"].alias("pv"), x["h"].alias("ph"),
-                        (a["n"] + F.when(hit, 1.0).otherwise(0.0)).alias("n"))
-
-    val = F.aggregate(marr, acc0, merge)["n"]
-    return _finalize(g, val)
 
 
 def _linreg(arr: Column, intercept_t: Column):
@@ -1326,8 +1034,6 @@ def dispatch(c: Compiler, call: A.Call):
         return _double_exp_smoothing(c, call)
     if fn in ("resets", "changes"):
         rv = _range_arg(c, call)
-        if "hist" in rv.columns:
-            return _counts_hist(c, rv, fn)
         # a transition count is a plain aggregation over (sample,
         # predecessor) pairs — a pair counts iff the predecessor is itself
         # inside the window (__pts > t - range), which is exactly the set
@@ -1344,12 +1050,23 @@ def dispatch(c: Compiler, call: A.Call):
         # via coalesce(hit, false).
         from thanos_parquet_gateway_spark.promql.compiler import hgroup
         v, pv = F.col("value"), F.col("__pv")
-        in_win = F.col("__pts") > (F.col("t") - _lit(rv.range_ms))
+        in_win = _in_pair(rv.range_ms)
         if fn == "resets":
             hit = ~F.isnan(v) & ~F.isnan(pv) & (v < pv)
         else:
             both_nan = F.isnan(v) & F.isnan(pv)
             hit = ((v != pv) | F.isnan(v) | F.isnan(pv)) & ~both_nan
+        if "hist" in rv.columns:
+            # both kinds iterate in one time-ordered sequence: histogram
+            # pairs use DetectReset (resets) / Equals (changes), and a
+            # float↔histogram type switch counts for BOTH functions
+            from thanos_parquet_gateway_spark.promql import histograms as H
+            h, ph = F.col("hist"), F.col("__ph")
+            hist_hit = (H.detect_reset(ph, h) if fn == "resets"
+                        else ~ph.eqNullSafe(h))
+            hit = (F.when(h.isNull() & ph.isNull(), hit)
+                   .when(h.isNotNull() & ph.isNotNull(), hist_hit)
+                   .otherwise(_lit(True)))
         g = hgroup(
             rv.prev, "sig",
             F.sum(F.when(F.coalesce(in_win & hit, _lit(False)),

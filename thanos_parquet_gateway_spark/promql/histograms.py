@@ -336,18 +336,3 @@ def detect_reset(prev: Column, cur: Column) -> Column:
             _lit(0.0)) < pb["count"])
     return (cur["count"] < prev["count"]) | bucket_drop
 
-
-def hist_reset_correction(harr: Column) -> Column:
-    """Sum (bucket-wise merge) of pre-reset histograms over a sorted window
-    array of struct(o, h) — the histogram analogue of the float rate's
-    reset correction."""
-    acc0 = F.struct(_lit(None).cast(HIST_TYPE).alias("prev"),
-                    zero_hist().alias("corr"))
-    acc = F.aggregate(
-        harr, acc0,
-        lambda a, x: F.struct(
-            x["h"].alias("prev"),
-            F.when(a["prev"].isNotNull() & detect_reset(a["prev"], x["h"]),
-                   merge_two(a["corr"], a["prev"]))
-             .otherwise(a["corr"]).alias("corr")))
-    return acc["corr"]

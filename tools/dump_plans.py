@@ -1,6 +1,6 @@
 """Dump .explain('formatted') for every bench query — plus the tracked
-non-bench production paths (subquery rate, native-histogram rate,
-@-anchored rate) — to <out_dir>/<name>_<tag>.txt.
+non-bench production paths (subquery rate, native-histogram
+rate/irate/resets, @-anchored rate) — to <out_dir>/<name>_<tag>.txt.
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [query ...]
 Tag is e.g. 'before' or 'after'.  With no query names, dumps everything.
@@ -16,11 +16,12 @@ import sys
 from contextlib import redirect_stdout
 
 
-def _hist_rate_df(spark, sf_dir):
-    """rate() over native-histogram samples in PRODUCTION mode — the same
-    per-user daily cumulative histograms the promql_native_rate registry
-    entry builds, evaluated with deterministic=False so the dumped plan is
-    the production histogram-window path."""
+def _hist_df(spark, sf_dir, query):
+    """``query`` over native-histogram samples in PRODUCTION mode — the
+    same per-user daily cumulative histograms (``lat_hist``) the
+    promql_native_rate registry entry builds, evaluated with
+    deterministic=False so the dumped plan is the production
+    histogram-window path."""
     from pyspark.sql import functions as F
 
     from thanos_parquet_gateway_spark.plans import entry_queries as EQ
@@ -58,7 +59,7 @@ def _hist_rate_df(spark, sf_dir):
         F.lit(float("nan")).alias("value"),
         H.make_hist(F.col("cnt"), F.col("total"), buckets).alias("hist"))
     eng = PromQLEngine(samples, lookback_ms=60_000, deterministic=False)
-    return eng.query_instant("rate(lat_hist[4d])", EQ._NR_T).df
+    return eng.query_instant(query, EQ._NR_T).df
 
 
 def main():
@@ -111,7 +112,12 @@ def main():
         # tracked non-bench paths (production mode, like the bench engine)
         "promql_subquery_rate": lambda: eng.query_range(
             "rate(click[2d:2h])", EQ.R_START, EQ.R_END, EQ.STEP).df,
-        "promql_hist_rate": lambda: _hist_rate_df(spark, sf_dir),
+        "promql_hist_rate": lambda: _hist_df(
+            spark, sf_dir, "rate(lat_hist[4d])"),
+        "promql_hist_irate": lambda: _hist_df(
+            spark, sf_dir, "irate(lat_hist[4d])"),
+        "promql_hist_resets": lambda: _hist_df(
+            spark, sf_dir, "resets(lat_hist[4d])"),
         "promql_at_rate": lambda: eng.query_range(
             f"rate(click[2d] @ {EQ.R_END // 1000})",
             EQ.R_START, EQ.R_END, EQ.STEP).df,
