@@ -176,6 +176,32 @@ def test_jaccard_bounds_and_exactness(spark):
     assert abs(j[0]["jaccard"] - 1 / 3) < 1e-15
 
 
+def test_dedup_jaccard_entry_literal_rows(spark, tmp_path):
+    """The registry's all-pairs word-3-gram Jaccard ≥ 0.6 on a hand-built
+    corpus: null and under-3-word texts have no shingles, a repeated
+    shingle counts once, and 3/5 sits exactly on the threshold."""
+    from thanos_parquet_gateway_spark.plans.entry_queries import QUERIES
+
+    texts = {
+        1: "a b c d e f",      # {abc, bcd, cde, def}
+        2: "A b c d e   g",    # {abc, bcd, cde, deg}: 3/5 with doc 1
+        3: "x y z w",          # {xyz, yzw}
+        4: "X  y\tZ w",        # same shingles after normalization
+        5: None,
+        6: "a b",              # under 3 words
+        7: "a b c d x y",      # 2/6 with docs 1 and 2
+        8: "x y z",            # 1/2 with docs 3 and 4
+        9: "p q r p q r",      # {pqr, qrp, rpq}: "p q r" twice
+        10: "p q r p q",       # {pqr, qrp, rpq}
+    }
+    spark.createDataFrame(sorted(texts.items()),
+                          "doc_id bigint, text string") \
+        .write.parquet(str(tmp_path / "documents.parquet"))
+    got = sorted(tuple(r) for r in
+                 QUERIES["dedup_jaccard"](spark, str(tmp_path)).collect())
+    assert got == [(1, 2, 3, 5, 0.6), (3, 4, 2, 2, 1.0), (9, 10, 3, 3, 1.0)]
+
+
 def test_simhash_similar_docs_close(spark):
     rows = [(1, "spark engine query plan optimizer data"),
             (2, "spark engine query plan optimizer code"),

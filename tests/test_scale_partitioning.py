@@ -57,16 +57,16 @@ def test_hash_parallelism_scales_with_input(spark, monkeypatch):
     cores = spark.sparkContext.defaultParallelism
 
     monkeypatch.setattr(tables, "scan_splits_estimate", lambda _df: 1000)
-    assert dedup._hash_parallelism(df) == 1000
+    assert tables.hash_parallelism(df) == 1000
 
     monkeypatch.setattr(tables, "scan_splits_estimate", lambda _df: 1)
-    assert dedup._hash_parallelism(df) == cores
+    assert tables.hash_parallelism(df) == cores
 
     def boom(_df):
         raise RuntimeError("stats unavailable")
 
     monkeypatch.setattr(tables, "scan_splits_estimate", boom)
-    assert dedup._hash_parallelism(df) == cores
+    assert tables.hash_parallelism(df) == cores
 
 
 def test_shingle_rows_plan_uses_scaled_partitioning(spark, monkeypatch):
@@ -106,6 +106,6 @@ def test_scan_splits_sentinel_raises(spark):
     with pytest.raises(Exception):
         tables.scan_splits_estimate(df)
     # ...and both consumers fall back to their safe defaults end to end
-    assert dedup._hash_parallelism(df) == spark.sparkContext.defaultParallelism
+    assert tables.hash_parallelism(df) == spark.sparkContext.defaultParallelism
     out = dedup.shingle_rows(df)  # must not blow up in repartition()
     assert out.count() > 0

@@ -16,6 +16,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from thanos_parquet_gateway_spark.operators.topk import grouped_topk
+from thanos_parquet_gateway_spark.sources.tables import (
+    hash_parallelism,
+    spread_small_scan,
+)
 
 
 def _sql_ref(c: str) -> str:
@@ -656,14 +660,16 @@ def semantic_dedup(embeddings: DataFrame, k_clusters: int = 8,
     quadratic term is bounded per cell (n/k average), never corpus².
     Raise ``k_clusters`` proportionally with the corpus to hold cell sizes
     constant.  ``hash_family='md5'`` gives a seeding a SQL oracle can
-    reproduce.
+    reproduce.  The pair join runs in the partitions of the (spread) scan:
+    a few-split input is round-robined over the cores first
+    (``spread_small_scan``), else the whole quadratic pass is one task.
 
     Returns one row per input vector: (vec_id, cell, keep).
     """
     if k_clusters < 1:
         raise ValueError("semantic_dedup: k_clusters must be >= 1")
-    e = embeddings.select(F.col(id_col).alias("vec_id"),
-                          F.col(vec_col).alias("v"))
+    e = spread_small_scan(embeddings.select(F.col(id_col).alias("vec_id"),
+                                            F.col(vec_col).alias("v")))
     cents = seed_centroids(e, k_clusters, hash_family)
     for _ in range(lloyd_iters):
         cents = _lloyd_step(e, cents, exact_means=exact_means)
@@ -706,12 +712,22 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     Tuning: at real near-dup thresholds (≥0.9, angle ≤ 26°) the defaults
     give per-pair recall ≈ 1-(1-0.86^2)^8 ≈ 0.91 with n/4-sized buckets per
     band; raise ``bits_per_band`` to shrink buckets at scale, raise
-    ``bands`` for recall.  Loose thresholds (≈0.35) need 1-bit bands —
-    comparable compute to brute force, at which point IVF-style clustering
-    is the better scale path (see ``lsh_topk`` for the search-side variant).
+    ``bands`` for recall.  Loose thresholds (≈0.35) need 1-bit bands, whose
+    recall 1-(θ/π)^bands still misses pairs (≈0.9995 at 8 bands) while the
+    band join emits more candidate rows than there are pairs — use
+    ``all_pairs=True`` there, or IVF-style clustering at scale (see
+    ``lsh_topk`` for the search-side variant).
+
+    Parallelism: a few-split input is round-robined over the cores first
+    (``spread_small_scan``), so the band join and the all-pairs cross join
+    do not run in the single scan task.  The deduplicated candidate ids get
+    an explicit partition count (``hash_parallelism``) before the
+    CPU-bound rescoring: they are byte-small, and AQE would coalesce their
+    shuffle into one or two tasks.  Each cosine is the same sequential
+    fold whatever the partitioning, so results do not depend on it.
     """
-    e = (embeddings.select(F.col(id_col).alias("id"),
-                           F.col(vec_col).alias("v"))
+    e = (spread_small_scan(embeddings.select(F.col(id_col).alias("id"),
+                                             F.col(vec_col).alias("v")))
          # norm hoisted out of the pair loop: one fold per input row
          .withColumn("__n", norm("v")))
     if all_pairs:
@@ -742,9 +758,11 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
         kb = e.select("id", F.posexplode(keys).alias("band", "key"))
         pa = kb.select(F.col("id").alias("id_a"), "band", "key")
         pb = kb.select(F.col("id").alias("id_b"), "band", "key")
+        # repartition AFTER dropDuplicates keeps its map-side dedup
         ids = (pa.join(pb, ["band", "key"])
                .filter(F.col("id_a") < F.col("id_b"))
-               .dropDuplicates(["id_a", "id_b"]))
+               .dropDuplicates(["id_a", "id_b"])
+               .repartition(hash_parallelism(embeddings)))
         av = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
                       F.col("__n").alias("__na"))
         bv = e.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),

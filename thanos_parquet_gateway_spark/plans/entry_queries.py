@@ -1408,24 +1408,24 @@ def dedup_jaccard(spark, sf_dir):
     sh = (docs.select(F.col("doc_id"),
                       dedup.normalized_words(F.col("text")).alias("__w"))
           .select("doc_id", dedup.shingles(F.col("__w")).alias("sh")))
+    # each doc's shingle count rides through the explode as a grouping key
+    # (no size side-table re-running the shingling).  coalesce makes it
+    # non-nullable, so no isnotnull(size(<shingle expr>)) is inferred from
+    # the jaccard filter and pushed below the spread into the scan task.
     # explode_outer + post-generate null filter, NOT explode: plain explode
     # makes InferFiltersFromGenerate push a size/isnotnull predicate of the
-    # WHOLE shingle expression below the staging projections — the
-    # quadratic per-element re-eval this staging exists to avoid, paid per
-    # row in a Filter (r12 plan audit: 2.6× on this query's join input)
-    expl = (sh.select("doc_id", F.explode_outer("sh").alias("shingle"))
+    # WHOLE shingle expression below the staging projections too.
+    expl = (sh.select("doc_id",
+                      F.coalesce(F.size("sh"), F.lit(0)).alias("n"),
+                      F.explode_outer("sh").alias("shingle"))
             .filter(F.col("shingle").isNotNull()))
     a = expl.alias("a"); b = expl.alias("b")
-    pairs = (a.join(b, (F.col("a.shingle") == F.col("b.shingle")) &
-                    (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-             .agg(F.count("*").alias("inter")))
-    sizes = sh.select("doc_id", F.size("sh").alias("n"))
-    j = (pairs.join(sizes.withColumnRenamed("doc_id", "doc_a")
-                    .withColumnRenamed("n", "na"), "doc_a")
-         .join(sizes.withColumnRenamed("doc_id", "doc_b")
-               .withColumnRenamed("n", "nb"), "doc_b")
+    j = (a.join(b, (F.col("a.shingle") == F.col("b.shingle")) &
+                (F.col("a.doc_id") < F.col("b.doc_id")))
+         .groupBy(F.col("a.doc_id").alias("doc_a"),
+                  F.col("b.doc_id").alias("doc_b"),
+                  F.col("a.n").alias("na"), F.col("b.n").alias("nb"))
+         .agg(F.count("*").alias("inter"))
          .withColumn("union", F.col("na") + F.col("nb") - F.col("inter"))
          .withColumn("jaccard", F.col("inter").cast("double") /
                      F.col("union").cast("double")))
@@ -1994,14 +1994,17 @@ WITH pairs AS (
 SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= 0.35
 """)
 def sim_near_dup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs via the banded-LSH default
-    path (candidates = pairs sharing ≥1 sign-sketch band, exact cosine
-    rescoring).  The oracle stays all-pairs SQL: at this corpus the banding
-    has verified recall 1 (all 271 qualifying pairs co-bucket under every
-    tested seed), so the bucketed Spark plan must hash-match it exactly."""
+    """Embedding-cosine near-duplicate pairs over ALL pairs (the operator's
+    exact ``all_pairs=True`` path; its default is banded LSH).  At this
+    loose threshold banding cannot prune: 8 one-bit bands give per-pair
+    recall 1−(θ/π)⁸ ≈ 0.9995 at cos 0.35 — it misses 2 of sf0.1's 4,137
+    qualifying pairs — and on the first 800 sf0.1 vectors the band join
+    emits 1,277,636 rows that dedup to 318,002 candidates of the 319,600
+    pairs.  The oracle is all-pairs SQL, and both sides fold each cosine
+    in the same sequential order, so rows match exactly."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.embedding_near_dup_pairs(
-        emb, threshold=0.35, bands=8, bits_per_band=1, seed=0)
+    return similarity.embedding_near_dup_pairs(emb, threshold=0.35,
+                                               all_pairs=True)
 
 
 def _cos_sql(a: str, b: str) -> str:

@@ -113,14 +113,37 @@ def scan_splits_estimate(df: DataFrame) -> int:
     return int(sum(sizes) // max_split)
 
 
+def hash_parallelism(df: DataFrame) -> int:
+    """Explicit partition count for a CPU-bound stage over byte-small rows
+    (per-shingle hashing, per-pair cosine), where AQE's size-based
+    coalescing would undershoot badly.  Scale-adaptive: max(cluster cores,
+    estimated input splits) — a few-split local input spreads across the
+    cores, while a 100 TB input keeps input-proportional parallelism
+    instead of being pinned to the core count.  Falls back to the core
+    count when the stats probe fails."""
+    par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
+    try:
+        return max(par, scan_splits_estimate(df))
+    except Exception:
+        return par
+
+
 def spread_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin-repartition ``df`` to cluster parallelism ONLY when its
     scan is too small to fill the cores (estimated splits < parallelism).
     Uses the leaf relations' catalog size estimate (driver-side, no job).
     For CPU-bound per-row operators (text quality/repetition signals, the
-    7× hopping-window explode) a few-split local input would otherwise run
-    single-task; a many-split 100 TB input skips the repartition — an
-    unconditional one would be a full wasted shuffle of the fact table."""
+    7× hopping-window explode, all-pairs joins) a few-split local input
+    would otherwise run single-task; a many-split 100 TB input skips the
+    repartition — an unconditional one would be a full wasted shuffle of
+    the fact table.
+
+    Filters that Catalyst infers downstream (``isnotnull`` of a join or
+    filter input) are pushed through the round-robin into the SCAN task,
+    below the spread.  A heavy expression that such a filter can reach
+    then runs single-task again, once per inference — so callers keep
+    heavy derived columns non-nullable (e.g. ``coalesce(size(x), 0)``)
+    or compute them above this call."""
     spark = df.sparkSession
     par = max(spark.sparkContext.defaultParallelism, 1)
     try:

@@ -4,7 +4,8 @@ checks the scale-critical properties (SURVEY.md §4):
 - matcher filters reach the parquet scan (PushedFilters),
 - scans read only needed columns (ReadSchema pruning),
 - small dimension joins broadcast (BroadcastHashJoin),
-- no driver-side collects inside operators.
+- no driver-side collects inside operators,
+- all-pairs operators run their pair stage above the small-scan spread.
 
 Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -23,6 +24,27 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def tree_of(df) -> str:
+    """The physical plan as an indented tree (one node per line)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def subtree(tree: str, node: str) -> str | None:
+    """Lines of the first node matching regex ``node`` and of everything
+    below it (deeper-indented lines), or None when no node matches."""
+    lines = tree.splitlines()
+    for i, ln in enumerate(lines):
+        if re.search(node, ln):
+            depth = len(ln) - len(ln.lstrip(" :|+-"))
+            out = [ln]
+            for child in lines[i + 1:]:
+                if len(child) - len(child.lstrip(" :|+-")) <= depth:
+                    break
+                out.append(child)
+            return "\n".join(out)
+    return None
 
 
 def check(name: str, plan: str, expectations: list[tuple[str, str]]):
@@ -201,6 +223,43 @@ def main():
     if "CartesianProduct" in p7:
         print("  [MISS] cartesian corpus join present")
         results.append(False)
+
+    # 7b. all-pairs operators on the one-file embeddings: the pair join
+    # must sit above the small-scan round-robin spread, or its per-pair
+    # cosines run in the single scan task
+    pair_joins = {
+        "semantic dedup pair join": (q7, r"Join \[cell#\d+\], \[cell#"),
+        "near-dup banded": (
+            similarity.embedding_near_dup_pairs(emb, threshold=0.35,
+                                                bits_per_band=1),
+            r"Join \[band#\d+, key#"),
+        "near-dup all-pairs": (
+            similarity.embedding_near_dup_pairs(emb, threshold=0.35,
+                                                all_pairs=True),
+            r"(?:NestedLoopJoin|CartesianProduct).*id_a#\d+L < id_b#"),
+    }
+    for jname, (jdf, join) in pair_joins.items():
+        results.append(check(jname, subtree(tree_of(jdf), join) or "", [
+            ("RoundRobinPartitioning below the pair join",
+             r"RoundRobinPartitioning"),
+        ]))
+    # the candidate ids reach the rescoring through an explicit-count
+    # exchange placed after the map-side dedup aggregate: AQE never
+    # coalesces it
+    results.append(check("near-dup banded rescoring",
+                         tree_of(pair_joins["near-dup banded"][0]), [
+        ("REPARTITION_BY_NUM exchange above the pair dedup",
+         r"Exchange \S+, REPARTITION_BY_NUM.*\n.*"
+         r"HashAggregate\(keys=\[id_a#\d+L, id_b#"),
+    ]))
+
+    # 7c. Jaccard: the interpreted shingle lambda runs once per side of
+    # the self-join — no size side-table, no inferred filter re-running it
+    n_sh = plan_of(EQ.QUERIES["dedup_jaccard"](spark, sf_dir)).count(
+        "array_distinct(transform(")
+    print(f"\n=== dedup jaccard ===\n  [{'OK' if n_sh == 2 else 'MISS'}] "
+          f"shingle lambda occurrences: {n_sh} (want 2)")
+    results.append(n_sh == 2)
 
     # 8. product quantization: codebook + query tables attach via broadcast
     # nested loops; the corpus is never shuffled (encoding and ADC scoring
