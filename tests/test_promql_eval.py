@@ -764,6 +764,9 @@ def _assert_collects_guarded(plan: str, q: str) -> None:
     assert args, q
     for i in args:
         assert plan.startswith("CASE WHEN ", i), (q, plan[i:i + 120])
+        # a float/histogram kind mask still buffers every sample of a kind
+        assert not re.match(r"CASE WHEN isn(ot)?null\(hist#\d+\) THEN ",
+                            plan[i:]), (q, plan[i:i + 120])
 
 
 # Exact range functions over the corpus of the test below, at steps
@@ -1004,7 +1007,10 @@ def test_production_native_histogram_rate_agrees(spark):
     NULL (custom) and exponential schemas, float series alongside,
     mixed float/histogram windows (dropped) and single-sample windows —
     values, bucket SETS (a mid-window-only le must not appear: it would
-    shift histogram_quantile anchors), counts and schema must all agree."""
+    shift histogram_quantile anchors), counts and schema must all agree.
+    The _over_time, regression and smoothing functions over the same
+    windows agree the same way, and carry their mixed-window annotations
+    in production."""
     from thanos_parquet_gateway_spark.promql import PromQLEngine
     nan = float("nan")
 
@@ -1044,17 +1050,18 @@ def test_production_native_histogram_rate_agrees(spark):
     det = eng_for(spark, rows)
     prod = PromQLEngine(make_samples(spark, rows), lookback_ms=300_000,
                         deterministic=False)
-    queries = ["rate(lh[30s])", "increase(lh[30s])", "delta(lh[30s])",
-               "rate(lh[25s] offset 10s)", "rate(lh[30s] @ 60)",
-               # subquery range vectors carry lagged hist + led ts too
-               "rate(lh[40s:10s])", "increase(lh[35s:10s])"]
-    for q in queries:
+
+    def agree(q, exact):
         a = _hmat(det.query_range(q, 0, 80 * S, 10 * S))
         b = _hmat(prod.query_range(q, 0, 80 * S, 10 * S))
         assert set(a) == set(b), q
+        assert a, q
         for k in a:
             av, ah = a[k]
             bv, bh = b[k]
+            if exact:
+                assert _same(av, bv) and ah == bh, (q, k, a[k], b[k])
+                continue
             if math.isnan(av):
                 assert math.isnan(bv), (q, k)
             else:
@@ -1072,6 +1079,44 @@ def test_production_native_histogram_rate_agrees(spark):
                 for (le, ca), (_, cb) in zip(ah[2], bh[2]):
                     assert ca == pytest.approx(cb, rel=1e-9, abs=1e-12), \
                         (q, k, le)
+
+    for q in ["rate(lh[30s])", "increase(lh[30s])", "delta(lh[30s])",
+              "rate(lh[25s] offset 10s)", "rate(lh[30s] @ 60)",
+              # subquery range vectors carry lagged hist + led ts too
+              "rate(lh[40s:10s])", "increase(lh[35s:10s])"]:
+        agree(q, exact=False)
+    # the _over_time/regression families over the same windows: exact
+    # selections and counts agree exactly, float sums and folds to 1e-9
+    for fn in ("count", "min", "max", "last", "first", "ts_of_last"):
+        agree(f"{fn}_over_time(lh[30s])", exact=True)
+    for q in [f"{fn}_over_time(lh[30s])" for fn in (
+                  "sum", "avg", "stddev", "stdvar", "mad", "ts_of_max")] + [
+              "quantile_over_time(0.5, lh[30s])", "deriv(lh[30s])",
+              "predict_linear(lh[30s], 60)",
+              "double_exponential_smoothing(lh[30s], 0.5, 0.5)"]:
+        agree(q, exact=False)
+    # the mix series' windows at 30s hold floats and histograms: the
+    # histogram-ignoring families note it, sum/avg drop it with a warning
+    info = ("info", "ignored histograms in a range containing both floats "
+                    "and histograms for metric name \"lh\"")
+    warn = ("warn", "encountered a mix of histograms and floats for "
+                    "metric name \"lh\"")
+    for q, ann in (("min_over_time(lh[30s])", info),
+                   ("deriv(lh[30s])", info),
+                   ("sum_over_time(lh[30s])", warn),
+                   ("avg_over_time(lh[30s])", warn)):
+        got = prod.query_range(q, 0, 80 * S, 10 * S).all_annotations()
+        assert ann in got, (q, got)
+    # histogram-ignoring families aggregate natively in production; last/
+    # first buffer only the window's flagged last/first row in both modes
+    for q in ("min_over_time(lh[30s])", "deriv(lh[30s])"):
+        p = _plan_str(prod.query_range(q, 0, 80 * S, 10 * S).df)
+        assert "collect_list" not in p, q
+        assert "SortAggregate" not in p, q
+    for eng in (det, prod):
+        p = _plan_str(eng.query_range("last_over_time(lh[30s])", 0, 80 * S,
+                                      10 * S).df)
+        _assert_collects_guarded(p, "last_over_time(lh[30s])")
 
     # plan pins: histogram windows buffer only their first/last rows and
     # reset pairs (≤ 2 + resets entries per window) in both engines;

@@ -6,21 +6,25 @@ The rate family implements Prometheus' published extrapolation algorithm
 these semantics via differential tests (reference db/db_test.go:616-659).
 
 Window math takes one of two shapes, both JVM-side with no driver collects
-and no UDFs:
+and no UDFs.  The _over_time, regression and smoothing functions build
+either through ``_window``, for float and native-histogram range vectors
+alike (the histogram-ignoring families mask their value column to the
+float rows inside the same aggregation):
 
 - native aggregation over the window's rows, with each sample's series
-  predecessor attached (``RangeVector.prev``): counts, first/last/min/max
-  selections, irate/idelta's last pair and resets/changes' transition
-  counts are exact this way and run so in both modes, for float and
-  native-histogram windows alike; the float sums
-  (sum/avg/stddev/stdvar_over_time, rate's reset correction,
-  deriv/predict_linear) reassociate, so they run natively only in
-  production mode (rate's det reset sum folds only the reset pairs);
+  predecessor attached where the math needs it (``RangeVector.prev``):
+  counts, first/last/min/max selections, irate/idelta's last pair and
+  resets/changes' transition counts are exact this way and run so in both
+  modes; last/first_over_time take a histogram off the window's flagged
+  last/first row; the float sums (sum/avg/stddev/stdvar_over_time, rate's
+  reset correction, deriv/predict_linear) reassociate, so they run
+  natively only in production mode (rate's det reset sum folds only the
+  reset pairs);
 - a fold over the *sorted* per-(series, step) array with Spark
   higher-order functions, bounded by samples-per-window: the deterministic
   (oracle) mode's order-stable float sums, the rank statistics
   (quantile/mad_over_time), ts_of_max/min's last-tie rule, smoothing, and
-  the histogram-aware over_time functions.
+  sum/avg_over_time's bucket-wise add of a window's histogram rows.
 """
 
 from __future__ import annotations
@@ -33,6 +37,7 @@ from pyspark.sql import functions as F
 
 from thanos_parquet_gateway_spark.functions import folds
 from thanos_parquet_gateway_spark.promql import ast as A
+from thanos_parquet_gateway_spark.promql import histograms as H
 from thanos_parquet_gateway_spark.promql.compiler import (
     _MATH_FUNCS,
     _TIME_FUNCS,
@@ -41,6 +46,7 @@ from thanos_parquet_gateway_spark.promql.compiler import (
     NEG_INF,
     Compiler,
     PromQLCompileError,
+    hgroup,
 )
 from thanos_parquet_gateway_spark.promql.values import (
     InstantVector,
@@ -125,122 +131,120 @@ def _scalar_lit(c: Compiler, call: A.Call, idx: int) -> float:
 
 
 # ---------------------------------------------------------------- over_time
-def _collect_window(rv: RangeVector):
-    """(t, sig) → sorted array of (ts, value) + labels (arrays bounded by
-    samples-per-window).  Keyed on xxhash64(sig) — see compiler.hgroup."""
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
-    return hgroup(rv.df, "sig",
-                  folds.sorted_pairs(F.col("ts"), F.col("value")).alias("arr"),
-                  labels="labels")
-
-
 # over_time/regression functions that IGNORE native-histogram samples:
 # upstream computes over the window's floats only, emits NO sample for a
 # histogram-only window, and adds
 # annotations.NewHistogramIgnoredInMixedRangeInfo when a window carries
 # both kinds (Prometheus 3.x functions.go funcMinOverTime / funcDeriv /
-# funcPredictLinear / funcDoubleExponentialSmoothing / ...)
+# funcPredictLinear / funcDoubleExponentialSmoothing / ...).  _window
+# masks their value column to the float rows, natively or in the fold.
 _HIST_IGNORE = frozenset((
     "min_over_time", "max_over_time", "stddev_over_time", "stdvar_over_time",
     "mad_over_time", "quantile_over_time",
     "ts_of_max_over_time", "ts_of_min_over_time"))
 
-
-def _collect_window_floats(c: Compiler, rv: RangeVector, min_n: int = 1):
-    """_collect_window for the histogram-IGNORING functions when the range
-    vector carries a hist column: histogram samples drop from the fold
-    array, windows with fewer than ``min_n`` float samples drop entirely
-    (upstream emits no output row), and a window holding BOTH kinds
-    registers the upstream mixed-range info annotation as a data probe
-    (read only when annotations are requested — not on the query hot
-    path)."""
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
-    g = hgroup(
-        rv.df, "sig",
-        F.array_sort(F.collect_list(F.when(
-            F.col("hist").isNull(),
-            F.struct(F.col("ts").alias("o"),
-                     F.col("value").alias("v"))))).alias("arr"),
-        F.count(F.col("hist")).alias("__nh"),  # count() skips NULLs
-        labels="labels")
-    g = g.filter(F.size("arr") >= min_n)
-    c.add_data_probe(
-        g.filter(F.col("__nh") > 0).limit(1).select(
-            _lit("info").alias("kind"),
-            F.concat(_lit("ignored histograms in a range containing both "
-                           "floats and histograms for metric name \""),
-                     F.coalesce(F.col("labels")["__name__"], _lit("")),
-                     _lit("\"")).alias("msg")))
-    return g.drop("__nh")
+# the annotation a window holding both kinds registers, per _window mode:
+# upstream NewHistogramIgnoredInMixedRangeInfo (histogram-ignoring
+# functions) and NewMixedFloatsHistogramsWarning (funcSumOverTime /
+# funcAvgOverTime, which also drop the window)
+_MIXED = {
+    "ignore": ("info", "ignored histograms in a range containing both "
+                       "floats and histograms for metric name \""),
+    "sum": ("warn", "encountered a mix of histograms and floats for "
+                    "metric name \""),
+}
 
 
-def _window_floats(c: Compiler, rv: RangeVector, min_n: int = 1):
-    """Dispatch: float-only collection (+ mixed-range info probe) when the
-    range vector can carry histograms, the plain collect otherwise."""
-    if "hist" in rv.columns:
-        return _collect_window_floats(c, rv, min_n)
-    g = _collect_window(rv)
-    return g.filter(F.size("arr") >= min_n) if min_n > 1 else g
+def _window(c: Compiler, rv: RangeVector, aggs=None, *, min_n: int = 1,
+            hist: str = "ignore", frame=None, extra=()):
+    """The one (t, series) window aggregation behind the _over_time,
+    regression and smoothing functions.
+
+    ``aggs(m)`` lists native aggregates, ``m`` masking a row expression to
+    the window's float samples; without ``aggs`` the group collects
+    ``arr``, the ts-sorted (ts, value) float array a fold reads (labels
+    rebuilt for it).  ``extra`` aggregates ride along unmasked; ``frame``
+    replaces ``rv.df`` (``rv.prev`` for the row flags).  Windows with
+    fewer than ``min_n`` float samples drop: upstream emits no sample.
+
+    ``hist`` is how the function treats the samples of a
+    histogram-carrying vector: "keep" counts them like floats; "ignore"
+    masks them (``hist IS NULL``); "sum" masks them and drops a window
+    holding both kinds.  Under the mask ``__nf``/``__nh`` count the two
+    kinds, and a window holding both registers its _MIXED annotation as a
+    data probe (read only when annotations are requested)."""
+    masked = hist != "keep" and "hist" in rv.columns
+    m = ((lambda e: F.when(F.col("hist").isNull(), e)) if masked
+         else (lambda e: e))
+    if aggs is None:
+        out = [F.array_sort(F.collect_list(m(F.struct(
+            F.col("ts").alias("o"), F.col("value").alias("v"))))).alias("arr")]
+        n = F.size("arr")
+    else:
+        out = aggs(m)
+    if masked:
+        out += [F.count(m(_lit(1))).alias("__nf"),
+                F.count("hist").alias("__nh")]
+        n = F.col("__nf")
+    elif aggs is not None and min_n > 1:
+        out.insert(0, F.count(_lit(1)).alias("__wn"))
+        n = F.col("__wn")
+    g = hgroup(rv.df if frame is None else frame, "sig", *out, *extra,
+               labels="labels" if aggs is None else None)
+    if not masked:
+        return g.filter(n >= min_n) if min_n > 1 else g
+    both = (F.col("__nf") > 0) & (F.col("__nh") > 0)
+    kind, msg = _MIXED[hist]
+    lbl = F.col("labels") if aggs is None else labels_from_sig("sig")
+    c.add_data_probe(g.filter(both).limit(1).select(
+        _lit(kind).alias("kind"),
+        F.concat(_lit(msg), F.coalesce(lbl["__name__"], _lit("")),
+                 _lit("\"")).alias("msg")))
+    return g.filter(~both if hist == "sum" else n >= min_n)
 
 
+# order-stable folds over ``arr``: det mode's float sums, the rank
+# statistics and ts_of_max/min's tie rule
 _OVER_TIME = {
-    "sum_over_time": lambda arr: folds.fold_sum(arr),
-    "avg_over_time": lambda arr: folds.fold_avg(arr),
-    "count_over_time": lambda arr: F.size(arr).cast(D),
-    "min_over_time": lambda arr: F.coalesce(
-        F.array_min(F.filter(folds.values_of(arr), lambda v: ~F.isnan(v))), NAN()),
-    "max_over_time": lambda arr: F.coalesce(
-        F.array_max(F.filter(folds.values_of(arr), lambda v: ~F.isnan(v))), NAN()),
-    "last_over_time": lambda arr: F.element_at(arr, -1)["v"],
-    "first_over_time": lambda arr: F.element_at(arr, 1)["v"],
-    "stddev_over_time": lambda arr: folds.fold_stddev_pop(arr),
-    "stdvar_over_time": lambda arr: folds.fold_var_pop(arr),
-    "present_over_time": lambda arr: _lit(1.0),
-    "mad_over_time": lambda arr: folds.fold_mad(arr),
-    # experimental ts_of_* family (public Prometheus 3.x): the timestamp, in
-    # SECONDS, of the last/extreme sample in the window.  Extremes update on
-    # >= / <= like the upstream fold, so the LAST occurrence of a tied
-    # extreme wins; a NaN current-extreme is always replaced (IsNaN(acc)
-    # branch upstream), and NaN candidates never beat a real extreme (the
-    # ~isnan(x) mask — Spark would otherwise order NaN above every double).
-    "ts_of_last_over_time": lambda arr: F.element_at(arr, -1)["o"].cast(D) / 1000.0,
-    "ts_of_first_over_time": lambda arr: F.element_at(arr, 1)["o"].cast(D) / 1000.0,
+    "sum_over_time": folds.fold_sum,
+    "avg_over_time": folds.fold_avg,
+    "stddev_over_time": folds.fold_stddev_pop,
+    "stdvar_over_time": folds.fold_var_pop,
+    "mad_over_time": folds.fold_mad,
     "ts_of_max_over_time": lambda arr: _fold_ts_of(arr, "max"),
     "ts_of_min_over_time": lambda arr: _fold_ts_of(arr, "min"),
 }
 
 
-# Native-aggregation forms of the order-insensitive _OVER_TIME folds: each
-# entry yields the .agg(...) list, with the result aliased "__v".  Range
-# vectors exclude stale markers (value is never NULL) and the native path
-# is only taken when the range vector carries no histogram column, so
-# plain value aggregates see exactly the fold's float samples.  min/max skip NaN like the folds (NaN→NULL
-# before min/max; all-NaN windows coalesce back to NaN); every window has
-# ≥1 sample by construction (explode emits a (t, sig) group only for
-# samples inside it).
-def _nanf() -> Column:
-    v = F.col("value")
+# Native aggregations over the window's rows, each entry taking the value
+# column (masked to the float rows for the _HIST_IGNORE families) and
+# yielding the .agg(...) list with the result aliased "__v".  Range vectors
+# exclude stale markers, so only the mask makes a value NULL.  min/max
+# skip NaN like upstream (NaN→NULL before min/max; all-NaN windows
+# coalesce back to NaN); every window has ≥1 sample by construction
+# (explode emits a (t, sig) group only for samples inside it).
+def _nanf(v: Column) -> Column:
     return F.when(~F.isnan(v), v)
 
 
 _OVER_TIME_NATIVE = {
-    "count_over_time": lambda: [F.count(_lit(1)).cast(D).alias("__v")],
-    "sum_over_time": lambda: [F.sum("value").alias("__v")],
-    "avg_over_time": lambda: [F.avg("value").alias("__v")],
-    "min_over_time": lambda: [
-        F.coalesce(F.min(_nanf()), F.first(NAN())).alias("__v")],
-    "max_over_time": lambda: [
-        F.coalesce(F.max(_nanf()), F.first(NAN())).alias("__v")],
-    "last_over_time": lambda: [F.max_by("value", "ts").alias("__v")],
-    "first_over_time": lambda: [F.min_by("value", "ts").alias("__v")],
-    "present_over_time": lambda: [F.first(_lit(1.0)).alias("__v")],
-    "stddev_over_time": lambda: [
-        F.coalesce(F.stddev_pop("value"), F.first(NAN())).alias("__v")],
-    "stdvar_over_time": lambda: [
-        F.coalesce(F.var_pop("value"), F.first(NAN())).alias("__v")],
-    "ts_of_last_over_time": lambda: [
+    "count_over_time": lambda v: [F.count(_lit(1)).cast(D).alias("__v")],
+    "sum_over_time": lambda v: [F.sum(v).alias("__v")],
+    "avg_over_time": lambda v: [F.avg(v).alias("__v")],
+    "min_over_time": lambda v: [
+        F.coalesce(F.min(_nanf(v)), F.first(NAN())).alias("__v")],
+    "max_over_time": lambda v: [
+        F.coalesce(F.max(_nanf(v)), F.first(NAN())).alias("__v")],
+    "last_over_time": lambda v: [F.max_by(v, "ts").alias("__v")],
+    "first_over_time": lambda v: [F.min_by(v, "ts").alias("__v")],
+    "present_over_time": lambda v: [F.first(_lit(1.0)).alias("__v")],
+    "stddev_over_time": lambda v: [
+        F.coalesce(F.stddev_pop(v), F.first(NAN())).alias("__v")],
+    "stdvar_over_time": lambda v: [
+        F.coalesce(F.var_pop(v), F.first(NAN())).alias("__v")],
+    "ts_of_last_over_time": lambda v: [
         (F.max("ts").cast(D) / 1000.0).alias("__v")],
-    "ts_of_first_over_time": lambda: [
+    "ts_of_first_over_time": lambda v: [
         (F.min("ts").cast(D) / 1000.0).alias("__v")],
 }
 
@@ -253,6 +257,12 @@ _OVER_TIME_REASSOC = frozenset(("sum_over_time", "avg_over_time",
 
 
 def _fold_ts_of(arr: Column, mode: str) -> Column:
+    """Experimental ts_of_max/min_over_time (public Prometheus 3.x): the
+    timestamp, in SECONDS, of the window's extreme sample.  Extremes update
+    on >= / <= like the upstream fold, so the LAST occurrence of a tied
+    extreme wins; a NaN current-extreme is always replaced (IsNaN(acc)
+    branch upstream), and NaN candidates never beat a real extreme (the
+    ~isnan(x) mask — Spark would otherwise order NaN above every double)."""
     acc0 = F.struct(_lit(None).cast(D).alias("v"),
                     _lit(None).cast("long").alias("o"))
 
@@ -287,71 +297,46 @@ def _selector_name(node: A.Node) -> str | None:
     return None
 
 
-# over_time functions with a native-histogram result path (upstream
-# functions.go: sum/avg fold histograms bucket-wise, last/first return the
-# histogram sample itself; the REST ignore histogram samples)
+# over_time functions with a native-histogram result (upstream
+# functions.go): sum/avg add a histogram-only window's histograms
+# bucket-wise (avg divides by their count) and drop a mixed window with
+# a warning; last/first return the window's last/first sample of either
+# kind.  Every other over_time function counts or ignores histograms
+# (_window's "keep"/"ignore").
 _OVER_TIME_HIST = ("sum_over_time", "avg_over_time",
                    "last_over_time", "first_over_time")
 
 
-def _over_time_hist(c: Compiler, rv: RangeVector, fn: str) -> InstantVector:
-    """sum/avg/last/first_over_time over a range vector carrying native
-    histograms.  Float-only windows keep the scalar folds; histogram-only
-    windows fold bucket-wise (le-keyed union add; avg scales by 1/n);
-    MIXED windows: sum/avg drop the element (Prometheus emits a warning
-    and skips), last/first pick the overall latest/earliest sample of
-    either kind (mixed is fine there upstream)."""
-    from thanos_parquet_gateway_spark.promql import histograms as H
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
-
-    g = hgroup(
-        rv.df, "sig",
-        F.array_sort(F.collect_list(
-            F.when(F.col("hist").isNull(),
-                   F.struct(F.col("ts").alias("o"),
-                            F.col("value").alias("v"))))).alias("arr"),
-        F.array_sort(F.collect_list(
-            F.when(F.col("hist").isNotNull(),
-                   F.struct(F.col("ts").alias("o"),
-                            F.col("hist").alias("h"))))).alias("harr"),
-        labels="labels")
-    arr, harr = F.col("arr"), F.col("harr")
-    nf, nh = F.size(arr), F.size(harr)
-    is_float = (nf >= 1) & (nh == 0)
-    is_hist = (nh >= 1) & (nf == 0)
-
-    # try_element_at everywhere: either array is empty on single-kind
-    # windows, and plain element_at raises on out-of-bounds
-    def hist_sum():
-        first = F.try_element_at(harr, _lit(1))["h"]
-        rest = F.slice(harr, 2, F.greatest(nh - 1, _lit(0)))
-        return F.aggregate(rest, first, lambda acc, x: H.merge_two(acc, x["h"]))
-
+def _over_time_hist(c: Compiler, rv: RangeVector, fn: str, aggs,
+                    val: Column) -> tuple:
+    """_OVER_TIME_HIST over a histogram-carrying range vector: the float
+    window aggregation with the histogram result riding along, as
+    (frame, value, hist).  sum/avg fold only the histogram rows
+    (le-keyed union add); last/first take the hist of the window's
+    last/first row, flagged on ``rv.prev`` as in the rate family, beside
+    the native max_by/min_by value."""
+    h = F.col("hist")
     if fn in ("sum_over_time", "avg_over_time"):
-        g = g.filter(is_float | is_hist)  # mixed window: skipped (upstream warns)
-        hval = hist_sum()
+        g = _window(c, rv, aggs, hist="sum", extra=[F.array_sort(
+            F.collect_list(F.when(h.isNotNull(), F.struct(
+                F.col("ts").alias("o"), h.alias("h"))))).alias("__harr")])
+        harr, nh = F.col("__harr"), F.col("__nh")
+        hval = F.aggregate(F.slice(harr, 2, F.greatest(nh - 1, _lit(0))),
+                           F.try_element_at(harr, _lit(1))["h"],
+                           lambda acc, x: H.merge_two(acc, x["h"]))
         if fn == "avg_over_time":
             hval = H.scale_hist(hval, _lit(1.0) / nh.cast(D))
-        fval = (folds.fold_sum(arr) if fn == "sum_over_time"
-                else folds.fold_avg(arr))
-    else:  # last/first_over_time: overall extreme sample of either kind
-        pos = _lit(-1) if fn == "last_over_time" else _lit(1)
-        f_ts = F.coalesce(F.try_element_at(arr, pos)["o"], _lit(-(2 ** 62)))
-        h_ts = F.coalesce(F.try_element_at(harr, pos)["o"], _lit(-(2 ** 62)))
-        pick_hist = ((h_ts >= f_ts) & (nh > 0) if fn == "last_over_time"
-                     else (nf == 0) | ((nh > 0) & (h_ts <= f_ts)))
-        is_hist = pick_hist
-        is_float = ~pick_hist
-        hval = F.try_element_at(harr, pos)["h"]
-        fval = F.try_element_at(arr, pos)["v"]
-    out = g.select(
-        "t", "sig", "labels",
-        _lit(None).cast("long").alias("sample_ts"),
-        F.when(is_float, fval).otherwise(NAN()).alias("value"),
-        F.when(is_hist, hval).otherwise(H.null_hist()).alias("hist"))
-    if fn != "last_over_time":
-        out = _drop_name(out)
-    return _iv(out)
+        is_hist = nh > 0
+    else:
+        row = (_last_row() if fn == "last_over_time"
+               else _first_row(rv.range_ms))
+        g = _window(c, rv, aggs, hist="keep", frame=rv.prev,
+                    extra=[F.collect_list(F.when(row, h)).alias("__eh")])
+        # collect_list skips NULLs: a float row leaves the buffer empty
+        hval = F.try_element_at(F.col("__eh"), _lit(1))
+        is_hist = F.size("__eh") > 0
+    return (g, F.when(is_hist, NAN()).otherwise(val),
+            F.when(is_hist, hval).otherwise(H.null_hist()))
 
 
 def _over_time(c: Compiler, call: A.Call) -> InstantVector:
@@ -360,13 +345,10 @@ def _over_time(c: Compiler, call: A.Call) -> InstantVector:
         q = _scalar_lit(c, call, 0)
         _warn_quantile(c, q)
         rv = _range_arg(c, call, 1)
-        g = _window_floats(c, rv)
-        val = folds.fold_quantile(F.col("arr"), _lit(q))
+        aggs, val = None, folds.fold_quantile(F.col("arr"), _lit(q))
     else:
         rv = _range_arg(c, call, 0)
-        if fn in _OVER_TIME_HIST and "hist" in rv.columns:
-            return _over_time_hist(c, rv, fn)
-        if (fn in _OVER_TIME_NATIVE and "hist" not in rv.columns
+        if (fn in _OVER_TIME_NATIVE
                 and not (c.p.deterministic and fn in _OVER_TIME_REASSOC)):
             # the window fold is a plain aggregation — compile it as native
             # (mostly codegen HashAggregate) aggregate functions with
@@ -378,45 +360,32 @@ def _over_time(c: Compiler, call: A.Call) -> InstantVector:
             # (run-to-run low-bit nondeterminism — the same trade the
             # cross-series production aggregations make), so det mode
             # keeps their folds.
-            from thanos_parquet_gateway_spark.promql.compiler import hgroup
-            # labels are NOT rebuilt here: the fused projection below
-            # (and _drop_name's successor) builds them once from sig —
-            # one plan step instead of hgroup's extra withColumn
-            g = hgroup(rv.df, "sig", *_OVER_TIME_NATIVE[fn]())
-            val = F.col("__v")
+            native = _OVER_TIME_NATIVE[fn]
+            aggs, val = (lambda m: native(m(F.col("value")))), F.col("__v")
         else:
-            g = (_window_floats(c, rv) if fn in _HIST_IGNORE
-                 else _collect_window(rv))
-            val = _OVER_TIME[fn](F.col("arr"))
-        if fn.startswith("ts_of_"):
-            # window points live in the shifted evaluation frame (static
-            # offset at the selector base + the per-step @ re-anchor in the
-            # matrix/subquery paths); the exposed timestamp is the ORIGINAL
-            # one (upstream matrix points keep their raw T)
-            arg = call.args[0]
-            sel = arg.selector if isinstance(arg, A.MatrixSelector) else arg
-            off = getattr(sel, "offset_ms", 0) or 0
-            if off:
-                val = val - _lit(off / 1000.0)
-            at_ms = getattr(sel, "at_ms", None)
-            if at_ms is not None:
-                at = c._resolve_at(at_ms)
-                val = val - (F.col("t") - _lit(at)).cast(D) / 1000.0
-    # ONE fused projection: labels (rebuilt from sig on the native path,
-    # which skips hgroup's rebuild), the __name__ drop, the re-canonicalized
-    # sig and the value — replacing the select → _drop_name (2 withColumns)
-    # → _iv(select) chain.  Each chained step is a JVM plan op with its own
-    # incremental re-analysis; this is pure per-query compile latency.
-    lbl = F.col("labels") if "labels" in g.columns else labels_from_sig("sig")
-    sample_ts = _lit(None).cast("long").alias("sample_ts")
-    if fn == "last_over_time":  # last_over_time keeps the metric name
-        out = g.select("t", "sig", lbl.alias("labels"), sample_ts,
-                       val.alias("value"))
+            aggs, val = None, _OVER_TIME[fn](F.col("arr"))
+    hist = None
+    if fn in _OVER_TIME_HIST and "hist" in rv.columns:
+        g, val, hist = _over_time_hist(c, rv, fn, aggs, val)
     else:
-        nl = drop_labels(lbl, ["__name__"])
-        out = g.select("t", canonical_sig(nl).alias("sig"),
-                       nl.alias("labels"), sample_ts, val.alias("value"))
-    return InstantVector(out)
+        g = _window(c, rv, aggs,
+                    hist="ignore" if fn in _HIST_IGNORE else "keep")
+    if fn.startswith("ts_of_"):
+        # window points live in the shifted evaluation frame (static
+        # offset at the selector base + the per-step @ re-anchor in the
+        # matrix/subquery paths); the exposed timestamp is the ORIGINAL
+        # one (upstream matrix points keep their raw T)
+        arg = call.args[0]
+        sel = arg.selector if isinstance(arg, A.MatrixSelector) else arg
+        off = getattr(sel, "offset_ms", 0) or 0
+        if off:
+            val = val - _lit(off / 1000.0)
+        at_ms = getattr(sel, "at_ms", None)
+        if at_ms is not None:
+            at = c._resolve_at(at_ms)
+            val = val - (F.col("t") - _lit(at)).cast(D) / 1000.0
+    # last_over_time keeps the metric name
+    return _finalize(g, val, drop_name=fn != "last_over_time", hist=hist)
 
 
 # -------------------------------------------------------------- rate family
@@ -431,6 +400,10 @@ def _over_time(c: Compiler, call: A.Call) -> InstantVector:
 # replica dedup.
 def _in_pair(rng: int) -> Column:
     return F.col("__pts") > (F.col("t") - _lit(rng))
+
+
+def _first_row(rng: int) -> Column:
+    return F.col("__pts").isNull() | ~_in_pair(rng)
 
 
 def _last_row() -> Column:
@@ -496,7 +469,6 @@ def _extrapolated(c: Compiler, rv: RangeVector, counter: bool,
     predecessors — ≤ 2 + resets structs per window, never every sample —
     and the delta is the fold's own algebra over them, so both modes give
     the same histogram."""
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
     rng = rv.range_ms
     aggs = [F.count(_lit(1)).alias("__wn"),
             F.min("ts").alias("__ft"),
@@ -506,11 +478,9 @@ def _extrapolated(c: Compiler, rv: RangeVector, counter: bool,
             _float_reset_sum(c, rng).alias("__rc")]
     hist = "hist" in rv.columns
     if hist:
-        from thanos_parquet_gateway_spark.promql import histograms as H
         h, ph = F.col("hist"), F.col("__ph")
-        first_row = F.col("__pts").isNull() | ~_in_pair(rng)
         aggs += [F.count(h).alias("__nh"),
-                 F.collect_list(F.when(first_row, h)).alias("__fh"),
+                 F.collect_list(F.when(_first_row(rng), h)).alias("__fh"),
                  F.collect_list(F.when(_last_row(), h)).alias("__lh")]
         if counter:
             reset = (_in_pair(rng) & h.isNotNull() & ph.isNotNull()
@@ -563,7 +533,6 @@ def _instant_pair(c: Compiler, rv: RangeVector, kind: str) -> InstantVector:
     sample a histogram) take the bucket-wise analogue off the last row's
     hist and __ph — a reset leaves the last histogram standing alone,
     mirroring the float counter rule; mixed windows drop."""
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
     # primitive max_by's, not one max_by(struct): a struct aggregation
     # BUFFER is not UnsafeRow-mutable and demotes the whole aggregation to
     # SortAggregate (the plan pin in test_promql_eval rejects it).  All
@@ -576,7 +545,6 @@ def _instant_pair(c: Compiler, rv: RangeVector, kind: str) -> InstantVector:
             & (F.col("__lpt") > F.col("t") - _lit(rv.range_ms)))
     hist = "hist" in rv.columns
     if hist:
-        from thanos_parquet_gateway_spark.promql import histograms as H
         h = F.col("hist")
         aggs += [F.count(F.when(h.isNull(), _lit(1))).alias("__nf"),
                  F.count(h).alias("__nh"),
@@ -622,7 +590,7 @@ def _double_exp_smoothing(c: Compiler, call: A.Call) -> InstantVector:
     if not 0 < tf < 1:
         raise PromQLCompileError(
             f"invalid trend factor. Expected: 0 < tf < 1, got: {tf:g}")
-    g = _window_floats(c, rv, min_n=2)
+    g = _window(c, rv, min_n=2)
     arr = F.col("arr")
     first_v = F.element_at(arr, 1)["v"]
     second_v = F.element_at(arr, 2)["v"]
@@ -658,7 +626,7 @@ def _linreg(arr: Column, intercept_t: Column):
     return slope, intercept
 
 
-def _linreg_native(rv: RangeVector):
+def _linreg_native(c: Compiler, rv: RangeVector):
     """Production-mode regression stats as NATIVE aggregates (map-side
     partials, codegen HashAggregate) instead of the collect_list fold:
     with x = (ts - t) seconds, slope = covar_pop(x, y) / var_pop(x) and
@@ -670,15 +638,11 @@ def _linreg_native(rv: RangeVector):
     builds.  The slope is anchor-invariant, so anchoring x at t (instead
     of the fold's first-sample anchor for deriv) changes nothing.
     Returns (aggregated frame filtered to n >= 2, slope, intercept)."""
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
-    x = (F.col("ts") - F.col("t")).cast(D) / 1000.0
-    g = (hgroup(rv.df, "sig",
-                F.count(_lit(1)).alias("__wn"),
-                F.covar_pop(x, F.col("value")).alias("__cxy"),
-                F.var_pop(x).alias("__vx"),
-                F.avg(x).alias("__mx"),
-                F.avg("value").alias("__my"))
-         .filter(F.col("__wn") >= 2))
+    x, v = (F.col("ts") - F.col("t")).cast(D) / 1000.0, F.col("value")
+    g = _window(c, rv, lambda m: [F.covar_pop(m(x), m(v)).alias("__cxy"),
+                                  F.var_pop(m(x)).alias("__vx"),
+                                  F.avg(m(x)).alias("__mx"),
+                                  F.avg(m(v)).alias("__my")], min_n=2)
     slope = F.col("__cxy") / F.col("__vx")
     intercept = F.col("__my") - slope * F.col("__mx")
     return g, slope, intercept
@@ -686,24 +650,23 @@ def _linreg_native(rv: RangeVector):
 
 def _deriv(c: Compiler, call: A.Call) -> InstantVector:
     rv = _range_arg(c, call)
-    if not c.p.deterministic and "hist" not in rv.columns:
-        g, slope, _ = _linreg_native(rv)
-        return _finalize(g, slope)
-    g = _window_floats(c, rv, min_n=2)
-    slope, _ = _linreg(F.col("arr"), F.element_at(F.col("arr"), 1)["o"])
+    if not c.p.deterministic:
+        g, slope, _ = _linreg_native(c, rv)
+    else:
+        g = _window(c, rv, min_n=2)
+        slope, _ = _linreg(F.col("arr"), F.element_at(F.col("arr"), 1)["o"])
     return _finalize(g, slope)
 
 
 def _predict_linear(c: Compiler, call: A.Call) -> InstantVector:
     rv = _range_arg(c, call, 0)
     dur = _scalar_lit(c, call, 1)
-    if not c.p.deterministic and "hist" not in rv.columns:
-        g, slope, intercept = _linreg_native(rv)
-        return _finalize(g, intercept + slope * _lit(float(dur)))
-    g = _window_floats(c, rv, min_n=2)
-    slope, intercept = _linreg(F.col("arr"), F.col("t"))
-    val = intercept + slope * _lit(float(dur))
-    return _finalize(g, val)
+    if not c.p.deterministic:
+        g, slope, intercept = _linreg_native(c, rv)
+    else:
+        g = _window(c, rv, min_n=2)
+        slope, intercept = _linreg(F.col("arr"), F.col("t"))
+    return _finalize(g, intercept + slope * _lit(float(dur)))
 
 
 # --------------------------------------------------------- histogram_quantile
@@ -749,7 +712,6 @@ def _histogram_quantile_classic(q: float, df, c=None) -> "DataFrame":
                                    _lit("")))
           .withColumn("labels", drop_labels("labels", ["le", "__name__"]))
           .withColumn("sig", canonical_sig(F.col("labels"))))
-    from thanos_parquet_gateway_spark.promql.compiler import hgroup
     g = hgroup(df, "sig",
                folds.sorted_pairs(F.col("__le"), F.col("value")).alias("arr"),
                F.first("__mname").alias("__mname"),
@@ -1012,7 +974,8 @@ def dispatch(c: Compiler, call: A.Call):
         df = iv.df.withColumn("value", _MATH_FUNCS[fn](F.col("value")).cast(D))
         return _iv(_drop_name(df))
 
-    if fn in _OVER_TIME or fn == "quantile_over_time":
+    if (fn in _OVER_TIME_NATIVE or fn in _OVER_TIME
+            or fn == "quantile_over_time"):
         return _over_time(c, call)
 
     if fn in ("rate", "increase"):
@@ -1048,7 +1011,6 @@ def dispatch(c: Compiler, call: A.Call):
         # either side, changes counts any NaN↔number transition but not
         # NaN→NaN.  A NULL predecessor (first sample of a series) falls out
         # via coalesce(hit, false).
-        from thanos_parquet_gateway_spark.promql.compiler import hgroup
         v, pv = F.col("value"), F.col("__pv")
         in_win = _in_pair(rv.range_ms)
         if fn == "resets":
@@ -1060,7 +1022,6 @@ def dispatch(c: Compiler, call: A.Call):
             # both kinds iterate in one time-ordered sequence: histogram
             # pairs use DetectReset (resets) / Equals (changes), and a
             # float↔histogram type switch counts for BOTH functions
-            from thanos_parquet_gateway_spark.promql import histograms as H
             h, ph = F.col("hist"), F.col("__ph")
             hist_hit = (H.detect_reset(ph, h) if fn == "resets"
                         else ~ph.eqNullSafe(h))
@@ -1086,7 +1047,6 @@ def dispatch(c: Compiler, call: A.Call):
         # mixed vector: native-histogram samples take the bucket-struct
         # path; float samples carrying le labels take the classic path
         # (upstream evaluates both populations side by side)
-        from thanos_parquet_gateway_spark.promql import histograms as H
         native = (iv.df.filter(F.col("hist").isNotNull())
                   .withColumn("value", H.hist_quantile(q_, F.col("hist")))
                   .drop("hist"))
@@ -1112,7 +1072,6 @@ def dispatch(c: Compiler, call: A.Call):
 
     if fn in ("histogram_count", "histogram_sum", "histogram_avg",
               "histogram_stddev", "histogram_stdvar"):
-        from thanos_parquet_gateway_spark.promql import histograms as H
         iv = _vector_arg(c, call, 0)
         if "hist" not in iv.df.columns:
             raise PromQLCompileError(f"{fn} requires native-histogram samples")
@@ -1125,7 +1084,6 @@ def dispatch(c: Compiler, call: A.Call):
         return _iv(_drop_name(df))
 
     if fn == "histogram_fraction":
-        from thanos_parquet_gateway_spark.promql import histograms as H
         lo = _scalar_lit(c, call, 0)
         hi = _scalar_lit(c, call, 1)
         iv = _vector_arg(c, call, 2)

@@ -241,8 +241,9 @@ def hist_fraction(lo: float, hi: float, hist: Column) -> Column:
 
 
 def merge_two(a: Column, b: Column) -> Column:
-    """Pointwise histogram merge (le-aligned): used by sum aggregation.
-    Bucket union keyed by le; counts add."""
+    """Pointwise histogram merge (le-aligned): used by sum aggregation and,
+    through sub_two, by the rate family.  Bucket union keyed by le; counts
+    add."""
     both = F.concat(a["buckets"], b["buckets"])
     les = F.array_sort(F.array_distinct(F.transform(both, lambda e: e["le"])))
     merged = F.transform(les, lambda le: F.struct(
@@ -301,17 +302,10 @@ def zero_hist() -> Column:
 
 
 def sub_two(a: Column, b: Column) -> Column:
-    """a - b bucket-wise (le-aligned union; counts subtract)."""
-    neg = F.transform(b["buckets"], lambda e: F.struct(
-        e["le"].alias("le"), (-e["count"]).alias("count")))
-    both = F.concat(a["buckets"], neg)
-    les = F.array_sort(F.array_distinct(F.transform(both, lambda e: e["le"])))
-    merged = F.transform(les, lambda le: F.struct(
-        le.alias("le"),
-        F.aggregate(F.filter(both, lambda e: e["le"] == le), _lit(0.0),
-                    lambda acc, e: acc + e["count"]).alias("count")))
-    return make_hist(a["count"] - b["count"], a["sum"] - b["sum"], merged,
-                     F.coalesce(a["schema"], b["schema"]))
+    """a - b bucket-wise: ``a`` merged with ``b`` scaled by -1.  Exact:
+    x + (-y) == x - y in IEEE-754, and the per-le fold order is
+    merge_two's."""
+    return merge_two(a, scale_hist(b, _lit(-1.0)))
 
 
 def scale_hist(h: Column, s: Column) -> Column:

@@ -1,6 +1,6 @@
 """Dump .explain('formatted') for every bench query — plus the tracked
 non-bench production paths (subquery rate, native-histogram
-rate/irate/resets, @-anchored rate) — to <out_dir>/<name>_<tag>.txt.
+rate/irate/resets and sum/last_over_time, @-anchored rate) — to <out_dir>/<name>_<tag>.txt.
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [query ...]
 Tag is e.g. 'before' or 'after'.  With no query names, dumps everything.
@@ -118,6 +118,10 @@ def main():
             spark, sf_dir, "irate(lat_hist[4d])"),
         "promql_hist_resets": lambda: _hist_df(
             spark, sf_dir, "resets(lat_hist[4d])"),
+        "promql_hist_sum_over_time": lambda: _hist_df(
+            spark, sf_dir, "sum_over_time(lat_hist[4d])"),
+        "promql_hist_last_over_time": lambda: _hist_df(
+            spark, sf_dir, "last_over_time(lat_hist[4d])"),
         "promql_at_rate": lambda: eng.query_range(
             f"rate(click[2d] @ {EQ.R_END // 1000})",
             EQ.R_START, EQ.R_END, EQ.STEP).df,

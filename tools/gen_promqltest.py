@@ -3364,10 +3364,12 @@ def gen_hist_overtime() -> str:
     lines.append(f"\t{{}} {fmt(med)}")
     lines.append("")
     # mixed window (floats at 0m/2m, hist at 1m): sum/avg skip the series
-    lines.append("eval instant at 2m sum_over_time(mixed[3m])")
-    lines.append("")
-    lines.append("eval instant at 2m avg_over_time(mixed[3m])")
-    lines.append("")
+    # with upstream's NewMixedFloatsHistogramsWarning
+    for fn in ("sum_over_time", "avg_over_time"):
+        lines.append(f"eval instant at 2m {fn}(mixed[3m])")
+        lines.append("\texpect warn msg encountered a mix of histograms "
+                     "and floats for metric name \"mixed\"")
+        lines.append("")
     # ...last picks the float 9 @2m, first the float 5 @0m
     lines.append("eval instant at 2m last_over_time(mixed[3m])")
     lines.append("\tmixed 9")
