@@ -86,10 +86,14 @@ def test_row_quota_admission(spark, sf_dir):
                        lookback_ms=7 * 86400_000, deterministic=True)
     api = QueryAPI(eng, row_quota=3)
     t = 1704412800000
-    with _pytest.raises(QuotaExceeded):
-        api.query("click", t)           # one row per active series > 3
-    out = api.query("sum(click)", t)    # aggregates to one row
-    assert len(out["result"]) == 1
+    for _ in range(2):  # the second round runs on memoized capped plans
+        with _pytest.raises(QuotaExceeded):
+            api.query("click", t)           # one row per active series > 3
+        with _pytest.raises(QuotaExceeded):
+            api.query_range("click", t - 86400_000, t, 86400_000)
+        out = api.query("sum(click)", t)    # aggregates to one row
+        assert len(out["result"]) == 1
+    assert eng.plan_cache_counts()["hits"] == 3
 
 
 def test_byte_quota_admission(spark, sf_dir):
@@ -188,6 +192,47 @@ def test_duplicate_labelset_rejected(spark, sf_dir):
     out = api.query_range("sum by (shard) (click)", t - 86400_000, t,
                           86400_000)
     assert len(out["result"]) > 1
+
+
+def test_metadata_memo_over_http(server):
+    """Repeated /labels, /label/<name>/values and /series calls hit the
+    engine's plan memo and return identical payloads; a limit=1 call after
+    an unlimited one is a different plan and still truncates and warns; a
+    request whose time defaults to now bypasses the memo."""
+    counts = server.api.engine.plan_cache_counts
+    for path in ("/api/v1/labels?start=0&end=91",
+                 "/api/v1/label/job/values?start=0&end=91",
+                 "/api/v1/series?match[]=m&start=0&end=91"):
+        before = counts()
+        first = _get(server, path)
+        again = _get(server, path)
+        after = counts()
+        assert first == again and first["status"] == "success"
+        assert len(first["data"]) == 2 and "warnings" not in first
+        assert after["misses"] == before["misses"] + 1
+        assert after["hits"] == before["hits"] + 1
+        cut = _get(server, path + "&limit=1")
+        assert cut["data"] == first["data"][:1]
+        assert cut["warnings"] == ["results truncated due to limit"]
+        assert counts()["misses"] == after["misses"] + 1
+    # another name, matcher or time range is another plan
+    for path in ("/api/v1/label/__name__/values?start=0&end=91",
+                 "/api/v1/label/job/values?match[]=m{job=%22a%22}"
+                 "&start=0&end=91",
+                 "/api/v1/label/job/values?start=0&end=92"):
+        before = counts()["misses"]
+        _get(server, path)
+        assert counts()["misses"] == before + 1, path
+    # a time left to default to now is never repeated: built, not memoized
+    for path in ("/api/v1/labels?start=0", "/api/v1/label/job/values",
+                 "/api/v1/series?match[]=m", "/api/v1/query?query=m",
+                 "/api/v1/query_range?query=m&step=30"):
+        before = counts()
+        assert _get(server, path) == _get(server, path)
+        after = counts()
+        assert after["misses"] == before["misses"] + 2, path
+        assert (after["hits"], after["entries"]) == \
+            (before["hits"], before["entries"]), path
 
 
 def test_truncation_warning_on_series(server):
@@ -392,6 +437,10 @@ def test_scan_counters_on_range_query(spark, sf_dir):
     assert st["peakSamples"] > 0
     assert st["filesScanned"] > 0
     assert st["bytesScanned"] > 0
+    # a plan-memo hit returns the same result
+    again = api.query_range("sum(click)", 1704153600000, 1704412800000,
+                            86400_000)
+    assert again["result"] == out["result"]
 
 
 def test_native_histogram_http_payload(spark):
@@ -491,19 +540,22 @@ def test_label_endpoint_row_quotas(spark, sf_dir):
                        lookback_ms=7 * 86400_000, deterministic=True)
     t0, t1 = 1704067200000, 1706486400000
     api = QueryAPI(eng, label_values_row_quota=3, label_names_row_quota=50)
-    with _pytest.raises(QuotaExceeded, match="3-row quota"):
-        api.label_values("user", None, t0, t1)      # >3 distinct users
-    with _pytest.raises(QuotaExceeded, match="3-row quota"):
-        api.label_values("shard", None, t0, t1)     # 8 shards > 3
-    # a quota the cardinality fits passes untouched (5 metric names)
     api_ok = QueryAPI(eng, label_values_row_quota=10)
-    vals, warns = api_ok.label_values("__name__", None, t0, t1)
-    assert 0 < len(vals) <= 10 and warns == []
-    names, warns = api.labels(None, t0, t1)          # few label names
-    assert names and warns == []
-    # client limit truncates WITH warning under a satisfied quota
-    names2, warns2 = api.labels(None, t0, t1, limit=1)
-    assert len(names2) == 1 and warns2
+    for _ in range(2):  # the second round runs on memoized plans
+        with _pytest.raises(QuotaExceeded, match="3-row quota"):
+            api.label_values("user", None, t0, t1)      # >3 distinct users
+        with _pytest.raises(QuotaExceeded, match="3-row quota"):
+            api.label_values("shard", None, t0, t1)     # 8 shards > 3
+        # a quota the cardinality fits passes untouched (5 metric names)
+        vals, warns = api_ok.label_values("__name__", None, t0, t1)
+        assert 0 < len(vals) <= 10 and warns == []
+        names, warns = api.labels(None, t0, t1)          # few label names
+        assert names and warns == []
+        # client limit truncates WITH warning under a satisfied quota
+        names2, warns2 = api.labels(None, t0, t1, limit=1)
+        assert len(names2) == 1 and warns2
+    # limit=1 under the 50-row quota fetches the same quota+1 plan
+    assert eng.plan_cache_counts()["hits"] == 1 + 5
 
 
 def test_default_metadata_row_quota(spark, sf_dir):
@@ -612,6 +664,22 @@ def test_metrics_endpoint_cardinality_and_escaping(server):
     # every exposed label value is exposition-clean
     for val in re.findall(r'\{[a-z]+="([^"]*)"\}', text):
         assert '"' not in val and "\\" not in val and "\n" not in val
+    # the engine's plan memo: unlabelled series, counters and a gauge
+    _get(server, "/api/v1/labels?start=0&end=77")
+    _get(server, "/api/v1/labels?start=0&end=77")
+    with urllib.request.urlopen(
+            f"http://127.0.0.1:{server.port}/metrics") as r:
+        text = r.read().decode()
+    memo = {}
+    for name, kind in (("hits_total", "counter"), ("misses_total", "counter"),
+                       ("evictions_total", "counter"), ("entries", "gauge")):
+        assert f"# TYPE pqg_plan_cache_{name} {kind}" in text
+        m = re.search(rf"^pqg_plan_cache_{name} (\d+)$", text, re.M)
+        memo[name] = int(m.group(1))
+    assert memo["hits_total"] >= 1 and memo["misses_total"] >= 1
+    # a miss whose build raised (a parse error) leaves no entry
+    assert 0 < memo["entries"] <= \
+        memo["misses_total"] - memo["evictions_total"]
 
 
 def test_internal_endpoints_drain_post_body(server):

@@ -143,6 +143,37 @@ def test_label_stats_sidecar(converted, spark):
     assert "_label_stats" not in buf.getvalue()
 
 
+def test_grpc_label_stats_sidecar(converted, spark):
+    """gRPC LabelNames/LabelValues (QueryServer) read the label-stats
+    sidecar like HTTP does, but only on the engine that drops no replica
+    labels: the sidecar carries raw labels."""
+    import io
+    from contextlib import redirect_stdout
+
+    from thanos_parquet_gateway_spark.api import QueryServer
+    from thanos_parquet_gateway_spark.convert.convert import read_label_stats
+
+    out, _, _ = converted
+    conv = spark.read.parquet(out)
+    t0, t1 = 1704153600000, 1704412800000  # Jan 2 .. Jan 5
+    fast = QueryServer(conv, label_stats=read_label_stats(spark, out))
+    slow = QueryServer(conv)
+    for name in ("shard", "__name__"):
+        got = fast.label_values(name, None, t0, t1)
+        assert got == slow.label_values(name, None, t0, t1) and got[0]
+    assert fast.label_names(None, t0, t1) == slow.label_names(None, t0, t1)
+
+    def plan(srv, replica_labels):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            srv._api(replica_labels).engine.label_values(
+                "shard", None, t0, t1).explain("formatted")
+        return buf.getvalue()
+
+    assert "_label_stats" in plan(fast, None)
+    assert "_label_stats" not in plan(fast, ["user"])
+
+
 def test_planner_anti_join(converted, spark):
     out, manifest, raw = converted
     src = source_days(raw)

@@ -110,6 +110,42 @@ def test_series_skip_chunks_and_limit(served):
     assert warnings  # truncation warning streamed like thanos.go:413-418
 
 
+def test_series_memo_over_wire(spark):
+    """Repeated gRPC Series calls collect the engine's memoized export
+    plan and stream identical responses; another skip_chunks, matcher or
+    time range is another plan, and limit=1 after an unlimited call still
+    truncates and warns."""
+    from thanos_parquet_gateway_spark.api import QueryServer
+    from thanos_parquet_gateway_spark.api.grpc_client import ThanosGrpcClient
+    from thanos_parquet_gateway_spark.api.grpc_server import ThanosGrpcServer
+
+    rows = [({"__name__": "m", "job": j}, t * S, float(t))
+            for j in "ab" for t in (10, 20)]
+    qs = QueryServer(make_samples(spark, rows), lookback_ms=60 * S,
+                     deterministic=True)
+    sel = [("=", "__name__", "m")]
+    with ThanosGrpcServer(qs) as srv:
+        with ThanosGrpcClient(srv.host, srv.port) as cli:
+            counts = qs._api(None).engine.plan_cache_counts
+            first = cli.series(sel, 0, 60 * S)
+            before = counts()
+            assert cli.series(sel, 0, 60 * S) == first
+            assert counts()["hits"] == before["hits"] + 1
+            assert len(first) == 2 and all(m["series"]["chunks"]
+                                           for m in first)
+            for call in (lambda: cli.series(sel, 0, 60 * S,
+                                            skip_chunks=True),
+                         lambda: cli.series(sel + [("=", "job", "a")],
+                                            0, 60 * S),
+                         lambda: cli.series(sel, 0, 50 * S)):
+                before = counts()["misses"]
+                call()
+                assert counts()["misses"] == before + 1
+            cut = cli.series(sel, 0, 60 * S, limit=1)
+            assert [m for m in cut if "series" in m] == first[:1]
+            assert [m["warning"] for m in cut if "warning" in m]
+
+
 def test_label_names_values_over_wire(served):
     names = served.label_names(0, 60 * S)
     assert names["values"] == ["__name__", "cluster", "job", "replica"]
@@ -1050,12 +1086,14 @@ def test_label_values_quota_over_grpc(spark):
                      deterministic=True, label_values_row_quota=3)
     with ThanosGrpcServer(qs) as srv:
         with ThanosGrpcClient(srv.host, srv.port) as cli:
-            with pytest.raises(GrpcError) as ei:
-                cli.label_values("job", 0, 60 * S)
-            assert ei.value.code == 8  # RESOURCE_EXHAUSTED
-            # label NAMES are under a separate (unset) quota
-            names = cli.label_names(0, 60 * S)
-            assert names["values"] == ["__name__", "job"]
+            for _ in range(2):  # the second round runs on memoized plans
+                with pytest.raises(GrpcError) as ei:
+                    cli.label_values("job", 0, 60 * S)
+                assert ei.value.code == 8  # RESOURCE_EXHAUSTED
+                # label NAMES are under a separate (unset) quota
+                names = cli.label_names(0, 60 * S)
+                assert names["values"] == ["__name__", "job"]
+    assert qs._api(None).engine.plan_cache_counts()["hits"] == 2
 
 
 def test_conformant_peer_skips_nhcb_private_enum(spark):

@@ -1,7 +1,12 @@
-"""Pin the engine-level compiled-plan cache (promql/engine.py, r13).
+"""Pin the engine-level plan memo (promql/engine.py ``_plan_cached``).
 
-The cache memoizes UNEXECUTED DataFrame plans keyed on (kind, query,
-time parameters) — no data, no results; every action re-scans the source.
+The memo holds DataFrames keyed on (kind, query, time parameters, row cap)
+for PromQL and (kind, name, matchers, start, end, row cap) for metadata
+and Series export.  It stores no rows, but a hit re-executes the SAME
+Dataset: Spark reuses the first run's shuffle output (the scan stages show
+SKIPPED), so an entry is valid for the file listing the engine's table
+handle captured at first analysis — fixed for the life of ``serve`` — and
+``stats.samples`` on a hit repeat the first run's scan counts.
 """
 
 from __future__ import annotations
@@ -36,10 +41,10 @@ def test_plan_cache_hits_same_plan_and_results(spark):
 
 
 def test_plan_cache_no_result_caching(spark):
-    """The cached object is an unexecuted plan: a second execution must
-    recompute from the CURRENT source rows (here: the same immutable local
-    relation — collect twice and via a fresh equal plan to prove the cache
-    returns a live plan, not captured rows)."""
+    """The memo stores a plan, not rows: a hit returns the same rows as
+    the first run and as a fresh engine over the same source.  (A hit
+    reuses the first run's shuffle output, so it answers from the source
+    as it was at that run — see test_plan_cache_hit_skips_scan_stages.)"""
     eng = _eng(spark, ROWS)
     r1 = eng.query_instant("count(m)", 30 * S).df.collect()
     r2 = eng.query_instant("count(m)", 30 * S).df.collect()
@@ -66,6 +71,16 @@ def test_plan_cache_bounded(spark):
     for t in range(8):
         eng.query_instant("sum(m)", t * 10 * S)
     assert len(eng._plan_cache) <= 4
+    # metadata and Series-export entries share the one cap
+    for t in range(3):
+        eng.label_values("job", None, 0, t * S)
+        eng.series(["m"], 0, t * S, samples=True)
+    assert len(eng._plan_cache) == 4
+    assert {k[0] for k in eng._plan_cache} == {"label_values",
+                                               "series_samples"}
+    counts = eng.plan_cache_counts()
+    assert counts["entries"] == 4 and counts["misses"] == 14
+    assert counts["evictions"] == 10 and counts["hits"] == 0
 
 
 def test_plan_cache_errors_not_cached(spark):
@@ -75,3 +90,80 @@ def test_plan_cache_errors_not_cached(spark):
             eng.query_range('"a string"', 0, 50 * S, 10 * S)
     assert not any(k[0] == "range" and '"a string"' in k[1]
                    for k in eng._plan_cache)
+
+
+def test_metadata_plans_memoized(spark):
+    """label_names / label_values / series (both shapes) hand back the
+    memoized DataFrame on an identical call; any change of kind, name,
+    matchers, time range, row cap or samples flag is a different plan."""
+    eng = _eng(spark, ROWS)
+
+    calls = {
+        "names": lambda **kw: eng.label_names(
+            kw.get("match"), 0, kw.get("end", 50 * S), kw.get("limit", 0)),
+        "values": lambda **kw: eng.label_values(
+            kw.get("name", "job"), kw.get("match"), 0,
+            kw.get("end", 50 * S), kw.get("limit", 0)),
+        "series": lambda **kw: eng.series(
+            kw.get("match", ["m"]), 0, kw.get("end", 50 * S),
+            kw.get("limit", 0), samples=kw.get("samples", False)),
+    }
+    for name, call in calls.items():
+        a = call()
+        assert call() is a, name
+        assert a.collect() == call().collect()
+        assert call(limit=2) is not a
+        assert call(limit=2) is call(limit=2)
+        assert call(end=40 * S) is not a
+        assert call(match=['m{job="a"}']) is not a
+    assert calls["values"](name="__name__") is not calls["values"]()
+    assert calls["series"](samples=True) is not calls["series"]()
+    assert eng.series(["m"], 0, 50 * S, 1).collect() == \
+        eng.series(["m"], 0, 50 * S).collect()[:1]
+
+
+def test_metadata_build_errors_not_cached(spark):
+    eng = _eng(spark, ROWS)
+    for _ in range(2):
+        with pytest.raises(ValueError, match="must be a selector"):
+            eng.series(["sum(m)"], 0, 50 * S)
+    assert not eng._plan_cache
+    assert eng.plan_cache_counts()["misses"] == 2
+
+
+def test_plan_cache_hit_skips_scan_stages(spark, tmp_path):
+    """On a parquet-backed engine the second identical query re-executes
+    the memoized Dataset: its scan stage is SKIPPED (the first run's
+    shuffle output is reused) and its rows equal the first run's, while a
+    fresh engine over the same path scans again."""
+    from thanos_parquet_gateway_spark.promql import PromQLEngine
+
+    path = str(tmp_path / "samples")
+    make_samples(spark, ROWS).write.parquet(path)
+    sc = spark.sparkContext
+
+    def run(eng, group):
+        sc.setJobGroup(group, group)
+        try:
+            rows = eng.query_instant("sum by (job) (m)", 30 * S).df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+        stages = [store.lastStageAttempt(sid)
+                  for jid in tracker.getJobIdsForGroup(group)
+                  for sid in tracker.getJobInfo(jid).stageIds]
+        scanned = sum(st.inputRecords() for st in stages
+                      if st.status().toString() == "COMPLETE")
+        skipped = [st for st in stages if st.status().toString() == "SKIPPED"]
+        return rows, scanned, skipped
+
+    eng = PromQLEngine(spark.read.parquet(path), lookback_ms=300_000)
+    rows1, scanned1, _ = run(eng, "memo-first")
+    rows2, scanned2, skipped2 = run(eng, "memo-hit")
+    fresh = PromQLEngine(spark.read.parquet(path), lookback_ms=300_000)
+    rows3, scanned3, _ = run(fresh, "memo-fresh")
+    assert scanned1 > 0
+    assert scanned2 == 0 and skipped2
+    assert scanned3 == scanned1
+    assert rows1 == rows2 == rows3 and rows1

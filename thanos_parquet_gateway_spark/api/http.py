@@ -10,8 +10,9 @@ Concurrency guardrails (reference internal/limits/limit.go:27-64) map to a
 semaphore here + Spark fair-scheduler pools underneath.
 
 Resource quotas (reference internal/limits/limit.go:66-93):
-- row quota: limit(q+1) admission on the result DataFrame — executors stop
-  early instead of shipping an oversized result;
+- row quota: the result DataFrame is fetched capped at q+1 rows (the engine
+  memoizes the capped plan) — executors stop early instead of shipping an
+  oversized result;
 - byte quota: admission against the Catalyst-optimized plan's estimated
   input size (post partition-pruning file bytes) — the Spark analogue of
   reserving chunk bytes before materialization.
@@ -272,20 +273,22 @@ class QueryAPI:
                     f"resource exhausted (query would scan {n} shards, "
                     f"quota {self.shard_quota})")
 
+    def _row_cap(self) -> int:
+        """Rows a PromQL result is fetched with: quota+1 under a row quota
+        (the engine memoizes the capped plan under its query key), so
+        executors stop early instead of shipping an oversized result."""
+        return self.row_quota + 1 if self.row_quota else 0
+
     def _collect(self, df):
-        """Collect under the row quota.  Returns (rows, executed_df): scan
-        metrics must be read from the DataFrame that actually ran — under a
-        quota that is the limit(q+1) plan, not the original."""
+        """Admit, then collect a plan fetched with ``_row_cap`` rows and
+        enforce the row quota on it."""
         self._admit(df)
-        if self.row_quota:
-            limited = df.limit(self.row_quota + 1)
-            rows = limited.collect()
-            if len(rows) > self.row_quota:
-                raise QuotaExceeded(
-                    f"resource exhausted (query would return more than "
-                    f"{self.row_quota} rows)")
-            return rows, limited
-        return df.collect(), df
+        rows = df.collect()
+        if self.row_quota and len(rows) > self.row_quota:
+            raise QuotaExceeded(
+                f"resource exhausted (query would return more than "
+                f"{self.row_quota} rows)")
+        return rows
 
     @staticmethod
     def _with_annotations(payload: dict, res) -> dict:
@@ -306,9 +309,13 @@ class QueryAPI:
             payload["infos"] = infos
         return payload
 
-    def query(self, q: str, t_ms: int) -> dict:
+    def query(self, q: str, t_ms: int, *, memo: bool = True) -> dict:
+        """``memo=False`` (a time the client left to default to now, a key
+        no later request repeats) builds the plan without memoizing it;
+        the same for every endpoint below."""
         with self.sem:
-            res = self.engine.query_instant(q, t_ms)
+            res = self.engine.query_instant(q, t_ms, self._row_cap(),
+                                            memo=memo)
             if res.result_type == "string":
                 row = res.df.collect()[0]
                 return self._with_annotations(
@@ -320,7 +327,7 @@ class QueryAPI:
                     {"resultType": "scalar",
                      "result": [t_ms / 1000.0, _fmt_val(row["value"])],
                      "stats": {"samples": scan_stats(res.df)}}, res)
-            rows, ran = self._collect(res.df)
+            rows = self._collect(res.df)
             # Prometheus execution error: an instant vector must not contain
             # two samples with the same labelset (can arise from
             # label_replace/label_join collapsing labels).  Checked here on
@@ -346,14 +353,15 @@ class QueryAPI:
                 result.append(item)
             return self._with_annotations(
                 {"resultType": "vector", "result": result,
-                 "stats": {"samples": scan_stats(ran)}}, res)
+                 "stats": {"samples": scan_stats(res.df)}}, res)
 
     def query_range(self, q: str, start_ms: int, end_ms: int,
-                    step_ms: int) -> dict:
+                    step_ms: int, *, memo: bool = True) -> dict:
         with self.sem:
-            res = self.engine.query_range(q, start_ms, end_ms, step_ms)
-            rows, ran = self._collect(res.df)
-            stats = {"samples": scan_stats(ran)}
+            res = self.engine.query_range(q, start_ms, end_ms, step_ms,
+                                          self._row_cap(), memo=memo)
+            rows = self._collect(res.df)
+            stats = {"samples": scan_stats(res.df)}
             if res.result_type == "scalar":
                 return self._with_annotations(
                     {"resultType": "matrix", "result": [{
@@ -393,7 +401,7 @@ class QueryAPI:
                  "stats": stats}, res)
 
     # -- metadata endpoints: (data, warnings) pairs ----------------------
-    def _limited(self, df, limit: int, quota: int = 0):
+    def _limited(self, fetch, limit: int, quota: int = 0):
         """Collect limit+1 rows; report truncation as a warning instead of
         silently clipping (reference search/materialize.go:53-58,
         db/db.go:339-347).  ``quota`` is the operator-set per-endpoint row
@@ -403,45 +411,47 @@ class QueryAPI:
         quota+1 rows, never the full result.  With NO quota and NO limit,
         ``default_metadata_row_quota`` backstops the otherwise-unbounded
         collect (the reference's UnlimitedQuota default would OOM the
-        driver at scale; 0 restores it)."""
-        self._admit(df)
+        driver at scale; 0 restores it).  ``fetch(n)`` returns the
+        engine's memoized plan capped at n rows (0 = uncapped)."""
         if not quota and not limit:
             quota = self.default_metadata_row_quota
-        if quota:
-            rows = df.limit(quota + 1).collect()
-            if len(rows) > quota:
-                raise QuotaExceeded(
-                    f"resource exhausted (metadata result exceeds the "
-                    f"{quota}-row quota)")
-            if limit and len(rows) > limit:
-                return rows[:limit], [WARN_TRUNCATED]
-            return rows, []
-        if not limit:
-            return df.collect(), []
-        rows = df.limit(limit + 1).collect()
-        if len(rows) > limit:
+        cap = quota or limit
+        df = fetch(cap + 1 if cap else 0)
+        self._admit(df)
+        rows = df.collect()
+        if quota and len(rows) > quota:
+            raise QuotaExceeded(
+                f"resource exhausted (metadata result exceeds the "
+                f"{quota}-row quota)")
+        if limit and len(rows) > limit:
             return rows[:limit], [WARN_TRUNCATED]
         return rows, []
 
     def series(self, match: list[str], start_ms: int, end_ms: int,
-               limit: int = 0) -> tuple[list[dict], list[str]]:
+               limit: int = 0, *, memo: bool = True
+               ) -> tuple[list[dict], list[str]]:
         rows, warns = self._limited(
-            self.engine.series(match, start_ms, end_ms), limit,
-            quota=self.row_quota)
+            lambda n: self.engine.series(match, start_ms, end_ms, n,
+                                         memo=memo),
+            limit, quota=self.row_quota)
         return [dict(r["labels"]) for r in rows], warns
 
     def labels(self, match: list[str] | None, start_ms: int, end_ms: int,
-               limit: int = 0) -> tuple[list[str], list[str]]:
+               limit: int = 0, *, memo: bool = True
+               ) -> tuple[list[str], list[str]]:
         rows, warns = self._limited(
-            self.engine.label_names(match, start_ms, end_ms), limit,
-            quota=self.label_names_row_quota)
+            lambda n: self.engine.label_names(match, start_ms, end_ms, n,
+                                              memo=memo),
+            limit, quota=self.label_names_row_quota)
         return [r["name"] for r in rows], warns
 
     def label_values(self, name: str, match: list[str] | None, start_ms: int,
-                     end_ms: int, limit: int = 0) -> tuple[list[str], list[str]]:
+                     end_ms: int, limit: int = 0, *, memo: bool = True
+                     ) -> tuple[list[str], list[str]]:
         rows, warns = self._limited(
-            self.engine.label_values(name, match, start_ms, end_ms), limit,
-            quota=self.label_values_row_quota)
+            lambda n: self.engine.label_values(name, match, start_ms, end_ms,
+                                               n, memo=memo),
+            limit, quota=self.label_values_row_quota)
         return [r["value"] for r in rows], warns
 
 
@@ -569,6 +579,16 @@ class PromHTTPServer:
                             f'pqg_http_errors_total'
                             f'{{type="{_esc_label(lb)}"}} {v}'
                             for (name, lb), v in items if name == "errors"]
+                        memo = api.engine.plan_cache_counts()
+                        for key, kind in (("hits", "counter"),
+                                          ("misses", "counter"),
+                                          ("evictions", "counter"),
+                                          ("entries", "gauge")):
+                            metric = f"pqg_plan_cache_{key}" + (
+                                "_total" if kind == "counter" else "")
+                            lines += [f"# HELP {metric} Plan memo {key}.",
+                                      f"# TYPE {metric} {kind}",
+                                      f"{metric} {memo[key]}"]
                         self._send_text(("\n".join(lines) + "\n").encode(),
                                         ctype="text/plain; version=0.0.4; "
                                               "charset=utf-8")
@@ -581,15 +601,19 @@ class PromHTTPServer:
                         qs.update(parse_qs(self.rfile.read(n).decode()))
                     now = int(time.time() * 1000)
                     one = lambda k, d=None: qs.get(k, [d])[0]  # noqa: E731
+                    # a time defaulted to now is a key no later request
+                    # repeats: such requests bypass the plan memo
                     if u.path == "/api/v1/query":
                         self._ok(api.query(one("query"),
-                                           _parse_time(one("time"), now)))
+                                           _parse_time(one("time"), now),
+                                           memo=bool(one("time"))))
                     elif u.path == "/api/v1/query_range":
                         step = one("step", "30")
                         self._ok(api.query_range(
                             one("query"), _parse_time(one("start"), now),
                             _parse_time(one("end"), now),
-                            int(float(step) * 1000)))
+                            int(float(step) * 1000),
+                            memo=bool(one("start") and one("end"))))
                     elif u.path == "/api/v1/format_query":
                         # Prometheus 3 query formatter: parse + prettify
                         # (promql/printer.py; long expressions split across
@@ -615,13 +639,15 @@ class PromHTTPServer:
                         data, warns = api.series(qs.get("match[]", []),
                                                  _parse_time(one("start"), 0),
                                                  _parse_time(one("end"), now),
-                                                 int(one("limit", "0")))
+                                                 int(one("limit", "0")),
+                                                 memo=bool(one("end")))
                         self._ok(data, warns)
                     elif u.path == "/api/v1/labels":
                         data, warns = api.labels(qs.get("match[]") or None,
                                                  _parse_time(one("start"), 0),
                                                  _parse_time(one("end"), now),
-                                                 int(one("limit", "0")))
+                                                 int(one("limit", "0")),
+                                                 memo=bool(one("end")))
                         self._ok(data, warns)
                     elif u.path.startswith("/api/v1/label/") and \
                             u.path.endswith("/values"):
@@ -630,7 +656,7 @@ class PromHTTPServer:
                             name, qs.get("match[]") or None,
                             _parse_time(one("start"), 0),
                             _parse_time(one("end"), now),
-                            int(one("limit", "0")))
+                            int(one("limit", "0")), memo=bool(one("end")))
                         self._ok(data, warns)
                     else:
                         self._send({"status": "error",

@@ -43,7 +43,8 @@ class QueryServer:
                  shard_quota: int = 0,
                  label_names_row_quota: int = 0,
                  label_values_row_quota: int = 0,
-                 default_metadata_row_quota: int | None = None):
+                 default_metadata_row_quota: int | None = None,
+                 label_stats: DataFrame | None = None):
         self.samples = samples
         self.streams = streams
         self.ext_labels = ext_labels
@@ -56,6 +57,9 @@ class QueryServer:
         self.label_names_row_quota = label_names_row_quota
         self.label_values_row_quota = label_values_row_quota
         self.default_metadata_row_quota = default_metadata_row_quota
+        # convert-time label-stats sidecar (convert.write_label_stats),
+        # handed to every engine (PromQLEngine decides when it applies)
+        self.label_stats = label_stats
         # one (engine, api) per distinct (replica-label set, lookback),
         # built lazily — the reference builds a DBQueryable per request
         # (thanos.go:135-147) and threads the per-request LookbackDelta
@@ -88,7 +92,8 @@ class QueryServer:
                            deterministic=self.deterministic,
                            replica_labels=list(key[0]) or None,
                            ext_labels=self.ext_labels,
-                           streams=self.streams)
+                           streams=self.streams,
+                           label_stats=self.label_stats)
         api = QueryAPI(eng, self.max_concurrent,
                        row_quota=self.row_quota,
                        byte_quota=self.byte_quota,
@@ -162,50 +167,22 @@ class QueryServer:
             q, start_ms, end_ms, step_ms)
 
     # ------------------------------------------------------- Series export
-    def series_df(self, matchers: list[str], start_ms: int, end_ms: int, *,
-                  skip_samples: bool = False,
-                  replica_labels: list[str] | None = None) -> DataFrame:
-        """Raw series export (thanos.go:376-459): selector → one row per
-        series with its samples, bypassing the PromQL engine entirely (no
-        lookback, no staleness) — the querier re-evaluates PromQL itself.
-
-        ``skip_samples`` ≡ the reference's SkipChunks (labels only).  The
-        per-series samples array is the chunk payload analogue: bounded by
-        series×window like a chunk run, assembled map-side after the same
-        shuffle a chunk materialization would need.
-        """
-        eng = self._api(replica_labels).engine
-        matched = eng._matched(matchers, start_ms, end_ms)
-        from thanos_parquet_gateway_spark.schema import canonical_sig
-        extra = ["hist"] if "hist" in matched.columns else []
-        keyed = matched.select(canonical_sig("labels").alias("sig"),
-                               "labels", "ts", "value", *extra)
-        if skip_samples:
-            return keyed.dropDuplicates(["sig"]).select("sig", "labels") \
-                        .orderBy("sig")
-        return (keyed.groupBy("sig")
-                .agg(F.first("labels").alias("labels"),
-                     F.array_sort(F.collect_list(
-                         F.struct("ts", "value", *extra)))
-                      .alias("samples"))
-                .orderBy("sig"))
-
     def series(self, matchers: list[str], start_ms: int, end_ms: int, *,
                limit: int = 0, skip_samples: bool = False,
                replica_labels: list[str] | None = None
                ) -> tuple[list[dict], list[str]]:
-        """Collected form: [{labels, samples: [[ts, value], ...]}, ...] plus
-        truncation warnings (thanos.go:413-418)."""
-        df = self.series_df(matchers, start_ms, end_ms,
-                            skip_samples=skip_samples,
-                            replica_labels=replica_labels)
+        """Raw series export (thanos.go:376-459) in collected form:
+        [{labels, samples: [[ts, value], ...]}, ...] plus truncation
+        warnings (thanos.go:413-418).  The plan is the engine's memoized
+        ``series(..., samples=True)``; ``skip_samples`` ≡ the reference's
+        SkipChunks (labels only)."""
+        df = self._api(replica_labels).engine.series(
+            matchers, start_ms, end_ms, limit + 1 if limit else 0,
+            samples=not skip_samples)
+        rows = df.collect()
         warns: list[str] = []
-        if limit:
-            rows = df.limit(limit + 1).collect()
-            if len(rows) > limit:
-                rows, warns = rows[:limit], [WARN_TRUNCATED]
-        else:
-            rows = df.collect()
+        if limit and len(rows) > limit:
+            rows, warns = rows[:limit], [WARN_TRUNCATED]
         out = []
         for r in rows:
             item = {"labels": dict(r["labels"])}

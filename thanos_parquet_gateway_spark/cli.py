@@ -43,16 +43,13 @@ def cmd_serve(args) -> int:
         streams = read_stream_descriptors(spark, args.path)
     except Exception:  # noqa: BLE001 — flat layouts have no sidecar
         streams = None
-    if not args.replica_label:
-        # the sidecar carries raw labels; with replica dropping the served
-        # label set differs, so fall back to the scan path
-        try:
-            from thanos_parquet_gateway_spark.convert.convert import (
-                read_label_stats,
-            )
-            label_stats = read_label_stats(spark, args.path)
-        except Exception:  # noqa: BLE001 — pre-sidecar layouts
-            label_stats = None
+    try:
+        from thanos_parquet_gateway_spark.convert.convert import (
+            read_label_stats,
+        )
+        label_stats = read_label_stats(spark, args.path)
+    except Exception:  # noqa: BLE001 — pre-sidecar layouts
+        label_stats = None
     eng = PromQLEngine(samples,
                        lookback_ms=args.lookback_ms,
                        replica_labels=args.replica_label or None,
@@ -79,7 +76,8 @@ def cmd_serve(args) -> int:
                          max_concurrent=args.max_concurrent,
                          row_quota=args.max_row_count,
                          byte_quota=args.max_chunk_bytes,
-                         shard_quota=args.max_shard_count)
+                         shard_quota=args.max_shard_count,
+                         label_stats=label_stats)
         gsrv = ThanosGrpcServer(qs, port=args.grpc_port).start()
     print(f"serving {args.path} on :{srv.port}"
           + (f" grpc :{gsrv.port}" if gsrv else "")

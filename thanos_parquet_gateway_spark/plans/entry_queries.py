@@ -4216,9 +4216,8 @@ def grpc_series_export(spark, sf_dir):
     per-series sample runs with NO PromQL engine — no lookback, no
     staleness.  Checked via per-series run stats + an order-stable value
     fold over the exported array."""
-    from thanos_parquet_gateway_spark.api import QueryServer
-    srv = QueryServer(samples_from_events(spark, sf_dir), deterministic=True)
-    df = srv.series_df(["click"], R_START, T)
+    df = PromQLEngine(samples_from_events(spark, sf_dir)).series(
+        ["click"], R_START, T, samples=True)
     return df.select(
         _lbl("shard").alias("shard"), _lbl("user").alias("user"),
         F.size("samples").cast("long").alias("n_samples"),
@@ -4245,9 +4244,8 @@ def grpc_series_export_hist(spark, sf_dir):
     HISTOGRAM/FLOAT_HISTOGRAM chunks through Series, thanos.go:462-473):
     click samples are lifted to deterministic NHCB histograms (count =
     floor(100v), sum = floor(10v) — integral, so the float folds are
-    order-independent), exported through the same series_df path the gRPC
-    handler chunks, and reduced per series."""
-    from thanos_parquet_gateway_spark.api import QueryServer
+    order-independent), exported through the same engine Series-export
+    plan the gRPC handler chunks, and reduced per series."""
     from thanos_parquet_gateway_spark.promql.histograms import make_hist
 
     s = samples_from_events(spark, sf_dir)
@@ -4259,8 +4257,8 @@ def grpc_series_export_hist(spark, sf_dir):
                  F.lit(0.0).alias("count")))
     hist = F.when(F.col("__name__") == "click",
                   make_hist(cnt, tot, buckets, -53))
-    srv = QueryServer(s.withColumn("hist", hist), deterministic=True)
-    df = srv.series_df(["click"], R_START, T)
+    df = PromQLEngine(s.withColumn("hist", hist)).series(
+        ["click"], R_START, T, samples=True)
     hs = F.filter("samples", lambda x: x["hist"].isNotNull())
     return df.select(
         _lbl("shard").alias("shard"), _lbl("user").alias("user"),

@@ -8,7 +8,7 @@ label values — each returning a DataFrame (never collecting on its own).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -59,6 +59,14 @@ class QueryResult:
         self.annotations = ann
         self.probes = []
         return ann
+
+    def capped(self, limit: int) -> "QueryResult":
+        """This result with at most ``limit`` rows (0 = uncapped)."""
+        return replace(self, df=_capped(self.df, limit))
+
+
+def _capped(df: DataFrame, limit: int) -> DataFrame:
+    return df.limit(limit) if limit else df
 
 
 class PromQLEngine:
@@ -171,32 +179,46 @@ class PromQLEngine:
         self.ext_labels = ext_labels
         self.streams = streams
         self.complete_streams = complete_streams
-        # Compiled-plan cache (r13): a serving gateway re-compiles the SAME
-        # query text at the same parameters constantly (dashboard refresh,
-        # retried panels), and compile — parse + eagerly-analyzed plan
-        # construction, ~0.1-0.5 s/query — is pure driver latency.  The
-        # cache memoizes the QueryResult's UNEXECUTED DataFrame plan keyed
-        # on (kind, query text, time parameters); no data and no results
-        # are stored (the same contract as the session table handle in
-        # sources/tables.py — every action re-scans parquet), it is bounded
-        # (LRU, 256 entries), engine-scoped (dies with the engine; engine
-        # config is fixed per instance), and each hit returns a fresh
+        # Plan memo: a serving gateway asks for the SAME result at the same
+        # parameters constantly (dashboard refresh, retried panels).  Every
+        # API collect site collects a DataFrame taken from this one LRU
+        # (256 entries, engine-scoped), keyed on (kind, query text, time
+        # parameters, row cap) for PromQL and on (kind, name, matchers,
+        # start, end, row cap) for metadata and Series export.  A hit hands
+        # back the SAME Dataset, so a repeated collect re-runs neither the
+        # Python build nor Catalyst analysis/optimization/planning, and
+        # Spark skips the map stages whose shuffle output the first run
+        # left behind (their scan stages show SKIPPED).  No rows are stored
+        # in the memo, but an entry answers from the file listing the
+        # table handle captured at first analysis (sources/tables.py) and
+        # from the first run's shuffle output: it is valid for as long as
+        # that listing is, which `serve` fixes at start-up.  Response
+        # ``stats.samples`` on a hit repeat the first run's scan counts
+        # although no scan stage ran (a known defect).  Only an exact
+        # repeat hits; a request whose time the client left to default to
+        # now is built without a key (memo=False) so it cannot push out
+        # entries that do repeat.  The cap counts entries, not the shuffle
+        # output they keep alive.  Each PromQL hit returns a fresh
         # QueryResult wrapper so all_annotations' fold-in never mutates the
         # cached entry.
         import threading as _th
         from collections import OrderedDict as _OD
         self._plan_cache: "dict" = _OD()
         self._plan_cache_cap = 256
+        self._plan_cache_stats = {"hits": 0, "misses": 0, "evictions": 0}
         # the API server serves concurrent requests on ONE engine
         # (api/server.py engine LRU + max_concurrent): guard the LRU's
-        # read-move/insert/evict sequences; plan BUILDS stay outside the
-        # lock (driver-heavy — a concurrent builder of the same key just
-        # loses the insert race, same policy as the server's engine LRU)
+        # read-move/insert/evict sequences and the counters; plan BUILDS
+        # stay outside the lock (driver-heavy — a concurrent builder of the
+        # same key just loses the insert race, same policy as the server's
+        # engine LRU)
         self._plan_lock = _th.Lock()
         # convert-time sidecar (convert.write_label_stats): the reference's
         # dictionary-shortcut LabelValues analogue — unconstrained metadata
-        # queries read it instead of scanning samples
-        self.label_stats = label_stats
+        # queries read it instead of scanning samples.  It carries raw
+        # labels, so an engine that drops replica labels serves a different
+        # label set and never reads it
+        self.label_stats = None if replica_labels else label_stats
 
     # ------------------------------------------------------------- queries
     def _compile(self, q: str, start_ms: int, end_ms: int, step_ms: int):
@@ -208,29 +230,49 @@ class PromQLEngine:
                         self.complete_streams)
         return comp, comp.compile(node)
 
-    def _plan_cached(self, key: tuple, build) -> QueryResult:
-        """LRU-memoized QueryResult plans (see __init__).  Hits hand back a
-        fresh QueryResult over the same immutable DataFrame plan with
-        copied annotation/probe lists."""
+    def _plan_cached(self, key: tuple | None, build):
+        """LRU-memoized plans (see __init__): a QueryResult or a metadata
+        DataFrame.  QueryResult hits hand back a fresh wrapper over the same
+        DataFrame with copied annotation/probe lists.  A build that raises
+        caches nothing; ``key=None`` builds a plan the memo neither answers
+        nor keeps (counted as a miss)."""
         with self._plan_lock:
-            hit = self._plan_cache.get(key)
+            hit = None if key is None else self._plan_cache.get(key)
             if hit is not None:
                 self._plan_cache.move_to_end(key)
+                self._plan_cache_stats["hits"] += 1
+            else:
+                self._plan_cache_stats["misses"] += 1
         if hit is None:
             hit = build()  # outside the lock: plan construction is slow
+            if key is None:
+                return hit
             with self._plan_lock:
                 self._plan_cache[key] = hit
                 while len(self._plan_cache) > self._plan_cache_cap:
                     self._plan_cache.pop(next(iter(self._plan_cache)))
+                    self._plan_cache_stats["evictions"] += 1
+        if not isinstance(hit, QueryResult):
+            return hit
         return QueryResult(hit.df, hit.result_type,
                            list(hit.annotations or []),
                            list(hit.probes or []))
 
+    def plan_cache_counts(self) -> dict:
+        """Memo counters for /metrics: hits, misses, evictions, entries."""
+        with self._plan_lock:
+            return dict(self._plan_cache_stats,
+                        entries=len(self._plan_cache))
+
     def query_range(self, q: str, start_ms: int, end_ms: int,
-                    step_ms: int) -> QueryResult:
+                    step_ms: int, limit: int = 0, *,
+                    memo: bool = True) -> QueryResult:
+        """``limit`` caps the result rows (the API's row-quota probe);
+        ``memo=False`` bypasses the plan memo (see _plan_cached)."""
         return self._plan_cached(
-            ("range", q, start_ms, end_ms, step_ms),
-            lambda: self._query_range_uncached(q, start_ms, end_ms, step_ms))
+            ("range", q, start_ms, end_ms, step_ms, limit) if memo else None,
+            lambda: self._query_range_uncached(
+                q, start_ms, end_ms, step_ms).capped(limit))
 
     def _query_range_uncached(self, q: str, start_ms: int, end_ms: int,
                               step_ms: int) -> QueryResult:
@@ -253,10 +295,13 @@ class PromQLEngine:
             return QueryResult(df, "matrix", ann, probes)
         raise ValueError(f"unexpected result {type(v).__name__}")
 
-    def query_instant(self, q: str, t_ms: int) -> QueryResult:
+    def query_instant(self, q: str, t_ms: int, limit: int = 0, *,
+                      memo: bool = True) -> QueryResult:
+        """``limit`` caps the result rows (the API's row-quota probe);
+        ``memo=False`` bypasses the plan memo (see _plan_cached)."""
         return self._plan_cached(
-            ("instant", q, t_ms),
-            lambda: self._query_instant_uncached(q, t_ms))
+            ("instant", q, t_ms, limit) if memo else None,
+            lambda: self._query_instant_uncached(q, t_ms).capped(limit))
 
     def _query_instant_uncached(self, q: str, t_ms: int) -> QueryResult:
         comp, v = self._compile(q, t_ms, t_ms, 1)
@@ -328,13 +373,44 @@ class PromQLEngine:
                              ext))
         return out
 
+    def _metadata(self, kind: str, name, match: list[str] | None,
+                  start_ms: int, end_ms: int, limit: int, build,
+                  memo: bool) -> DataFrame:
+        """Metadata/Series plan capped at ``limit`` rows, memoized unless
+        ``memo`` is False."""
+        return self._plan_cached(
+            (kind, name, tuple(match or ()), start_ms, end_ms, limit)
+            if memo else None,
+            lambda: _capped(build(), limit))
+
     def series(self, match: list[str], start_ms: int, end_ms: int,
-               limit: int = 0) -> DataFrame:
-        out = (self._matched(match, start_ms, end_ms)
-               .select(canonical_sig("labels").alias("sig"), "labels")
-               .dropDuplicates(["sig"])
-               .orderBy("sig"))
-        return out.limit(limit) if limit else out
+               limit: int = 0, *, samples: bool = False,
+               memo: bool = True) -> DataFrame:
+        """Matched series, one row per series ordered by ``sig``: (sig,
+        labels) for /series and the Series export with SkipChunks.  With
+        ``samples`` this is the raw Series export (reference
+        api/grpc/thanos.go:376-459): each series also carries its samples
+        array, with no lookback and no staleness handling — the querier
+        re-evaluates PromQL itself.  The array is the chunk payload
+        analogue: bounded by series×window like a chunk run, assembled
+        after the same shuffle a chunk materialization would need."""
+        def build():
+            matched = self._matched(match, start_ms, end_ms)
+            sig = canonical_sig("labels").alias("sig")
+            if not samples:
+                return (matched.select(sig, "labels")
+                        .dropDuplicates(["sig"]).orderBy("sig"))
+            extra = ["hist"] if "hist" in matched.columns else []
+            return (matched.select(sig, "labels", "ts", "value", *extra)
+                    .groupBy("sig")
+                    .agg(F.first("labels").alias("labels"),
+                         F.array_sort(F.collect_list(
+                             F.struct("ts", "value", *extra)))
+                          .alias("samples"))
+                    .orderBy("sig"))
+        return self._metadata("series_samples" if samples else "series",
+                              None, match, start_ms, end_ms, limit, build,
+                              memo)
 
     def _stats_fast_path(self, match) -> DataFrame | None:
         """The sidecar answers only unconstrained metadata queries (the
@@ -357,34 +433,37 @@ class PromQLEngine:
             (F.col("date") >= day(start_ms)) & (F.col("date") <= day(end_ms)))
 
     def label_names(self, match: list[str] | None, start_ms: int, end_ms: int,
-                    limit: int = 0) -> DataFrame:
+                    limit: int = 0, *, memo: bool = True) -> DataFrame:
         """Reference: schema-level when unconstrained, filtered scan otherwise
         (search/search.go:294-345).  With a converted table's label-stats
         sidecar the unconstrained case never touches the samples."""
-        if self._stats_fast_path(match) is not None:
-            out = (self._stats_in_range(start_ms, end_ms)
-                   .select(F.col("label").alias("name"))
-                   .distinct().orderBy("name"))
-            return out.limit(limit) if limit else out
-        out = (self._matched(match or [], start_ms, end_ms)
-               .select(F.explode(F.map_keys("labels")).alias("name"))
-               .distinct().orderBy("name"))
-        return out.limit(limit) if limit else out
+        def build():
+            if self._stats_fast_path(match) is not None:
+                return (self._stats_in_range(start_ms, end_ms)
+                        .select(F.col("label").alias("name"))
+                        .distinct().orderBy("name"))
+            return (self._matched(match or [], start_ms, end_ms)
+                    .select(F.explode(F.map_keys("labels")).alias("name"))
+                    .distinct().orderBy("name"))
+        return self._metadata("label_names", None, match, start_ms, end_ms,
+                              limit, build, memo)
 
     def label_values(self, name: str, match: list[str] | None,
-                     start_ms: int, end_ms: int, limit: int = 0) -> DataFrame:
+                     start_ms: int, end_ms: int, limit: int = 0, *,
+                     memo: bool = True) -> DataFrame:
         """Reference: dictionary shortcut without matchers, filtered distinct
         with matchers (search/search.go:153-262).  The sidecar (when the
         engine was built from a converted table) IS the dictionary: distinct
         (label, value) per stream/day, no samples scan."""
-        if self._stats_fast_path(match) is not None:
-            out = (self._stats_in_range(start_ms, end_ms)
-                   .filter(F.col("label") == name)
-                   .select("value").filter(F.col("value") != "")
-                   .distinct().orderBy("value"))
-            return out.limit(limit) if limit else out
-        out = (self._matched(match or [], start_ms, end_ms)
-               .select(label("labels", name).alias("value"))
-               .filter(F.col("value") != "")
-               .distinct().orderBy("value"))
-        return out.limit(limit) if limit else out
+        def build():
+            if self._stats_fast_path(match) is not None:
+                return (self._stats_in_range(start_ms, end_ms)
+                        .filter(F.col("label") == name)
+                        .select("value").filter(F.col("value") != "")
+                        .distinct().orderBy("value"))
+            return (self._matched(match or [], start_ms, end_ms)
+                    .select(label("labels", name).alias("value"))
+                    .filter(F.col("value") != "")
+                    .distinct().orderBy("value"))
+        return self._metadata("label_values", name, match, start_ms, end_ms,
+                              limit, build, memo)
