@@ -252,11 +252,18 @@ def test_truncation_warning_on_series(server):
 
 def test_query_stats(server):
     """Per-query samples-scanned stats (reference api/grpc/thanos.go:561-566):
-    scan row counts from the executed plan's metrics."""
-    out = _get(server, "/api/v1/query?query=sum(m)&time=40")
+    scan row counts from the executed plan's metrics, per execution — a
+    request that scans reports its scan, and its plan-memo hit, whose scan
+    stage Spark skips, reports none."""
+    path = "/api/v1/query?query=sum%20by%20(job)%20(m)&time=43"
+    out = _get(server, path)
     st = out["data"]["stats"]["samples"]
     assert st["totalQueried"] >= 10   # all 10 samples scanned
     assert st["peakSamples"] >= 10
+    hit = _get(server, path)
+    assert hit["data"]["result"] == out["data"]["result"]
+    assert hit["data"]["stats"]["samples"]["totalQueried"] == 0
+    assert hit["data"]["stats"]["samples"]["peakSamples"] == 0
 
 
 def test_http_quota_error_type(spark):
@@ -437,10 +444,14 @@ def test_scan_counters_on_range_query(spark, sf_dir):
     assert st["peakSamples"] > 0
     assert st["filesScanned"] > 0
     assert st["bytesScanned"] > 0
-    # a plan-memo hit returns the same result
+    # a plan-memo hit returns the same result and, its scan stages
+    # skipped, reports no scan
     again = api.query_range("sum(click)", 1704153600000, 1704412800000,
                             86400_000)
     assert again["result"] == out["result"]
+    assert again["stats"]["samples"] == {
+        "totalQueried": 0, "peakSamples": 0,
+        "filesScanned": 0, "bytesScanned": 0}
 
 
 def test_native_histogram_http_payload(spark):

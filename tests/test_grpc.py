@@ -1096,6 +1096,41 @@ def test_label_values_quota_over_grpc(spark):
     assert qs._api(None).engine.plan_cache_counts()["hits"] == 2
 
 
+def test_series_quotas_over_grpc(spark):
+    """gRPC Series runs the admission and row quota of /series: a 3-series
+    export over a 1-row or 1-byte quota answers RESOURCE_EXHAUSTED (8), on
+    the first call and on its memo hit.  Without quotas it collects the
+    same export plan as before quotas applied to it: uncapped, or capped
+    at limit+1 rows."""
+    from thanos_parquet_gateway_spark.api import QueryServer
+    from thanos_parquet_gateway_spark.api.grpc_client import (GrpcError,
+                                                              ThanosGrpcClient)
+    from thanos_parquet_gateway_spark.api.grpc_server import ThanosGrpcServer
+
+    rows = [({"__name__": "m", "job": str(i)}, 10 * S, float(i))
+            for i in range(3)]
+    sel = [("=", "__name__", "m")]
+    for quota in ({"row_quota": 1}, {"byte_quota": 1}):
+        qs = QueryServer(make_samples(spark, rows), lookback_ms=60 * S,
+                         deterministic=True, **quota)
+        with ThanosGrpcServer(qs) as srv:
+            with ThanosGrpcClient(srv.host, srv.port) as cli:
+                for _ in range(2):
+                    with pytest.raises(GrpcError) as ei:
+                        cli.series(sel, 0, 60 * S)
+                    assert ei.value.code == 8, quota  # RESOURCE_EXHAUSTED
+    qs = QueryServer(make_samples(spark, rows), lookback_ms=60 * S,
+                     deterministic=True)
+    out, warns = qs.series(["m"], 0, 60 * S)
+    assert len(out) == 3 and warns == []
+    out, warns = qs.series(["m"], 0, 60 * S, limit=2)
+    assert len(out) == 2 and warns == ["results truncated due to limit"]
+    assert {k for k in qs._api(None).engine._plan_cache
+            if k[0] == "series_samples"} == {
+        ("series_samples", None, ("m",), 0, 60 * S, 0),
+        ("series_samples", None, ("m",), 0, 60 * S, 3)}
+
+
 def test_conformant_peer_skips_nhcb_private_enum(spark):
     """A CONFORMANT Store API client (proto3 open enums: values outside
     the storepb Chunk.Encoding range are preserved but unrecognized) must

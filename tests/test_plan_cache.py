@@ -5,8 +5,10 @@ for PromQL and (kind, name, matchers, start, end, row cap) for metadata
 and Series export.  It stores no rows, but a hit re-executes the SAME
 Dataset: Spark reuses the first run's shuffle output (the scan stages show
 SKIPPED), so an entry is valid for the file listing the engine's table
-handle captured at first analysis — fixed for the life of ``serve`` — and
-``stats.samples`` on a hit repeat the first run's scan counts.
+handle captured at first analysis — fixed for the life of ``serve``.  The
+API's ``stats.samples`` report the scan each execution ran, so a hit whose
+scan stages were skipped reports 0, and its plan facts (scan-metric
+handles, admission estimates) are read without walking the plan again.
 """
 
 from __future__ import annotations
@@ -131,6 +133,31 @@ def test_metadata_build_errors_not_cached(spark):
     assert eng.plan_cache_counts()["misses"] == 2
 
 
+def _parquet(spark, tmp_path) -> str:
+    path = str(tmp_path / "samples")
+    make_samples(spark, ROWS).repartition(3).write.parquet(path)
+    return path
+
+
+def _staged(sc, group: str, action):
+    """``action()`` under job group ``group``: its result, the input
+    records of the stages that ran, and the stages Spark skipped."""
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stages = [store.lastStageAttempt(sid)
+              for jid in tracker.getJobIdsForGroup(group)
+              for sid in tracker.getJobInfo(jid).stageIds]
+    scanned = sum(st.inputRecords() for st in stages
+                  if st.status().toString() == "COMPLETE")
+    skipped = [st for st in stages if st.status().toString() == "SKIPPED"]
+    return out, scanned, skipped
+
+
 def test_plan_cache_hit_skips_scan_stages(spark, tmp_path):
     """On a parquet-backed engine the second identical query re-executes
     the memoized Dataset: its scan stage is SKIPPED (the first run's
@@ -138,25 +165,12 @@ def test_plan_cache_hit_skips_scan_stages(spark, tmp_path):
     fresh engine over the same path scans again."""
     from thanos_parquet_gateway_spark.promql import PromQLEngine
 
-    path = str(tmp_path / "samples")
-    make_samples(spark, ROWS).write.parquet(path)
+    path = _parquet(spark, tmp_path)
     sc = spark.sparkContext
 
     def run(eng, group):
-        sc.setJobGroup(group, group)
-        try:
-            rows = eng.query_instant("sum by (job) (m)", 30 * S).df.collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-        stages = [store.lastStageAttempt(sid)
-                  for jid in tracker.getJobIdsForGroup(group)
-                  for sid in tracker.getJobInfo(jid).stageIds]
-        scanned = sum(st.inputRecords() for st in stages
-                      if st.status().toString() == "COMPLETE")
-        skipped = [st for st in stages if st.status().toString() == "SKIPPED"]
-        return rows, scanned, skipped
+        return _staged(sc, group, lambda: eng.query_instant(
+            "sum by (job) (m)", 30 * S).df.collect())
 
     eng = PromQLEngine(spark.read.parquet(path), lookback_ms=300_000)
     rows1, scanned1, _ = run(eng, "memo-first")
@@ -167,3 +181,250 @@ def test_plan_cache_hit_skips_scan_stages(spark, tmp_path):
     assert scanned2 == 0 and skipped2
     assert scanned3 == scanned1
     assert rows1 == rows2 == rows3 and rows1
+
+
+def test_api_stats_report_each_execution(spark, tmp_path):
+    """QueryAPI ``stats.samples`` report the scan each execution ran: the
+    first run reports rows, files and bytes; the memo hit, whose scan
+    stages are SKIPPED, reports 0 on all four counters; a fresh engine
+    reports the first run's counts again."""
+    from thanos_parquet_gateway_spark.api.http import QueryAPI
+    from thanos_parquet_gateway_spark.promql import PromQLEngine
+
+    path = _parquet(spark, tmp_path)
+    sc = spark.sparkContext
+
+    def run(api, group):
+        out, scanned, skipped = _staged(
+            sc, group, lambda: api.query("sum by (job) (m)", 30 * S))
+        return out["result"], out["stats"]["samples"], scanned, skipped
+
+    api = QueryAPI(PromQLEngine(spark.read.parquet(path),
+                                lookback_ms=300_000))
+    res1, st1, scanned1, _ = run(api, "stats-first")
+    res2, st2, scanned2, skipped2 = run(api, "stats-hit")
+    fresh = QueryAPI(PromQLEngine(spark.read.parquet(path),
+                                  lookback_ms=300_000))
+    res3, st3, _, _ = run(fresh, "stats-fresh")
+    assert scanned1 > 0
+    assert st1["totalQueried"] >= len(ROWS) and st1["peakSamples"] > 0
+    assert st1["filesScanned"] == 3 and st1["bytesScanned"] > 0
+    assert scanned2 == 0 and skipped2
+    assert st2 == {"totalQueried": 0, "peakSamples": 0,
+                   "filesScanned": 0, "bytesScanned": 0}
+    assert st3 == st1
+    assert res1 == res2 == res3 and res1
+
+
+def test_plan_facts_rescan_reports_each_scan(spark, tmp_path):
+    """A plan with no shuffle (no AQE root) scans again on every
+    execution, and each execution reports that scan — rows, files and
+    bytes — although Spark resets the plan's metrics at every action and
+    sets the file counters only in the first."""
+    from thanos_parquet_gateway_spark.api.http import plan_facts, scan_stats
+
+    df = spark.read.parquet(_parquet(spark, tmp_path)).filter("value >= 0")
+    facts = plan_facts(df)
+    assert facts.rows() is None  # not walked before an action
+    df.collect()
+    first = facts.executed(df, None)
+    before = facts.rows()
+    df.collect()
+    again = facts.executed(df, before)
+    assert first == {"totalQueried": len(ROWS), "peakSamples": len(ROWS),
+                     "filesScanned": 3, "bytesScanned":
+                     first["bytesScanned"]} and first["bytesScanned"] > 0
+    assert again == first
+    # the metrics as Spark holds them: this execution's rows, no files
+    assert scan_stats(df) == {"totalQueried": len(ROWS),
+                              "peakSamples": len(ROWS),
+                              "filesScanned": 0, "bytesScanned": 0}
+
+
+def test_admission_on_hit_walks_no_plan(spark, tmp_path, monkeypatch):
+    """With byte and shard quotas set, a memo hit is admitted from the
+    estimates its Dataset's first request computed: no plan walk, for
+    PromQL, metadata and Series export alike.  Every quota check still
+    runs on every request: a tighter quota rejects the hit."""
+    from thanos_parquet_gateway_spark.api import QueryServer
+    from thanos_parquet_gateway_spark.api import http as api_http
+    from thanos_parquet_gateway_spark.api.http import QueryAPI, QuotaExceeded
+
+    samples = spark.read.parquet(_parquet(spark, tmp_path))
+    quotas = {"byte_quota": 1 << 40, "shard_quota": 1000}
+    qs = QueryServer(samples, lookback_ms=300_000, **quotas)
+    api = qs._api(None)
+    calls = [
+        lambda: api.query("sum by (job) (m)", 30 * S),
+        lambda: api.query_range("sum(m)", 0, 50 * S, 10 * S),
+        lambda: api.labels(None, 0, 50 * S),
+        lambda: api.label_values("job", ['m{job="a"}'], 0, 50 * S),
+        lambda: api.series(["m"], 0, 50 * S),
+        lambda: qs.series(["m"], 0, 50 * S),
+    ]
+    def answers():  # the results, without the per-execution stats
+        return [{k: v for k, v in out.items() if k != "stats"}
+                if isinstance(out, dict) else out
+                for out in (call() for call in calls)]
+
+    firsts = answers()
+    walks = []
+    for name in ("plan_input_bytes", "plan_scan_files", "_walk_leaves"):
+        orig = getattr(api_http, name)
+        monkeypatch.setattr(
+            api_http, name,
+            lambda *a, _n=name, _o=orig, **kw: walks.append(_n) or _o(*a,
+                                                                      **kw))
+    assert answers() == firsts
+    assert walks == []
+    for tight in ({"byte_quota": 1}, {"shard_quota": 1}):
+        tight_api = QueryAPI(api.engine, **tight)
+        with pytest.raises(QuotaExceeded):
+            tight_api.query("sum by (job) (m)", 30 * S)
+        with pytest.raises(QuotaExceeded):
+            tight_api.series(["m"], 0, 50 * S)
+    assert walks == []
+
+
+# the dashboard panel shapes: instant and range aggregations, a rate, a
+# topk over a one-to-one ratio, an _over_time per series and a regex
+# selector (2024-01-20 and its preceding days in the events data)
+END_MS = 1705708800000
+DAY = 86_400_000
+PANELS = [
+    ("query", "sum by (shard) (click)", END_MS),
+    ("query_range", "sum by (shard) (count_over_time(click[1d]))",
+     END_MS - 14 * DAY, END_MS, DAY),
+    ("query_range", 'rate(view{shard="1"}[2d])', END_MS - 7 * DAY, END_MS,
+     DAY),
+    ("query", "topk(5, count_over_time(click[7d]) / on(user) "
+     "count_over_time(view[7d]))", END_MS),
+    ("query_range", "max by (shard) (max_over_time(purchase[1d]))",
+     END_MS - 14 * DAY, END_MS, DAY),
+    ("query", 'count by (shard) (purchase{user=~"1.*"})', END_MS),
+    ("query_range", 'avg_over_time(click{user="7"}[3d])', END_MS - 7 * DAY,
+     END_MS, DAY // 4),
+]
+
+
+def test_memo_hit_py4j_round_trips_bounded(spark, sf_dir, monkeypatch):
+    """A memo hit makes a fixed, small number of py4j round trips whatever
+    its plan's size: the collect plus one read per scan metric before and
+    after it, with no plan walk for stats or admission (quotas are set).
+    Covers the dashboard panel shapes over HTTP and a gRPC Query.
+
+    Counted are the calls of the server thread that serves the hit,
+    after the miss's server thread has finished: py4j deletes a Java
+    object's handle when Python frees its proxy, and a proxy in a
+    reference cycle is freed by the cyclic GC, inside whichever later
+    request triggers a collection — a hit that followed a plan walk could
+    pay a hundred deferred deletes that way.  gc.collect() after each
+    request keeps one request's deletes out of the next."""
+    import gc
+    import json
+    import threading
+    import urllib.parse
+    import urllib.request
+
+    from py4j.java_gateway import GatewayClient
+
+    from thanos_parquet_gateway_spark.api import PromHTTPServer, QueryServer
+    from thanos_parquet_gateway_spark.api.grpc_client import ThanosGrpcClient
+    from thanos_parquet_gateway_spark.api.grpc_server import ThanosGrpcServer
+    from thanos_parquet_gateway_spark.promql import PromQLEngine
+    from thanos_parquet_gateway_spark.sources import samples_from_events
+
+    n = [0]
+    old_threads: set = set()
+    orig = GatewayClient.send_command
+
+    def counted(self, *a, **kw):
+        if threading.current_thread() not in old_threads:
+            n[0] += 1
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    samples = samples_from_events(spark, sf_dir)
+    quotas = {"byte_quota": 1 << 40, "shard_quota": 100_000}
+    lookback = 7 * DAY
+    srv = PromHTTPServer(PromQLEngine(samples, lookback_ms=lookback),
+                         port=0, **quotas)
+    srv.serve_background()
+    qs = QueryServer(samples, lookback_ms=lookback, **quotas)
+
+    def http_call(endpoint, q, *times):
+        keys = ("time",) if len(times) == 1 else ("start", "end", "step")
+        params = [("query", q)] + [(k, str(t / 1000)) for k, t in
+                                   zip(keys, times)]
+        url = (f"http://127.0.0.1:{srv.port}/api/v1/{endpoint}?"
+               + urllib.parse.urlencode(params))
+        with urllib.request.urlopen(url) as r:
+            return json.loads(r.read())["data"]["result"]
+
+    def served(call):
+        # call(), then wait for the server threads it started: a request
+        # thread frees its proxies after the client has the reply
+        before = set(threading.enumerate())
+        out = call()
+        for t in set(threading.enumerate()) - before:
+            if t.name.endswith(("(process_request_thread)", "(run)")):
+                t.join(30)
+        gc.collect()
+        return out
+
+    def round_trips(call):
+        first = served(call)
+        old_threads.update(threading.enumerate())
+        n0 = n[0]
+        again = served(call)
+        old_threads.clear()
+        assert again == first
+        return n[0] - n0
+
+    try:
+        hits = {q: round_trips(lambda: http_call(ep, q, *times))
+                for ep, q, *times in PANELS}
+        with ThanosGrpcServer(qs) as gsrv, \
+                ThanosGrpcClient(gsrv.host, gsrv.port) as cli:
+            hits["grpc"] = round_trips(lambda: [
+                m for m in cli.query(PANELS[0][1], PANELS[0][2] // 1000)
+                if "stats" not in m])
+    finally:
+        srv.shutdown()
+    assert all(v <= 30 for v in hits.values()), hits
+
+
+def test_plan_facts_shared_across_threads(spark):
+    """Concurrent requests for one memo entry share its one PlanFacts
+    record and answer alike; their hits, whose scan stages are skipped,
+    report no scan."""
+    import sys
+    import threading
+
+    from thanos_parquet_gateway_spark.api.http import QueryAPI, plan_facts
+
+    eng = _eng(spark, ROWS)
+    api = QueryAPI(eng)
+    first = api.query("sum(m)", 30 * S)
+    df = eng.query_instant("sum(m)", 30 * S).df
+    facts, outs = [], []
+
+    def worker():
+        for _ in range(3):
+            facts.append(plan_facts(df))
+            outs.append(api.query("sum(m)", 30 * S))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(outs) == 24 and len({id(f) for f in facts}) == 1
+    assert all(o["result"] == first["result"] for o in outs)
+    assert sum(o["stats"]["samples"]["totalQueried"] for o in outs) == 0

@@ -416,7 +416,7 @@ def _query_result_messages(res: dict) -> list[bytes]:
     # string results: no wire representation (reference sends nothing)
     st = res.get("stats", {}).get("samples", {})
     if st:
-        # scan_stats total/peak → QueryStats samples_total/peak_samples
+        # stats total/peak → QueryStats samples_total/peak_samples
         # (same mapping as reference toQueryStats, thanos.go:561-566)
         out.append(pb.encode_query_response(
             stats=(int(st.get("totalQueried", 0)),

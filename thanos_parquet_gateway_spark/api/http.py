@@ -18,7 +18,11 @@ Resource quotas (reference internal/limits/limit.go:66-93):
   reserving chunk bytes before materialization.
 Truncation warnings (reference internal/warnings/warnings.go:9-13) ride in
 the top-level ``warnings`` array; per-query samples-scanned stats (reference
-api/grpc/thanos.go:561-566) come from the executed plan's scan metrics.
+api/grpc/thanos.go:561-566) are what this execution scanned: the change in
+the executed plan's scan metrics across the collect, so a plan-memo hit
+whose scan stages Spark skipped reports 0.  The plan facts behind both
+(admission estimates, scan-metric handles) are computed once per Dataset
+(``plan_facts``), so a memo hit does not re-walk its plan over py4j.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ import json
 import math
 import threading
 import time
+import weakref
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -194,35 +199,129 @@ def _walk_leaves(node, out, adaptive: str = "executed"):
         _walk_leaves(ch.apply(i), out, adaptive)
 
 
-def scan_stats(df) -> dict:
-    """Per-query scan statistics from the *executed* plan's leaf metrics
-    (call after an action): total rows produced by all scans and the largest
-    single scan — the analogue of the reference's samples total/peak stats
-    (api/grpc/thanos.go:561-566).
+class PlanFacts:
+    """What the API reads of one Dataset's plan, computed once per Dataset
+    and read cheaply after that: a plan-memo hit hands back the same
+    Dataset, so it re-executes the same physical nodes and these stay
+    valid.  Held by ``plan_facts`` in a WeakKeyDictionary keyed by the
+    DataFrame, so they live and die with the memo entry.
 
-    Scan-level counters ride along when the leaves are parquet scans
-    (reference search/metrics.go:35-76 exports pages/rows/bytes per query):
-    ``filesScanned`` (split count after partition/stats pruning — the
-    page-run analogue) and ``bytesScanned`` (pruned file bytes)."""
-    try:
+    - ``input_bytes``/``scan_files``: the admission estimates
+      (``plan_input_bytes``/``plan_scan_files``), pure functions of the
+      plan, computed on first use.
+    - ``meters``: per executed scan leaf, the ``SQLMetric`` handles of
+      numOutputRows, numFiles and filesSize (None where the leaf has no
+      such metric), and ``listing``: the leaf's numFiles and filesSize as
+      of the walk.  Taken by one walk of the executed plan after the
+      Dataset's first collect (before it, AQE may still re-plan the
+      leaves); a later read costs one py4j call per metric.
+    - ``cumulative``: whether the leaves' metrics add up across
+      executions.  Every action resets the metrics of the plan it runs,
+      but not below an AdaptiveSparkPlanExec root, which Spark treats as a
+      leaf.  numFiles and filesSize are driver metrics a scan node sets
+      once, in its first execution.
+
+    Racing first uses compute the same values twice; nothing is locked."""
+
+    __slots__ = ("input_bytes", "scan_files", "meters", "listing",
+                 "cumulative")
+
+    def __init__(self):
+        self.input_bytes = self.scan_files = self.meters = None
+        self.listing = self.cumulative = None
+
+    def walk(self, df) -> None:
+        """Take the scan-metric handles (call after an action)."""
+        if self.meters is not None:
+            return
+        root = df._jdf.queryExecution().executedPlan()
         leaves: list = []
-        _walk_leaves(df._jdf.queryExecution().executedPlan(), leaves)
-        total = peak = files = fbytes = 0
+        _walk_leaves(root, leaves)
+        meters = []
         for leaf in leaves:
             m = leaf.metrics()
-            if m.contains("numOutputRows"):
-                v = int(m.apply("numOutputRows").value())
-                total += v
-                peak = max(peak, v)
-            if m.contains("numFiles"):
-                files += int(m.apply("numFiles").value())
-            if m.contains("filesSize"):
-                fbytes += int(m.apply("filesSize").value())
-        return {"totalQueried": total, "peakSamples": peak,
-                "filesScanned": files, "bytesScanned": fbytes}
+            handles = tuple(m.apply(k) if m.contains(k) else None
+                            for k in ("numOutputRows", "numFiles",
+                                      "filesSize"))
+            if any(h is not None for h in handles):
+                meters.append(handles)
+        self.cumulative = \
+            root.getClass().getSimpleName().startswith("AdaptiveSparkPlan")
+        self.listing = [tuple(_value(h) for h in leaf[1:])
+                        for leaf in meters]
+        self.meters = meters
+
+    def rows(self) -> list | None:
+        """numOutputRows per scan leaf now, or None before the walk."""
+        meters = self.meters
+        return None if meters is None else [_value(m[0]) for m in meters]
+
+    def executed(self, df, before: list | None) -> dict:
+        """Scan statistics of the execution that ran since ``before``
+        (``rows()`` taken ahead of the collect; None for the Dataset's
+        first collect, whose metrics hold that execution alone).  A leaf
+        whose rows did not move this execution — a scan stage Spark
+        skipped — counts 0; one that scanned reports its rows and its
+        listing's files and bytes.  Two executions of one plan that
+        overlap may attribute a scan to either request; the stats are
+        advisory."""
+        try:
+            self.walk(df)
+            after = self.rows()
+        except Exception:  # noqa: BLE001 — stats are advisory
+            return _stats([])
+        if before is None:
+            return _stats([(r, *ls) for r, ls in zip(after, self.listing)])
+        per_leaf = []
+        for r0, r1, ls in zip(before, after, self.listing):
+            rows = r1 - r0 if self.cumulative else r1
+            per_leaf.append((rows, *ls) if rows else (0, 0, 0))
+        return _stats(per_leaf)
+
+
+def _value(handle) -> int:
+    return 0 if handle is None else int(handle.value())
+
+
+_facts: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_facts_lock = threading.Lock()
+
+
+def plan_facts(df) -> PlanFacts:
+    """The one PlanFacts record of ``df`` (see PlanFacts)."""
+    with _facts_lock:
+        facts = _facts.get(df)
+        if facts is None:
+            facts = _facts[df] = PlanFacts()
+        return facts
+
+
+def _stats(per_leaf) -> dict:
+    """(rows, files, bytes) per scan leaf → the stats payload: total rows
+    produced by all scans and the largest single scan — the analogue of
+    the reference's samples total/peak stats (api/grpc/thanos.go:561-566)
+    — plus the parquet scan counters (reference search/metrics.go:35-76
+    exports pages/rows/bytes per query): ``filesScanned`` (split count
+    after partition/stats pruning, the page-run analogue) and
+    ``bytesScanned`` (pruned file bytes)."""
+    return {"totalQueried": sum(r for r, _, _ in per_leaf),
+            "peakSamples": max((r for r, _, _ in per_leaf), default=0),
+            "filesScanned": sum(f for _, f, _ in per_leaf),
+            "bytesScanned": sum(b for _, _, b in per_leaf)}
+
+
+def scan_stats(df) -> dict:
+    """Scan statistics as the *executed* plan's leaf metrics hold them
+    (call after an action), in the payload shape of ``_stats``: under AQE
+    everything the Dataset's executions scanned so far.  Reads the handles
+    ``plan_facts`` keeps, walking the plan on first use."""
+    try:
+        facts = plan_facts(df)
+        facts.walk(df)
+        return _stats([tuple(_value(h) for h in leaf)
+                       for leaf in facts.meters])
     except Exception:  # noqa: BLE001 — stats are advisory
-        return {"totalQueried": 0, "peakSamples": 0,
-                "filesScanned": 0, "bytesScanned": 0}
+        return _stats([])
 
 
 class QueryAPI:
@@ -260,14 +359,24 @@ class QueryAPI:
         self.default_metadata_row_quota = default_metadata_row_quota
 
     def _admit(self, df):
+        """Check the byte and shard quotas against ``df``'s estimates,
+        computed once per Dataset (``plan_facts``): a memo hit is checked
+        without a plan walk."""
+        if not (self.byte_quota or self.shard_quota):
+            return
+        facts = plan_facts(df)
         if self.byte_quota:
-            est = plan_input_bytes(df)
+            if facts.input_bytes is None:
+                facts.input_bytes = plan_input_bytes(df)
+            est = facts.input_bytes
             if est > self.byte_quota:
                 raise QuotaExceeded(
                     f"resource exhausted (query would scan ~{est} bytes, "
                     f"quota {self.byte_quota})")
         if self.shard_quota:
-            n = plan_scan_files(df)
+            if facts.scan_files is None:
+                facts.scan_files = plan_scan_files(df)
+            n = facts.scan_files
             if n > self.shard_quota:
                 raise QuotaExceeded(
                     f"resource exhausted (query would scan {n} shards, "
@@ -279,16 +388,25 @@ class QueryAPI:
         executors stop early instead of shipping an oversized result."""
         return self.row_quota + 1 if self.row_quota else 0
 
-    def _collect(self, df):
-        """Admit, then collect a plan fetched with ``_row_cap`` rows and
+    @staticmethod
+    def _run(df) -> tuple[list, dict]:
+        """Collect ``df``: its rows and the stats of the scan this
+        execution ran (PlanFacts.executed)."""
+        facts = plan_facts(df)
+        before = facts.rows()
+        rows = df.collect()
+        return rows, {"samples": facts.executed(df, before)}
+
+    def _collect(self, df) -> tuple[list, dict]:
+        """Admit, then ``_run`` a plan fetched with ``_row_cap`` rows and
         enforce the row quota on it."""
         self._admit(df)
-        rows = df.collect()
+        rows, stats = self._run(df)
         if self.row_quota and len(rows) > self.row_quota:
             raise QuotaExceeded(
                 f"resource exhausted (query would return more than "
                 f"{self.row_quota} rows)")
-        return rows
+        return rows, stats
 
     @staticmethod
     def _with_annotations(payload: dict, res) -> dict:
@@ -322,12 +440,12 @@ class QueryAPI:
                     {"resultType": "string",
                      "result": [t_ms / 1000.0, row["value"]]}, res)
             if res.result_type == "scalar":
-                row = res.df.collect()[0]
+                rows, stats = self._run(res.df)
                 return self._with_annotations(
                     {"resultType": "scalar",
-                     "result": [t_ms / 1000.0, _fmt_val(row["value"])],
-                     "stats": {"samples": scan_stats(res.df)}}, res)
-            rows = self._collect(res.df)
+                     "result": [t_ms / 1000.0, _fmt_val(rows[0]["value"])],
+                     "stats": stats}, res)
+            rows, stats = self._collect(res.df)
             # Prometheus execution error: an instant vector must not contain
             # two samples with the same labelset (can arise from
             # label_replace/label_join collapsing labels).  Checked here on
@@ -352,16 +470,15 @@ class QueryAPI:
                     item["value"] = [r["t"] / 1000.0, _fmt_val(r["value"])]
                 result.append(item)
             return self._with_annotations(
-                {"resultType": "vector", "result": result,
-                 "stats": {"samples": scan_stats(res.df)}}, res)
+                {"resultType": "vector", "result": result, "stats": stats},
+                res)
 
     def query_range(self, q: str, start_ms: int, end_ms: int,
                     step_ms: int, *, memo: bool = True) -> dict:
         with self.sem:
             res = self.engine.query_range(q, start_ms, end_ms, step_ms,
                                           self._row_cap(), memo=memo)
-            rows = self._collect(res.df)
-            stats = {"samples": scan_stats(res.df)}
+            rows, stats = self._collect(res.df)
             if res.result_type == "scalar":
                 return self._with_annotations(
                     {"resultType": "matrix", "result": [{
@@ -401,7 +518,8 @@ class QueryAPI:
                  "stats": stats}, res)
 
     # -- metadata endpoints: (data, warnings) pairs ----------------------
-    def _limited(self, fetch, limit: int, quota: int = 0):
+    def _limited(self, fetch, limit: int, quota: int = 0,
+                 backstop: bool = True):
         """Collect limit+1 rows; report truncation as a warning instead of
         silently clipping (reference search/materialize.go:53-58,
         db/db.go:339-347).  ``quota`` is the operator-set per-endpoint row
@@ -411,14 +529,17 @@ class QueryAPI:
         quota+1 rows, never the full result.  With NO quota and NO limit,
         ``default_metadata_row_quota`` backstops the otherwise-unbounded
         collect (the reference's UnlimitedQuota default would OOM the
-        driver at scale; 0 restores it).  ``fetch(n)`` returns the
-        engine's memoized plan capped at n rows (0 = uncapped)."""
-        if not quota and not limit:
+        driver at scale; 0 restores it) unless ``backstop`` is False.
+        ``fetch(n)`` returns the engine's memoized plan capped at n rows
+        (0 = uncapped).  Runs under the concurrency semaphore and
+        admission like a query."""
+        if backstop and not quota and not limit:
             quota = self.default_metadata_row_quota
         cap = quota or limit
-        df = fetch(cap + 1 if cap else 0)
-        self._admit(df)
-        rows = df.collect()
+        with self.sem:
+            df = fetch(cap + 1 if cap else 0)
+            self._admit(df)
+            rows = df.collect()
         if quota and len(rows) > quota:
             raise QuotaExceeded(
                 f"resource exhausted (metadata result exceeds the "
@@ -435,6 +556,19 @@ class QueryAPI:
                                          memo=memo),
             limit, quota=self.row_quota)
         return [dict(r["labels"]) for r in rows], warns
+
+    def series_export(self, match: list[str], start_ms: int, end_ms: int,
+                      limit: int = 0, *, samples: bool = True
+                      ) -> tuple[list, list[str]]:
+        """Collected rows of the raw Series export (gRPC Series, see
+        PromQLEngine.series): ``samples=False`` is SkipChunks.  The same
+        admission and row quota as /series; like the reference's Select
+        it is bounded by the row quota only, with no metadata backstop, so
+        without quota or limit it collects the uncapped plan."""
+        return self._limited(
+            lambda n: self.engine.series(match, start_ms, end_ms, n,
+                                         samples=samples),
+            limit, quota=self.row_quota, backstop=False)
 
     def labels(self, match: list[str] | None, start_ms: int, end_ms: int,
                limit: int = 0, *, memo: bool = True

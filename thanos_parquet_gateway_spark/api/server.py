@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from thanos_parquet_gateway_spark.api.http import WARN_TRUNCATED, QueryAPI
+from thanos_parquet_gateway_spark.api.http import QueryAPI
 from thanos_parquet_gateway_spark.promql.engine import PromQLEngine
 
 
@@ -174,15 +174,11 @@ class QueryServer:
         """Raw series export (thanos.go:376-459) in collected form:
         [{labels, samples: [[ts, value], ...]}, ...] plus truncation
         warnings (thanos.go:413-418).  The plan is the engine's memoized
-        ``series(..., samples=True)``; ``skip_samples`` ≡ the reference's
-        SkipChunks (labels only)."""
-        df = self._api(replica_labels).engine.series(
-            matchers, start_ms, end_ms, limit + 1 if limit else 0,
-            samples=not skip_samples)
-        rows = df.collect()
-        warns: list[str] = []
-        if limit and len(rows) > limit:
-            rows, warns = rows[:limit], [WARN_TRUNCATED]
+        ``series(..., samples=True)``, collected through the same QueryAPI
+        admission and row quota as /series; ``skip_samples`` ≡ the
+        reference's SkipChunks (labels only)."""
+        rows, warns = self._api(replica_labels).series_export(
+            matchers, start_ms, end_ms, limit, samples=not skip_samples)
         out = []
         for r in rows:
             item = {"labels": dict(r["labels"])}
