@@ -269,12 +269,16 @@ def test_admission_on_hit_walks_no_plan(spark, tmp_path, monkeypatch):
 
     firsts = answers()
     walks = []
+
+    def counting(name, fn):
+        def wrapper(*a, **kw):
+            walks.append(name)
+            return fn(*a, **kw)
+        return wrapper
+
     for name in ("plan_input_bytes", "plan_scan_files", "_walk_leaves"):
-        orig = getattr(api_http, name)
-        monkeypatch.setattr(
-            api_http, name,
-            lambda *a, _n=name, _o=orig, **kw: walks.append(_n) or _o(*a,
-                                                                      **kw))
+        monkeypatch.setattr(api_http, name,
+                            counting(name, getattr(api_http, name)))
     assert answers() == firsts
     assert walks == []
     for tight in ({"byte_quota": 1}, {"shard_quota": 1}):
