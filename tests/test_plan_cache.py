@@ -7,8 +7,7 @@ Dataset: Spark reuses the first run's shuffle output (the scan stages show
 SKIPPED), so an entry is valid for the file listing the engine's table
 handle captured at first analysis — fixed for the life of ``serve``.  The
 API's ``stats.samples`` report the scan each execution ran, so a hit whose
-scan stages were skipped reports 0, and its plan facts (scan-metric
-handles, admission estimates) are read without walking the plan again.
+scan stages were skipped reports 0.
 """
 
 from __future__ import annotations
@@ -133,7 +132,8 @@ def test_metadata_build_errors_not_cached(spark):
     assert eng.plan_cache_counts()["misses"] == 2
 
 
-def _parquet(spark, tmp_path) -> str:
+def _three_files(spark, tmp_path) -> str:
+    """ROWS written as a 3-file parquet table; its path."""
     path = str(tmp_path / "samples")
     make_samples(spark, ROWS).repartition(3).write.parquet(path)
     return path
@@ -165,7 +165,8 @@ def test_plan_cache_hit_skips_scan_stages(spark, tmp_path):
     fresh engine over the same path scans again."""
     from thanos_parquet_gateway_spark.promql import PromQLEngine
 
-    path = _parquet(spark, tmp_path)
+    path = str(tmp_path / "samples")
+    make_samples(spark, ROWS).write.parquet(path)
     sc = spark.sparkContext
 
     def run(eng, group):
@@ -191,7 +192,7 @@ def test_api_stats_report_each_execution(spark, tmp_path):
     from thanos_parquet_gateway_spark.api.http import QueryAPI
     from thanos_parquet_gateway_spark.promql import PromQLEngine
 
-    path = _parquet(spark, tmp_path)
+    path = _three_files(spark, tmp_path)
     sc = spark.sparkContext
 
     def run(api, group):
@@ -216,21 +217,22 @@ def test_api_stats_report_each_execution(spark, tmp_path):
     assert res1 == res2 == res3 and res1
 
 
-def test_plan_facts_rescan_reports_each_scan(spark, tmp_path):
+def test_rescan_reports_each_scan(spark, tmp_path):
     """A plan with no shuffle (no AQE root) scans again on every
     execution, and each execution reports that scan — rows, files and
     bytes — although Spark resets the plan's metrics at every action and
     sets the file counters only in the first."""
-    from thanos_parquet_gateway_spark.api.http import plan_facts, scan_stats
+    from thanos_parquet_gateway_spark.api.http import (executed_stats,
+                                                       scan_rows, scan_stats)
 
-    df = spark.read.parquet(_parquet(spark, tmp_path)).filter("value >= 0")
-    facts = plan_facts(df)
-    assert facts.rows() is None  # not walked before an action
+    df = spark.read.parquet(_three_files(spark, tmp_path)).filter(
+        "value >= 0")
+    assert scan_rows(df) is None  # not walked before an action
     df.collect()
-    first = facts.executed(df, None)
-    before = facts.rows()
+    first = executed_stats(df, None)
+    before = scan_rows(df)
     df.collect()
-    again = facts.executed(df, before)
+    again = executed_stats(df, before)
     assert first == {"totalQueried": len(ROWS), "peakSamples": len(ROWS),
                      "filesScanned": 3, "bytesScanned":
                      first["bytesScanned"]} and first["bytesScanned"] > 0
@@ -241,16 +243,15 @@ def test_plan_facts_rescan_reports_each_scan(spark, tmp_path):
                               "filesScanned": 0, "bytesScanned": 0}
 
 
-def test_admission_on_hit_walks_no_plan(spark, tmp_path, monkeypatch):
-    """With byte and shard quotas set, a memo hit is admitted from the
-    estimates its Dataset's first request computed: no plan walk, for
-    PromQL, metadata and Series export alike.  Every quota check still
-    runs on every request: a tighter quota rejects the hit."""
+def test_admission_runs_on_every_hit(spark, tmp_path, monkeypatch):
+    """With byte and shard quotas set, every request — PromQL, metadata
+    and Series export, memo hits included — estimates its plan's input
+    bytes and shard count again, and a tighter quota rejects the hit."""
     from thanos_parquet_gateway_spark.api import QueryServer
     from thanos_parquet_gateway_spark.api import http as api_http
     from thanos_parquet_gateway_spark.api.http import QueryAPI, QuotaExceeded
 
-    samples = spark.read.parquet(_parquet(spark, tmp_path))
+    samples = spark.read.parquet(_three_files(spark, tmp_path))
     quotas = {"byte_quota": 1 << 40, "shard_quota": 1000}
     qs = QueryServer(samples, lookback_ms=300_000, **quotas)
     api = qs._api(None)
@@ -262,32 +263,35 @@ def test_admission_on_hit_walks_no_plan(spark, tmp_path, monkeypatch):
         lambda: api.series(["m"], 0, 50 * S),
         lambda: qs.series(["m"], 0, 50 * S),
     ]
+
     def answers():  # the results, without the per-execution stats
         return [{k: v for k, v in out.items() if k != "stats"}
                 if isinstance(out, dict) else out
                 for out in (call() for call in calls)]
 
     firsts = answers()
-    walks = []
+    hits0 = api.engine.plan_cache_counts()["hits"]
+    estimates = []
 
     def counting(name, fn):
         def wrapper(*a, **kw):
-            walks.append(name)
+            estimates.append(name)
             return fn(*a, **kw)
         return wrapper
 
-    for name in ("plan_input_bytes", "plan_scan_files", "_walk_leaves"):
+    for name in ("plan_input_bytes", "plan_scan_files"):
         monkeypatch.setattr(api_http, name,
                             counting(name, getattr(api_http, name)))
     assert answers() == firsts
-    assert walks == []
+    assert api.engine.plan_cache_counts()["hits"] == hits0 + len(calls)
+    assert sorted(estimates) == sorted(
+        ["plan_input_bytes", "plan_scan_files"] * len(calls))
     for tight in ({"byte_quota": 1}, {"shard_quota": 1}):
         tight_api = QueryAPI(api.engine, **tight)
         with pytest.raises(QuotaExceeded):
             tight_api.query("sum by (job) (m)", 30 * S)
         with pytest.raises(QuotaExceeded):
             tight_api.series(["m"], 0, 50 * S)
-    assert walks == []
 
 
 # the dashboard panel shapes: instant and range aggregations, a rate, a
@@ -314,8 +318,9 @@ PANELS = [
 def test_memo_hit_py4j_round_trips_bounded(spark, sf_dir, monkeypatch):
     """A memo hit makes a fixed, small number of py4j round trips whatever
     its plan's size: the collect plus one read per scan metric before and
-    after it, with no plan walk for stats or admission (quotas are set).
-    Covers the dashboard panel shapes over HTTP and a gRPC Query.
+    after it, with no plan walk for its stats.  No quota is set, as on the
+    dashboard (admission estimates each request's plan).  Covers the
+    dashboard panel shapes over HTTP and a gRPC Query.
 
     Counted are the calls of the server thread that serves the hit,
     after the miss's server thread has finished: py4j deletes a Java
@@ -349,12 +354,11 @@ def test_memo_hit_py4j_round_trips_bounded(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(GatewayClient, "send_command", counted)
     samples = samples_from_events(spark, sf_dir)
-    quotas = {"byte_quota": 1 << 40, "shard_quota": 100_000}
     lookback = 7 * DAY
     srv = PromHTTPServer(PromQLEngine(samples, lookback_ms=lookback),
-                         port=0, **quotas)
+                         port=0)
     srv.serve_background()
-    qs = QueryServer(samples, lookback_ms=lookback, **quotas)
+    qs = QueryServer(samples, lookback_ms=lookback)
 
     def http_call(endpoint, q, *times):
         keys = ("time",) if len(times) == 1 else ("start", "end", "step")
@@ -398,25 +402,26 @@ def test_memo_hit_py4j_round_trips_bounded(spark, sf_dir, monkeypatch):
     assert all(v <= 30 for v in hits.values()), hits
 
 
-def test_plan_facts_shared_across_threads(spark):
-    """Concurrent requests for one memo entry share its one PlanFacts
-    record and answer alike; their hits, whose scan stages are skipped,
+def test_scan_meters_shared_across_threads(spark):
+    """Concurrent requests for one memo entry read one set of scan-metric
+    handles and answer alike; their hits, whose scan stages are skipped,
     report no scan."""
     import sys
     import threading
 
-    from thanos_parquet_gateway_spark.api.http import QueryAPI, plan_facts
+    from thanos_parquet_gateway_spark.api import http as api_http
+    from thanos_parquet_gateway_spark.api.http import QueryAPI
 
     eng = _eng(spark, ROWS)
     api = QueryAPI(eng)
     first = api.query("sum(m)", 30 * S)
     df = eng.query_instant("sum(m)", 30 * S).df
-    facts, outs = [], []
+    meters, outs = [], []
 
     def worker():
         for _ in range(3):
-            facts.append(plan_facts(df))
             outs.append(api.query("sum(m)", 30 * S))
+            meters.append(api_http._meters(df))
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -429,6 +434,6 @@ def test_plan_facts_shared_across_threads(spark):
     finally:
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
-    assert len(outs) == 24 and len({id(f) for f in facts}) == 1
+    assert len(outs) == 24 and len({id(m) for m in meters}) == 1
     assert all(o["result"] == first["result"] for o in outs)
     assert sum(o["stats"]["samples"]["totalQueried"] for o in outs) == 0

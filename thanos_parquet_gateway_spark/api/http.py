@@ -20,9 +20,7 @@ Truncation warnings (reference internal/warnings/warnings.go:9-13) ride in
 the top-level ``warnings`` array; per-query samples-scanned stats (reference
 api/grpc/thanos.go:561-566) are what this execution scanned: the change in
 the executed plan's scan metrics across the collect, so a plan-memo hit
-whose scan stages Spark skipped reports 0.  The plan facts behind both
-(admission estimates, scan-metric handles) are computed once per Dataset
-(``plan_facts``), so a memo hit does not re-walk its plan over py4j.
+whose scan stages Spark skipped reports 0.
 """
 
 from __future__ import annotations
@@ -199,104 +197,50 @@ def _walk_leaves(node, out, adaptive: str = "executed"):
         _walk_leaves(ch.apply(i), out, adaptive)
 
 
-class PlanFacts:
-    """What the API reads of one Dataset's plan, computed once per Dataset
-    and read cheaply after that: a plan-memo hit hands back the same
-    Dataset, so it re-executes the same physical nodes and these stay
-    valid.  Held by ``plan_facts`` in a WeakKeyDictionary keyed by the
-    DataFrame, so they live and die with the memo entry.
+_SCAN_METRICS = ("numOutputRows", "numFiles", "filesSize")
+# Dataset → its scan-metric handles (see _meters); weak keys, so the entry
+# lives and dies with the plan-memo entry that holds the Dataset
+_scan_meters: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
-    - ``input_bytes``/``scan_files``: the admission estimates
-      (``plan_input_bytes``/``plan_scan_files``), pure functions of the
-      plan, computed on first use.
-    - ``meters``: per executed scan leaf, the ``SQLMetric`` handles of
-      numOutputRows, numFiles and filesSize (None where the leaf has no
-      such metric), and ``listing``: the leaf's numFiles and filesSize as
-      of the walk.  Taken by one walk of the executed plan after the
-      Dataset's first collect (before it, AQE may still re-plan the
-      leaves); a later read costs one py4j call per metric.
-    - ``cumulative``: whether the leaves' metrics add up across
-      executions.  Every action resets the metrics of the plan it runs,
-      but not below an AdaptiveSparkPlanExec root, which Spark treats as a
-      leaf.  numFiles and filesSize are driver metrics a scan node sets
-      once, in its first execution.
 
-    Racing first uses compute the same values twice; nothing is locked."""
+def _meters(df) -> tuple[list, list, bool]:
+    """The executed plan's scan-metric handles, taken by one walk after
+    ``df``'s first collect (before it, AQE may still re-plan the leaves)
+    and kept for the Dataset's life: a plan-memo hit re-executes the same
+    physical nodes, so it reads them at one py4j call per metric.
 
-    __slots__ = ("input_bytes", "scan_files", "meters", "listing",
-                 "cumulative")
-
-    def __init__(self):
-        self.input_bytes = self.scan_files = self.meters = None
-        self.listing = self.cumulative = None
-
-    def walk(self, df) -> None:
-        """Take the scan-metric handles (call after an action)."""
-        if self.meters is not None:
-            return
+    Returns, per scan leaf, the ``SQLMetric`` handles of numOutputRows,
+    numFiles and filesSize (None where the leaf lacks one); per leaf its
+    numFiles and filesSize as of the walk; and whether the metrics add up
+    across executions.  Every action resets the metrics of the plan it
+    runs, but not below an AdaptiveSparkPlanExec root, which Spark treats
+    as a leaf; numFiles and filesSize are driver metrics a scan node sets
+    once, in its first execution.  Racing first walks compute the same
+    handles twice."""
+    got = _scan_meters.get(df)
+    if got is None:
         root = df._jdf.queryExecution().executedPlan()
         leaves: list = []
         _walk_leaves(root, leaves)
-        meters = []
+        handles = []
         for leaf in leaves:
             m = leaf.metrics()
-            handles = tuple(m.apply(k) if m.contains(k) else None
-                            for k in ("numOutputRows", "numFiles",
-                                      "filesSize"))
-            if any(h is not None for h in handles):
-                meters.append(handles)
-        self.cumulative = \
-            root.getClass().getSimpleName().startswith("AdaptiveSparkPlan")
-        self.listing = [tuple(_value(h) for h in leaf[1:])
-                        for leaf in meters]
-        self.meters = meters
-
-    def rows(self) -> list | None:
-        """numOutputRows per scan leaf now, or None before the walk."""
-        meters = self.meters
-        return None if meters is None else [_value(m[0]) for m in meters]
-
-    def executed(self, df, before: list | None) -> dict:
-        """Scan statistics of the execution that ran since ``before``
-        (``rows()`` taken ahead of the collect; None for the Dataset's
-        first collect, whose metrics hold that execution alone).  A leaf
-        whose rows did not move this execution — a scan stage Spark
-        skipped — counts 0; one that scanned reports its rows and its
-        listing's files and bytes.  Two executions of one plan that
-        overlap may attribute a scan to either request; the stats are
-        advisory."""
-        try:
-            self.walk(df)
-            after = self.rows()
-        except Exception:  # noqa: BLE001 — stats are advisory
-            return _stats([])
-        if before is None:
-            return _stats([(r, *ls) for r, ls in zip(after, self.listing)])
-        per_leaf = []
-        for r0, r1, ls in zip(before, after, self.listing):
-            rows = r1 - r0 if self.cumulative else r1
-            per_leaf.append((rows, *ls) if rows else (0, 0, 0))
-        return _stats(per_leaf)
+            hs = tuple(m.apply(k) if m.contains(k) else None
+                       for k in _SCAN_METRICS)
+            if any(h is not None for h in hs):
+                handles.append(hs)
+        listing = [(_read(f), _read(b)) for _, f, b in handles]
+        got = _scan_meters[df] = (
+            handles, listing,
+            root.getClass().getSimpleName().startswith("AdaptiveSparkPlan"))
+    return got
 
 
-def _value(handle) -> int:
+def _read(handle) -> int:
     return 0 if handle is None else int(handle.value())
 
 
-_facts: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_facts_lock = threading.Lock()
-
-
-def plan_facts(df) -> PlanFacts:
-    """The one PlanFacts record of ``df`` (see PlanFacts)."""
-    with _facts_lock:
-        facts = _facts.get(df)
-        if facts is None:
-            facts = _facts[df] = PlanFacts()
-        return facts
-
-
-def _stats(per_leaf) -> dict:
+def _samples(per_leaf) -> dict:
     """(rows, files, bytes) per scan leaf → the stats payload: total rows
     produced by all scans and the largest single scan — the analogue of
     the reference's samples total/peak stats (api/grpc/thanos.go:561-566)
@@ -312,16 +256,44 @@ def _stats(per_leaf) -> dict:
 
 def scan_stats(df) -> dict:
     """Scan statistics as the *executed* plan's leaf metrics hold them
-    (call after an action), in the payload shape of ``_stats``: under AQE
-    everything the Dataset's executions scanned so far.  Reads the handles
-    ``plan_facts`` keeps, walking the plan on first use."""
+    (call after an action), in the ``_samples`` payload shape: under AQE,
+    everything the Dataset's executions have scanned so far."""
     try:
-        facts = plan_facts(df)
-        facts.walk(df)
-        return _stats([tuple(_value(h) for h in leaf)
-                       for leaf in facts.meters])
+        return _samples([[_read(h) for h in hs] for hs in _meters(df)[0]])
     except Exception:  # noqa: BLE001 — stats are advisory
-        return _stats([])
+        return _samples([])
+
+
+def scan_rows(df) -> list | None:
+    """numOutputRows per scan leaf of ``df`` now, to pass to
+    ``executed_stats``; None before the Dataset's first collect."""
+    try:
+        got = _scan_meters.get(df)
+        return None if got is None else [_read(hs[0]) for hs in got[0]]
+    except Exception:  # noqa: BLE001 — stats are advisory
+        return None
+
+
+def executed_stats(df, before: list | None) -> dict:
+    """Scan statistics of the execution of ``df`` that ran since
+    ``scan_rows`` returned ``before`` (None: the first collect, whose
+    metrics hold that execution alone).  A leaf whose rows did not move —
+    a scan stage Spark skipped — counts 0; one that scanned reports its
+    rows and its listing's files and bytes.  Two executions of one plan
+    that overlap may attribute a scan to either request; the stats are
+    advisory."""
+    try:
+        handles, listing, cumulative = _meters(df)
+        after = [_read(hs[0]) for hs in handles]
+    except Exception:  # noqa: BLE001 — stats are advisory
+        return _samples([])
+    if before is None:
+        return _samples([(r, *ls) for r, ls in zip(after, listing)])
+    per_leaf = []
+    for r0, r1, ls in zip(before, after, listing):
+        rows = r1 - r0 if cumulative else r1
+        per_leaf.append((rows, *ls) if rows else (0, 0, 0))
+    return _samples(per_leaf)
 
 
 class QueryAPI:
@@ -359,24 +331,14 @@ class QueryAPI:
         self.default_metadata_row_quota = default_metadata_row_quota
 
     def _admit(self, df):
-        """Check the byte and shard quotas against ``df``'s estimates,
-        computed once per Dataset (``plan_facts``): a memo hit is checked
-        without a plan walk."""
-        if not (self.byte_quota or self.shard_quota):
-            return
-        facts = plan_facts(df)
         if self.byte_quota:
-            if facts.input_bytes is None:
-                facts.input_bytes = plan_input_bytes(df)
-            est = facts.input_bytes
+            est = plan_input_bytes(df)
             if est > self.byte_quota:
                 raise QuotaExceeded(
                     f"resource exhausted (query would scan ~{est} bytes, "
                     f"quota {self.byte_quota})")
         if self.shard_quota:
-            if facts.scan_files is None:
-                facts.scan_files = plan_scan_files(df)
-            n = facts.scan_files
+            n = plan_scan_files(df)
             if n > self.shard_quota:
                 raise QuotaExceeded(
                     f"resource exhausted (query would scan {n} shards, "
@@ -391,11 +353,10 @@ class QueryAPI:
     @staticmethod
     def _run(df) -> tuple[list, dict]:
         """Collect ``df``: its rows and the stats of the scan this
-        execution ran (PlanFacts.executed)."""
-        facts = plan_facts(df)
-        before = facts.rows()
+        execution ran (``executed_stats``)."""
+        before = scan_rows(df)
         rows = df.collect()
-        return rows, {"samples": facts.executed(df, before)}
+        return rows, {"samples": executed_stats(df, before)}
 
     def _collect(self, df) -> tuple[list, dict]:
         """Admit, then ``_run`` a plan fetched with ``_row_cap`` rows and

@@ -193,15 +193,13 @@ class PromQLEngine:
         # table handle captured at first analysis (sources/tables.py) and
         # from the first run's shuffle output: it is valid for as long as
         # that listing is, which `serve` fixes at start-up.  Response
-        # ``stats.samples`` report the scan each execution ran: 0 on a hit
-        # whose scan stages Spark skipped (api/http.py PlanFacts, which
-        # also keeps the admission estimates per Dataset, so a hit walks no
-        # plan over py4j).  Only an exact repeat hits; a request whose time the client left to default to
-        # now is built without a key (memo=False) so it cannot push out
-        # entries that do repeat.  The cap counts entries, not the shuffle
-        # output they keep alive.  Each PromQL hit returns a fresh
-        # QueryResult wrapper so all_annotations' fold-in never mutates the
-        # cached entry.
+        # ``stats.samples`` report the scan each execution ran (api/http.py
+        # ``executed_stats``).  Only an exact repeat hits; a request whose
+        # time the client left to default to now is built without a key
+        # (memo=False) so it cannot push out entries that do repeat.  The
+        # cap counts entries, not the shuffle output they keep alive.  Each
+        # PromQL hit returns a fresh QueryResult wrapper so
+        # all_annotations' fold-in never mutates the cached entry.
         import threading as _th
         from collections import OrderedDict as _OD
         self._plan_cache: "dict" = _OD()
