@@ -12,14 +12,16 @@ from thanos_parquet_gateway_spark.promql import ast as A
 from thanos_parquet_gateway_spark.promql.parser import PromQLSyntaxError, parse
 
 # Keywords are lexed case-insensitively (upstream promql/parser/lexer.go key
-# lookup lowercases), and bare aggregator names are rejected as selectors, so
-# filter against the parser's own sets by lowercase.
+# lookup lowercases), bare aggregator names are rejected as selectors, and
+# bare inf/nan in any case are number literals, so filter against the
+# parser's own sets by lowercase.
 from thanos_parquet_gateway_spark.promql.ast import AGGREGATION_OPS
 from thanos_parquet_gateway_spark.promql.parser import _KEYWORDS
 
 label_names = st.from_regex(r"[a-zA-Z_][a-zA-Z0-9_]{0,10}", fullmatch=True) \
     .filter(lambda s: s.lower() not in _KEYWORDS
-            and s.lower() not in AGGREGATION_OPS)
+            and s.lower() not in AGGREGATION_OPS
+            and s.lower() not in ("inf", "nan"))
 label_values = st.text(alphabet=st.characters(
     blacklist_characters='"\\\n\r', max_codepoint=0x2000), max_size=12)
 ops = st.sampled_from(["=", "!=", "=~", "!~"])
