@@ -16,15 +16,14 @@ S = 1000
 
 @pytest.fixture(scope="module")
 def server(spark):
-    from thanos_parquet_gateway_spark.api import PromHTTPServer
-    from thanos_parquet_gateway_spark.promql import PromQLEngine
+    from thanos_parquet_gateway_spark.api import PromHTTPServer, QueryServer
     rows = ([({"__name__": "m", "job": "a"}, i * 10 * S, float(i + 1))
              for i in range(5)] +
             [({"__name__": "m", "job": "b"}, i * 10 * S, float(10 * (i + 1)))
              for i in range(5)])
-    eng = PromQLEngine(make_samples(spark, rows), lookback_ms=300_000,
-                       deterministic=True)
-    srv = PromHTTPServer(eng, port=0)
+    qs = QueryServer(make_samples(spark, rows), lookback_ms=300_000,
+                     deterministic=True)
+    srv = PromHTTPServer(qs, port=0)
     srv.serve_background()
     yield srv
     srv.shutdown()
@@ -199,7 +198,7 @@ def test_metadata_memo_over_http(server):
     engine's plan memo and return identical payloads; a limit=1 call after
     an unlimited one is a different plan and still truncates and warns; a
     request whose time defaults to now bypasses the memo."""
-    counts = server.api.engine.plan_cache_counts
+    counts = server.query_server.plan_cache_counts
     for path in ("/api/v1/labels?start=0&end=91",
                  "/api/v1/label/job/values?start=0&end=91",
                  "/api/v1/series?match[]=m&start=0&end=91"):
@@ -271,12 +270,11 @@ def test_http_quota_error_type(spark):
     reference's error mapping (api/http/query.go:188,216)."""
     import urllib.error
 
-    from thanos_parquet_gateway_spark.api import PromHTTPServer
-    from thanos_parquet_gateway_spark.promql import PromQLEngine
+    from thanos_parquet_gateway_spark.api import PromHTTPServer, QueryServer
     rows = [({"__name__": "m", "job": str(i)}, 0, float(i)) for i in range(5)]
-    eng = PromQLEngine(make_samples(spark, rows), lookback_ms=300_000,
-                       deterministic=True)
-    srv = PromHTTPServer(eng, port=0, row_quota=2)
+    qs = QueryServer(make_samples(spark, rows), lookback_ms=300_000,
+                     deterministic=True, row_quota=2)
+    srv = PromHTTPServer(qs, port=0)
     srv.serve_background()
     try:
         with pytest.raises(urllib.error.HTTPError) as e:
@@ -366,17 +364,16 @@ def test_mixed_range_ignored_histograms_info(spark):
     import urllib.request
 
     from tests.conftest import make_samples
-    from thanos_parquet_gateway_spark.api import PromHTTPServer
-    from thanos_parquet_gateway_spark.promql import PromQLEngine
+    from thanos_parquet_gateway_spark.api import PromHTTPServer, QueryServer
 
     inf = float("inf")
     h = (6.0, 9.0, [(0.0, 1.0), (1.0, 2.0), (4.0, 3.0), (inf, 0.0)], 0)
     rows = [({"__name__": "mm", "job": "a"}, 10 * S, 2.5),
             ({"__name__": "mm", "job": "a"}, 20 * S, {"hist": h}),
             ({"__name__": "mm", "job": "a"}, 30 * S, 4.5)]
-    eng = PromQLEngine(make_samples(spark, rows), lookback_ms=60 * S,
-                       deterministic=True)
-    srv = PromHTTPServer(eng, port=0)
+    qs = QueryServer(make_samples(spark, rows), lookback_ms=60 * S,
+                     deterministic=True)
+    srv = PromHTTPServer(qs, port=0)
     srv.serve_background()
     try:
         for fn in ("min_over_time", "max_over_time", "stddev_over_time",

@@ -1261,3 +1261,54 @@ def test_settings_max_frame_size_range_enforced():
             ">HI", h2.SETTINGS_MAX_FRAME_SIZE, ok))
         assert conn.max_frame == ok
         a.close(); b.close()
+
+
+def test_metrics_count_every_engine(spark):
+    """One QueryServer behind both transports, as `serve` builds them: an
+    HTTP query and the same query over gRPC share one engine and its plan
+    memo (1 miss, 1 hit on /metrics); a gRPC query with a replica label
+    adds its own engine's miss; an evicted engine's counts stay in the
+    totals."""
+    import json
+    import re
+    import urllib.request
+
+    from thanos_parquet_gateway_spark.api import PromHTTPServer, QueryServer
+    from thanos_parquet_gateway_spark.api.grpc_client import ThanosGrpcClient
+    from thanos_parquet_gateway_spark.api.grpc_server import ThanosGrpcServer
+
+    rows = [({"__name__": "m", "replica": r}, 10 * S, 1.0) for r in "ab"]
+    qs = QueryServer(make_samples(spark, rows), lookback_ms=60 * S,
+                     deterministic=True)
+    http = PromHTTPServer(qs, port=0)
+    http.serve_background()
+
+    def get(path):
+        with urllib.request.urlopen(f"http://127.0.0.1:{http.port}{path}") \
+                as r:
+            return r.read().decode()
+
+    def memo():
+        text = get("/metrics")
+        return {k: int(re.search(rf"^pqg_plan_cache_{k} (\d+)$", text,
+                                 re.M).group(1))
+                for k in ("hits_total", "misses_total", "entries")}
+
+    try:
+        with ThanosGrpcServer(qs) as gsrv, \
+                ThanosGrpcClient(gsrv.host, gsrv.port) as cli:
+            out = json.loads(get("/api/v1/query?query=sum(m)&time=20"))
+            assert out["data"]["result"][0]["value"] == [20.0, "2"]
+            assert cli.query("sum(m)", 20)
+            assert memo() == {"hits_total": 1, "misses_total": 1,
+                              "entries": 1}
+            assert cli.query("sum(m)", 20, replica_labels=["replica"])
+            assert memo() == {"hits_total": 1, "misses_total": 2,
+                              "entries": 2}
+    finally:
+        http.shutdown()
+    qs._apis.cap = 2  # a third engine evicts the HTTP one
+    qs.query("sum(m)", 20 * S, lookback_ms=30 * S)
+    assert len(qs._apis) == 2
+    assert qs.plan_cache_counts() == {"hits": 1, "misses": 3,
+                                      "evictions": 0, "entries": 2}

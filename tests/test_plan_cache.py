@@ -68,7 +68,7 @@ def test_plan_cache_annotation_isolation(spark):
 
 def test_plan_cache_bounded(spark):
     eng = _eng(spark, ROWS)
-    eng._plan_cache_cap = 4
+    eng._plan_cache.cap = 4
     for t in range(8):
         eng.query_instant("sum(m)", t * 10 * S)
     assert len(eng._plan_cache) <= 4
@@ -188,7 +188,8 @@ def test_api_stats_report_each_execution(spark, tmp_path):
     """QueryAPI ``stats.samples`` report the scan each execution ran: the
     first run reports rows, files and bytes; the memo hit, whose scan
     stages are SKIPPED, reports 0 on all four counters; a fresh engine
-    reports the first run's counts again."""
+    reports the first run's counts again, also under a shard quota, whose
+    admission lists the files before the first run."""
     from thanos_parquet_gateway_spark.api.http import QueryAPI
     from thanos_parquet_gateway_spark.promql import PromQLEngine
 
@@ -207,14 +208,18 @@ def test_api_stats_report_each_execution(spark, tmp_path):
     fresh = QueryAPI(PromQLEngine(spark.read.parquet(path),
                                   lookback_ms=300_000))
     res3, st3, _, _ = run(fresh, "stats-fresh")
+    sharded = QueryAPI(PromQLEngine(spark.read.parquet(path),
+                                    lookback_ms=300_000), shard_quota=1000)
+    out4 = sharded.query("sum by (job) (m)", 30 * S)
+    res4, st4 = out4["result"], out4["stats"]["samples"]
     assert scanned1 > 0
     assert st1["totalQueried"] >= len(ROWS) and st1["peakSamples"] > 0
     assert st1["filesScanned"] == 3 and st1["bytesScanned"] > 0
     assert scanned2 == 0 and skipped2
     assert st2 == {"totalQueried": 0, "peakSamples": 0,
                    "filesScanned": 0, "bytesScanned": 0}
-    assert st3 == st1
-    assert res1 == res2 == res3 and res1
+    assert st3 == st4 == st1
+    assert res1 == res2 == res3 == res4 and res1
 
 
 def test_rescan_reports_each_scan(spark, tmp_path):
@@ -340,7 +345,6 @@ def test_memo_hit_py4j_round_trips_bounded(spark, sf_dir, monkeypatch):
     from thanos_parquet_gateway_spark.api import PromHTTPServer, QueryServer
     from thanos_parquet_gateway_spark.api.grpc_client import ThanosGrpcClient
     from thanos_parquet_gateway_spark.api.grpc_server import ThanosGrpcServer
-    from thanos_parquet_gateway_spark.promql import PromQLEngine
     from thanos_parquet_gateway_spark.sources import samples_from_events
 
     n = [0]
@@ -353,12 +357,11 @@ def test_memo_hit_py4j_round_trips_bounded(spark, sf_dir, monkeypatch):
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(GatewayClient, "send_command", counted)
-    samples = samples_from_events(spark, sf_dir)
-    lookback = 7 * DAY
-    srv = PromHTTPServer(PromQLEngine(samples, lookback_ms=lookback),
-                         port=0)
+    # one QueryServer behind both transports, as `serve` builds them
+    qs = QueryServer(samples_from_events(spark, sf_dir),
+                     lookback_ms=7 * DAY)
+    srv = PromHTTPServer(qs, port=0)
     srv.serve_background()
-    qs = QueryServer(samples, lookback_ms=lookback)
 
     def http_call(endpoint, q, *times):
         keys = ("time",) if len(times) == 1 else ("start", "end", "step")

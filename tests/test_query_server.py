@@ -197,7 +197,48 @@ def test_api_cache_is_lru_bounded(spark):
     default = srv._api(None)
     for lb in range(1_000, 1_000 + 50):
         srv._api(None, lookback_ms=lb)
-    assert len(srv._apis) <= srv._apis_max
+    assert len(srv._apis) <= srv._apis.cap
     # most-recent keys survive; the earliest one-shot lookbacks are evicted
     assert (tuple(), 1_049) in srv._apis
     assert (tuple(), 1_000) not in srv._apis
+
+
+def test_one_concurrency_bound_per_server(spark):
+    """Every engine's QueryAPI shares the server's one semaphore: while a
+    request on the engine without replica labels holds the only slot, a
+    request on the ``replica`` engine waits until it is released."""
+    import threading
+
+    rows = [({"__name__": "m", "replica": r}, 0, 1.0) for r in "ab"]
+    srv = _server(spark, rows, lookback_ms=60 * S, max_concurrent=1)
+    entered = {"plain": threading.Event(), "dedup": threading.Event()}
+    release = threading.Event()
+    outs = {}
+
+    def holding(name, api):
+        build = api.engine.query_instant
+
+        def query_instant(*a, **kw):
+            entered[name].set()
+            if name == "plain":
+                release.wait(60)
+            return build(*a, **kw)
+        api.engine.query_instant = query_instant
+
+    holding("plain", srv._api(None))
+    holding("dedup", srv._api(["replica"]))
+    threads = [threading.Thread(target=lambda n=n, rl=rl: outs.__setitem__(
+        n, srv.query("m", 0, replica_labels=rl)))
+        for n, rl in (("plain", None), ("dedup", ["replica"]))]
+    threads[0].start()
+    try:
+        assert entered["plain"].wait(60)
+        threads[1].start()
+        assert not entered["dedup"].wait(2)  # queued behind "plain"
+    finally:
+        release.set()
+        for t in threads:
+            t.join(120)
+    assert not any(t.is_alive() for t in threads)
+    assert len(outs["plain"]["result"]) == 2
+    assert len(outs["dedup"]["result"]) == 1

@@ -6,8 +6,9 @@ api/http/query.go:175-179, response shaping :232-251,536-564):
 
 Driver-side control plane only: parses params, delegates to PromQLEngine
 (executors do the work), serializes {status, data:{resultType, result}}.
-Concurrency guardrails (reference internal/limits/limit.go:27-64) map to a
-semaphore here + Spark fair-scheduler pools underneath.
+``PromHTTPServer`` serves through the process's one ``QueryServer``
+(api/server.py), sharing its engines, quotas and one concurrency semaphore
+with gRPC (reference internal/limits/limit.go:27-64).
 
 Resource quotas (reference internal/limits/limit.go:66-93):
 - row quota: the result DataFrame is fetched capped at q+1 rows (the engine
@@ -25,6 +26,7 @@ whose scan stages Spark skipped reports 0.
 
 from __future__ import annotations
 
+import copy
 import json
 import math
 import threading
@@ -210,26 +212,28 @@ def _meters(df) -> tuple[list, list, bool]:
     physical nodes, so it reads them at one py4j call per metric.
 
     Returns, per scan leaf, the ``SQLMetric`` handles of numOutputRows,
-    numFiles and filesSize (None where the leaf lacks one); per leaf its
-    numFiles and filesSize as of the walk; and whether the metrics add up
+    numFiles and filesSize (None where the leaf lacks one); per leaf the
+    files and bytes of its pruned listing; and whether the metrics add up
     across executions.  Every action resets the metrics of the plan it
     runs, but not below an AdaptiveSparkPlanExec root, which Spark treats
-    as a leaf; numFiles and filesSize are driver metrics a scan node sets
-    once, in its first execution.  Racing first walks compute the same
-    handles twice."""
+    as a leaf.  numFiles and filesSize are set once, when the node lists
+    its files; shard-quota admission lists them before the first action,
+    whose reset then zeroes them, so the listing is read from the node.
+    Racing first walks compute the same handles twice."""
     got = _scan_meters.get(df)
     if got is None:
         root = df._jdf.queryExecution().executedPlan()
         leaves: list = []
         _walk_leaves(root, leaves)
-        handles = []
+        handles, listing = [], []
         for leaf in leaves:
             m = leaf.metrics()
             hs = tuple(m.apply(k) if m.contains(k) else None
                        for k in _SCAN_METRICS)
             if any(h is not None for h in hs):
                 handles.append(hs)
-        listing = [(_read(f), _read(b)) for _, f, b in handles]
+                listing.append(_listing(leaf) if hs[1] is not None
+                               else (0, 0))
         got = _scan_meters[df] = (
             handles, listing,
             root.getClass().getSimpleName().startswith("AdaptiveSparkPlan"))
@@ -238,6 +242,13 @@ def _meters(df) -> tuple[list, list, bool]:
 
 def _read(handle) -> int:
     return 0 if handle is None else int(handle.value())
+
+
+def _listing(scan) -> tuple[int, int]:
+    """(files, bytes) a file scan node lists: the partitions its numFiles
+    and filesSize metrics count, after static and dynamic pruning."""
+    p = scan.dynamicallySelectedPartitions()
+    return int(p.totalNumberOfFiles()), int(p.totalFileSize())
 
 
 def _samples(per_leaf) -> dict:
@@ -329,6 +340,12 @@ class QueryAPI:
         # to a 400 at a large-but-finite ceiling instead.  Pass 0 to restore
         # the reference's truly-unlimited behavior.
         self.default_metadata_row_quota = default_metadata_row_quota
+
+    def over(self, engine: PromQLEngine) -> "QueryAPI":
+        """An API over ``engine`` with this one's quotas and semaphore."""
+        api = copy.copy(self)
+        api.engine = engine
+        return api
 
     def _admit(self, df):
         if self.byte_quota:
@@ -551,18 +568,11 @@ class QueryAPI:
 
 
 class PromHTTPServer:
-    def __init__(self, engine: PromQLEngine, port: int = 9090,
-                 max_concurrent: int = 100, row_quota: int = 0,
-                 byte_quota: int = 0, shard_quota: int = 0,
-                 label_names_row_quota: int = 0,
-                 label_values_row_quota: int = 0,
-                 default_metadata_row_quota: int = DEFAULT_METADATA_ROW_QUOTA):
-        self.api = QueryAPI(engine, max_concurrent, row_quota=row_quota,
-                            byte_quota=byte_quota, shard_quota=shard_quota,
-                            label_names_row_quota=label_names_row_quota,
-                            label_values_row_quota=label_values_row_quota,
-                            default_metadata_row_quota=default_metadata_row_quota)
-        api = self.api
+    def __init__(self, query_server, port: int = 9090,
+                 replica_labels: list[str] | None = None):
+        """Serves each request through the QueryAPI that ``query_server``
+        holds for ``replica_labels``; /metrics reads its memo counters."""
+        self.query_server = qserver = query_server
         # Internal-API surface (reference cmd/config.go:183-191 serves
         # /-/healthy, /-/ready and /metrics on a separate internal port;
         # here they share the query port — one listener in-process).
@@ -603,12 +613,8 @@ class PromHTTPServer:
                 pass
 
             def _send(self, payload, code=200):
-                body = json.dumps(payload).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self._send_text(json.dumps(payload).encode(), code,
+                                "application/json")
 
             def _ok(self, data, warnings=None, infos=None):
                 payload = {"status": "success", "data": data}
@@ -674,7 +680,7 @@ class PromHTTPServer:
                             f'pqg_http_errors_total'
                             f'{{type="{_esc_label(lb)}"}} {v}'
                             for (name, lb), v in items if name == "errors"]
-                        memo = api.engine.plan_cache_counts()
+                        memo = qserver.plan_cache_counts()
                         for key, kind in (("hits", "counter"),
                                           ("misses", "counter"),
                                           ("evictions", "counter"),
@@ -696,6 +702,7 @@ class PromHTTPServer:
                         qs.update(parse_qs(self.rfile.read(n).decode()))
                     now = int(time.time() * 1000)
                     one = lambda k, d=None: qs.get(k, [d])[0]  # noqa: E731
+                    api = qserver._api(replica_labels)
                     # a time defaulted to now is a key no later request
                     # repeats: such requests bypass the plan memo
                     if u.path == "/api/v1/query":

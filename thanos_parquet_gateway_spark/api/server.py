@@ -19,8 +19,9 @@ re-expresses) is the handler semantics:
 - LabelNames / LabelValues (thanos.go:475-523): metadata with matchers and
   per-request replica-label drop.
 
-Quotas/warnings/stats ride on the same QueryAPI machinery as the HTTP path
-(api/http.py).
+`serve` puts HTTP (api/http.py) and gRPC over one QueryServer: the same
+engines and plan memos, and one set of quotas and concurrency semaphore
+(reference cmd/serve.go:201-222, internal/limits/limit.go).
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from thanos_parquet_gateway_spark.api.http import QueryAPI
-from thanos_parquet_gateway_spark.promql.engine import PromQLEngine
+from thanos_parquet_gateway_spark.promql.engine import LRU, PromQLEngine
 
 
 class QueryServer:
@@ -38,28 +39,18 @@ class QueryServer:
                  ext_labels: dict[str, str] | None = None,
                  lookback_ms: int = 300_000,
                  deterministic: bool = False,
-                 max_concurrent: int = 100,
-                 row_quota: int = 0, byte_quota: int = 0,
-                 shard_quota: int = 0,
-                 label_names_row_quota: int = 0,
-                 label_values_row_quota: int = 0,
-                 default_metadata_row_quota: int | None = None,
-                 label_stats: DataFrame | None = None):
+                 label_stats: DataFrame | None = None,
+                 **limits):
+        """``limits``: QueryAPI's max_concurrent and quotas, shared by
+        every QueryAPI handed out.  ``label_stats``: the convert-time
+        sidecar (convert.write_label_stats), handed to every engine."""
         self.samples = samples
         self.streams = streams
         self.ext_labels = ext_labels
         self.lookback_ms = lookback_ms
         self.deterministic = deterministic
-        self.max_concurrent = max_concurrent
-        self.row_quota = row_quota
-        self.byte_quota = byte_quota
-        self.shard_quota = shard_quota
-        self.label_names_row_quota = label_names_row_quota
-        self.label_values_row_quota = label_values_row_quota
-        self.default_metadata_row_quota = default_metadata_row_quota
-        # convert-time label-stats sidecar (convert.write_label_stats),
-        # handed to every engine (PromQLEngine decides when it applies)
         self.label_stats = label_stats
+        self._limits = QueryAPI(None, **limits)
         # one (engine, api) per distinct (replica-label set, lookback),
         # built lazily — the reference builds a DBQueryable per request
         # (thanos.go:135-147) and threads the per-request LookbackDelta
@@ -68,47 +59,33 @@ class QueryServer:
         # comes straight off the gRPC QueryRequest, so a client cycling
         # distinct lookbacks must not grow the cache (and its Spark plans)
         # without bound for the life of the server.
-        from collections import OrderedDict
-        import threading
-        self._apis: OrderedDict[tuple, QueryAPI] = OrderedDict()
-        self._apis_max = 32
-        # gRPC dispatch is one thread per stream: lookup/insert/evict must
-        # be atomic or concurrent requests race move_to_end vs popitem
-        self._apis_lock = threading.Lock()
+        self._apis = LRU(32, retire=self._retire)
+        # memo counters of evicted engines, so /metrics never counts down
+        self._retired = {"hits": 0, "misses": 0, "evictions": 0}
 
     def _api(self, replica_labels: list[str] | None,
              lookback_ms: int | None = None) -> QueryAPI:
         lb = lookback_ms or self.lookback_ms
         key = (tuple(sorted(replica_labels or ())), lb)
-        with self._apis_lock:
-            api = self._apis.get(key)
-            if api is not None:
-                self._apis.move_to_end(key)
-                return api
-        # build outside the lock (plan construction is driver-heavy); a
-        # concurrent builder of the same key just loses the insert race
-        eng = PromQLEngine(self.samples,
-                           lookback_ms=lb,
-                           deterministic=self.deterministic,
-                           replica_labels=list(key[0]) or None,
-                           ext_labels=self.ext_labels,
-                           streams=self.streams,
-                           label_stats=self.label_stats)
-        api = QueryAPI(eng, self.max_concurrent,
-                       row_quota=self.row_quota,
-                       byte_quota=self.byte_quota,
-                       shard_quota=self.shard_quota,
-                       label_names_row_quota=self.label_names_row_quota,
-                       label_values_row_quota=self.label_values_row_quota,
-                       **({} if self.default_metadata_row_quota is None else
-                          {"default_metadata_row_quota":
-                           self.default_metadata_row_quota}))
-        with self._apis_lock:
-            api = self._apis.setdefault(key, api)
-            self._apis.move_to_end(key)
-            while len(self._apis) > self._apis_max:
-                self._apis.popitem(last=False)  # evict least-recently-used
-        return api
+        return self._apis.get(key, lambda: self._limits.over(PromQLEngine(
+            self.samples, lookback_ms=lb, deterministic=self.deterministic,
+            replica_labels=list(key[0]) or None, ext_labels=self.ext_labels,
+            streams=self.streams, label_stats=self.label_stats)))
+
+    def _retire(self, api: QueryAPI) -> None:
+        counts = api.engine.plan_cache_counts()
+        for k in self._retired:
+            self._retired[k] += counts[k]
+
+    def plan_cache_counts(self) -> dict:
+        """Plan-memo hits, misses and evictions over every engine this
+        server has held, and the entries of those it holds."""
+        with self._apis.lock:  # no eviction between the two sums
+            out = dict(self._retired, entries=0)
+            for api in self._apis.values():
+                for k, v in api.engine.plan_cache_counts().items():
+                    out[k] += v
+        return out
 
     # ------------------------------------------------------------------ Info
     def info_df(self) -> DataFrame:

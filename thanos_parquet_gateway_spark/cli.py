@@ -32,8 +32,7 @@ def _parse_label_map(pairs: list[str]) -> dict[str, str]:
 
 def cmd_serve(args) -> int:
     from thanos_parquet_gateway_spark import get_spark
-    from thanos_parquet_gateway_spark.api import PromHTTPServer
-    from thanos_parquet_gateway_spark.promql import PromQLEngine
+    from thanos_parquet_gateway_spark.api import PromHTTPServer, QueryServer
 
     spark = get_spark("serve")
     samples = spark.read.parquet(args.path)
@@ -50,34 +49,24 @@ def cmd_serve(args) -> int:
         label_stats = read_label_stats(spark, args.path)
     except Exception:  # noqa: BLE001 — pre-sidecar layouts
         label_stats = None
-    eng = PromQLEngine(samples,
-                       lookback_ms=args.lookback_ms,
-                       replica_labels=args.replica_label or None,
-                       ext_labels=_parse_label_map(args.external_label or [])
-                       or None,
-                       streams=streams,
-                       label_stats=label_stats)
-    srv = PromHTTPServer(eng, port=args.port,
-                         max_concurrent=args.max_concurrent,
-                         row_quota=args.max_row_count,
-                         byte_quota=args.max_chunk_bytes,
-                         shard_quota=args.max_shard_count)
+    qs = QueryServer(samples, streams=streams,
+                     ext_labels=_parse_label_map(args.external_label or [])
+                     or None,
+                     lookback_ms=args.lookback_ms,
+                     label_stats=label_stats,
+                     max_concurrent=args.max_concurrent,
+                     row_quota=args.max_row_count,
+                     byte_quota=args.max_chunk_bytes,
+                     shard_quota=args.max_shard_count)
+    srv = PromHTTPServer(qs, port=args.port,
+                         replica_labels=args.replica_label)
     gsrv = None
     if args.grpc_port is not None:
-        # reference serves HTTP and gRPC side by side (cmd/serve.go:60-140)
+        # reference serves HTTP and gRPC side by side over one engine and
+        # one set of limits (cmd/serve.go:60-140,201-222)
         from thanos_parquet_gateway_spark.api.grpc_server import (
             ThanosGrpcServer,
         )
-        from thanos_parquet_gateway_spark.api.server import QueryServer
-        qs = QueryServer(samples, streams=streams,
-                         ext_labels=_parse_label_map(
-                             args.external_label or []) or None,
-                         lookback_ms=args.lookback_ms,
-                         max_concurrent=args.max_concurrent,
-                         row_quota=args.max_row_count,
-                         byte_quota=args.max_chunk_bytes,
-                         shard_quota=args.max_shard_count,
-                         label_stats=label_stats)
         gsrv = ThanosGrpcServer(qs, port=args.grpc_port).start()
     print(f"serving {args.path} on :{srv.port}"
           + (f" grpc :{gsrv.port}" if gsrv else "")
@@ -91,25 +80,23 @@ def cmd_query(args) -> int:
     analogue): JSON result on stdout, evaluation errors as status=error
     with exit code 1."""
     from thanos_parquet_gateway_spark import get_spark
-    from thanos_parquet_gateway_spark.api.http import QueryAPI
-    from thanos_parquet_gateway_spark.promql import PromQLEngine
+    from thanos_parquet_gateway_spark.api import QueryServer
 
     spark = get_spark("query")
-    eng = PromQLEngine(
-        spark.read.parquet(args.path),
-        lookback_ms=args.lookback_ms,
-        replica_labels=args.replica_label or None,
+    qs = QueryServer(
+        spark.read.parquet(args.path), lookback_ms=args.lookback_ms,
         ext_labels=_parse_label_map(args.external_label or []) or None)
-    api = QueryAPI(eng)
+    rl = args.replica_label
     try:
         if args.start is not None or args.end is not None:
             if args.start is None or args.end is None:
                 raise SystemExit("range query needs both --start and --end")
-            data = api.query_range(args.expr, args.start, args.end, args.step)
+            data = qs.query_range(args.expr, args.start, args.end, args.step,
+                                  replica_labels=rl)
         else:
             import time as _time
             t = args.time if args.time is not None else int(_time.time() * 1000)
-            data = api.query(args.expr, t)
+            data = qs.query(args.expr, t, replica_labels=rl)
     except Exception as e:  # noqa: BLE001 — CLI surface
         print(json.dumps({"status": "error", "errorType": "execution",
                           "error": str(e)}))
@@ -289,7 +276,8 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--lookback-ms", type=int, default=300_000,
                    help="query.lookback (reference cmd/serve.go:102)")
     s.add_argument("--max-concurrent", type=int, default=100,
-                   help="query.limits concurrency semaphore")
+                   help="query.limits concurrency: one semaphore over every "
+                   "HTTP and gRPC query and metadata request of the process")
     s.add_argument("--max-row-count", type=int, default=0,
                    help="query.limits.select.max-row-count (0 = unlimited)")
     s.add_argument("--max-chunk-bytes", type=int, default=0,

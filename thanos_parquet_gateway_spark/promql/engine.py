@@ -8,6 +8,8 @@ label values — each returning a DataFrame (never collecting on its own).
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
@@ -67,6 +69,59 @@ class QueryResult:
 
 def _capped(df: DataFrame, limit: int) -> DataFrame:
     return df.limit(limit) if limit else df
+
+
+class LRU:
+    """At most ``cap`` values by key, evicting the least recently used:
+    the plan memo and the query server's engines.  ``get`` builds a miss
+    outside the lock (builds are driver-heavy); racing builders of a key
+    all get the value inserted first.  A build that raises keeps nothing;
+    ``key=None`` builds a value that is not kept (a miss).  ``retire``
+    gets each evicted value under the reentrant ``lock``."""
+
+    def __init__(self, cap: int, retire=None):
+        self.cap = cap
+        self.retire = retire
+        self.lock = threading.RLock()
+        self._d: OrderedDict = OrderedDict()
+        self._counts = {"hits": 0, "misses": 0, "evictions": 0}
+
+    def get(self, key, build):
+        with self.lock:
+            hit = None if key is None else self._d.get(key)
+            if hit is not None:
+                self._d.move_to_end(key)
+                self._counts["hits"] += 1
+                return hit
+            self._counts["misses"] += 1
+        value = build()
+        if key is None:
+            return value
+        with self.lock:
+            value = self._d.setdefault(key, value)
+            self._d.move_to_end(key)
+            while len(self._d) > self.cap:
+                _, old = self._d.popitem(last=False)
+                self._counts["evictions"] += 1
+                if self.retire is not None:
+                    self.retire(old)
+        return value
+
+    def counts(self) -> dict:
+        """hits, misses, evictions and entries."""
+        with self.lock:
+            return dict(self._counts, entries=len(self._d))
+
+    def values(self) -> list:
+        with self.lock:
+            return list(self._d.values())
+
+    def __iter__(self):
+        with self.lock:
+            return iter(list(self._d))
+
+    def __len__(self) -> int:
+        return len(self._d)
 
 
 class PromQLEngine:
@@ -200,18 +255,7 @@ class PromQLEngine:
         # cap counts entries, not the shuffle output they keep alive.  Each
         # PromQL hit returns a fresh QueryResult wrapper so
         # all_annotations' fold-in never mutates the cached entry.
-        import threading as _th
-        from collections import OrderedDict as _OD
-        self._plan_cache: "dict" = _OD()
-        self._plan_cache_cap = 256
-        self._plan_cache_stats = {"hits": 0, "misses": 0, "evictions": 0}
-        # the API server serves concurrent requests on ONE engine
-        # (api/server.py engine LRU + max_concurrent): guard the LRU's
-        # read-move/insert/evict sequences and the counters; plan BUILDS
-        # stay outside the lock (driver-heavy — a concurrent builder of the
-        # same key just loses the insert race, same policy as the server's
-        # engine LRU)
-        self._plan_lock = _th.Lock()
+        self._plan_cache = LRU(256)
         # convert-time sidecar (convert.write_label_stats): the reference's
         # dictionary-shortcut LabelValues analogue — unconstrained metadata
         # queries read it instead of scanning samples.  It carries raw
@@ -230,27 +274,11 @@ class PromQLEngine:
         return comp, comp.compile(node)
 
     def _plan_cached(self, key: tuple | None, build):
-        """LRU-memoized plans (see __init__): a QueryResult or a metadata
-        DataFrame.  QueryResult hits hand back a fresh wrapper over the same
-        DataFrame with copied annotation/probe lists.  A build that raises
-        caches nothing; ``key=None`` builds a plan the memo neither answers
-        nor keeps (counted as a miss)."""
-        with self._plan_lock:
-            hit = None if key is None else self._plan_cache.get(key)
-            if hit is not None:
-                self._plan_cache.move_to_end(key)
-                self._plan_cache_stats["hits"] += 1
-            else:
-                self._plan_cache_stats["misses"] += 1
-        if hit is None:
-            hit = build()  # outside the lock: plan construction is slow
-            if key is None:
-                return hit
-            with self._plan_lock:
-                self._plan_cache[key] = hit
-                while len(self._plan_cache) > self._plan_cache_cap:
-                    self._plan_cache.pop(next(iter(self._plan_cache)))
-                    self._plan_cache_stats["evictions"] += 1
+        """Plans memoized in ``_plan_cache`` (see __init__ and LRU.get): a
+        QueryResult or a metadata DataFrame.  QueryResult hits hand back a
+        fresh wrapper over the same DataFrame with copied annotation/probe
+        lists."""
+        hit = self._plan_cache.get(key, build)
         if not isinstance(hit, QueryResult):
             return hit
         return QueryResult(hit.df, hit.result_type,
@@ -259,9 +287,7 @@ class PromQLEngine:
 
     def plan_cache_counts(self) -> dict:
         """Memo counters for /metrics: hits, misses, evictions, entries."""
-        with self._plan_lock:
-            return dict(self._plan_cache_stats,
-                        entries=len(self._plan_cache))
+        return self._plan_cache.counts()
 
     def query_range(self, q: str, start_ms: int, end_ms: int,
                     step_ms: int, limit: int = 0, *,
