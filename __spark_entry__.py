@@ -26,6 +26,8 @@ def _configure(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass  # some confs may be fixed on a running session
+    from thanos_parquet_gateway_spark.session import register_kernels
+    register_kernels(spark)  # the similarity entries call tsq_dot
 
 
 def entry(spark: SparkSession) -> DataFrame:

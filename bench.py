@@ -46,12 +46,8 @@ def make_benches(spark, sf_dir: str) -> dict:
         "tpch_q5": lambda: drain(EQ.QUERIES["tpch_q5_region_revenue"](spark, sf_dir)),
         "dedup_lsh": lambda: drain(
             dedup.lsh_candidate_pairs(load_table(spark, sf_dir, "documents"))),
-        # r10: the Arrow-batched BLAS twin (brute_force_topk_vectorized) is
-        # the production brute-force path — one float64 matmul per Arrow
-        # batch instead of a per-pair JVM fold; selection verified identical
-        # to the exact fold (test_operators, sim_topk_vectorized oracle)
         "sim_topk": lambda: drain(
-            similarity.brute_force_topk_vectorized(
+            similarity.brute_force_topk(
                 load_table(spark, sf_dir, "embeddings"),
                 load_table(spark, sf_dir, "embeddings")
                 .filter(F.col("vec_id") < 3)

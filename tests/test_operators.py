@@ -280,25 +280,70 @@ def test_brute_force_topk_self_is_rank1(spark, sf_dir):
         assert abs(cs - 1.0) < 1e-9
 
 
-def test_brute_force_topk_vectorized_matches_exact(spark, sf_dir):
-    """The BLAS/Arrow twin must select the SAME (query, rank, vec_id)
-    triples as the sequential-fold exact path, with scores equal to
-    ~1e-12 (BLAS vs sequential summation differ only in the last ulps).
-    Also covers the per-batch partial top-k merge: forcing many small
-    Arrow batches means every batch emits a local top-k and the global
-    merge must still reproduce the exact ranking."""
-    emb = load_table(spark, sf_dir, "embeddings").repartition(8)
-    q = (emb.filter(F.col("vec_id") < 3)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("query_vec")))
-    exact = similarity.brute_force_topk(emb, q, k=5).collect()
-    vec = similarity.brute_force_topk_vectorized(emb, q, k=5).collect()
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    exact, vec = sorted(exact, key=key), sorted(vec, key=key)
-    assert [(r["query_id"], r["rank"], r["vec_id"]) for r in exact] == \
-           [(r["query_id"], r["rank"], r["vec_id"]) for r in vec]
-    assert all(abs(a["cos_sim"] - b["cos_sim"]) < 1e-12
-               for a, b in zip(exact, vec))
+# the interpreted folds tsq_dot replaced, kept as the reference
+_FOLD_DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
+             "CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
+_FOLD_NORM = ("SQRT(aggregate(transform({a}, x -> CAST(x AS DOUBLE) * "
+              "CAST(x AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v))")
+
+
+def test_tsq_dot_bit_identical_to_fold(spark):
+    """tsq_dot and sqrt(tsq_dot(a, a)) equal the aggregate(zip_with) fold
+    by float.hex on every pair of test vectors: float and double arrays, a
+    literal double array, a null array and a null element, unequal lengths
+    and empty/empty, NaN, ±Inf and −0.0.  [1, 1e16, -1e16] sums to 0.0
+    left to right and to 1.0 right to left, so the order is pinned."""
+    import random
+
+    rng = random.Random(11)
+    inf, nan = float("inf"), float("nan")
+    vecs = [[1.0, 1e16, -1e16], [1.0, 1.0, 1.0], [0.1, 0.2, 0.3],
+            [nan, 1.0, 2.0], [inf, -inf, 1.0], [-0.0, 0.0, -0.0],
+            [-0.0, -0.0, -0.0], [0.0, 0.0, 0.0], [1.0, None, 2.0],
+            [1.0, 2.0], [], None]
+    vecs += [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(6)]
+    df = spark.createDataFrame(
+        [(i, j, a, b, a, b) for i, a in enumerate(vecs)
+         for j, b in enumerate(vecs)],
+        "i int, j int, a array<double>, b array<double>, "
+        "fa array<float>, fb array<float>")
+    lit = similarity._sql_double_array([0.5, -1.5, 1e16])
+    pairs = [(f"tsq_dot({x}, {y})", _FOLD_DOT.format(a=x, b=y))
+             for x, y in (("a", "b"), ("fa", "fb"), ("fa", "b"),
+                          ("a", lit), ("fa", lit))]
+    pairs += [(f"sqrt(tsq_dot({x}, {x}))", _FOLD_NORM.format(a=x))
+              for x in ("a", "fa")]
+    cols = [F.col("i"), F.col("j")]
+    for n, (kernel, fold) in enumerate(pairs):
+        cols += [F.expr(kernel).alias(f"k{n}"), F.expr(fold).alias(f"f{n}")]
+    cols += [similarity.dot(F.col("a"), "b").alias("kd"),
+             similarity.norm("fa").alias("kn")]
+    rows = df.select(*cols).collect()
+
+    def hx(v):
+        return None if v is None else v.hex()
+    for r in rows:
+        for n in range(len(pairs)):
+            assert hx(r[f"k{n}"]) == hx(r[f"f{n}"]), (pairs[n][0], r.i, r.j)
+        assert hx(r["kd"]) == hx(r["k0"]) and hx(r["kn"]) == hx(r["k6"])
+    assert sum(r.k0 is not None and r.k0 == r.k0 for r in rows) > 50
+
+
+def test_tsq_dot_zero_norm_cosine_is_null(spark):
+    """A zero-norm vector's cosine stays NULL, as with the fold (x / 0.0
+    is NULL outside ANSI mode; under ANSI both raise DIVIDE_BY_ZERO)."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        z = spark.createDataFrame([([0.0, 0.0], [1.0, 2.0])],
+                                  "a array<double>, b array<double>")
+        fold = (f"{_FOLD_DOT.format(a='a', b='b')} / "
+                f"({_FOLD_NORM.format(a='a')} * {_FOLD_NORM.format(a='b')})")
+        r = z.select(similarity.cosine(F.col("a"), F.col("b")).alias("c"),
+                     F.expr(fold).alias("f")).first()
+        assert r.c is None and r.f is None
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_lsh_topk_subset_of_bucket(spark, sf_dir):

@@ -5,9 +5,11 @@ Brute-force cosine top-k as the correctness baseline, and an LSH-bucketed
 are joined on a short bit-signature key, so the candidate set per query is a
 tiny fraction of the corpus and the join is an equi-join AQE can plan.
 
-All vector math is a *sequential* fold over the array (zip_with + aggregate),
-double precision — deterministic and replicable by an independent SQL oracle.
-No UDFs, no collects.
+Every dot product and norm is one call of the compiled JVM kernel
+``tsq_dot`` (``jvm/tsq/Dot.java``, registered by ``session.get_spark``): a
+left-to-right double-precision sum, bit-identical to the sequential
+``aggregate(zip_with(...))`` fold an independent SQL oracle replicates, but
+not interpreted lambda by lambda.  No Python workers, no collects.
 """
 
 from __future__ import annotations
@@ -35,39 +37,16 @@ def _sql_double_array(vals) -> str:
             ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in vals) + ")")
 
 
-def _dot_sql(a: str, b: str) -> str:
-    """SQL text of the same sequential fold ``dot`` builds — one expr()
-    parse instead of dozens of py4j round trips per plane (the Column path
-    costs ~1 JVM round trip per literal/lambda; query *compile* time is
-    part of serving latency).  Operand strings may be quoted column refs or
-    nested SQL (e.g. a literal array)."""
-    return (f"aggregate(zip_with({a}, {b}, "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
-
-
-def _norm_sql(a: str) -> str:
-    return (f"SQRT(aggregate(transform({a}, "
-            "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v))")
-
-
 def dot(a: Column | str, b: Column | str) -> Column:
-    """Sequential-fold dot product in double precision (deterministic).
-    String arguments are treated as column names and compiled via one
-    expr() parse (same expression tree, far fewer py4j round trips)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(_sql_ref(a), _sql_ref(b)))
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-                       F.lit(0.0), lambda acc, v: acc + v)
+    """Dot product of two array Columns (or column names) by the ``tsq_dot``
+    kernel; null if an array or element is null or the lengths differ."""
+    return F.call_udf("tsq_dot", a, b)
 
 
 def norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(_norm_sql(_sql_ref(a)))
-    return F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
+    """Euclidean norm, ``sqrt(tsq_dot(a, a))``: the same products summed in
+    the same order as the dot product, so cosines stay bit-reproducible."""
+    return F.sqrt(dot(a, a))
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -144,8 +123,8 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 
     Norms are hoisted OUT of the pair loop: the corpus norm is computed
     once per row before the join and the query norm once per query, so
-    each (row, query) pair costs ONE fold (the dot product) instead of
-    three — same sequential folds, bit-identical cosine."""
+    each (row, query) pair costs ONE kernel call (the dot product) instead
+    of three — same sums, bit-identical cosine."""
     emb_n = embeddings.select("*", norm(vec_col).alias("__norm"))
     q_n = queries.select("*", norm(query_vec_col).alias("__qnorm"))
     j = emb_n.crossJoin(F.broadcast(q_n))
@@ -158,94 +137,17 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                            payload_cols=("cos_sim",))
 
 
-def brute_force_topk_vectorized(
-        embeddings: DataFrame, queries: DataFrame, k: int = 5,
-        id_col: str = "vec_id", vec_col: str = "embedding",
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_vec") -> DataFrame:
-    """Arrow-batched BLAS brute-force cosine top-k — the throughput twin of
-    :func:`brute_force_topk` (same plan shape, same result contract).
+def hyperplane_signature(vec: str, planes: list[list[float]]) -> Column:
+    """Sign-sketch LSH bucket key over the column named ``vec``: bit i =
+    (vec · plane_i) >= 0.
 
-    The query set is small by contract (it is broadcast in the exact
-    variant); here it collects once to the driver and ships to every task
-    as a dense float64 matrix.  Each Arrow batch of the corpus scores via
-    ONE ``M @ Q.T`` matmul (vectorized, BLAS) and emits only its local
-    top-k rows per query, so the shuffle into the global merge carries at
-    most batches × k × queries rows — constant in corpus size, identical
-    to the exact path's two-phase bound.  The local selection uses the
-    SAME ordering key as ``_topk_per_query`` (NaN first under DESC, ties
-    by vec_id) so a locally-dropped row can never win globally.
-
-    Exactness caveat: BLAS/pairwise summation differs from the sequential
-    double fold in the final ulps (~1e-15 relative on unit-norm vectors),
-    so reported scores are not bit-identical to the fold path — round the
-    output (e.g. ``F.round("cos_sim", 6)``) when comparing against a
-    sequential-fold oracle.  A zero-norm corpus vector scores NaN here
-    (0/0 in IEEE) where the JVM fold yields NULL (x/0.0 in non-ANSI
-    Spark); both sort deterministically but differently — filter zero
-    norms upstream if that corner matters."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    qn = np.sqrt((Q * Q).sum(axis=1))
-    bq = embeddings.sparkSession.sparkContext.broadcast((qids, Q, qn))
-
-    def score(batches):
-        qids_, Q_, qn_ = bq.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            vids = pdf[id_col].to_numpy()
-            n = np.sqrt((M * M).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = (M @ Q_.T) / np.outer(n, qn_)
-            kk = min(k, len(vids))
-            parts = []
-            for j in range(len(qids_)):
-                s = S[:, j]
-                nan = np.isnan(s)
-                # _topk_per_query DESC key: (disc: NaN 0 < finite 1,
-                # ord: -score, vec_id) — lexsort keys last-to-first
-                top = np.lexsort(
-                    (vids, np.where(nan, 0.0, -s),
-                     np.where(nan, 0, 1)))[:kk]
-                parts.append(pd.DataFrame(
-                    {"query_id": qids_[j], "vec_id": vids[top],
-                     "cos_sim": s[top]}))
-            yield pd.concat(parts, ignore_index=True)
-
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("cos_sim", T.DoubleType())])
-    cand = embeddings.select(id_col, vec_col).mapInPandas(score, schema)
-    return _topk_per_query(cand, k, "cos_sim", descending=True,
-                           payload_cols=("cos_sim",))
-
-
-def hyperplane_signature(vec: Column | str,
-                         planes: list[list[float]]) -> Column:
-    """Sign-sketch LSH bucket key: bit i = (vec · plane_i) >= 0.
-
-    With a column *name* the whole signature (planes × dims literals + the
-    fold lambdas) compiles as ONE expr() parse — the Column path costs one
-    py4j round trip per plane element, which profiling showed dominated the
-    lsh_topk query build."""
-    if isinstance(vec, str):
-        v = _sql_ref(vec)
-        bits = [f"CASE WHEN {_dot_sql(v, _sql_double_array(p))} >= 0 "
-                "THEN '1' ELSE '0' END" for p in planes]
-        return F.expr("concat(" + ", ".join(bits) + ")")
-    bits = [F.when(dot(vec, F.array(*[F.lit(float(x)) for x in p])) >= 0,
-                   F.lit("1")).otherwise(F.lit("0"))
-            for p in planes]
-    return F.concat(*bits)
+    The whole signature (planes × dims literals) compiles as ONE expr()
+    parse — a Column tree costs one py4j round trip per plane element,
+    which profiling showed dominated the lsh_topk query build."""
+    v = _sql_ref(vec)
+    bits = [f"CASE WHEN tsq_dot({v}, {_sql_double_array(p)}) >= 0 "
+            "THEN '1' ELSE '0' END" for p in planes]
+    return F.expr("concat(" + ", ".join(bits) + ")")
 
 
 def lsh_topk(embeddings: DataFrame, queries: DataFrame,
@@ -674,8 +576,8 @@ def semantic_dedup(embeddings: DataFrame, k_clusters: int = 8,
     for _ in range(lloyd_iters):
         cents = _lloyd_step(e, cents, exact_means=exact_means)
     assigned = _probe(e, "v", 1, _cents_to_arr(cents))
-    # norm hoisted out of the pairwise loop: one fold per INPUT row, not
-    # one per pair (same sequential fold, bit-identical cosine)
+    # norm hoisted out of the pairwise loop: one per INPUT row, not one
+    # per pair (same sum, bit-identical cosine)
     assigned = assigned.withColumn("__n", norm(F.col("v")))
     a = assigned.select("cell", F.col("vec_id").alias("id_a"),
                         F.col("v").alias("va"), F.col("__n").alias("__na"))
@@ -723,12 +625,12 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     do not run in the single scan task.  The deduplicated candidate ids get
     an explicit partition count (``hash_parallelism``) before the
     CPU-bound rescoring: they are byte-small, and AQE would coalesce their
-    shuffle into one or two tasks.  Each cosine is the same sequential
-    fold whatever the partitioning, so results do not depend on it.
+    shuffle into one or two tasks.  Each cosine is the same left-to-right
+    sum whatever the partitioning, so results do not depend on it.
     """
     e = (spread_small_scan(embeddings.select(F.col(id_col).alias("id"),
                                              F.col(vec_col).alias("v")))
-         # norm hoisted out of the pair loop: one fold per input row
+         # norm hoisted out of the pair loop: one per input row
          .withColumn("__n", norm("v")))
     if all_pairs:
         a = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"),

@@ -1950,7 +1950,7 @@ r AS (
 SELECT query_id, rank, vec_id, cos_sim FROM r WHERE rank <= 5
 """)
 def sim_topk_cosine(spark, sf_dir):
-    """Brute-force cosine top-k ANN baseline (sequential-fold dot product)."""
+    """Brute-force cosine top-k ANN baseline (tsq_dot kernel)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.brute_force_topk(emb, _query_vectors(spark, sf_dir), k=5)
 
@@ -1971,17 +1971,11 @@ SELECT query_id, rank, vec_id, round(cos_sim, 6) AS cos_sim
 FROM r WHERE rank <= 5
 """)
 def sim_topk_vectorized(spark, sf_dir):
-    """Arrow-batched BLAS brute-force cosine top-k — the throughput twin of
-    sim_topk_cosine (one float64 matmul per Arrow batch, per-batch partial
-    top-k, constant-size merge).  BLAS summation differs from the
-    sequential fold by ~1e-16, so the reported score is rounded to 6
-    decimals on BOTH sides (Spark F.round and DuckDB round are both
-    half-away-from-zero); selection/ranking uses the raw scores and is
-    verified identical to the exact path (test_operators)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = similarity.brute_force_topk_vectorized(
-        emb, _query_vectors(spark, sf_dir), k=5)
-    return out.withColumn("cos_sim", F.round("cos_sim", 6))
+    """sim_topk_cosine with the score rounded to 6 decimals on both sides
+    (Spark F.round and DuckDB round are both half-away-from-zero) — the
+    registry's rounded-output contract for a top-k consumer."""
+    return sim_topk_cosine(spark, sf_dir).withColumn(
+        "cos_sim", F.round("cos_sim", 6))
 
 
 @q("sim_near_dup", f"""

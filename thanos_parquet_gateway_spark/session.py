@@ -4,13 +4,85 @@ The reference sizes itself with row-group/page knobs and I/O coalescing
 (reference: convert/convert.go:193-204, cmd/serve.go:112-114).  In Spark the
 equivalent levers are AQE, shuffle-partition count, file split sizes and the
 vectorized parquet reader — set once here so every entry point agrees.
+
+The session also carries the one compiled JVM kernel, ``tsq_dot``
+(``jvm/tsq/Dot.java``): the Spark driver's ``javac`` builds it while the JVM
+starts, and ``ADD JAR`` ships it to the executors.
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
+import subprocess
+import tempfile
+import threading
+import weakref
+import zipfile
+from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import DoubleType
+
+_KERNEL_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "jvm", "tsq", "Dot.java")
+_kernel_lock = threading.Lock()
+_kernel_jar: Future | None = None  # the one build of this process
+_kernel_sessions: weakref.WeakSet = weakref.WeakSet()  # tsq_dot registered
+
+
+def _build_kernel_jar(javac: str) -> str:
+    """Compile the kernel against the two Spark jars it needs (Spark 4 runs
+    on Java 17+) into a jar in a temp dir removed at exit.  C1-only and the
+    serial GC keep javac's CPU off the JVM starting beside it."""
+    from pyspark.find_spark_home import _find_spark_home
+    out = tempfile.mkdtemp(prefix="tsq-kernel-")
+    atexit.register(shutil.rmtree, out, True)
+    jars = os.path.join(_find_spark_home(), "jars")
+    cp = os.pathsep.join(glob.glob(os.path.join(jars, "spark-sql-api_*.jar"))
+                         + glob.glob(os.path.join(jars, "scala-library-*.jar")))
+    run = subprocess.run(
+        [javac, "-J-XX:TieredStopAtLevel=1", "-J-XX:+UseSerialGC", "-proc:none",
+         "--release", "17", "-encoding", "UTF-8", "-nowarn", "-d", out,
+         "-cp", cp, _KERNEL_SRC],
+        capture_output=True, text=True)
+    if run.returncode != 0:
+        raise RuntimeError("javac failed to build the tsq_dot kernel:\n"
+                           + run.stderr)
+    jar = os.path.join(out, "tsq-kernels.jar")
+    with zipfile.ZipFile(jar, "w") as z:
+        z.write(os.path.join(out, "tsq", "Dot.class"), "tsq/Dot.class")
+    return jar
+
+
+def _kernel_build() -> Future:
+    """The process's kernel jar, built once on a background thread."""
+    global _kernel_jar
+    with _kernel_lock:
+        if _kernel_jar is None:
+            javac = shutil.which("javac")
+            if javac is None:
+                raise RuntimeError(
+                    "get_spark needs a JDK on the driver: no javac on PATH to "
+                    "build the tsq_dot kernel from " + _KERNEL_SRC)
+            pool = ThreadPoolExecutor(1, thread_name_prefix="tsq-kernel-javac")
+            _kernel_jar = pool.submit(_build_kernel_jar, javac)
+            pool.shutdown(wait=False)
+        return _kernel_jar
+
+
+def register_kernels(spark: SparkSession) -> None:
+    """Make ``tsq_dot`` callable in ``spark``: wait for the jar, ``ADD JAR``
+    it and register the function, once per session (so a session not built
+    by ``get_spark`` can be handed in too)."""
+    jar = _kernel_build().result()
+    with _kernel_lock:
+        if spark not in _kernel_sessions:
+            spark.sql(f"ADD JAR '{jar}'")
+            spark.udf.registerJavaFunction("tsq_dot", "tsq.Dot", DoubleType())
+            _kernel_sessions.add(spark)
 
 
 def _install_jvm_function_cache() -> None:
@@ -66,6 +138,7 @@ def _install_jvm_function_cache() -> None:
 
 def get_spark(app_name: str = "thanos_parquet_gateway_spark",
               extra_conf: dict | None = None) -> SparkSession:
+    _kernel_build()  # javac overlaps the JVM start
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -112,4 +185,5 @@ def get_spark(app_name: str = "thanos_parquet_gateway_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _install_jvm_function_cache()
+    register_kernels(spark)
     return spark

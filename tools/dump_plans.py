@@ -3,7 +3,8 @@ non-bench production paths (subquery rate, native-histogram
 rate/irate/resets and sum/last_over_time, @-anchored rate) — to <out_dir>/<name>_<tag>.txt.
 
 Usage: python tools/dump_plans.py <out_dir> <tag> [query ...]
-Tag is e.g. 'before' or 'after'.  With no query names, dumps everything.
+Tag is e.g. 'before' or 'after'.  With no query names, dumps everything;
+a name that is not a bench query dumps that plans/entry_queries.py entry.
 Bench entries build the same DataFrames as bench.py's make_benches(), so
 the plans are exactly what the bench times.  The corpus is
 $SPARK_GRAFT_SF_DIR (by default the sf0.1 testdata).
@@ -100,7 +101,7 @@ def main():
         "tpch_q5": lambda: EQ.QUERIES["tpch_q5_region_revenue"](spark, sf_dir),
         "dedup_lsh": lambda: dedup.lsh_candidate_pairs(
             load_table(spark, sf_dir, "documents")),
-        "sim_topk": lambda: similarity.brute_force_topk_vectorized(
+        "sim_topk": lambda: similarity.brute_force_topk(
             load_table(spark, sf_dir, "embeddings"),
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") < 3)
@@ -127,6 +128,8 @@ def main():
             EQ.R_START, EQ.R_END, EQ.STEP).df,
     }
 
+    for name in only - dfs.keys():  # any registry entry, by name
+        dfs[name] = lambda name=name: EQ.QUERIES[name](spark, sf_dir)
     for name, mk in dfs.items():
         if only and name not in only:
             continue

@@ -5,7 +5,8 @@ checks the scale-critical properties (SURVEY.md §4):
 - scans read only needed columns (ReadSchema pruning),
 - small dimension joins broadcast (BroadcastHashJoin),
 - no driver-side collects inside operators,
-- all-pairs operators run their pair stage above the small-scan spread.
+- all-pairs operators run their pair stage above the small-scan spread,
+  and score pairs with the compiled tsq_dot kernel.
 
 Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -243,6 +244,16 @@ def main():
             ("RoundRobinPartitioning below the pair join",
              r"RoundRobinPartitioning"),
         ]))
+    # the pair cosines call the compiled tsq_dot kernel, not the
+    # interpreted aggregate(zip_with) fold
+    for jname in ("semantic dedup pair join", "near-dup all-pairs"):
+        kp = tree_of(pair_joins[jname][0])
+        results.append(check(f"{jname} kernel", kp, [
+            ("cosine calls tsq_dot", r"tsq_dot\("),
+        ]))
+        if "aggregate(zip_with(" in kp:
+            print("  [MISS] interpreted aggregate(zip_with( fold present")
+            results.append(False)
     # the candidate ids reach the rescoring through an explicit-count
     # exchange placed after the map-side dedup aggregate: AQE never
     # coalesces it
