@@ -393,24 +393,26 @@ def almost_equal(a: float, b: float, eps: float = 1e-6) -> bool:
 
 
 def run_script(spark, script: TestScript, make_samples, engine_cls,
-               lookback_ms: int = 300_000) -> list[str]:
+               lookback_ms: int = 300_000,
+               deterministic: bool = True) -> list[str]:
     """Execute every eval; returns a list of failure descriptions (empty =
     pass).  One engine per ``clear``-delimited section — plans are lazy,
-    construction is free."""
+    construction is free.  ``deterministic`` picks the engine mode: the
+    order-stable folds, or the native aggregation the server runs."""
     failures: list[str] = []
     for samples, evals in script.all_sections():
         if not evals:
             continue
         failures.extend(_run_section(spark, samples, evals, make_samples,
-                                     engine_cls, lookback_ms))
+                                     engine_cls, lookback_ms, deterministic))
     return failures
 
 
 def _run_section(spark, samples, evals, make_samples, engine_cls,
-                 lookback_ms: int) -> list[str]:
+                 lookback_ms: int, deterministic: bool) -> list[str]:
     failures: list[str] = []
     eng = engine_cls(make_samples(spark, samples),
-                     lookback_ms=lookback_ms, deterministic=True)
+                     lookback_ms=lookback_ms, deterministic=deterministic)
     for case in evals:
         if case.range_ms is not None:
             failures.extend(_run_range_case(eng, case))

@@ -330,20 +330,26 @@ def test_tsq_dot_bit_identical_to_fold(spark):
 
 
 def test_tsq_dot_zero_norm_cosine_is_null(spark):
-    """A zero-norm vector's cosine stays NULL, as with the fold (x / 0.0
-    is NULL outside ANSI mode; under ANSI both raise DIVIDE_BY_ZERO)."""
-    prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        z = spark.createDataFrame([([0.0, 0.0], [1.0, 2.0])],
-                                  "a array<double>, b array<double>")
-        fold = (f"{_FOLD_DOT.format(a='a', b='b')} / "
-                f"({_FOLD_NORM.format(a='a')} * {_FOLD_NORM.format(a='b')})")
-        r = z.select(similarity.cosine(F.col("a"), F.col("b")).alias("c"),
-                     F.expr(fold).alias("f")).first()
-        assert r.c is None and r.f is None
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
+    """Under the session's own conf (Spark 4 defaults to ANSI mode, where
+    ``x / 0.0`` fails the query with DIVIDE_BY_ZERO) a zero-norm vector's
+    cosine is NULL, and brute-force top-k ranks it last instead of
+    failing; a nonzero cosine keeps the bits of the plain division."""
+    z = spark.createDataFrame([([0.0, 0.0], [1.0, 2.0]),
+                               ([0.3, 0.1], [1.0, 2.0])],
+                              "a array<double>, b array<double>")
+    plain = "tsq_dot(a, b) / (sqrt(tsq_dot(a, a)) * sqrt(tsq_dot(b, b)))"
+    rows = z.select(similarity.cosine(F.col("a"), F.col("b")).alias("c"),
+                    F.when(F.col("a")[0] != 0, F.expr(plain)).alias("p")
+                    ).collect()
+    assert rows[0].c is None
+    assert rows[1].c.hex() == rows[1].p.hex()
+    emb = spark.createDataFrame([(0, [0.0, 0.0]), (1, [1.0, 2.0])],
+                                "vec_id long, embedding array<double>")
+    q = spark.createDataFrame([(9, [1.0, 2.0])],
+                              "query_id long, query_vec array<double>")
+    top = similarity.brute_force_topk(emb, q, k=2).orderBy("rank").collect()
+    assert [(r.vec_id, r.cos_sim is None) for r in top] == [(1, False),
+                                                            (0, True)]
 
 
 def test_lsh_topk_subset_of_bucket(spark, sf_dir):

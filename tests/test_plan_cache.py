@@ -141,7 +141,11 @@ def _three_files(spark, tmp_path) -> str:
 
 def _staged(sc, group: str, action):
     """``action()`` under job group ``group``: its result, the input
-    records of the stages that ran, and the stages Spark skipped."""
+    records of the stages that ran, and the number of stages Spark
+    skipped.  The skip count is read off the job records: once the status
+    store holds more than ``spark.ui.retainedStages`` stages it evicts the
+    SKIPPED ones first, however new.  Completed stages go oldest first, so
+    this group's are still there; the job records' counts check that."""
     sc.setJobGroup(group, group)
     try:
         out = action()
@@ -149,13 +153,15 @@ def _staged(sc, group: str, action):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    stages = [store.lastStageAttempt(sid)
-              for jid in tracker.getJobIdsForGroup(group)
-              for sid in tracker.getJobInfo(jid).stageIds]
-    scanned = sum(st.inputRecords() for st in stages
-                  if st.status().toString() == "COMPLETE")
-    skipped = [st for st in stages if st.status().toString() == "SKIPPED"]
-    return out, scanned, skipped
+    ids = tracker.getJobIdsForGroup(group)
+    jobs = [store.job(jid) for jid in ids]
+    held = [store.lastStageAttempt(sid) for jid in ids
+            for sid in tracker.getJobInfo(jid).stageIds
+            if tracker.getStageInfo(sid) is not None]
+    done = [st for st in held if st.status().toString() == "COMPLETE"]
+    assert len(done) == sum(job.numCompletedStages() for job in jobs)
+    scanned = sum(st.inputRecords() for st in done)
+    return out, scanned, sum(job.numSkippedStages() for job in jobs)
 
 
 def test_plan_cache_hit_skips_scan_stages(spark, tmp_path):

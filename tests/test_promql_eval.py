@@ -701,6 +701,25 @@ def test_nan_inf_production_mode_agrees(spark):
                 assert a[k] == pytest.approx(b[k], rel=1e-12), (q, k)
 
 
+def test_exact_aggregations_one_plan_in_both_modes(spark):
+    """count/group/min/max are exact, so det mode runs production mode's
+    native aggregation: the optimized plans are equal once expression ids
+    are masked.  sum reassociates and still folds in det mode only."""
+    from thanos_parquet_gateway_spark.promql import PromQLEngine
+    samples = make_samples(spark, BASIC)
+    det, prod = (PromQLEngine(samples, lookback_ms=300_000,
+                              deterministic=d) for d in (True, False))
+
+    def plan(eng, q):
+        qe = eng.query_instant(q, 25 * S).df._jdf.queryExecution()
+        return re.sub(r"#\d+L?", "#", qe.optimizedPlan().toString())
+
+    for op in ("count", "group", "min", "max"):
+        q = f"{op} by (job) (m)"
+        assert plan(det, q) == plan(prod, q), q
+    assert plan(det, "sum by (job) (m)") != plan(prod, "sum by (job) (m)")
+
+
 def test_round_to_zero_is_nan_everywhere(spark):
     """round(v, 0): upstream funcRound computes 1/0 = +Inf in Go float math
     and every sample becomes NaN — a valid (if odd) query that must not

@@ -30,16 +30,33 @@ _PARAMS = [p if os.path.basename(p) in _SMOKE
            for p in _FILES]
 
 
-@pytest.mark.parametrize("path", _PARAMS,
-                         ids=[os.path.basename(p) for p in _FILES])
-def test_promqltest_corpus(spark, path):
+# Served-mode slice: the same files run with deterministic=False, the
+# native aggregation the server runs, which must meet the same upstream
+# semantics.  These pin cross-series aggregation, quantile's NaN-first
+# rank order included.
+_SERVED = ["gen_nan_agg.test", "agg_edges.test", "gen_agg_range.test"]
+
+
+def _run_file(spark, path, deterministic=True):
     from thanos_parquet_gateway_spark.promql import PromQLEngine
 
     with open(path) as f:
         script = parse_test(f.read())
     assert script.evals, f"no eval cases parsed from {path}"
-    failures = run_script(spark, script, make_samples, PromQLEngine)
+    failures = run_script(spark, script, make_samples, PromQLEngine,
+                          deterministic=deterministic)
     assert not failures, f"{len(failures)} failures:\n" + "\n".join(failures)
+
+
+@pytest.mark.parametrize("path", _PARAMS,
+                         ids=[os.path.basename(p) for p in _FILES])
+def test_promqltest_corpus(spark, path):
+    _run_file(spark, path)
+
+
+@pytest.mark.parametrize("name", _SERVED)
+def test_promqltest_served_mode(spark, name):
+    _run_file(spark, os.path.join(_DIR, name), deterministic=False)
 
 
 def test_series_spec_brace_in_quoted_string():

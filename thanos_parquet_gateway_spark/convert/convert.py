@@ -61,8 +61,9 @@ def _sorted_partitioned_write(df: DataFrame, out_path: str,
     parquet writer sees rows already clustered by (stream, date) and does
     NOT inject its own partition sort (which would destroy the (__name__,
     series_hash, ts) page ordering); zstd-compressed pages, ~1M-row row
-    groups x 6 per shard (= the 6M default maxRecordsPerFile), bloom
-    filters on the two lookup keys.  parquet.block.size is bytes in Spark:
+    groups x 6 per shard (= the 6M default maxRecordsPerFile), a bloom
+    filter on ``__name__`` (no query predicate tests ``series_hash``
+    equality, so it carries none).  parquet.block.size is bytes in Spark:
     128 MiB aligns row-group boundaries with maxPartitionBytes so a scan
     task reads whole row groups at 100 TB."""
     (df.repartitionByRange("stream", "date", "__name__", "series_hash")
@@ -72,7 +73,6 @@ def _sorted_partitioned_write(df: DataFrame, out_path: str,
        .option("compression", "zstd")
        .option("parquet.block.size", str(128 * 1024 * 1024))
        .option("parquet.bloom.filter.enabled#__name__", "true")
-       .option("parquet.bloom.filter.enabled#series_hash", "true")
        .partitionBy("stream", "date")
        .parquet(out_path))
 

@@ -8,11 +8,16 @@ with Spark's higher-order functions (JVM-side, codegen'd — no Python):
 
     array_sort(collect_list(struct(order, value)))  →  aggregate(arr, 0.0, +)
 
-Used in two places:
-- per-(series, step) windows (rate family, *_over_time): arrays are bounded
-  by samples-per-window, so this is also the *scalable* plan at 100TB.
-- cross-series instant aggregations in ``deterministic=True`` mode (oracle
-  comparisons); production mode uses native partial aggregation instead.
+Aggregations follow one rule, across series and per (series, step)
+window alike: det mode (``deterministic=True``, the oracle comparisons)
+folds the ops in ``REASSOC`` (and their ``_over_time`` forms), whose native
+aggregate reassociates float addition; production mode runs them natively.
+Exact ops (``count``, ``group``, ``min``, ``max`` and the window
+selections) run natively in both modes.  The rank statistics (cross-series
+``quantile``, ``quantile_over_time``, ``mad_over_time``) fold through
+``fold_quantile`` in both modes, which sorts NaN first as upstream does
+(Spark's ``percentile()`` sorts it last).  Window arrays are bounded by
+samples-per-window, so a window fold is also the *scalable* plan at 100TB.
 """
 
 from __future__ import annotations
@@ -21,6 +26,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 D = "double"
+
+# aggregation ops whose native form reassociates float addition: det mode
+# folds these (and their ``_over_time`` forms), production mode does not
+REASSOC = frozenset(("sum", "avg", "stddev", "stdvar"))
 
 
 def sorted_pairs(order_col: Column, value_col: Column) -> Column:

@@ -49,8 +49,15 @@ def norm(a: Column | str) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def _cos(dot_ab: Column, norm_a: Column, norm_b: Column) -> Column:
+    """``dot_ab / (norm_a * norm_b)``, NULL when a norm is zero: try_divide
+    gives NULL on a zero divisor in ANSI mode too, where ``/`` would fail
+    the query with DIVIDE_BY_ZERO.  Any nonzero divisor divides as ``/``."""
+    return F.try_divide(dot_ab, norm_a * norm_b)
+
+
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    return _cos(dot(a, b), norm(a), norm(b))
 
 
 def _topk_per_query(scored: DataFrame, k: int, order_col: str, *,
@@ -131,8 +138,8 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     scored = j.select(
         F.col(query_id_col).alias("query_id"),
         F.col(id_col).alias("vec_id"),
-        (dot(vec_col, query_vec_col)
-         / (F.col("__norm") * F.col("__qnorm"))).alias("cos_sim"))
+        _cos(dot(vec_col, query_vec_col),
+             F.col("__norm"), F.col("__qnorm")).alias("cos_sim"))
     return _topk_per_query(scored, k, "cos_sim", descending=True,
                            payload_cols=("cos_sim",))
 
@@ -169,8 +176,8 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame,
     scored = j.select(
         F.col(query_id_col).alias("query_id"),
         F.col(id_col).alias("vec_id"),
-        (dot(vec_col, query_vec_col)
-         / (F.col("__norm") * F.col("__qnorm"))).alias("cos_sim"))
+        _cos(dot(vec_col, query_vec_col),
+             F.col("__norm"), F.col("__qnorm")).alias("cos_sim"))
     return _topk_per_query(scored, k, "cos_sim", descending=True,
                            payload_cols=("cos_sim",))
 
@@ -585,8 +592,8 @@ def semantic_dedup(embeddings: DataFrame, k_clusters: int = 8,
                         F.col("v").alias("vb"), F.col("__n").alias("__nb"))
     drops = (a.join(b, "cell")
              .filter(F.col("id_a") < F.col("id_b"))
-             .filter((dot(F.col("va"), F.col("vb"))
-                      / (F.col("__na") * F.col("__nb"))) >= threshold)
+             .filter(_cos(dot(F.col("va"), F.col("vb")),
+                          F.col("__na"), F.col("__nb")) >= threshold)
              .select(F.col("id_b").alias("vec_id"))
              .distinct()
              .withColumn("__drop", F.lit(True)))
@@ -671,7 +678,7 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
                       F.col("__n").alias("__nb"))
         pairs = ids.join(av, "id_a").join(bv, "id_b")
     return (pairs.withColumn("cos_sim",
-                             dot("va", "vb")
-                             / (F.col("__na") * F.col("__nb")))
+                             _cos(dot("va", "vb"),
+                                  F.col("__na"), F.col("__nb")))
             .filter(F.col("cos_sim") >= threshold)
             .select("id_a", "id_b", "cos_sim"))

@@ -157,19 +157,6 @@ def _nan_to_null(c: Column) -> Column:
     return F.when(F.isnan(c), _lit(None).cast("double")).otherwise(c)
 
 
-def _quantile_agg_expr(q: float) -> Column:
-    """quantile aggregation on the fast path: Spark's percentile() rejects
-    φ outside [0,1], so mirror upstream quantile()'s guards (NaN φ → NaN,
-    φ<0 → -Inf, φ>1 → +Inf) before reaching for it."""
-    if math.isnan(q):
-        return F.first(NAN())
-    if q < 0:
-        return F.first(_lit(float("-inf")))
-    if q > 1:
-        return F.first(_lit(float("inf")))
-    return F.percentile(F.col("value"), _lit(q))
-
-
 def hgroup(df: DataFrame, sig_col: str, *aggs,
            extra_keys: tuple = ("t",), labels: str | None = None) -> DataFrame:
     """groupBy keyed on (extra_keys, xxhash64(sig), sig) — the reference's
@@ -964,33 +951,24 @@ class Compiler:
                 return out_df
             return out_df.unionByName(hist_part, allowMissingColumns=True)
 
-        if self.p.deterministic or (param_df is not None
-                                    and agg.op == "quantile"):
-            # per-step quantile params always take the fold path: Spark's
-            # percentile() needs a foldable fraction, the fold takes any
-            # Column
+        if agg.op == "quantile" or (self.p.deterministic
+                                    and agg.op in folds.REASSOC):
+            # the rank rule (NaN first, as upstream) folds in both modes;
+            # det mode also folds the float sums that reassociate
             extra = ([F.first("__param").alias("__param")]
                      if param_df is not None else [])
             g = hgroup(df, "gsig",
                        folds.sorted_pairs(F.col("sig"), F.col("value")).alias("arr"),
                        *extra, labels="labels")
             arr = F.col("arr")
-            vals = folds.values_of(arr)
-            non_nan = F.filter(vals, lambda v: ~F.isnan(v))
-            qparam = (F.col("__param") if param_df is not None
-                      else _lit(float(param)) if param is not None
-                      else _lit(0.0))
-            val = {
-                "sum": lambda: folds.fold_sum(arr),
-                "avg": lambda: folds.fold_avg(arr),
-                "count": lambda: F.size(arr).cast("double"),
-                "group": lambda: _lit(1.0),
-                "min": lambda: F.coalesce(F.array_min(non_nan), NAN()),
-                "max": lambda: F.coalesce(F.array_max(non_nan), NAN()),
-                "stddev": lambda: folds.fold_stddev_pop(arr),
-                "stdvar": lambda: folds.fold_var_pop(arr),
-                "quantile": lambda: folds.fold_quantile(arr, qparam),
-            }[agg.op]()
+            if agg.op == "quantile":
+                val = folds.fold_quantile(
+                    arr, F.col("__param") if param_df is not None
+                    else _lit(float(param)))
+            else:
+                val = {"sum": folds.fold_sum, "avg": folds.fold_avg,
+                       "stddev": folds.fold_stddev_pop,
+                       "stdvar": folds.fold_var_pop}[agg.op](arr)
             out = g.select("t", F.col("gsig").alias("sig"), "labels",
                            _lit(None).cast("long").alias("sample_ts"),
                            val.alias("value"))
@@ -1006,8 +984,6 @@ class Compiler:
             "max": F.coalesce(F.max(nanif), F.first(NAN())),
             "stddev": F.coalesce(F.stddev_pop("value"), F.first(NAN())),
             "stdvar": F.coalesce(F.var_pop("value"), F.first(NAN())),
-            "quantile": _quantile_agg_expr(
-                float(param) if param is not None else 0.5),
         }
         out = (hgroup(df, "gsig",
                       exprs[agg.op].alias("value"),

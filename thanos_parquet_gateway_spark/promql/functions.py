@@ -16,15 +16,17 @@ float rows inside the same aggregation):
   counts, first/last/min/max selections, irate/idelta's last pair and
   resets/changes' transition counts are exact this way and run so in both
   modes; last/first_over_time take a histogram off the window's flagged
-  last/first row; the float sums (sum/avg/stddev/stdvar_over_time, rate's
-  reset correction, deriv/predict_linear) reassociate, so they run
-  natively only in production mode (rate's det reset sum folds only the
-  reset pairs);
+  last/first row; the float sums reassociate, so they run natively only
+  in production mode: the ``folds.REASSOC`` ops' ``_over_time`` forms (the
+  rule cross-series aggregation follows too), rate's reset correction
+  (the det sum folds only the reset pairs) and deriv/predict_linear;
 - a fold over the *sorted* per-(series, step) array with Spark
   higher-order functions, bounded by samples-per-window: the deterministic
   (oracle) mode's order-stable float sums, the rank statistics
-  (quantile/mad_over_time), ts_of_max/min's last-tie rule, smoothing, and
-  sum/avg_over_time's bucket-wise add of a window's histogram rows.
+  (quantile/mad_over_time, in both modes through ``folds.fold_quantile``,
+  the one quantile cross-series ``quantile`` runs too), ts_of_max/min's
+  last-tie rule, smoothing, and sum/avg_over_time's bucket-wise add of a
+  window's histogram rows.
 """
 
 from __future__ import annotations
@@ -249,13 +251,6 @@ _OVER_TIME_NATIVE = {
 }
 
 
-# the entries above whose native form reassociates float addition: det mode
-# keeps their order-stable folds; every other entry is an exact selection
-# or count and runs natively in both modes
-_OVER_TIME_REASSOC = frozenset(("sum_over_time", "avg_over_time",
-                                "stddev_over_time", "stdvar_over_time"))
-
-
 def _fold_ts_of(arr: Column, mode: str) -> Column:
     """Experimental ts_of_max/min_over_time (public Prometheus 3.x): the
     timestamp, in SECONDS, of the window's extreme sample.  Extremes update
@@ -348,18 +343,18 @@ def _over_time(c: Compiler, call: A.Call) -> InstantVector:
         aggs, val = None, folds.fold_quantile(F.col("arr"), _lit(q))
     else:
         rv = _range_arg(c, call, 0)
-        if (fn in _OVER_TIME_NATIVE
-                and not (c.p.deterministic and fn in _OVER_TIME_REASSOC)):
+        if fn in _OVER_TIME_NATIVE and not (
+                c.p.deterministic
+                and fn.removesuffix("_over_time") in folds.REASSOC):
             # the window fold is a plain aggregation — compile it as native
             # (mostly codegen HashAggregate) aggregate functions with
             # map-side partial aggregation, instead of shipping every
             # sample through a collect_list buffer to the reducer and
             # folding the sorted array there.  Exact selections/counts run
-            # this path in both modes; sum/avg/stddev/stdvar trade the
+            # this path in both modes; the folds.REASSOC ops trade the
             # order-stable Kahan fold for float-addition reassociation
-            # (run-to-run low-bit nondeterminism — the same trade the
-            # cross-series production aggregations make), so det mode
-            # keeps their folds.
+            # (run-to-run low-bit nondeterminism), so det mode keeps
+            # their folds.
             native = _OVER_TIME_NATIVE[fn]
             aggs, val = (lambda m: native(m(F.col("value")))), F.col("__v")
         else:
