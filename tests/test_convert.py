@@ -376,6 +376,32 @@ def test_cli_convert_incremental_and_retention(spark, sf_dir, tmp_path):
     assert glob.glob(f"{dst}/stream=0/date=*") == []
 
 
+def test_series_prunes_day_partitions(spark, tmp_path):
+    """/series and the Series export over one day of a ten-day converted
+    table scan only that day's files, like a PromQL selector does."""
+    from thanos_parquet_gateway_spark.api.http import scan_stats
+    from thanos_parquet_gateway_spark.promql import PromQLEngine
+    from tests.conftest import make_samples
+
+    day, t0 = 86_400_000, 1704067200000  # 2024-01-01
+    rows = [({"__name__": "m", "job": j}, t0 + d * day + day // 2, float(d))
+            for d in range(10) for j in ("j1", "j2")]
+    out = str(tmp_path / "table")
+    convert_samples(make_samples(spark, rows), out)
+    day_files = len(glob.glob(f"{out}/stream=0/date=2024-01-03/*.parquet"))
+    assert 0 < day_files < len(glob.glob(f"{out}/stream=0/date=*/*.parquet"))
+    eng = PromQLEngine(spark.read.parquet(out))
+    start, end = t0 + 2 * day, t0 + 3 * day - 1
+    for samples in (False, True):
+        df = eng.series(['m{job="j1"}'], start, end, samples=samples)
+        got = df.collect()
+        assert [dict(r["labels"]) for r in got] == [
+            {"__name__": "m", "job": "j1"}]
+        if samples:
+            assert [s["value"] for s in got[0]["samples"]] == [2.0]
+        assert scan_stats(df)["filesScanned"] == day_files
+
+
 def test_multistream_convert_prune_decorate(spark, sf_dir, tmp_path):
     """Multi-stream mode end-to-end (reference locate/discover.go:125-305):
     two streams with distinct external labels converted into one layout; a

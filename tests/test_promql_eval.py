@@ -306,6 +306,23 @@ def test_subquery_max_over_time(spark):
     assert r == {frozenset({("j", "a")}): 5.0}
 
 
+def test_subquery_annotations_surface(spark):
+    """What a subquery's body raises surfaces like the body alone: a
+    static warning and a data-dependent probe."""
+    rows = (counter("m", {"j": "a"}, 0, 10 * S, [1, 5, 2, 4, 3])
+            + [({"__name__": "m", "j": "h"}, 30 * S,
+                {"hist": (1, 1.0, [(1.0, 1)])})])
+    eng = eng_for(spark, rows)
+    warn = ("warn", "quantile value should be between 0 and 1, got 2")
+    assert warn in eng.query_instant("quantile(2, m)", 40 * S) \
+        .all_annotations()
+    res = eng.query_instant("max_over_time(quantile(2, m)[40s:10s])", 40 * S)
+    assert warn in res.all_annotations()
+    info = ("info", "ignored histogram in max aggregation")
+    res = eng.query_instant("max_over_time(max(m)[40s:10s])", 40 * S)
+    assert info in res.all_annotations()
+
+
 def test_math_functions(spark):
     rows = [({"__name__": "v", "g": "1"}, 0, -4.0)]
     eng = eng_for(spark, rows)

@@ -33,8 +33,9 @@ _PARAMS = [p if os.path.basename(p) in _SMOKE
 # Served-mode slice: the same files run with deterministic=False, the
 # native aggregation the server runs, which must meet the same upstream
 # semantics.  These pin cross-series aggregation, quantile's NaN-first
-# rank order included.
-_SERVED = ["gen_nan_agg.test", "agg_edges.test", "gen_agg_range.test"]
+# rank order included, and subqueries (nested, and under @).
+_SERVED = ["gen_nan_agg.test", "agg_edges.test", "gen_agg_range.test",
+           "gen_nested_subq.test", "at_subquery.test"]
 
 
 def _run_file(spark, path, deterministic=True):

@@ -145,10 +145,10 @@ def test_heterogeneous_stream_labels(spark):
 
 
 def test_unconfigured_stream_value_falls_through(spark):
-    """A stream value absent from the streams dict: its rows must be matched
-    by the DATA label (missing descriptor == no external labels, the same
-    fallthrough stream_decoration applies) — not silently excluded (round-3
-    advice, compiler.py mixed-stream branch)."""
+    """The streams dict is taken to cover the stream column's domain: a
+    stream value absent from it is excluded by a matcher on a stream label
+    in the mixed branch (a stream configured without the label), and goes
+    with the configured streams when the matcher matches none of them."""
     from thanos_parquet_gateway_spark.promql.engine import PromQLEngine
     rows = [({"__name__": "m", "job": "ja"}, 10 * S, 1.0),            # stream a
             ({"__name__": "m", "job": "jc", "zone": "eu"}, 10 * S, 2.0),  # c
@@ -156,37 +156,68 @@ def test_unconfigured_stream_value_falls_through(spark):
     df = make_samples(spark, rows).withColumn(
         "stream", F.when(F.col("value") == 1.0, "a")
                    .when(F.col("value") == 2.0, "c").otherwise("b"))
-    # mixed branch (stream c configured without the label): "b" is not in the
-    # dict at all and must fall through to the data predicate when the
-    # streams dict is declared open (complete_streams=False)
-    eng = PromQLEngine(df, lookback_ms=60 * S, deterministic=True,
-                       streams={"a": {"zone": "us"}, "c": {}},
-                       complete_streams=False)
-    got = _vec(eng.query_instant('m{zone="eu"}', 20 * S))
-    assert got == {
-        (("__name__", "m"), ("job", "jc"), ("zone", "eu")): 2.0,
-        (("__name__", "m"), ("job", "jx"), ("zone", "eu")): 3.0,
-    }
-    # under the completeness assertion the SAME dict shape excludes the
-    # unconfigured value — consistent with the pure-IN branch below (round-4
-    # advice: treatment must depend on the flag, not on dict shape)
+    # mixed branch: stream c is configured without the label, so its data
+    # label matches; "b" is not in the dict and is excluded
     eng = PromQLEngine(df, lookback_ms=60 * S, deterministic=True,
                        streams={"a": {"zone": "us"}, "c": {}})
     got = _vec(eng.query_instant('m{zone="eu"}', 20 * S))
     assert got == {(("__name__", "m"), ("job", "jc"), ("zone", "eu")): 2.0}
-    # all-carrying branch: with complete_streams=False the unconfigured
-    # stream keeps its data label instead of being elided away with the rest
-    eng = PromQLEngine(df, lookback_ms=60 * S, deterministic=True,
-                       streams={"a": {"zone": "us"}},
-                       complete_streams=False)
-    got = _vec(eng.query_instant('m{zone="eu"}', 20 * S))
-    assert (("__name__", "m"), ("job", "jx"), ("zone", "eu")) in got
-    # default complete_streams=True keeps the pure-IN elision: domain is
-    # asserted to be covered, so "b" rows are excluded with the non-matching
-    # configured stream
+    # pure-IN elision: "b" rows go with the non-matching configured stream
     eng = PromQLEngine(df, lookback_ms=60 * S, deterministic=True,
                        streams={"a": {"zone": "us"}})
     assert _vec(eng.query_instant('m{zone="eu"}', 20 * S)) == {}
+
+
+def _two_streams(spark, ext_labels=None):
+    """m{job="j1"} in stream "a" (zone=us) and m{job="j2"} in stream "b"
+    (zone=eu), one sample each at 10s, served by one QueryServer."""
+    from thanos_parquet_gateway_spark.api import QueryServer
+    rows = [({"__name__": "m", "job": "j1"}, 10 * S, 1.0),
+            ({"__name__": "m", "job": "j2"}, 10 * S, 2.0)]
+    df = make_samples(spark, rows).withColumn(
+        "stream", F.when(F.col("value") == 1.0, "a").otherwise("b"))
+    return QueryServer(df, streams={"a": {"zone": "us"}, "b": {"zone": "eu"}},
+                       ext_labels=ext_labels, lookback_ms=60 * S,
+                       deterministic=True)
+
+
+def test_subquery_matches_stream_labels(spark):
+    """A subquery selects series exactly as the plain selector does: a
+    matcher on a stream label picks that stream, and results carry the
+    stream's labels."""
+    eng = _two_streams(spark)._api(None).engine
+    us = {(("__name__", "m"), ("job", "j1"), ("zone", "us")): 1.0}
+    assert _vec(eng.query_instant('m{zone="us"}', 20 * S)) == us
+    assert _vec(eng.query_instant(
+        'max_over_time(m{zone="us"}[30s:5s])', 20 * S)) == {
+        (("job", "j1"), ("zone", "us")): 1.0}
+    got = _vec(eng.query_instant("max_over_time(m[30s:5s])", 20 * S))
+    assert got == {(("job", "j1"), ("zone", "us")): 1.0,
+                   (("job", "j2"), ("zone", "eu")): 2.0}
+
+
+def test_external_labels_under_stream_descriptors(spark):
+    """Each stream's external labels are its descriptor over the
+    process-wide ones: matching, decoration, /series, /labels and Info
+    all read that one set."""
+    srv = _two_streams(spark, ext_labels={"region": "r1", "zone": "z0"})
+    eng = srv._api(None).engine
+    us = {(("__name__", "m"), ("job", "j1"), ("region", "r1"),
+           ("zone", "us")): 1.0}
+    assert _vec(eng.query_instant('m{zone="us"}', 20 * S)) == us
+    assert _vec(eng.query_instant('m{zone="z0"}', 20 * S)) == {}
+    assert len(_vec(eng.query_instant('m{region="r1"}', 20 * S))) == 2
+    series, _ = srv._api(None).series(["m"], 0, 20 * S)
+    assert sorted(sorted(s.items()) for s in series) == [
+        [("__name__", "m"), ("job", "j1"), ("region", "r1"), ("zone", "us")],
+        [("__name__", "m"), ("job", "j2"), ("region", "r1"), ("zone", "eu")]]
+    names, _ = srv.label_names(None, 0, 20 * S)
+    assert names == ["__name__", "job", "region", "zone"]
+    vals, _ = srv.label_values("zone", ['m{zone="us"}'], 0, 20 * S)
+    assert vals == ["us"]
+    info = srv.info()
+    assert info["labelSets"] == [{"region": "r1", "zone": "us"},
+                                 {"region": "r1", "zone": "eu"}]
 
 
 def test_api_cache_is_lru_bounded(spark):

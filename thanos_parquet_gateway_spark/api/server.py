@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from thanos_parquet_gateway_spark.api.http import QueryAPI
 from thanos_parquet_gateway_spark.promql.engine import LRU, PromQLEngine
+from thanos_parquet_gateway_spark.schema import label_map, stream_labels
 
 
 class QueryServer:
@@ -97,20 +98,16 @@ class QueryServer:
         if self.streams and "stream" in df.columns:
             per = (df.groupBy("stream")
                    .agg(F.min("ts").alias("mint"), F.max("ts").alias("maxt")))
-            overlay = F.expr("map()").cast("map<string,string>")
-            for s, ls in sorted(self.streams.items()):
-                ext = (F.create_map(*[F.lit(x) for kv in sorted(ls.items())
-                                      for x in kv]) if ls else
-                       F.expr("map()").cast("map<string,string>"))
-                overlay = F.when(F.col("stream") == s, ext).otherwise(overlay)
+            overlay = label_map({})
+            for s, ls in sorted(stream_labels(self.ext_labels,
+                                              self.streams).items()):
+                overlay = F.when(F.col("stream") == s,
+                                 label_map(ls)).otherwise(overlay)
             return per.select("stream", overlay.alias("labels"),
                               "mint", "maxt").orderBy("stream")
-        ext = self.ext_labels or {}
-        lbls = (F.create_map(*[F.lit(x) for kv in sorted(ext.items())
-                               for x in kv]) if ext else
-                F.expr("map()").cast("map<string,string>"))
         return (df.agg(F.min("ts").alias("mint"), F.max("ts").alias("maxt"))
-                .select(F.lit("0").alias("stream"), lbls.alias("labels"),
+                .select(F.lit("0").alias("stream"),
+                        label_map(self.ext_labels).alias("labels"),
                         "mint", "maxt"))
 
     def info(self) -> dict:

@@ -16,7 +16,9 @@ samples-per-window, so the plan scales with data, not with query range.
 
 from __future__ import annotations
 
+import copy
 import math
+from dataclasses import replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,7 +39,9 @@ from thanos_parquet_gateway_spark.schema import (
     drop_labels,
     keep_labels,
     label,
+    label_map,
     labels_from_sig,
+    utc_day,
 )
 
 def fmt_g(v: float) -> str:
@@ -193,6 +197,12 @@ def _matcher_matches(m: A.Matcher, v: str) -> bool:
             "!~": _re.fullmatch(m.value, v) is None}[m.op]
 
 
+def overlay_labels(ls: dict[str, str]) -> Column:
+    """labels with the external label set ``ls`` overlaid: the names in
+    ``ls`` shadow data labels of the same name."""
+    return F.map_concat(drop_labels("labels", sorted(ls)), label_map(ls))
+
+
 def stream_decoration(streams: dict[str, dict[str, str]]) -> Column:
     """labels → labels overlaid with the owning stream's external labels.
     A driver-side CASE over the (tiny) stream set — stays in codegen, no
@@ -205,12 +215,7 @@ def stream_decoration(streams: dict[str, dict[str, str]]) -> Column:
     stream descriptor, never global)."""
     out = F.col("labels")
     for s, ls in sorted(streams.items()):
-        if ls:
-            ext = F.create_map(*[_lit(x) for kv in sorted(ls.items())
-                                 for x in kv])
-            dec = F.map_concat(drop_labels("labels", sorted(ls)), ext)
-        else:
-            dec = F.col("labels")
+        dec = overlay_labels(ls) if ls else F.col("labels")
         out = F.when(F.col("stream") == s, dec).otherwise(out)
     return out
 
@@ -222,24 +227,20 @@ class PromQLCompileError(ValueError):
 class Compiler:
     def __init__(self, samples: DataFrame, params: EvalParams,
                  ext_labels: dict[str, str] | None = None,
-                 streams: dict[str, dict[str, str]] | None = None,
-                 complete_streams: bool = True):
-        """``ext_labels``: one external label set overlaid on everything
-        (reference OverrideExtLabels).  ``streams``: multi-stream mode —
-        maps the ``stream`` partition-column value to that stream's external
-        label set (reference locate/discover.go:125-305, schema/block.go:37-76);
-        matchers on stream labels compile to ``stream IN (...)`` so Catalyst
-        prunes whole stream partitions.  ``complete_streams``: the streams
-        dict covers the stream column's whole domain (always true for
-        convert-time sidecars, which are written from the actual streams);
-        pass False for a hand-built partial dict so stream values missing
-        from it fall through to data-label matching instead of being elided
-        with the rest (costs the pure-IN partition-prune shortcut)."""
+                 streams: dict[str, dict[str, str]] | None = None):
+        """``streams``: multi-stream mode — maps each value of the
+        ``stream`` partition column to that stream's whole external label
+        set, the process-wide ``ext_labels`` included
+        (schema.stream_labels; reference locate/discover.go:125-305,
+        schema/block.go:37-76).  The dict covers the column's domain:
+        matchers on stream labels compile to ``stream IN (...)`` so
+        Catalyst prunes whole stream partitions.  ``ext_labels`` is the one
+        external label set overlaid on everything when there are no
+        streams (reference OverrideExtLabels)."""
         self.samples = samples
         self.p = params
-        self.ext_labels = ext_labels or {}
         self.streams = streams or {}
-        self.complete_streams = complete_streams
+        self.ext_labels = {} if self.streams else ext_labels or {}
         if self.streams and "stream" not in samples.columns:
             raise PromQLCompileError(
                 "multi-stream mode requires a 'stream' column in samples")
@@ -249,6 +250,8 @@ class Compiler:
                                     for k in ls})
         self.spark = samples.sparkSession
         self.step = max(params.step_ms, 1)
+        # A subquery's body compiles on a shallow copy of this compiler
+        # (_subquery), which shares the two lists below.
         # PromQL annotations (upstream util/annotations): (kind, message)
         # pairs collected at compile time, surfaced as the API's top-level
         # warnings / infos arrays.  kind ∈ {"warn", "info"}.
@@ -335,30 +338,21 @@ class Compiler:
                       if m.label in ls and not _matcher_matches(m, ls[m.label])]
             carrying = ext_ok + ext_no
             data_streams = [s for s in self.streams if s not in set(carrying)]
-            if self.complete_streams and not data_streams:
-                # descriptor set == stream domain (the convert-time sidecar
-                # contract): pure stream predicates, so Catalyst partition-
-                # prunes whole streams and an all-match matcher elides away
+            if not data_streams:
+                # every stream carries the label: pure stream predicates,
+                # so Catalyst partition-prunes whole streams and an
+                # all-match matcher elides away
                 if not ext_no:
                     return None
                 if not ext_ok:
                     return _lit(False)
                 return F.col("stream").isin(ext_ok)
             # Mixed: streams configured WITHOUT the label keep the data-label
-            # predicate.  Under complete_streams the descriptor set IS the
-            # stream domain, so an unconfigured stream value is excluded here
-            # exactly as in the pure-IN branch above (isin(data_streams));
-            # open-domain, any stream not carrying the label — configured
-            # without it, or absent from the dict entirely (missing
-            # descriptor ≡ no external labels, the same fallthrough
-            # stream_decoration applies) — falls through.
-            # coalesce: a NULL stream value is "not carrying", not excluded.
-            if self.complete_streams:
-                not_carrying = F.coalesce(F.col("stream").isin(data_streams),
-                                          _lit(False))
-            else:
-                not_carrying = ~F.coalesce(F.col("stream").isin(carrying),
-                                           _lit(False))
+            # predicate; a stream value outside the dict (taken to cover the
+            # column) is excluded.  coalesce: a NULL stream value is
+            # excluded too, not NULL.
+            not_carrying = F.coalesce(F.col("stream").isin(data_streams),
+                                      _lit(False))
             cond = not_carrying & self._data_cond(m)
             if ext_ok:
                 cond = F.col("stream").isin(ext_ok) | cond
@@ -425,24 +419,18 @@ class Compiler:
         if "date" in df.columns:
             # converted layout (convert/convert.py): derive partition-column
             # predicates from the window so Catalyst prunes day partitions
-            # (the reference's block time-intersect, db/db.go:249-258)
-            import datetime as _dt
-            lo_d = _dt.datetime.fromtimestamp(max(lo, 0) / 1000,
-                                              _dt.timezone.utc).strftime("%Y-%m-%d")
-            hi_d = _dt.datetime.fromtimestamp(max(hi, 0) / 1000,
-                                              _dt.timezone.utc).strftime("%Y-%m-%d")
-            conds.append((F.col("date") >= lo_d) & (F.col("date") <= hi_d))
+            # (the reference's block time-intersect, db/db.go:249-258);
+            # lo is exclusive, so the first day is the one holding lo + 1
+            conds.append((F.col("date") >= utc_day(lo + 1))
+                         & (F.col("date") <= utc_day(hi)))
         acc = conds[0]
         for cnd in conds[1:]:
             acc = acc & cnd
         df = df.filter(acc)
-        if self.ext_labels:
-            ext = F.create_map(*[_lit(x) for kv in self.ext_labels.items()
-                                 for x in kv])
-            keep = drop_labels("labels", list(self.ext_labels))
-            df = df.withColumn("labels", F.map_concat(keep, ext))
         if self.streams:
             df = df.withColumn("labels", stream_decoration(self.streams))
+        elif self.ext_labels:
+            df = df.withColumn("labels", overlay_labels(self.ext_labels))
         ts_eff = F.col("ts") + _lit(vs.offset_ms) if vs.offset_ms else F.col("ts")
         cols = [canonical_sig("labels").alias("sig"),
                 F.col("labels"), ts_eff.alias("ts"), F.col("value")]
@@ -603,15 +591,14 @@ class Compiler:
             outer_start = outer_end = self._resolve_at(sq.at_ms) - sq.offset_ms
         inner_start = int(math.ceil((outer_start - sq.range_ms + 1) / sub_step)) * sub_step
         inner_end = outer_end
-        inner = Compiler(self.samples,
-                         EvalParams(inner_start, inner_end, sub_step,
-                                    p.lookback_ms, p.deterministic,
-                                    p.subquery_step_ms,
-                                    # inner @ start()/end() keep resolving
-                                    # against the top-level query range
-                                    at_start_ms=p.anchor_start_ms,
-                                    at_end_ms=p.anchor_end_ms),
-                         self.ext_labels)
+        # the body compiles on this compiler under its own grid: same
+        # samples, label sets, annotations and data probes; inner @
+        # start()/end() keep resolving against the top-level range
+        inner = copy.copy(self)
+        inner.p = replace(p, start_ms=inner_start, end_ms=inner_end,
+                          step_ms=sub_step, at_start_ms=p.anchor_start_ms,
+                          at_end_ms=p.anchor_end_ms)
+        inner.step = max(sub_step, 1)
         inner_res = inner.compile(sq.expr)
         if isinstance(inner_res, (float, ScalarV)):
             # upstream parser: "subquery is only allowed on instant vector"
@@ -652,8 +639,7 @@ class Compiler:
         elif has_grouping:
             gl = keep_labels("labels", list(grouping))
         else:
-            gl = F.map_from_arrays(F.array().cast("array<string>"),
-                                   F.array().cast("array<string>"))
+            gl = label_map({})
         return (iv.df.withColumn("glabels", gl)
                 .withColumn("gsig", canonical_sig(F.col("glabels"))))
 
@@ -998,8 +984,7 @@ class Compiler:
         return self.grid_df().select("t", _lit(v).cast("double").alias("value"))
 
     def _scalar_to_vector(self, s: ScalarV) -> InstantVector:
-        empty = F.map_from_arrays(F.array().cast("array<string>"),
-                                  F.array().cast("array<string>"))
+        empty = label_map({})
         df = s.df.select("t", canonical_sig(empty).alias("sig"),
                          empty.alias("labels"),
                          _lit(None).cast("long").alias("sample_ts"), "value")

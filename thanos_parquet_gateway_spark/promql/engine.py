@@ -15,6 +15,7 @@ from dataclasses import dataclass, replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from thanos_parquet_gateway_spark.promql import ast as A
 from thanos_parquet_gateway_spark.promql import parser as P
 from thanos_parquet_gateway_spark.promql.compiler import Compiler
 from thanos_parquet_gateway_spark.promql.values import (
@@ -25,10 +26,12 @@ from thanos_parquet_gateway_spark.promql.values import (
     StringV,
 )
 from thanos_parquet_gateway_spark.schema import (
-    canonical_sig,
     drop_labels,
     label,
+    label_map,
     series_hash,
+    stream_labels,
+    utc_day,
 )
 
 
@@ -132,16 +135,16 @@ class PromQLEngine:
                  replica_labels: list[str] | None = None,
                  ext_labels: dict[str, str] | None = None,
                  streams: dict[str, dict[str, str]] | None = None,
-                 complete_streams: bool = True,
                  label_stats: DataFrame | None = None):
         """``samples``: long-format samples table (schema.py).  ``replica_labels``
         are dropped and the data deduplicated by (series, ts) — the Spark
         equivalent of the reference's replica-label drop + hash dedup
         (reference db/db.go:124-128, db/shard.go:252-268).  ``streams`` maps
         the ``stream`` partition-column value to that stream's external label
-        set (multi-stream mode, reference locate/discover.go:125-305):
-        matchers on stream labels prune stream partitions, results are
-        decorated per stream."""
+        set (multi-stream mode, reference locate/discover.go:125-305) and
+        covers the column's domain: matchers on stream labels prune stream
+        partitions, results are decorated per stream.  A stream's labels
+        are its descriptor over ``ext_labels`` (schema.stream_labels)."""
         if "__name__" not in samples.columns:
             samples = samples.withColumn("__name__", label("labels", "__name__"))
         ext_rep = grp_of_stream = None
@@ -176,11 +179,8 @@ class PromQLEngine:
                 # the stream's external replica values join the winner
                 # key (lowest replica wins across streams too)
                 rep_ext = F.coalesce(
-                    F.element_at(
-                        F.create_map(*[F.lit(x)
-                                       for kv in sorted(ext_rep.items())
-                                       for x in kv]),
-                        F.col("stream").cast("string")),
+                    F.element_at(label_map(ext_rep),
+                                 F.col("stream").cast("string")),
                     F.lit(""))
                 rep = F.concat_ws("\x1f", rep, rep_ext)
             samples = (samples
@@ -194,11 +194,8 @@ class PromQLEngine:
                 samples = samples.withColumn(
                     "__extgrp",
                     F.coalesce(
-                        F.element_at(
-                            F.create_map(*[F.lit(x) for kv in
-                                           sorted(grp_of_stream.items())
-                                           for x in kv]),
-                            F.col("stream").cast("string")),
+                        F.element_at(label_map(grp_of_stream),
+                                     F.col("stream").cast("string")),
                         F.lit("")))
             if "series_hash" in samples.columns:
                 samples = samples.withColumn("series_hash",
@@ -232,8 +229,7 @@ class PromQLEngine:
         self.deterministic = deterministic
         self.subquery_step_ms = subquery_step_ms
         self.ext_labels = ext_labels
-        self.streams = streams
-        self.complete_streams = complete_streams
+        self.streams = stream_labels(ext_labels, streams)
         # Plan memo: a serving gateway asks for the SAME result at the same
         # parameters constantly (dashboard refresh, retried panels).  Every
         # API collect site collects a DataFrame taken from this one LRU
@@ -264,13 +260,17 @@ class PromQLEngine:
         self.label_stats = None if replica_labels else label_stats
 
     # ------------------------------------------------------------- queries
+    def _compiler(self, start_ms: int, end_ms: int,
+                  step_ms: int) -> Compiler:
+        return Compiler(self.samples,
+                        EvalParams(start_ms, end_ms, max(step_ms, 1),
+                                   self.lookback_ms, self.deterministic,
+                                   self.subquery_step_ms),
+                        self.ext_labels, self.streams)
+
     def _compile(self, q: str, start_ms: int, end_ms: int, step_ms: int):
         node = P.parse(q)
-        params = EvalParams(start_ms, end_ms, max(step_ms, 1),
-                            self.lookback_ms, self.deterministic,
-                            self.subquery_step_ms)
-        comp = Compiler(self.samples, params, self.ext_labels, self.streams,
-                        self.complete_streams)
+        comp = self._compiler(start_ms, end_ms, step_ms)
         return comp, comp.compile(node)
 
     def _plan_cached(self, key: tuple | None, build):
@@ -349,53 +349,24 @@ class PromQLEngine:
                            "vector", ann, probes)
 
     # ------------------------------------------- metadata APIs (A27-A31)
-    def _matched(self, match: list[str], start_ms: int, end_ms: int) -> DataFrame:
-        """Union of per-selector filtered samples within [start, end]
-        (reference /series multi-matcher union, api/http/query.go:567-846)."""
-        dfs = []
-        params = EvalParams(start_ms, end_ms, 1, self.lookback_ms)
-        comp = Compiler(self.samples, params, self.ext_labels, self.streams,
-                        self.complete_streams)
-        base = self.samples.filter(
-            (F.col("ts") >= start_ms) & (F.col("ts") <= end_ms))
-        from thanos_parquet_gateway_spark.sources.tables import (
-            pushable_ts_window,
-        )
-        raw_win = pushable_ts_window(base, start_ms, end_ms)
-        if raw_win is not None:  # raw-layout stats pruning for /series etc.
-            base = base.filter(raw_win)
+    def _selected(self, match: list[str], start_ms: int,
+                  end_ms: int) -> DataFrame:
+        """(sig, labels, ts, value[, hist]) rows of the ``match[]``
+        selectors within [start, end], unioned (reference /series
+        multi-matcher union, api/http/query.go:567-846).  Each selector
+        runs PromQL selection (Compiler._selector_base): its matchers,
+        time-window and day-partition pushdown and external-label
+        decoration.  An offset or @ in a selector is ignored."""
+        comp = self._compiler(start_ms, end_ms, 1)
+        out = None
         for q in match or ["{__name__=~\".+\"}"]:
-            node = P.parse(q)
-            sel = node
-            from thanos_parquet_gateway_spark.promql import ast as A
+            sel = P.parse(q)
             if isinstance(sel, A.MatrixSelector):
                 sel = sel.selector
             if not isinstance(sel, A.VectorSelector):
                 raise ValueError("series match[] must be a selector")
-            df = base
-            if sel.name:
-                df = df.filter(F.col("__name__") == sel.name)
-            for m in sel.matchers:
-                cond = comp._matcher_cond(m)
-                if cond is not None:
-                    df = df.filter(cond)
-            dfs.append(df)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        if self.streams:
-            from thanos_parquet_gateway_spark.promql.compiler import (
-                stream_decoration,
-            )
-            out = out.withColumn("labels", stream_decoration(self.streams))
-        elif self.ext_labels:
-            from thanos_parquet_gateway_spark.schema import drop_labels
-            ext = F.create_map(*[F.lit(x) for kv in self.ext_labels.items()
-                                 for x in kv])
-            out = out.withColumn(
-                "labels",
-                F.map_concat(drop_labels("labels", list(self.ext_labels)),
-                             ext))
+            df = comp._selector_base(replace(sel, offset_ms=0, at_ms=None), 1)
+            out = df if out is None else out.unionByName(df)
         return out
 
     def _metadata(self, kind: str, name, match: list[str] | None,
@@ -420,14 +391,12 @@ class PromQLEngine:
         analogue: bounded by series×window like a chunk run, assembled
         after the same shuffle a chunk materialization would need."""
         def build():
-            matched = self._matched(match, start_ms, end_ms)
-            sig = canonical_sig("labels").alias("sig")
+            matched = self._selected(match, start_ms, end_ms)
             if not samples:
-                return (matched.select(sig, "labels")
+                return (matched.select("sig", "labels")
                         .dropDuplicates(["sig"]).orderBy("sig"))
             extra = ["hist"] if "hist" in matched.columns else []
-            return (matched.select(sig, "labels", "ts", "value", *extra)
-                    .groupBy("sig")
+            return (matched.groupBy("sig")
                     .agg(F.first("labels").alias("labels"),
                          F.array_sort(F.collect_list(
                              F.struct("ts", "value", *extra)))
@@ -448,14 +417,9 @@ class PromQLEngine:
         return self.label_stats
 
     def _stats_in_range(self, start_ms: int, end_ms: int) -> DataFrame:
-        import datetime as _dt
-
-        def day(ms):
-            return _dt.datetime.fromtimestamp(
-                max(ms, 0) / 1000, _dt.timezone.utc).strftime("%Y-%m-%d")
-
         return self.label_stats.filter(
-            (F.col("date") >= day(start_ms)) & (F.col("date") <= day(end_ms)))
+            (F.col("date") >= utc_day(start_ms))
+            & (F.col("date") <= utc_day(end_ms)))
 
     def label_names(self, match: list[str] | None, start_ms: int, end_ms: int,
                     limit: int = 0, *, memo: bool = True) -> DataFrame:
@@ -467,7 +431,7 @@ class PromQLEngine:
                 return (self._stats_in_range(start_ms, end_ms)
                         .select(F.col("label").alias("name"))
                         .distinct().orderBy("name"))
-            return (self._matched(match or [], start_ms, end_ms)
+            return (self._selected(match, start_ms, end_ms)
                     .select(F.explode(F.map_keys("labels")).alias("name"))
                     .distinct().orderBy("name"))
         return self._metadata("label_names", None, match, start_ms, end_ms,
@@ -486,7 +450,7 @@ class PromQLEngine:
                         .filter(F.col("label") == name)
                         .select("value").filter(F.col("value") != "")
                         .distinct().orderBy("value"))
-            return (self._matched(match or [], start_ms, end_ms)
+            return (self._selected(match, start_ms, end_ms)
                     .select(label("labels", name).alias("value"))
                     .filter(F.col("value") != "")
                     .distinct().orderBy("value"))

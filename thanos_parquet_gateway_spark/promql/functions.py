@@ -60,6 +60,7 @@ from thanos_parquet_gateway_spark.schema import cached_lit as _lit
 from thanos_parquet_gateway_spark.schema import (
     canonical_sig,
     drop_labels,
+    label_map,
     labels_from_sig,
 )
 
@@ -846,12 +847,7 @@ def _absent(c: Compiler, call: A.Call, over_time: bool) -> InstantVector:
         if not isinstance(inner, InstantVector):
             raise PromQLCompileError("absent expects an instant vector")
         present = inner.df.select("t").distinct()
-    lbls = _absent_labels(call.args[0])
-    if lbls:
-        lmap = F.create_map(*[_lit(x) for kv in sorted(lbls.items()) for x in kv])
-    else:
-        lmap = F.map_from_arrays(F.array().cast("array<string>"),
-                                 F.array().cast("array<string>"))
+    lmap = label_map(_absent_labels(call.args[0]))
     out = (c.grid_df().join(present, "t", "left_anti")
            .select("t", canonical_sig(lmap).alias("sig"), lmap.alias("labels"),
                    _lit(None).cast("long").alias("sample_ts"),

@@ -169,3 +169,32 @@ def _keep_labels_cached(name: str, keys: tuple[str, ...]) -> Column:
     keys_arr = F.array(*[F.lit(k) for k in keys])
     return F.map_filter(F.col(name),
                         lambda k, _v: F.array_contains(keys_arr, k))
+
+
+def label_map(labels: dict[str, str]) -> Column:
+    """A constant label map, keys in sorted order; empty → a typed empty
+    map."""
+    if not labels:
+        return F.map_from_arrays(F.array().cast("array<string>"),
+                                 F.array().cast("array<string>"))
+    return F.create_map(*[cached_lit(x) for kv in sorted(labels.items())
+                          for x in kv])
+
+
+def stream_labels(ext_labels: dict[str, str] | None,
+                  streams: dict[str, dict[str, str]] | None
+                  ) -> dict[str, dict[str, str]]:
+    """Each stream's external label set: its descriptor over the
+    process-wide external labels, so a descriptor label wins (reference
+    schema/block.go:37-76).  The one precedence that matching, decoration,
+    metadata and Info all read."""
+    ext = ext_labels or {}
+    return {s: {**ext, **ls} for s, ls in (streams or {}).items()}
+
+
+def utc_day(ms: int) -> str:
+    """The ``date`` partition value (UTC day) holding epoch-millis ``ms``;
+    times before the epoch clamp to its first day."""
+    import datetime as _dt
+    return _dt.datetime.fromtimestamp(max(ms, 0) / 1000,
+                                      _dt.timezone.utc).strftime("%Y-%m-%d")

@@ -821,7 +821,7 @@ def tsdb_source_days(spark, src: str, streams: dict | None = None,
     two Prometheis with different external labels plan independently.
     ``discover_kwargs`` pass through (ext_label_matchers, min_age_ms);
     a precomputed ``streams`` dict (discover_streams) skips the walk."""
-    import datetime as _dt
+    from thanos_parquet_gateway_spark.schema import utc_day
     day_ms = 86_400_000
     rows = []
     if streams is None:
@@ -832,9 +832,7 @@ def tsdb_source_days(spark, src: str, streams: dict | None = None,
             mint, maxt = int(meta["minTime"]), int(meta["maxTime"])
             day = mint - mint % day_ms  # meta window is [mint, maxt)
             while day < maxt:
-                date = _dt.datetime.fromtimestamp(
-                    day / 1000, tz=_dt.timezone.utc).strftime("%Y-%m-%d")
-                rows.append((skey, date, max(mint, day),
+                rows.append((skey, utc_day(day), max(mint, day),
                              min(maxt - 1, day + day_ms - 1)))
                 day += day_ms
     df = spark.createDataFrame(

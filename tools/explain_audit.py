@@ -123,7 +123,8 @@ def main():
         results.append(False)
 
     # 2b. metadata scan (/series): raw-layout ts bounds must reach parquet
-    # stats there too (engine._matched pushable_ts_window)
+    # stats there too (Compiler._selector_base pushable_ts_window, the
+    # selection /series shares with PromQL)
     q2b = eng.series(["click"], EQ.R_START, EQ.T)
     results.append(check("series metadata scan", plan_of(q2b), [
         ("name filter pushed", r"PushedFilters: \[.*EqualTo\(event_type,click\)"),
