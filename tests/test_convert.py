@@ -479,6 +479,92 @@ def test_cli_query_instant_and_range(spark, sf_dir, tmp_path, capsys):
     assert out["status"] == "error"
 
 
+DAY, JAN1 = 86_400_000, 1704067200000  # 2024-01-01
+
+
+def _m(spark, job, day):
+    """One ``m{job=<job>}`` sample one second into ``day`` (days after
+    2024-01-01)."""
+    from tests.conftest import make_samples
+    return make_samples(spark, [({"__name__": "m", "job": job},
+                                 JAN1 + day * DAY + 1000, float(day))])
+
+
+def _metrics(data):
+    return sorted(sorted(r["metric"].items()) for r in data["result"])
+
+
+def test_incremental_convert_keeps_idle_stream(spark, tmp_path):
+    """A convert that writes only stream a's next day leaves stream b's
+    descriptor in place beside b's data: b's series still match and carry
+    its ``zone``, and a ``zone="us"`` matcher never lets b's rows through."""
+    from thanos_parquet_gateway_spark.api import QueryServer
+    from thanos_parquet_gateway_spark.convert import (
+        convert_streams,
+        read_stream_descriptors,
+    )
+
+    out = str(tmp_path / "table")
+    ext = {"a": {"zone": "us"}, "b": {"zone": "eu"}}
+    convert_streams({"a": _m(spark, "j1", 0), "b": _m(spark, "j2", 0)}, out,
+                    ext_labels=ext)
+    convert_streams({"a": _m(spark, "j1", 1)}, out,
+                    ext_labels={"a": ext["a"]})
+    streams = read_stream_descriptors(spark, out)
+    assert streams == ext
+    srv = QueryServer(spark.read.parquet(out), streams=streams,
+                      lookback_ms=2 * DAY)
+    t = JAN1 + DAY + 2000
+    assert _metrics(srv.query('m{zone="eu"}', t)) == [
+        [("__name__", "m"), ("job", "j2"), ("zone", "eu")]]
+    assert _metrics(srv.query('m{zone="us"}', t)) == [
+        [("__name__", "m"), ("job", "j1"), ("zone", "us")]]
+
+
+def test_cli_query_reads_stream_descriptors(spark, tmp_path, capsys):
+    """``cli query`` opens a converted table as ``serve`` does: a matcher
+    on a stream's descriptor label answers what QueryServer answers."""
+    import json as _json
+
+    from thanos_parquet_gateway_spark.api import QueryServer
+    from thanos_parquet_gateway_spark.cli import main
+    from thanos_parquet_gateway_spark.convert import convert_streams
+
+    out = str(tmp_path / "table")
+    ext = {"a": {"zone": "us"}, "b": {"zone": "eu"}}
+    convert_streams({"a": _m(spark, "j1", 0), "b": _m(spark, "j2", 0)}, out,
+                    ext_labels=ext)
+    t, lb = JAN1 + 2000, DAY
+    want = QueryServer(spark.read.parquet(out), streams=ext,
+                       lookback_ms=lb).query('m{zone="us"}', t)
+    assert _metrics(want) == [[("__name__", "m"), ("job", "j1"),
+                               ("zone", "us")]]
+    assert main(["query", "--path", out, 'm{zone="us"}', "--time", str(t),
+                 "--lookback-ms", str(lb)]) == 0
+    got = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert got == {"status": "success", "data": _json.loads(_json.dumps(want))}
+
+
+def test_retention_refreshes_label_stats(spark, tmp_path):
+    """A sweep rewrites the label-stats sidecar: unconstrained /labels over
+    a swept day names nothing, and the kept day still answers."""
+    from thanos_parquet_gateway_spark.api import QueryServer
+    from thanos_parquet_gateway_spark.convert.convert import read_label_stats
+
+    out = str(tmp_path / "table")
+    manifest = convert_samples(_m(spark, "j1", 0).unionByName(
+        _m(spark, "j2", 1)), out)
+    now = JAN1 + 2 * DAY
+    marked = mark_for_deletion(manifest, retention_days=1, now_ms=now)
+    assert len(apply_retention(marked, out, now_ms=now,
+                               consistency_delay_ms=0)) == 1
+    srv = QueryServer(spark.read.parquet(out),
+                      label_stats=read_label_stats(spark, out))
+    assert srv.label_names(None, JAN1, JAN1 + DAY - 1)[0] == []
+    assert srv.label_names(None, JAN1 + DAY, JAN1 + 2 * DAY - 1)[0] == [
+        "__name__", "job"]
+
+
 def test_native_histograms_survive_conversion(spark, tmp_path):
     """Native-histogram samples at rest: the hist struct column (including
     the schema field) rides through convert_samples' partitioned write and

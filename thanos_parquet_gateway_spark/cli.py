@@ -33,22 +33,10 @@ def _parse_label_map(pairs: list[str]) -> dict[str, str]:
 def cmd_serve(args) -> int:
     from thanos_parquet_gateway_spark import get_spark
     from thanos_parquet_gateway_spark.api import PromHTTPServer, QueryServer
+    from thanos_parquet_gateway_spark.convert import open_table
 
     spark = get_spark("serve")
-    samples = spark.read.parquet(args.path)
-    streams = label_stats = None
-    try:
-        from thanos_parquet_gateway_spark.convert import read_stream_descriptors
-        streams = read_stream_descriptors(spark, args.path)
-    except Exception:  # noqa: BLE001 — flat layouts have no sidecar
-        streams = None
-    try:
-        from thanos_parquet_gateway_spark.convert.convert import (
-            read_label_stats,
-        )
-        label_stats = read_label_stats(spark, args.path)
-    except Exception:  # noqa: BLE001 — pre-sidecar layouts
-        label_stats = None
+    samples, streams, label_stats = open_table(spark, args.path)
     qs = QueryServer(samples, streams=streams,
                      ext_labels=_parse_label_map(args.external_label or [])
                      or None,
@@ -81,10 +69,13 @@ def cmd_query(args) -> int:
     with exit code 1."""
     from thanos_parquet_gateway_spark import get_spark
     from thanos_parquet_gateway_spark.api import QueryServer
+    from thanos_parquet_gateway_spark.convert import open_table
 
     spark = get_spark("query")
+    samples, streams, label_stats = open_table(spark, args.path)
     qs = QueryServer(
-        spark.read.parquet(args.path), lookback_ms=args.lookback_ms,
+        samples, streams=streams, label_stats=label_stats,
+        lookback_ms=args.lookback_ms,
         ext_labels=_parse_label_map(args.external_label or []) or None)
     rl = args.replica_label
     try:
@@ -151,7 +142,7 @@ def cmd_convert(args) -> int:
     from pyspark.sql import functions as F
     from thanos_parquet_gateway_spark import get_spark
     from thanos_parquet_gateway_spark.convert import (
-        convert_samples,
+        convert_streams,
         read_manifest,
         write_manifest,
     )
@@ -176,11 +167,8 @@ def cmd_convert(args) -> int:
     else:
         raw = spark.read.parquet(args.src)
         src_cov = source_days(raw)
-    try:
-        existing = read_manifest(spark, args.dst)
-    except Exception:  # noqa: BLE001 — first conversion, no manifest yet
-        existing = None
-    plan = plan_days(src_cov, existing, max_days=args.max_plan_days)
+    plan = plan_days(src_cov, read_manifest(spark, args.dst),
+                     max_days=args.max_plan_days)
     plan_rows = plan.collect()
     days = sorted({r["date"] for r in plan_rows})
     if args.grace_period_ms:
@@ -198,7 +186,6 @@ def cmd_convert(args) -> int:
         # windows (a sparse plan never decodes the gap between runs);
         # chunk-range pruning happens at the index metas, boundary
         # chunks are trimmed exactly
-        from thanos_parquet_gateway_spark.convert import convert_streams
         days_by_stream: dict[str, list[str]] = {}
         for r in plan_rows:
             if r["date"] in days:
@@ -212,23 +199,16 @@ def cmd_convert(args) -> int:
             for p in parts[1:]:
                 df = df.unionByName(p)
             raws[skey] = df.filter(date_col.isin(sdays))
-        manifest = convert_streams(
-            raws, args.dst,
-            ext_labels={k: streams[k]["labels"] for k in raws},
-            max_records_per_file=args.rowgroup_size * args.rowgroup_count)
+        ext_labels = {k: streams[k]["labels"] for k in raws}
     else:
-        manifest = convert_samples(
-            raw.filter(date_col.isin(days)), args.dst,
-            max_records_per_file=args.rowgroup_size * args.rowgroup_count)
-    # manifest covers the whole table, not just this run (dynamic partition
-    # overwrite leaves other days in place) — recompute from footer stats
-    conv = spark.read.parquet(args.dst)
-    full = (conv.groupBy("stream", "date")
-            .agg(F.min("ts").alias("mint"), F.max("ts").alias("maxt"),
-                 F.count("*").alias("n_samples"),
-                 F.approx_count_distinct("series_hash")
-                 .alias("n_series_approx")))
-    write_manifest(full, args.dst)
+        # a samples parquet is stream "0" with no external labels
+        raws, ext_labels = {"0": raw.filter(date_col.isin(days))}, {}
+    # the manifest returned covers the whole table, not just this run
+    # (dynamic partition overwrite leaves other days in place)
+    manifest = convert_streams(
+        raws, args.dst, ext_labels=ext_labels,
+        max_records_per_file=args.rowgroup_size * args.rowgroup_count)
+    write_manifest(manifest, args.dst)
     for r in manifest.orderBy("stream", "date").collect():
         print(json.dumps({"stream": r["stream"], "date": r["date"],
                           "mint": r["mint"], "maxt": r["maxt"],
@@ -250,6 +230,8 @@ def cmd_retention(args) -> int:
     spark = get_spark("retention")
     now_ms = int(time.time() * 1000)
     manifest = read_manifest(spark, args.path)
+    if manifest is None:
+        raise SystemExit(f"no manifest under {args.path}; run convert first")
     marked = mark_for_deletion(manifest, args.days, now_ms,
                                table_path=args.path).cache()
     n = marked.filter("deleted_at IS NOT NULL").count()

@@ -1,6 +1,7 @@
 from thanos_parquet_gateway_spark.convert.convert import (  # noqa: F401
     convert_samples,
     convert_streams,
+    open_table,
     read_manifest,
     read_stream_descriptors,
     write_manifest,

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from thanos_parquet_gateway_spark.convert import sidecar_pb
+from thanos_parquet_gateway_spark.convert import fsio, sidecar_pb
 from thanos_parquet_gateway_spark.schema import canonical_sig
 
 SCHEMA_VERSION = 2  # reference schema.V2 (schema/schema.go)
@@ -81,30 +81,11 @@ def convert_samples(raw: DataFrame, out_path: str, *,
                     stream: str = "0",
                     max_records_per_file: int = 6_000_000,
                     dedup: bool = True) -> DataFrame:
-    """Write the partitioned samples table; returns the per-(stream, date)
-    manifest DataFrame (the reference's meta.pb, convert/convert.go:273-302).
-
-    Shuffle plan: ONE repartitionByRange carries both the partitioning and
-    the sort prefix, so the subsequent sortWithinPartitions is shuffle-free.
-    """
-    df = prepare_samples(raw, stream)
-    if dedup:
-        # vertical-merge dedup across overlapping inputs
-        # (reference convert/merge.go:15-121 → one dropDuplicates)
-        df = df.dropDuplicates(["series_hash", "ts"])
-    _sorted_partitioned_write(df, out_path, max_records_per_file)
-    write_label_stats(raw.sparkSession, out_path)
-    return _finish_conversion(raw.sparkSession, out_path)
-
-
-def _finish_conversion(spark, out_path: str) -> DataFrame:
-    """Materialize the manifest ONCE (driver-side, one small row per
-    (stream, date)), write the per-block meta sidecars from it, and hand
-    the caller an already-computed manifest frame."""
-    manifest = _manifest_from_written(spark, out_path)
-    rows = manifest.collect()
-    write_block_sidecars(spark, out_path, rows)
-    return spark.createDataFrame(rows, manifest.schema)
+    """Write one stream without external labels: `convert_streams` with a
+    single input.  Returns the whole table's per-(stream, date) manifest."""
+    return convert_streams({stream: raw}, out_path, ext_labels={},
+                           max_records_per_file=max_records_per_file,
+                           dedup=dedup)
 
 
 def write_block_sidecars(spark, out_path: str, manifest_rows) -> None:
@@ -115,8 +96,6 @@ def write_block_sidecars(spark, out_path: str, manifest_rows) -> None:
     file listing serves every block."""
     import datetime as _dt
     from collections import Counter
-
-    from thanos_parquet_gateway_spark.convert import fsio
 
     # inputFiles() returns qualified URIs; qualify the manifest-derived
     # block dirs the same way so the shard counts key consistently on
@@ -138,18 +117,21 @@ def write_block_sidecars(spark, out_path: str, manifest_rows) -> None:
 
 
 def refresh_sidecars(spark, out_path: str) -> DataFrame:
-    """Post-stream sidecar refresh: recompute the manifest from the written
-    table and (re)write the per-block meta sidecars + label stats — the
-    streaming converter's analogue of the batch job's finish step (the
-    reference's polling convert cycle re-writes meta.pb each round,
-    cmd/convert.go:199-228).  Returns the fresh manifest."""
+    """The finish step of every conversion, batch or streaming: rewrite the
+    label stats, then materialize the whole table's manifest ONCE
+    (driver-side, one small row per (stream, date)), write the per-block
+    meta sidecars from it, and hand the caller an already-computed manifest
+    frame (the reference's polling convert cycle re-writes meta.pb each
+    round, cmd/convert.go:199-228)."""
     write_label_stats(spark, out_path)
-    return _finish_conversion(spark, out_path)
+    manifest = _manifest_from_written(spark, out_path)
+    rows = manifest.collect()
+    write_block_sidecars(spark, out_path, rows)
+    return spark.createDataFrame(rows, manifest.schema)
 
 
 def read_block_meta(out_path: str, stream: str, date: str,
                     spark=None) -> dict:
-    from thanos_parquet_gateway_spark.convert import fsio
     p = fsio.join(out_path, f"stream={stream}", f"date={date}",
                   sidecar_pb.META_FILE)
     return sidecar_pb.decode_metadata(fsio.read_bytes(p, spark))
@@ -178,8 +160,10 @@ def write_manifest(manifest: DataFrame, out_path: str) -> None:
      .parquet(f"{out_path}/_manifest"))
 
 
-def read_manifest(spark, out_path: str) -> DataFrame:
-    return spark.read.parquet(f"{out_path}/_manifest")
+def read_manifest(spark, out_path: str) -> DataFrame | None:
+    """The stored manifest; None before the first ``cli convert``."""
+    path = fsio.join(out_path, "_manifest")
+    return spark.read.parquet(path) if fsio.exists(path, spark) else None
 
 
 # ------------------------------------------------------------- multi-stream
@@ -188,25 +172,34 @@ def convert_streams(raws: dict[str, DataFrame], out_path: str, *,
                     max_records_per_file: int = 6_000_000,
                     dedup: bool = True) -> DataFrame:
     """Convert several streams (distinct external-label sets) into ONE
-    partitioned layout + a stream-descriptor sidecar.
+    partitioned layout; the one conversion body.  Returns the whole table's
+    per-(stream, date) manifest (the reference's meta.pb,
+    convert/convert.go:273-302).
 
     The reference keeps one bucket prefix per ExternalLabelsHash with a
     stream descriptor file beside the blocks (locate/discover.go:125-305,
     schema/block.go:37-76).  Spark-first equivalent: union the streams with
     their ``stream`` partition value and run the SAME single conversion job —
-    `partitionBy("stream", "date")` gives the per-stream prefixes, and the
-    descriptor sidecar is a tiny parquet of (stream, labels).
+    `partitionBy("stream", "date")` gives the per-stream prefixes, each
+    stream named in ``ext_labels`` gets its ``stream=<s>/_stream.pb``
+    descriptor, and `refresh_sidecars` finishes.  ONE repartitionByRange
+    carries both the partitioning and the sort prefix, so the subsequent
+    sortWithinPartitions is shuffle-free.
     """
     prepared = [prepare_samples(df, stream=s) for s, df in sorted(raws.items())]
+    if dedup:
+        # vertical-merge dedup within each stream (reference
+        # convert/merge.go:15-121 → one dropDuplicates).  Per input, so
+        # `stream` leaves it as an aggregate, not a literal: Catalyst folds
+        # a literal out of the sort, and the partitioned write then
+        # re-sorts by (stream, date) alone, losing the page order
+        prepared = [d.dropDuplicates(["series_hash", "ts"]) for d in prepared]
     df = prepared[0]
     for d in prepared[1:]:
         df = df.unionByName(d, allowMissingColumns=True)
-    if dedup:
-        df = df.dropDuplicates(["stream", "series_hash", "ts"])
     _sorted_partitioned_write(df, out_path, max_records_per_file)
     write_stream_descriptors(df.sparkSession, out_path, ext_labels)
-    write_label_stats(df.sparkSession, out_path)
-    return _finish_conversion(df.sparkSession, out_path)
+    return refresh_sidecars(df.sparkSession, out_path)
 
 
 def write_label_stats(spark, out_path: str) -> None:
@@ -216,10 +209,13 @@ def write_label_stats(spark, out_path: str) -> None:
     from parquet column dictionaries; SURVEY.md §7.3 maintains the same
     shortcut as a convert-time stats table).  /labels and /label/:name/
     values then touch only this sidecar, never the samples, and the date
-    column keeps time-range pruning."""
-    written = spark.read.parquet(out_path)
-    (written.select(F.col("stream").cast("string").alias("stream"),
-                    F.date_format("date", "yyyy-MM-dd").alias("date"),
+    column keeps time-range pruning.  The read names its schema, so the
+    partition values stay the directory strings and a table that retention
+    emptied yields an empty sidecar."""
+    written = (spark.read.schema(
+        "labels map<string,string>, stream string, date string")
+        .parquet(out_path))
+    (written.select("stream", "date",
                     F.explode("labels").alias("label", "value"))
      .distinct()
      .write.mode("overwrite").parquet(f"{out_path}/_label_stats"))
@@ -231,14 +227,10 @@ def read_label_stats(spark, out_path: str) -> DataFrame:
 
 def write_stream_descriptors(spark, out_path: str,
                              ext_labels: dict[str, dict[str, str]]) -> None:
-    """Stream-descriptor sidecar (reference schema/block.go:37-76): one row
-    per stream, (stream, labels map) — plus the reference's own wire format
-    (streampb.StreamDescriptor, convert/convert.go:154) as stream.pb in
-    each stream's prefix for cross-tool compatibility."""
-    from thanos_parquet_gateway_spark.convert import fsio
-    rows = [(s, ls) for s, ls in sorted(ext_labels.items())]
-    (spark.createDataFrame(rows, "stream string, labels map<string,string>")
-     .coalesce(1).write.mode("overwrite").parquet(f"{out_path}/_streams"))
+    """The stream descriptor (reference schema/block.go:37-76): the
+    reference's own wire format (streampb.StreamDescriptor,
+    convert/convert.go:154) as ``stream=<s>/_stream.pb``, one per stream of
+    this call.  Other streams' descriptors stay, like their data."""
     for s, ls in sorted(ext_labels.items()):
         d = fsio.join(out_path, f"stream={s}")
         fsio.mkdirs(d, spark)
@@ -247,7 +239,22 @@ def write_stream_descriptors(spark, out_path: str,
 
 
 def read_stream_descriptors(spark, out_path: str) -> dict[str, dict[str, str]]:
-    """Discover streams from the sidecar (reference Discoverer.Discover,
-    locate/discover.go:125-305) — driver-side tiny read."""
-    rows = spark.read.parquet(f"{out_path}/_streams").collect()
-    return {r["stream"]: dict(r["labels"]) for r in rows}
+    """Discover streams from the descriptor beside each stream's blocks
+    (reference Discoverer.Discover, locate/discover.go:125-305): one glob
+    and a few hundred bytes per stream; {} when the table has none."""
+    return {fsio.parent(uri, spark).rsplit("/stream=", 1)[1]:
+            sidecar_pb.decode_stream_descriptor(fsio.read_bytes(uri, spark))
+            for uri in fsio.glob(fsio.join(
+                out_path, f"stream=*/{sidecar_pb.STREAM_FILE}"), spark)}
+
+
+def open_table(spark, path: str) -> tuple[
+        DataFrame, dict[str, dict[str, str]], DataFrame | None]:
+    """The one reader of a converted table, for ``serve`` and ``query``:
+    (samples, stream descriptors, label stats).  ``label_stats`` is None
+    when the table has no ``_label_stats`` sidecar (a flat samples parquet
+    or a streaming conversion before its finish step)."""
+    stats = fsio.join(path, "_label_stats")
+    return (spark.read.parquet(path), read_stream_descriptors(spark, path),
+            read_label_stats(spark, path) if fsio.exists(stats, spark)
+            else None)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from thanos_parquet_gateway_spark.convert import fsio
+from thanos_parquet_gateway_spark.convert.convert import write_label_stats
 
 CONSISTENCY_DELAY_MS = 12 * 3600 * 1000  # reference: 12h (locate/deletion.go)
 
@@ -75,9 +76,10 @@ def apply_retention(marked_manifest: DataFrame, table_path: str,
                     now_ms: int | None = None,
                     consistency_delay_ms: int = CONSISTENCY_DELAY_MS) -> list[str]:
     """Phase 2: physically drop partitions whose marker is older than the
-    consistency delay.  Returns the deleted partition dirs.  Driver-side
-    control-plane work on a small manifest — same shape as the reference's
-    bucket iteration (locate/deletion.go:105-169)."""
+    consistency delay, then rewrite the label stats so unconstrained
+    metadata stops naming the dropped days.  Returns the deleted partition
+    dirs.  Driver-side control-plane work on a small manifest — same shape
+    as the reference's bucket iteration (locate/deletion.go:105-169)."""
     now_ms = now_ms or int(time.time() * 1000)
     spark = marked_manifest.sparkSession
     rows = (marked_manifest
@@ -90,4 +92,6 @@ def apply_retention(marked_manifest: DataFrame, table_path: str,
                          f"date={r['date']}")
         if fsio.exists(part, spark) and fsio.delete(part, True, spark):
             deleted.append(part)
+    if deleted:
+        write_label_stats(spark, table_path)
     return deleted

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from thanos_parquet_gateway_spark.convert.convert import prepare_samples
 from thanos_parquet_gateway_spark.schema import canonical_sig
 
 RAW_SCHEMA = T.StructType([
@@ -34,14 +35,8 @@ def stream_convert(spark: SparkSession, in_path: str, out_path: str,
                    available_now: bool = True):
     """Continuously convert raw sample parquet dropped into `in_path` into
     the day-partitioned samples table at `out_path`."""
-    raw = (spark.readStream.schema(RAW_SCHEMA).parquet(in_path))
-    df = (raw
-          .withColumn("__name__",
-                      F.coalesce(F.element_at("labels", "__name__"), F.lit("")))
-          .withColumn("series_hash", F.xxhash64(canonical_sig("labels")))
-          .withColumn("date", F.date_format(F.timestamp_millis(F.col("ts")),
-                                            "yyyy-MM-dd"))
-          .withColumn("stream", F.lit(stream)))
+    df = prepare_samples(spark.readStream.schema(RAW_SCHEMA).parquet(in_path),
+                         stream)
     writer = (df.writeStream
               .format("parquet")
               .option("path", out_path)
